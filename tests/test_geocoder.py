@@ -162,6 +162,34 @@ def test_longest_dominant_right():
     assert not any(c.text == "New York" for c in cands)
 
 
+def test_first_token_gate_never_builds_spans(monkeypatch):
+    """A long ASCII turn holding no dictionary first token tags nothing and
+    never builds its span list — the first-token gate, pinned by a count
+    rather than a timing.  A turn with a hit builds the spans once, shared
+    by the place and taxon scans."""
+    from xponents_spark.gazetteer import matcher
+
+    gaz, tax = matcher.gaz_index(), matcher.tax_index()   # built before counting
+    calls = []
+    real = matcher.TokenView._ascii_spans
+
+    def counting(view):
+        calls.append(len(view.norms))
+        return real(view)
+
+    monkeypatch.setattr(matcher.TokenView, "_ascii_spans", counting)
+    text = " ".join(["Qzx vrbl, klmpt.", "(Zorp)", "dwq! Frnd;"] * 150)
+    norms = matcher.TokenView(text).norms
+    assert len(norms) == 900
+    assert gaz.first_max.keys().isdisjoint(norms)
+    assert tax.first_max.keys().isdisjoint(norms)
+    assert geocode(text) == []
+    assert calls == []
+    hit = geocode(text + " then Boston")
+    assert [m["matchtext"] for m in hit] == ["Boston"]
+    assert calls == [902]
+
+
 def test_us_abbrev_absorbs_period():
     m = top("Will I make it to the shores of U.S.?")
     assert m["matchtext"] == "U.S."

@@ -177,25 +177,49 @@ def _build_mmap_from_entries(tmpdir, names):
     return pq_dir, out
 
 
+_ASCII_WORDS = [w for w in _WORDS if w.isascii()]
+
+
+@st.composite
+def _ascii_scan_word(draw, names):
+    """A word or dictionary name as running ASCII text writes it: any
+    casing, wrapped in edge punctuation, or abbreviation-dotted."""
+    w = draw(st.sampled_from(_ASCII_WORDS + ["zzz", "42", "U.S."]
+                             + [n for n in names if n.isascii()]))
+    w = "".join(c.upper() if draw(st.booleans()) else c for c in w)
+    pre = draw(st.sampled_from(["", "(", '"', "'", "[", "|"]))
+    post = draw(st.sampled_from(["", ",", ".", ";", ":", "!", "?", ")",
+                                 "]", "'s"]))
+    return pre + w + post
+
+
 @settings(max_examples=25, deadline=None)
 @given(st.data())
 def test_mmap_scan_equals_phrase_index(data):
-    """Random dictionaries x random texts: MmapGazetteerIndex.scan must
-    equal PhraseIndex.scan exactly (spans, matchtext, place_id sets) —
-    including multi-token phrases, phrase-prefix relationships, unicode
-    names, and dictionary misses."""
+    """Random dictionaries x random texts: MmapGazetteerIndex.scan and
+    ParquetGazetteerIndex.scan must equal PhraseIndex.scan exactly (spans,
+    matchtext, place_id sets) — including multi-token phrases,
+    phrase-prefix relationships, unicode names, dictionary misses, and
+    mixed-case ASCII text with edge punctuation (the tokenizer's fast
+    path).  Each index is given the TokenView, the legacy
+    ``tokens_with_offsets`` list, and no tokens; all nine scans agree."""
     import shutil
     import tempfile
 
     from xponents_spark.gazetteer import mmapstore
-    from xponents_spark.gazetteer.matcher import Place, PhraseIndex
+    from xponents_spark.gazetteer.matcher import (Place, PhraseIndex,
+                                                  TokenView,
+                                                  tokens_with_offsets)
+    from xponents_spark.gazetteer.store import ParquetGazetteerIndex
 
     names = data.draw(st.lists(
         st.lists(st.sampled_from(_WORDS), min_size=1, max_size=3)
         .map(" ".join), min_size=1, max_size=12, unique=True))
-    text_words = data.draw(st.lists(
-        st.sampled_from(_WORDS + ["zzz", ",", "42"]),
-        min_size=0, max_size=25))
+    # names join the word pool so multi-token phrases hit often
+    text_words = data.draw(st.one_of(
+        st.lists(st.sampled_from(_WORDS + ["zzz", ",", "42"] + names),
+                 min_size=0, max_size=25),
+        st.lists(_ascii_scan_word(names), min_size=0, max_size=25)))
     text = " ".join(text_words)
 
     tmpdir = tempfile.mkdtemp(prefix="mmfuzz_")
@@ -211,12 +235,16 @@ def test_mmap_scan_equals_phrase_index(data):
         mem = PhraseIndex([
             (r["name"], Place(*[r[c] for c in cols]))
             for r in tbl.to_pylist()])
-        mm = mmapstore.MmapGazetteerIndex(mm_dir)
-        a = [(s, e, m, sorted(p.place_id for p in pl))
-             for s, e, m, pl in mem.scan(text)]
-        b = [(s, e, m, sorted(p.place_id for p in pl))
-             for s, e, m, pl in mm.scan(text)]
-        assert a == b, (names, text)
+        indices = [mem, ParquetGazetteerIndex(pq_dir),
+                   mmapstore.MmapGazetteerIndex(mm_dir)]
+        want = [(s, e, m, sorted(p.place_id for p in pl))
+                for s, e, m, pl in mem.scan(text)]
+        for idx in indices:
+            for toks in (TokenView(text), tokens_with_offsets(text), None):
+                got = [(s, e, m, sorted(p.place_id for p in pl))
+                       for s, e, m, pl in idx.scan(text, toks)]
+                assert got == want, (type(idx).__name__, type(toks),
+                                     names, text)
     finally:
         mmapstore._FILES.pop(os.path.join(tmpdir, "tagger.mmap"), None)
         shutil.rmtree(tmpdir, ignore_errors=True)

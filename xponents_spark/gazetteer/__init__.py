@@ -44,11 +44,11 @@ def geocode(text: str, coords: list[tuple[float, float]] | None = None,
     (TaggerResource.java:176-224): K11 scores preferred country +0.5 and
     preferred-location geohash prefix +1.0 (LocationChooserRule.java:186-295),
     K13 adds +5 confidence for a preferred choice."""
-    from .matcher import tokens_with_offsets
-    toks = tokens_with_offsets(text)       # tokenize once, share both scans
-    if not toks:
+    from .matcher import TokenView
+    view = TokenView(text)       # tokenize once, share both scans
+    if not view.norms:
         return []
-    cands = tag_places(text, toks=toks)
+    cands = tag_places(text, toks=view)
     # F8 user MatchFilter (MatchFilter.filterOut(value); applied at tag
     # time, GazetteerMatcher.java:236-238,529-535): caller-supplied stop
     # set compared against the normalized match text
@@ -57,7 +57,7 @@ def geocode(text: str, coords: list[tuple[float, float]] | None = None,
             if not c.filtered_out and c.textnorm in match_filter:
                 c.filtered_out = True
                 c.filter_reason = "user-filter"
-    taxons = tag_taxons(text, toks=toks)
+    taxons = tag_taxons(text, toks=view)
     scope = R.Scope()
     scope.set_preferences(prefer_countries, prefer_locations)
 

@@ -64,8 +64,8 @@ import os
 
 import numpy as np
 
-from .matcher import (Place, TagLimitExceeded, _longest_dominant_right,
-                      tokens_with_offsets)
+from .matcher import (Place, TagLimitExceeded, Tokens,
+                      _longest_dominant_right, token_view)
 
 _STR_COLS = ["place_id", "name", "name_type", "feat_class", "feat_code",
              "cc", "adm1"]
@@ -319,16 +319,16 @@ class MmapGazetteerIndex:
             self._memo[k] = hit
         return hit
 
-    def scan(self, text: str,
-             toks: list[tuple[str, int, int]] | None = None
+    def scan(self, text: str, toks: Tokens = None
              ) -> list[tuple[int, int, str, list]]:
-        if toks is None:
-            toks = tokens_with_offsets(text)
+        view = token_view(text, toks)
+        norms = view.norms
+        spans = None            # offsets are read only once a phrase hits
         T = self.f.prefix2
-        n = len(toks)
+        n = len(norms)
         raw: list[tuple[int, int, int]] = []
         memo = self._tok_memo
-        for i, (norm, _s, _e) in enumerate(toks):
+        for i, norm in enumerate(norms):
             ent = memo.get(norm)
             if ent is None:
                 key = norm.encode("utf-8")
@@ -355,7 +355,9 @@ class MmapGazetteerIndex:
             if exact < 0 and lo2 >= hi2:
                 continue
             if exact >= 0:
-                raw.append((toks[i][1], toks[i][2], exact))
+                if spans is None:
+                    spans = view.spans
+                raw.append((spans[i][0], spans[i][1], exact))
                 if len(raw) > self.TAG_LIMIT:
                     raise TagLimitExceeded(
                         f"tag limit {self.TAG_LIMIT} exceeded in one "
@@ -363,10 +365,12 @@ class MmapGazetteerIndex:
             pref = norm.encode("utf-8") + b" "
             j = i + 1
             while lo2 < hi2 and j < n:
-                cur = pref + toks[j][0].encode("utf-8")
+                cur = pref + norms[j].encode("utf-8")
                 k2 = self._bisect(cur, lo2, hi2)
                 if k2 < hi2 and self._phrase(k2) == cur:
-                    raw.append((toks[i][1], toks[j][2], k2))
+                    if spans is None:
+                        spans = view.spans
+                    raw.append((spans[i][0], spans[j][1], k2))
                     if len(raw) > self.TAG_LIMIT:
                         raise TagLimitExceeded(
                             f"tag limit {self.TAG_LIMIT} exceeded in one "

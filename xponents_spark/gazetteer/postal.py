@@ -144,6 +144,8 @@ def tag_postals(text: str, cands: list[PlaceCandidate],
                 anchors.append((c.start, c.end, p))
         if c.linked_admin is not None:
             anchors.append((c.start, c.merged_end or c.end, c.linked_admin))
+    if not anchors and not country_scope:
+        return []       # every code would fail the F15 geography test
     # adjacency is <=30 chars, so only anchors in a bisect window around the
     # code can match — the all-anchors scan was quadratic on giant turns
     anchors.sort(key=lambda a: a[0])

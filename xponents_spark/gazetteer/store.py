@@ -27,8 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .matcher import (Place, TagLimitExceeded, _longest_dominant_right,
-                      tokens_with_offsets)
+from .matcher import Place, Tokens, scan_phrases
 
 _COLS = ["place_id", "name", "name_type", "feat_class", "feat_code",
          "cc", "adm1", "lat", "lon", "id_bias", "pop"]
@@ -113,28 +112,13 @@ class ParquetGazetteerIndex:
             self._memo[phrase] = hit
         return hit
 
-    def scan(self, text: str,
-             toks: list[tuple[str, int, int]] | None = None
+    def _lookup(self, phrase: str) -> list[Place] | None:
+        return self._places(phrase) if phrase in self.loc else None
+
+    def scan(self, text: str, toks: Tokens = None
              ) -> list[tuple[int, int, str, list]]:
-        if toks is None:
-            toks = tokens_with_offsets(text)
-        raw: list[tuple[int, int, str, list]] = []
-        loc = self.loc
-        first_max = self.first_max
-        for i, (norm, _s, _e) in enumerate(toks):
-            maxlen = first_max.get(norm)
-            if not maxlen:
-                continue
-            limit = min(maxlen, len(toks) - i)
-            for ln in range(limit, 0, -1):
-                key = " ".join(t[0] for t in toks[i:i + ln])
-                if key in loc:
-                    s, e = toks[i][1], toks[i + ln - 1][2]
-                    raw.append((s, e, text[s:e], self._places(key)))
-                    if len(raw) > self.TAG_LIMIT:
-                        raise TagLimitExceeded(
-                            f"tag limit {self.TAG_LIMIT} exceeded in one document")
-        return _longest_dominant_right(raw)
+        return scan_phrases(text, toks, self.first_max, self._lookup,
+                            self.TAG_LIMIT)
 
 
 class CompactSpatialIndex:

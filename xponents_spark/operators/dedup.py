@@ -383,7 +383,17 @@ def winnow_near_dups(df: DataFrame, text_col: str = "text",
     produce ~9M candidates and verification erases the gain — measured
     r7 interleaved A/B at sf0.1: naive 3.35 s vs prefix 4.39 s
     (near_dups_all row).  On a corpus where distinct fps >> docs (real
-    100 TB text), the candidate count collapses and prefix wins."""
+    100 TB text), the candidate count collapses and prefix wins.
+
+    Caching: both paths cache the fingerprint rows, and the prefix-filter
+    path also caches the per-doc ordered fingerprint arrays.  The returned
+    DataFrame is lazy, so this function cannot unpersist them: they stay
+    cached after the result is materialized, and repeated calls in one
+    long-lived session accumulate cached blocks until executor storage
+    evicts them.  A caller that runs this repeatedly should materialize
+    the result (write or collect it), then call
+    ``spark.catalog.clearCache()``, which also drops any frames the caller
+    cached itself."""
     fp = winnow_fingerprints(df, text_col, id_col, k, window).cache()
     if not prefix_filter:
         # naive fingerprint-index join: n_fp rides each fingerprint row

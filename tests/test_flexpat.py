@@ -6,9 +6,14 @@ default_tests() equivalent (SURVEY.md §5.1; reference convention documented
 at /root/reference/doc/Patterns.md TEST clause).
 """
 
-import pytest
+import re
 
-from xponents_spark.flexpat import PatternManager, PatternMatch, pattern_file, reduce_matches
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from xponents_spark.flexpat import (PatternManager, PatternMatch, ScanCtx,
+                                    _rule_spans, pattern_file, reduce_matches)
 import xponents_spark.extractors.xcoord as xcoord
 import xponents_spark.extractors.xtemporal as xtemporal
 import xponents_spark.extractors.poli as poli
@@ -35,6 +40,145 @@ def test_unknown_family_raises():
     mgr = PatternManager(pattern_file("poli_patterns.cfg"))
     with pytest.raises(ValueError):
         mgr.scan("text", families=["NOPE"])
+
+
+def test_context_len_is_applied():
+    mgr = poli.manager()
+    text = "call them at 555-123-4567 after lunch"
+    ms = mgr.scan(text, families=["PHONE"], context_len=5)
+    assert [(m.pre_text, m.post_text) for m in ms] == [("m at ", " afte")]
+    ms = mgr.scan(text, families=["PHONE"])
+    assert [(m.pre_text, m.post_text) for m in ms] == [
+        ("call them at ", " after lunch")]
+
+
+_MANAGERS = [mod.manager() for mod in (xcoord, xtemporal, poli)]
+_ALL_RULES = [(mgr, rule) for mgr in _MANAGERS for rule in mgr.rules.values()]
+
+
+def test_scan_window_derivation():
+    """Which rules get a digit window is derived from the compiled regex;
+    pin the result for the shipped cfgs."""
+    rules = {rule.rule_id: rule for _mgr, rule in _ALL_RULES}
+    assert len(rules) == len(_ALL_RULES)
+    unbounded = {"DD-04", "MONEY-01", "MONEY-02"}
+    digit_free = {"EMAIL-01", "URL-01", "MAC-01"}
+    for rid, rule in rules.items():
+        if rid in unbounded:
+            assert rule.needs_digit and rule.width is None, rid
+        elif rid in digit_free:
+            assert not rule.needs_digit, rid
+        else:
+            assert rule.needs_digit and rule.width is not None, rid
+            assert rule.reach >= rule.width + 2, rid
+
+
+_FILLER = st.lists(st.sampled_from(
+    ["N", "S", "Lat", "March", "Jan.", "LAT:", "lon", "deg", "the", "at",
+     "grid", "DEG", "T", "e", "w", "\n", "   "]), max_size=60).map(
+    lambda ws: " ".join(ws)[:300])
+_PAYLOAD = st.text(alphabet="0123456789" * 4 + "NSEWnsew°º′″'\".,-+:;/ \t\n٣٧",
+                   max_size=40)
+_TEXTS = st.lists(st.tuples(_FILLER, _PAYLOAD), min_size=1, max_size=4).map(
+    lambda chunks: "".join(f + p for f, p in chunks))
+
+
+def _windowed(mgr, rule, text):
+    found = []
+    spans = _rule_spans(rule, ScanCtx(text).digit_clusters(mgr.cluster_gap),
+                        [(0, len(text))])
+    if spans:
+        mgr._scan_rule(rule, text, len(text), found, 20, spans)
+    return [(m.start, m.end, m.slots) for m in found]
+
+
+def _plain(rule, text):
+    return [(m.start(), m.end(),
+             [(name, m.group(i + 1), s, e)
+              for i, (name, (s, e)) in enumerate(zip(rule.group_names,
+                                                     m.regs[1:]))])
+            for m in rule.regex.finditer(text)]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_TEXTS)
+def test_windowed_scan_equals_plain_finditer(text):
+    """A digit-free lead of up to 300 chars, then payloads of digits,
+    hemisphere letters, degree/prime marks and separators (several
+    chunks, so digit clusters far apart get separate windows): every rule
+    of every cfg finds exactly what a whole-text finditer finds."""
+    for mgr, rule in _ALL_RULES:
+        assert _windowed(mgr, rule, text) == _plain(rule, text), rule.rule_id
+
+
+_TIGHT_RULES = {
+    # matches start width-1 chars before their only digit
+    "T-lead": r"(?<![a-z])[a-z]{5}\d",
+    # matches run width-1 chars past their last digit, then look further
+    "T-look": r"\d[a-z]{0,6}(?=[a-z]{0,3}x)",
+    "T-bound": r"\d[a-z]{1,4}\b",
+    "T-end": r"\d[a-z]{1,3}$",
+    "T-branch": r"(?:[a-z]{3}|\d)\d[a-z]?(?!\d)",
+}
+_TIGHT_TEXTS = st.lists(
+    st.tuples(st.text(alphabet="abcx \n", max_size=120),
+              st.text(alphabet="0123456789abx", max_size=8)),
+    min_size=1, max_size=5).map(lambda chunks: "".join(f + p for f, p in chunks))
+
+
+@pytest.fixture(scope="module")
+def tight_manager(tmp_path_factory):
+    cfg = tmp_path_factory.mktemp("cfg") / "tight.cfg"
+    cfg.write_text("".join(f"#RULE\t{rid.split('-')[0]}\t{rid.split('-')[1]}"
+                           f"\t{rx}\n" for rid, rx in _TIGHT_RULES.items()))
+    return PatternManager(str(cfg))
+
+
+@settings(max_examples=300, deadline=None)
+@given(_TIGHT_TEXTS)
+def test_windows_exact_at_tight_bounds(tight_manager, text):
+    """Rules whose matches reach the window's edges: one that starts
+    width-1 chars before its digit, and ones that read up to their
+    lookahead, \\b or $ just past the longest match."""
+    for rule in tight_manager.rules.values():
+        assert rule.needs_digit and rule.width is not None, rule.rule_id
+        assert _windowed(tight_manager, rule, text) == _plain(rule, text), \
+            rule.rule_id
+
+
+def test_scan_window_of_regex_shapes():
+    from xponents_spark.flexpat import _scan_window
+
+    def window(rx):
+        return _scan_window(re.compile(rx, re.IGNORECASE))
+
+    assert window(r"\d") == (True, 1, 3)
+    assert window(r"[0-9]{2}(?=abc)") == (True, 2, 2 + 3 + 2)
+    assert window(r"[0-9a]") == (False, 1, 3)
+    assert window(r"ab|\d\d")[0] is False
+    assert window(r"ab|\d\d|c\d")[0] is False
+    assert window(r"a\d|\d\d|\dc")[0] is True
+    assert window(r"\d?x")[0] is False
+    assert window(r"x(?:\d{1,3}|y\d)")[0] is True
+    assert window(r"٣x")[0] is True
+    assert window(r"x\d+") == (True, None, None)
+    assert window(r"\d(?=.*x)") == (True, None, None)
+    assert window(r"(?=\d)x")[0] is False
+
+
+def test_digit_free_turn_skips_digit_bound_rules(monkeypatch):
+    text = ("Lat North of the March line, Jan. notes say LAT: unknown; "
+            "mail x@y.org or see http://example.org/a ab:cd:ef ") * 4
+    for mgr in _MANAGERS:
+        ran = []
+        real = mgr._scan_rule
+        monkeypatch.setattr(mgr, "_scan_rule",
+                            lambda rule, *a: (ran.append(rule), real(rule, *a)))
+        mgr.scan(text)
+        monkeypatch.undo()
+        assert not [r.rule_id for r in ran if r.needs_digit]
+        if mgr is poli.manager():
+            assert {r.rule_id for r in ran} == {"EMAIL-01", "URL-01", "MAC-01"}
 
 
 def _mk(text, start, end, pid="X-01"):

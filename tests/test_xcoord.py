@@ -81,6 +81,19 @@ def test_mgrs_filters():
         assert not ms, text
 
 
+def test_mixed_case_mgrs_candidate_is_kept_filtered_out():
+    """The MGRS rule compiles IGNORECASE, so a mixed-case run such as
+    ``4ESs460421`` is a candidate (as in the reference, which scans every
+    rule); normalize_mgrs rejects it as lowercase, so no coord row."""
+    from xponents_spark.pipeline import DEFAULT_FEATURES, extract_turn
+    text = "grid ref 4ESs460421 was noted"
+    ms = xcoord.extract_coordinates(text)
+    assert [(m.pattern_id, m.text, m.filtered_out) for m in ms] == [
+        ("MGRS-01", "4ESs460421", True)]
+    _, rows = extract_turn(text, DEFAULT_FEATURES)
+    assert not [r for r in rows if r["label"] == "coord"]
+
+
 def test_imbalanced_dd_rejected():
     # bare float pair without hemisphere/symbols is NOT a coordinate
     ms = [m for m in xcoord.extract_coordinates("55.60, 80.11") if not m.filtered_out]

@@ -387,36 +387,14 @@ _manager: PatternManager | None = None
 def manager() -> PatternManager:
     global _manager
     if _manager is None:
-        # cheap necessary conditions per family (avoid 30 rule scans when
-        # the text cannot contain that family at all)
-        # Necessary conditions per rule (rules compile IGNORECASE, so hemi
-        # classes must not fire on letters inside words: the (?<![A-Za-z])
-        # guard rejects e.g. the "n 4" inside "scan 4").  Every family needs
-        # a digit, so the memoized has-digit check gates the regexes.
-        # DD: hemi-pre + digit (01,05,07), decimal+optional-°+hemi-post (02),
-        # signed decimal (03), LAT keyword (04), degree sign (06)
-        dd = re.compile(r"(?i)(?<![A-Za-z])[NSEW]\s?\d"
-                        r"|\d\.\d+\s?[°º]?\s?[NSEW]"
-                        r"|[-+]\d+\.\d|[°º]|LAT[A-Z]*[:=\s]")
-        # DM: dmsDeg+dmsMin run + hemi-post (00,03a,04b,05), hemi-pre
-        # (01b,02b,03b,03-av,04a), decimal-fraction+hemi (01a-dot,02a),
-        # dash-fraction+hemi (01a), degree sign (03-av-*,03-bv),
-        # DEG keyword (07), signed pair (08)
-        dm = re.compile(r"(?i)\d{4}[NSEW]|(?<![A-Za-z])[NSEW]\s?\d"
-                        r"|\d\.\d+[NSEW]|\d-\d+[NSEW]"
-                        r"|[°º]|\dDEG|\d DEG|[-+]\d+[\s.]\d|/\d{4}")
-        # DMS needs deg/min/sec symbols, dotted triplets, or >=6-digit runs
-        dms = re.compile(r"[°º′″]|\d+['\"]|\d{6}|\d{1,2}\.\d\d\.\d\d")
-        mgrs = re.compile(r"\d ?[C-HJ-NP-Xc-hj-npx][A-HJ-NP-Za-hj-npz]{2} ?\d")
-        utm = re.compile(r"\d{6}")
-
-        def gate(rx):
-            return lambda c: c.has_digit and rx.search(c.text) is not None
-
-        _manager = PatternManager(
-            pattern_file("geocoord_patterns.cfg"),
-            prescreen={"DD": gate(dd), "DM": gate(dm), "DMS": gate(dms),
-                       "MGRS": gate(mgrs), "UTM": gate(utm)})
+        # No per-family prescreens.  PatternManager derives each rule's
+        # scan window from its compiled regex: every rule here consumes a
+        # digit, so none runs on a digit-free turn, and every rule but
+        # DD-04 (the unbounded LAT[A-Z]* keyword, which scans the whole
+        # turn) has a finite longest match, so it scans only the windows
+        # around the turn's digit clusters: from first digit - width to
+        # last digit + reach (see flexpat._scan_window).
+        _manager = PatternManager(pattern_file("geocoord_patterns.cfg"))
     return _manager
 
 

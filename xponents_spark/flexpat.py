@@ -32,6 +32,7 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass, field
+from re import _constants as _sc, _parser as _sp   # sre parse tree
 from typing import Callable
 
 _SLOT_RE = re.compile(r"<([A-Za-z0-9_]+)>")
@@ -109,6 +110,13 @@ class Rule:
     regex: re.Pattern
     group_names: list[str]
     enabled: bool = True
+    # scan window, derived from the compiled regex by _scan_window():
+    # needs_digit = every match consumes a \d char; width = the longest
+    # match; reach = how far past its start a match attempt reads (width
+    # + lookahead + 2).  width/reach are None when unbounded.
+    needs_digit: bool = False
+    width: int | None = None
+    reach: int | None = None
 
 
 @dataclass
@@ -124,18 +132,125 @@ class TestCase:
 
 
 _DIGIT_RE = re.compile(r"\d")
+_DIGIT_RUN_RE = re.compile(r"\d+")
+
+
+def _children(op, av) -> list:
+    """Sub-sequences of one parsed sre item."""
+    if op is _sc.BRANCH:
+        return av[1]
+    if op in _sp._REPEATCODES:
+        return [av[2]]
+    if op is _sc.SUBPATTERN:
+        return [av[-1]]
+    if op is _sc.ATOMIC_GROUP:
+        return [av]
+    if op is _sc.ASSERT or op is _sc.ASSERT_NOT:
+        return [av[1]]
+    if op is _sc.GROUPREF_EXISTS:
+        return [x for x in av[1:] if x is not None]
+    return []
+
+
+def _all_digits(items) -> bool:
+    """True when a char class (``IN`` items) matches only \\d chars."""
+    for op, av in items:
+        if op is _sc.LITERAL:
+            if not _DIGIT_RE.match(chr(av)):
+                return False
+        elif op is _sc.RANGE:
+            lo, hi = av
+            # digit ranges are at most 0-9 wide; a wider range counts as
+            # non-digit (a full scan: safe, never wrong)
+            if hi - lo > 9 or not all(_DIGIT_RE.match(chr(c))
+                                      for c in range(lo, hi + 1)):
+                return False
+        elif not (op is _sc.CATEGORY and av is _sc.CATEGORY_DIGIT):
+            return False
+    return True
+
+
+def _needs_digit(seq) -> bool:
+    """True when every match of the parsed sequence ``seq`` consumes a
+    \\d char: some mandatory item is a digit literal/class, a repeat with
+    min >= 1 of a digit-bound body, a digit-bound group, or a branch whose
+    every alternative is digit-bound.  Lookarounds consume nothing."""
+    for op, av in seq:
+        if op is _sc.LITERAL:
+            hit = _DIGIT_RE.match(chr(av)) is not None
+        elif op is _sc.IN:
+            hit = _all_digits(av)
+        elif op in _sp._REPEATCODES:
+            hit = av[0] >= 1 and _needs_digit(av[2])
+        elif op is _sc.SUBPATTERN or op is _sc.ATOMIC_GROUP:
+            hit = _needs_digit(_children(op, av)[0])
+        elif op is _sc.BRANCH:
+            hit = all(_needs_digit(alt) for alt in av[1])
+        else:
+            hit = False
+        if hit:
+            return True
+    return False
+
+
+def _lookahead(seq) -> int:
+    """Upper bound on the chars lookaheads read past the consumed text:
+    the summed longest widths of every lookahead body."""
+    total = 0
+    for op, av in seq:
+        if (op is _sc.ASSERT or op is _sc.ASSERT_NOT) and av[0] == 1:
+            total += av[1].getwidth()[1]
+        total += sum(_lookahead(sub) for sub in _children(op, av))
+    return total
+
+
+def _scan_window(regex: re.Pattern) -> tuple[bool, int | None, int | None]:
+    """(needs_digit, width, reach) of a compiled rule.
+
+    A match holds a digit and is at most ``width`` long, so it starts in
+    ``[d - width + 1, d]`` for some digit offset ``d``; an attempt starting
+    at ``s`` reads no char at or past ``s + reach``.  So scanning with
+    ``pos = first - width`` and ``endpos = last + reach`` around a run of
+    digits finds exactly the matches that start at or before ``last``.
+    ``(False, None, None)`` = full scan."""
+    try:
+        parsed = _sp.parse(regex.pattern, regex.flags)
+        width = parsed.getwidth()[1]
+        reach = width + _lookahead(parsed) + 2
+        needs = _needs_digit(parsed)
+    except (re.error, AttributeError, LookupError, TypeError, ValueError):
+        return False, None, None    # private parser API moved: full scan
+    if reach >= _sp.MAXWIDTH:
+        return needs, None, None
+    return needs, width, reach
+
+
+def _rule_spans(rule: Rule, clusters: list[tuple[int, int]],
+                whole: list[tuple[int, int]]) -> list[tuple[int, int]]:
+    """The ``(pos, endpos)`` spans to scan ``rule`` over, given the text's
+    digit clusters: one window per cluster for a windowed rule, ``whole``
+    (the whole text) for any other, none when the rule needs a digit and
+    the text has none."""
+    if not rule.needs_digit:
+        return whole
+    if not clusters:
+        return []
+    if rule.width is None:
+        return whole
+    return [(first - rule.width, last + rule.reach) for first, last in clusters]
 
 
 class ScanCtx:
-    """Per-text context for callable prescreens: memoizes features shared
-    across families so e.g. the has-digit scan runs once per text."""
+    """Per-text context shared by the pattern managers scanning one turn:
+    memoizes features such as the first digit's offset, so the digit
+    search runs once per text, not once per manager or family."""
 
-    __slots__ = ("text", "_lower", "_has_digit", "memo")
+    __slots__ = ("text", "_lower", "_first_digit", "memo")
 
     def __init__(self, text: str):
         self.text = text
         self._lower = None
-        self._has_digit = None
+        self._first_digit = None
         self.memo: dict = {}
 
     @property
@@ -145,10 +260,35 @@ class ScanCtx:
         return self._lower
 
     @property
+    def first_digit(self) -> int:
+        """Offset of the first \\d char, or -1 when the text has none."""
+        if self._first_digit is None:
+            m = _DIGIT_RE.search(self.text)
+            self._first_digit = m.start() if m else -1
+        return self._first_digit
+
+    @property
     def has_digit(self) -> bool:
-        if self._has_digit is None:
-            self._has_digit = _DIGIT_RE.search(self.text) is not None
-        return self._has_digit
+        return self.first_digit >= 0
+
+    def digit_clusters(self, gap: int) -> list[tuple[int, int]]:
+        """``(first, last)`` offsets of the text's digits, grouped so that
+        consecutive digits less than ``gap`` apart share a group."""
+        key = ("digit_clusters", gap)
+        out = self.memo.get(key)
+        if out is None:
+            out = []
+            if self.first_digit >= 0:
+                first = last = self.first_digit
+                for m in _DIGIT_RUN_RE.finditer(self.text, first):
+                    s, e = m.span()
+                    if s - last >= gap:
+                        out.append((first, last))
+                        first = s
+                    last = e - 1
+                out.append((first, last))
+            self.memo[key] = out
+        return out
 
 
 class PatternManager:
@@ -201,27 +341,29 @@ class PatternManager:
                     _, fam, clsname = re.split(r"[\t ]+", stmt, maxsplit=2)
                     self.normalizer_family[fam] = clsname
 
-        fam_alts: dict[str, list[str]] = {}
         for fam, key, raw in raw_rules:
             self.families.add(fam)
             group_names = _SLOT_RE.findall(raw)
             compiled = raw
-            nogroup = raw
             for slot in set(group_names):
                 if slot not in self.defines:
                     raise ValueError(f"rule {key}: <{slot}> has no #DEFINE")
                 compiled = compiled.replace(f"<{slot}>", f"({self.defines[slot]})")
-                nogroup = nogroup.replace(f"<{slot}>", f"(?:{self.defines[slot]})")
-            self.rules[key] = Rule(fam, key, raw, re.compile(compiled, re.IGNORECASE),
-                                   group_names)
-            fam_alts.setdefault(fam, []).append(f"(?:{nogroup})")
-        # capture-free union per family — kept for tooling/debug; measured
-        # slower than the char-class prescreens as a scan gate, so unused there
-        self.family_union: dict[str, str] = {
-            fam: "|".join(alts) for fam, alts in fam_alts.items()}
+            regex = re.compile(compiled, re.IGNORECASE)
+            needs_digit, width, reach = _scan_window(regex)
+            self.rules[key] = Rule(fam, key, raw, regex, group_names,
+                                   needs_digit=needs_digit, width=width,
+                                   reach=reach)
         self.rules_by_family: dict[str, list[Rule]] = {}
         for rule in self.rules.values():
             self.rules_by_family.setdefault(rule.family, []).append(rule)
+        # digits closer than this share one scan window: below it, the
+        # widest rule's windows around them would overlap.  Being at least
+        # every rule's reach, it also keeps each window short of the next
+        # cluster's digits, so no match in a window starts past its last.
+        self.cluster_gap = max((r.width + r.reach for r in self.rules.values()
+                                if r.needs_digit and r.width is not None),
+                               default=0)
 
     def set_enabled(self, prefix: str, flag: bool) -> None:
         for rule in self.rules.values():
@@ -242,11 +384,11 @@ class PatternManager:
         unknown = fams - self.families
         if unknown:
             raise ValueError(f"unknown pattern families: {sorted(unknown)}")
+        # a caller-shared ScanCtx memoizes lower()/first-digit across the
+        # three pattern managers scanning the same turn
+        if ctx is None:
+            ctx = ScanCtx(text)
         if self.prescreen:
-            # a caller-shared ScanCtx memoizes lower()/has-digit across the
-            # three pattern managers scanning the same turn
-            if ctx is None:
-                ctx = ScanCtx(text)
             keep = set()
             for f in fams:
                 pre = self.prescreen.get(f)
@@ -257,6 +399,8 @@ class PatternManager:
             if not fams:
                 return []
         tlen = len(text)
+        whole = [(0, tlen)]
+        clusters = ctx.digit_clusters(self.cluster_gap)
         found: list[PatternMatch] = []
         for fam in self.rules_by_family:
             if fam not in fams:
@@ -264,7 +408,10 @@ class PatternManager:
             for rule in self.rules_by_family[fam]:
                 if not rule.enabled:
                     continue
-                self._scan_rule(rule, text, tlen, found)
+                spans = _rule_spans(rule, clusters, whole)
+                if spans:
+                    self._scan_rule(rule, text, tlen, found, context_len,
+                                    spans)
         reduce_matches(found)
         for pm in found:
             if pm.is_duplicate or pm.is_submatch:
@@ -272,23 +419,34 @@ class PatternManager:
         return found
 
     def _scan_rule(self, rule: Rule, text: str, tlen: int,
-                   found: list[PatternMatch], context_len: int = 20) -> None:
-        for m in rule.regex.finditer(text):
-            regs = m.regs   # one C-level tuple instead of 3 calls per group
-            slots = [
-                (name, text[s:e] if s != -1 else None, s, e)
-                for name, (s, e) in zip(rule.group_names, regs[1:])
-            ]
-            pm = PatternMatch(m.group(), m.start(), m.end(), rule.rule_id,
-                              rule.family, slots)
-            pm.pre_text = text[max(0, pm.start - context_len):pm.start]
-            pm.post_text = text[pm.end:min(tlen, pm.end + context_len)]
-            norm = _NORMALIZERS.get(rule.family)
-            if norm is not None:
-                norm(pm)
-            else:
-                pm.textnorm = pm.text.strip()
-            found.append(pm)
+                   found: list[PatternMatch], context_len: int,
+                   spans: list[tuple[int, int]]) -> None:
+        """finditer ``rule`` over each ``(pos, endpos)`` span.
+
+        ``pos`` (not a slice) lets lookbehind and ``\\b`` see the chars before
+        it.  A window's ``endpos`` lies past every char read by an attempt
+        starting at or before the cluster's last digit (Rule.reach), so
+        those attempts behave as on the whole text; clusters lie
+        ``cluster_gap`` apart, so no later start can find a digit."""
+        done = 0
+        for pos, endpos in spans:
+            for m in rule.regex.finditer(text, max(done, pos), endpos):
+                done = m.end()
+                regs = m.regs   # one C-level tuple instead of 3 calls per group
+                slots = [
+                    (name, text[s:e] if s != -1 else None, s, e)
+                    for name, (s, e) in zip(rule.group_names, regs[1:])
+                ]
+                pm = PatternMatch(m.group(), m.start(), m.end(), rule.rule_id,
+                                  rule.family, slots)
+                pm.pre_text = text[max(0, pm.start - context_len):pm.start]
+                pm.post_text = text[pm.end:min(tlen, pm.end + context_len)]
+                norm = _NORMALIZERS.get(rule.family)
+                if norm is not None:
+                    norm(pm)
+                else:
+                    pm.textnorm = pm.text.strip()
+                found.append(pm)
 
     # -- embedded test harness ---------------------------------------------
 

@@ -87,8 +87,8 @@ def extract_turn(text: str, features: tuple,
     main = extract_main_content(text) if "content" in features else text
     out: list[dict] = []
     coords: list[tuple[float, float]] = []
-    # one prescreen context shared by all three pattern managers: the
-    # lower()/has-digit scans over the turn run once, not per family set
+    # one scan context shared by all three pattern managers: the lower()
+    # and digit scans over the turn run once, not per family set
     from .flexpat import ScanCtx
     sctx = ScanCtx(main)
     slot_of = _slot_map if "slots" in features else (lambda m: None)

@@ -12,8 +12,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from xponents_spark.flexpat import (PatternManager, PatternMatch, ScanCtx,
-                                    _rule_spans, pattern_file, reduce_matches)
+from xponents_spark.flexpat import (DIGITS, PatternManager, PatternMatch,
+                                    ScanCtx, _rule_spans, pattern_file,
+                                    reduce_matches)
 import xponents_spark.extractors.xcoord as xcoord
 import xponents_spark.extractors.xtemporal as xtemporal
 import xponents_spark.extractors.poli as poli
@@ -52,41 +53,56 @@ def test_context_len_is_applied():
         ("call them at ", " after lunch")]
 
 
+def test_money_code_after_any_whitespace():
+    """MONEY-02 allows any \\s between amount and code (a literal-space
+    gate once hid the tab).  extract_turn's content recovery turns the
+    tab into a space, so only the raw scan shows it."""
+    ms = [(m.pattern_id, m.text, m.attrs) for m in
+          poli.extract_poli("paid 100\tUSD") if not m.filtered_out]
+    assert ms == [("MONEY-02", "100\tUSD",
+                   {"amount": 100.0, "currency": "USD"})]
+
+
 _MANAGERS = [mod.manager() for mod in (xcoord, xtemporal, poli)]
 _ALL_RULES = [(mgr, rule) for mgr in _MANAGERS for rule in mgr.rules.values()]
 
 
 def test_scan_window_derivation():
-    """Which rules get a digit window is derived from the compiled regex;
-    pin the result for the shipped cfgs."""
+    """Each rule's anchor and digit window are derived from the compiled
+    regex; pin the result for the shipped cfgs."""
     rules = {rule.rule_id: rule for _mgr, rule in _ALL_RULES}
     assert len(rules) == len(_ALL_RULES)
-    unbounded = {"DD-04", "MONEY-01", "MONEY-02"}
-    digit_free = {"EMAIL-01", "URL-01", "MAC-01"}
+    punct = {"EMAIL-01": "@", "URL-01": ":", "MAC-01": ":"}
+    unbounded = {"DD-04", "MONEY-01", "MONEY-02", "EMAIL-01", "URL-01"}
     for rid, rule in rules.items():
+        assert rule.anchor == punct.get(rid, DIGITS), rid
         if rid in unbounded:
-            assert rule.needs_digit and rule.width is None, rid
-        elif rid in digit_free:
-            assert not rule.needs_digit, rid
+            assert rule.width is None and rule.reach is None, rid
         else:
-            assert rule.needs_digit and rule.width is not None, rid
+            assert rule.width is not None, rid
             assert rule.reach >= rule.width + 2, rid
 
 
 _FILLER = st.lists(st.sampled_from(
     ["N", "S", "Lat", "March", "Jan.", "LAT:", "lon", "deg", "the", "at",
-     "grid", "DEG", "T", "e", "w", "\n", "   "]), max_size=60).map(
+     "grid", "DEG", "T", "t", "e", "w", "\n", "   ", "Sep", "ſep", "USD",
+     "usd", "\t", "\u212a", "mail@host.org", "x@", "http://ex.org/a", "ftp:",
+     "ab:cd:ef", "$", "€"]), max_size=60).map(
     lambda ws: " ".join(ws)[:300])
-_PAYLOAD = st.text(alphabet="0123456789" * 4 + "NSEWnsew°º′″'\".,-+:;/ \t\n٣٧",
-                   max_size=40)
+_PAYLOAD = st.one_of(
+    st.text(alphabet="0123456789" * 4 + "NSEWnsew°º′″'\".,-+:;/ \t\n٣٧"
+            "@$€abcdefABCDEFtſ\u212a", max_size=40),
+    st.sampled_from(["ſep 5, 2020", "5 ſep 2020", "100\tusd", "7 USD",
+                     "20200101t1200z", "0a:1b:2c:3d:4e:5f", "€ 12.50",
+                     "555 123 4567", "10.0.0.1", "09/22/2017"]))
 _TEXTS = st.lists(st.tuples(_FILLER, _PAYLOAD), min_size=1, max_size=4).map(
     lambda chunks: "".join(f + p for f, p in chunks))
 
 
 def _windowed(mgr, rule, text):
     found = []
-    spans = _rule_spans(rule, ScanCtx(text).digit_clusters(mgr.cluster_gap),
-                        [(0, len(text))])
+    spans = _rule_spans(rule, text,
+                        ScanCtx(text).digit_clusters(mgr.cluster_gap))
     if spans:
         mgr._scan_rule(rule, text, len(text), found, 20, spans)
     return [(m.start, m.end, m.slots) for m in found]
@@ -104,9 +120,11 @@ def _plain(rule, text):
 @given(_TEXTS)
 def test_windowed_scan_equals_plain_finditer(text):
     """A digit-free lead of up to 300 chars, then payloads of digits,
-    hemisphere letters, degree/prime marks and separators (several
-    chunks, so digit clusters far apart get separate windows): every rule
-    of every cfg finds exactly what a whole-text finditer finds."""
+    hemisphere letters, degree/prime marks, separators, anchor chars
+    (@ : $ €), hex letters and case traps (t, long s, Kelvin sign), or a
+    known match shape, in several chunks, so digit clusters far apart get
+    separate windows: every rule of every cfg finds exactly what a
+    whole-text finditer finds."""
     for mgr, rule in _ALL_RULES:
         assert _windowed(mgr, rule, text) == _plain(rule, text), rule.rule_id
 
@@ -141,7 +159,7 @@ def test_windows_exact_at_tight_bounds(tight_manager, text):
     width-1 chars before its digit, and ones that read up to their
     lookahead, \\b or $ just past the longest match."""
     for rule in tight_manager.rules.values():
-        assert rule.needs_digit and rule.width is not None, rule.rule_id
+        assert rule.anchor == DIGITS and rule.width is not None, rule.rule_id
         assert _windowed(tight_manager, rule, text) == _plain(rule, text), \
             rule.rule_id
 
@@ -152,33 +170,71 @@ def test_scan_window_of_regex_shapes():
     def window(rx):
         return _scan_window(re.compile(rx, re.IGNORECASE))
 
-    assert window(r"\d") == (True, 1, 3)
-    assert window(r"[0-9]{2}(?=abc)") == (True, 2, 2 + 3 + 2)
-    assert window(r"[0-9a]") == (False, 1, 3)
-    assert window(r"ab|\d\d")[0] is False
-    assert window(r"ab|\d\d|c\d")[0] is False
-    assert window(r"a\d|\d\d|\dc")[0] is True
-    assert window(r"\d?x")[0] is False
-    assert window(r"x(?:\d{1,3}|y\d)")[0] is True
-    assert window(r"٣x")[0] is True
-    assert window(r"x\d+") == (True, None, None)
-    assert window(r"\d(?=.*x)") == (True, None, None)
-    assert window(r"(?=\d)x")[0] is False
+    assert window(r"\d") == (DIGITS, 1, 3)
+    assert window(r"[0-9]{2}(?=abc)") == (DIGITS, 2, 2 + 3 + 2)
+    assert window(r"[0-9a]") == (None, 1, 3)
+    assert window(r"ab|\d\d")[0] is None
+    assert window(r"ab|\d\d|c\d")[0] is None
+    assert window(r"a\d|\d\d|\dc")[0] == DIGITS
+    assert window(r"\d?x")[0] is None
+    assert window(r"x(?:\d{1,3}|y\d)")[0] == DIGITS
+    assert window(r"٣x")[0] == DIGITS
+    assert window(r"x\d+") == (DIGITS, None, None)
+    assert window(r"\d(?=.*x)") == (DIGITS, None, None)
+    assert window(r"(?=\d)x")[0] is None
+    # punctuation anchors: the first one every match consumes
+    assert window(r"\w+@\w+\.org") == ("@", None, None)
+    assert window(r"[a.]+@x\.y")[0] == "@"
+    assert window(r"\.?a:b\.")[0] == ":"
+    assert window(r"a(?:-b|c)-d")[0] == "-"
+    assert window(r"a(?:-b|:c)")[0] is None
+    assert window(r"(?:x:|y:)z")[0] == ":"
+    assert window(r"a@?b:{0,2}c")[0] is None
+    assert window(r"a(?=@)b|c(?!:)")[0] is None
+    assert window(r"a[@]b")[0] == "@"
+    assert window(r"a[@:]b")[0] is None
+    assert window(r"a_b§c")[0] is None       # \w and non-ASCII: never
+    assert window(r"@\d")[0] == DIGITS       # digits first
 
 
 def test_digit_free_turn_skips_digit_bound_rules(monkeypatch):
-    text = ("Lat North of the March line, Jan. notes say LAT: unknown; "
-            "mail x@y.org or see http://example.org/a ab:cd:ef ") * 4
-    for mgr in _MANAGERS:
+    def rules_run(mgr, text):
         ran = []
         real = mgr._scan_rule
         monkeypatch.setattr(mgr, "_scan_rule",
                             lambda rule, *a: (ran.append(rule), real(rule, *a)))
         mgr.scan(text)
         monkeypatch.undo()
-        assert not [r.rule_id for r in ran if r.needs_digit]
+        return ran
+
+    text = ("Lat North of the March line, Jan. notes say LAT: unknown; "
+            "mail x@y.org or see http://example.org/a ab:cd:ef ") * 4
+    for mgr in _MANAGERS:
+        ran = rules_run(mgr, text)
+        assert not [r.rule_id for r in ran if r.anchor == DIGITS]
         if mgr is poli.manager():
             assert {r.rule_id for r in ran} == {"EMAIL-01", "URL-01", "MAC-01"}
+    # no digit, "@" or ":": no PoLi rule runs at all
+    assert rules_run(poli.manager(),
+                     text.replace("@", " ").replace(":", " ")) == []
+
+
+_NO_DIGITS = str.maketrans("", "", "0123456789٣٧")
+
+
+@settings(max_examples=300, deadline=None)
+@given(_TEXTS, st.booleans(), st.sampled_from(["", "@", ":", "@:"]))
+def test_derived_gate_is_necessary(text, drop_digits, drop):
+    """Whenever a rule's anchor says skip, a whole-text finditer finds
+    nothing.  Texts are drawn with their digits and/or anchor chars
+    removed, so the gate closes often."""
+    if drop_digits:
+        text = text.translate(_NO_DIGITS)
+    text = text.translate(str.maketrans("", "", drop))
+    for mgr, rule in _ALL_RULES:
+        clusters = ScanCtx(text).digit_clusters(mgr.cluster_gap)
+        if not _rule_spans(rule, text, clusters):
+            assert next(rule.regex.finditer(text), None) is None, rule.rule_id
 
 
 def _mk(text, start, end, pid="X-01"):

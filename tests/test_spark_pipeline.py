@@ -378,6 +378,43 @@ def test_conversation_scope_rescoring(spark):
     assert out[("c2", 0)] == [("Vancouver", "CA")]   # no context: default
 
 
+def test_conversation_scope_taxcat_env_read_once(spark, tmp_path,
+                                                  monkeypatch):
+    """XPONENTS_TAXCAT_PARQUET is read on the driver, once, for both
+    passes: set after the session started, it never reaches the python
+    workers' environment, yet the re-extracted turn must tag taxons from
+    the same file as pass 1."""
+    import datetime
+    from xponents_spark.pipeline import extract_conversation_scoped
+    from xponents_spark.sources.taxcat_etl import build_taxcat_parquet
+    taxcat = str(tmp_path / "taxcat.parquet")
+    build_taxcat_parquet(spark.createDataFrame(
+        [("JRC", "JRC.org", "Zorblax Dynamics", "org", "Zorblax Dynamics",
+          None, "N", True)],
+        "catalog string, taxnode string, name string, kind string, "
+        "canonical string, cc string, name_type string, valid boolean"),
+        taxcat)
+    monkeypatch.setenv("XPONENTS_TAXCAT_PARQUET", taxcat)
+    ts = datetime.datetime(2025, 1, 1)
+    rows = [
+        ("c1", 0, "user", "we are based in United States these days", None, ts),
+        ("c1", 1, "assistant", "meet Zorblax Dynamics in Vancouver next week",
+         None, ts),
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    out = {(r["conv_id"], r["turn_idx"]):
+           sorted((m["label"], m["matchtext"], m["cc"]) for m in r["matches"]
+                  if m["label"] in ("place", "org"))
+           for r in extract_conversation_scoped(
+               df, work_dir=str(tmp_path / "wd")).collect()}
+    # the re-extracted turn (conversation country applied) still tags
+    # the org from the driver's taxcat file
+    assert out[("c1", 1)] == [("org", "Zorblax Dynamics", None),
+                              ("place", "Vancouver", "US")]
+
+
 def test_ivf_topk_recall(spark, sf_dir):
     """IVF ANN: deterministic centroids, and probing nprobe lists recovers
     most of the exact top-k (recall vs brute force >= 0.6 at nprobe=4/16)."""

@@ -121,3 +121,25 @@ def test_published_date_catalog():
             if not m.filtered_out][0]
     assert zulu.attrs["timestamp"] == "2017-09-22T07:00:00Z"
     assert zulu.attrs["epoch"] == 1506063600
+
+
+def test_lowercase_t_dtm_is_found():
+    """DTM-02 compiles case-insensitive, so a lowercase ``t`` between date
+    and time is a match (a case-sensitive ``\\dT\\d`` gate once hid it)."""
+    from xponents_spark.pipeline import DEFAULT_FEATURES, extract_turn
+    _, rows = extract_turn("logged 20200101t1200z ok", DEFAULT_FEATURES)
+    assert [(r["label"], r["pattern_id"], r["matchtext"], r["date_norm"])
+            for r in rows] == [("date", "DTM-02", "20200101t1200z",
+                                "2020-01-01")]
+
+
+@pytest.mark.parametrize("text,pid,matched", [
+    ("on ſep 5, 2020", "MDY-04", "ſep 5, 2020"),
+    ("5 ſep 2020", "DMY-01", "5 ſep 2020"),
+])
+def test_long_s_month_is_found(text, pid, matched):
+    """IGNORECASE matches the long s ``ſ`` to ``S``, so ``ſep`` is a month
+    (a ``"sep" in text.lower()`` gate once hid it)."""
+    m = one(text)
+    assert (m.pattern_id, m.text, m.attrs["datenorm"]) == (
+        pid, matched, "2020-09-05")

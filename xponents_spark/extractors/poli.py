@@ -99,20 +99,13 @@ _manager: PatternManager | None = None
 def manager() -> PatternManager:
     global _manager
     if _manager is None:
-        phone = re.compile(r"\d{3}[-.\s]\d{4}")      # EXCH sep LINE, always present
-        ip = re.compile(r"\d\.\d{1,3}\.\d{1,3}\.\d")  # four dotted runs
-        money = re.compile(r"[$€£¥]|\d (?i:USD|EUR|GBP|JPY|CAD|AUD|CHF)")
-        mac = re.compile(r"[0-9A-Fa-f]{2}:")
-        _manager = PatternManager(
-            pattern_file("poli_patterns.cfg"),
-            prescreen={
-                "PHONE": lambda c: c.has_digit and phone.search(c.text) is not None,
-                "EMAIL": lambda c: "@" in c.text,
-                "URL": lambda c: "://" in c.text,
-                "IP": lambda c: c.has_digit and ip.search(c.text) is not None,
-                "MAC": lambda c: ":" in c.text and mac.search(c.text) is not None,
-                "MONEY": lambda c: money.search(c.text) is not None,
-            })
+        # No per-family prescreens.  PatternManager derives each rule's
+        # gate from its compiled regex: PHONE, IP and MONEY consume a
+        # digit, so they skip a digit-free turn, and PHONE and IP (finite
+        # longest match) scan only the windows around the turn's digit
+        # clusters; EMAIL runs only when the turn holds an "@", URL and
+        # MAC only when it holds a ":" (see flexpat._scan_window).
+        _manager = PatternManager(pattern_file("poli_patterns.cfg"))
     return _manager
 
 

@@ -388,7 +388,7 @@ def manager() -> PatternManager:
     global _manager
     if _manager is None:
         # No per-family prescreens.  PatternManager derives each rule's
-        # scan window from its compiled regex: every rule here consumes a
+        # gate from its compiled regex: every rule here consumes a
         # digit, so none runs on a digit-free turn, and every rule but
         # DD-04 (the unbounded LAT[A-Z]* keyword, which scans the whole
         # turn) has a finite longest match, so it scans only the windows

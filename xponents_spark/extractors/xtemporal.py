@@ -27,8 +27,6 @@ Determinism: the reference anchors 2-digit-year resolution to *runtime now*
 
 from __future__ import annotations
 
-import re
-
 from calendar import timegm
 from datetime import datetime, timedelta
 
@@ -234,35 +232,12 @@ def manager() -> PatternManager:
     Spark pipeline builds it lazily per executor)."""
     global _manager
     if _manager is None:
-        # necessary condition per family (rules compile IGNORECASE):
-        # numeric forms need a digit + their separator shape, name forms a
-        # month token (every MON_NAME starts with its MON_ABBREV, so the
-        # abbrevs suffice).  Months checked with C-level str.find over the
-        # memoized lowercase text — far cheaper than a 12-way (?i) regex
-        # alternation; the result is shared by MDY and DMY via ctx.memo.
-        mons = ("jan", "feb", "mar", "apr", "may", "jun",
-                "jul", "aug", "sep", "oct", "nov", "dec")
-
-        def _has_month(ctx) -> bool:
-            hit = ctx.memo.get("mon")
-            if hit is None:
-                low = ctx.lower
-                hit = any(m in low for m in mons)
-                ctx.memo["mon"] = hit
-            return hit
-
-        mdy_sep = re.compile(r"\d[-/.]\d{1,2}[-/.]'?\d")
-        ymd_sep = re.compile(r"[12]\d{3}([-/.]\d|\s?(?i:jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec))")
-        dtm_sep = re.compile(r"[12]\d{3}-\d|\dT\d")
-        _manager = PatternManager(
-            pattern_file("datetime_patterns.cfg"),
-            prescreen={
-                "MDY": lambda c: c.has_digit and (mdy_sep.search(c.text)
-                                                  is not None or _has_month(c)),
-                "DMY": lambda c: c.has_digit and _has_month(c),
-                "YMD": lambda c: c.has_digit and ymd_sep.search(c.text) is not None,
-                "DTM": lambda c: c.has_digit and dtm_sep.search(c.text) is not None,
-            })
+        # No per-family prescreens.  PatternManager derives each rule's
+        # gate from its compiled regex: every rule here consumes a digit
+        # and has a finite longest match, so none runs on a digit-free
+        # turn and each scans only the windows around the turn's digit
+        # clusters (see flexpat._scan_window).
+        _manager = PatternManager(pattern_file("datetime_patterns.cfg"))
     return _manager
 
 

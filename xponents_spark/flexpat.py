@@ -17,7 +17,9 @@ Behavioral contract (validated by tests/test_flexpat.py):
 * ``#CLASS <family> <classname>`` — family-specific normalizer.  Here a
   normalizer is a plain function ``normalize(match) -> None`` registered via
   :func:`register_normalizer`, not a class hierarchy.
-* Rules compile case-insensitive; scanning is ``finditer`` per enabled rule;
+* Rules compile case-insensitive; scanning is ``finditer`` per rule,
+  gated by an anchor derived from the rule's own regex (digits, windowed
+  around the text's digit clusters, or a punctuation char);
   matched groups digest into ``(name, value, start, end)`` slot tuples.
 * Post-scan, duplicate and sub-span matches are marked ``filtered_out``
   (same semantics as the reference's ``reduce_matches``:
@@ -109,12 +111,13 @@ class Rule:
     raw: str              # rule pattern before slot substitution
     regex: re.Pattern
     group_names: list[str]
-    enabled: bool = True
-    # scan window, derived from the compiled regex by _scan_window():
-    # needs_digit = every match consumes a \d char; width = the longest
-    # match; reach = how far past its start a match attempt reads (width
-    # + lookahead + 2).  width/reach are None when unbounded.
-    needs_digit: bool = False
+    # gate and scan window, derived from the compiled regex by
+    # _scan_window(): anchor = DIGITS when every match consumes a \d
+    # char, else the first punctuation char every match consumes, else
+    # None (full scan); width = the longest match; reach = how far past
+    # its start a match attempt reads (width + lookahead + 2).
+    # width/reach are None when unbounded; only DIGITS rules use them.
+    anchor: str | None = None
     width: int | None = None
     reach: int | None = None
 
@@ -131,8 +134,12 @@ class TestCase:
         return "FAIL" not in self.text
 
 
+# Rule.anchor of a rule whose every match consumes a \d char
+DIGITS = r"\d"
+
 _DIGIT_RE = re.compile(r"\d")
 _DIGIT_RUN_RE = re.compile(r"\d+")
+_PUNCT_RE = re.compile(r"[^\w\s]")
 
 
 def _children(op, av) -> list:
@@ -170,27 +177,51 @@ def _all_digits(items) -> bool:
     return True
 
 
-def _needs_digit(seq) -> bool:
+def _is_digit(op, av) -> bool:
+    """True when one char item matches only \\d chars."""
+    if op is _sc.LITERAL:
+        return _DIGIT_RE.match(chr(av)) is not None
+    return op is _sc.IN and _all_digits(av)
+
+
+def _needs(seq, item_test) -> bool:
     """True when every match of the parsed sequence ``seq`` consumes a
-    \\d char: some mandatory item is a digit literal/class, a repeat with
-    min >= 1 of a digit-bound body, a digit-bound group, or a branch whose
-    every alternative is digit-bound.  Lookarounds consume nothing."""
+    char item passing ``item_test(op, av)``: some mandatory item passes,
+    or is a repeat with min >= 1 of such a body, a group of one, or a
+    branch whose every alternative is one.  Lookarounds consume nothing.
+    The items are visited in match order, and a branch only up to its
+    first alternative that fails."""
     for op, av in seq:
-        if op is _sc.LITERAL:
-            hit = _DIGIT_RE.match(chr(av)) is not None
-        elif op is _sc.IN:
-            hit = _all_digits(av)
-        elif op in _sp._REPEATCODES:
-            hit = av[0] >= 1 and _needs_digit(av[2])
+        if op in _sp._REPEATCODES:
+            hit = av[0] >= 1 and _needs(av[2], item_test)
         elif op is _sc.SUBPATTERN or op is _sc.ATOMIC_GROUP:
-            hit = _needs_digit(_children(op, av)[0])
+            hit = _needs(_children(op, av)[0], item_test)
         elif op is _sc.BRANCH:
-            hit = all(_needs_digit(alt) for alt in av[1])
+            hit = all(_needs(alt, item_test) for alt in av[1])
         else:
-            hit = False
+            hit = item_test(op, av)
         if hit:
             return True
     return False
+
+
+def _punct_anchor(seq) -> str | None:
+    """The first ASCII punctuation (``[^\\w\\s]``) char that every match
+    of ``seq`` consumes, or None.  Such a char has no case, so even an
+    IGNORECASE literal of it matches only itself."""
+    seen: list[int] = []
+
+    def visit(op, av) -> bool:
+        # a char every match consumes is visited: record, never a hit
+        if op is _sc.LITERAL and av < 128 and _PUNCT_RE.match(chr(av)):
+            seen.append(av)
+        return False
+
+    _needs(seq, visit)
+    for code in dict.fromkeys(seen):
+        if _needs(seq, lambda op, av: op is _sc.LITERAL and av == code):
+            return chr(code)
+    return None
 
 
 def _lookahead(seq) -> int:
@@ -204,90 +235,78 @@ def _lookahead(seq) -> int:
     return total
 
 
-def _scan_window(regex: re.Pattern) -> tuple[bool, int | None, int | None]:
-    """(needs_digit, width, reach) of a compiled rule.
+def _scan_window(regex: re.Pattern) -> tuple[str | None, int | None,
+                                              int | None]:
+    """(anchor, width, reach) of a compiled rule.
 
-    A match holds a digit and is at most ``width`` long, so it starts in
+    ``anchor`` is a necessary condition for any match: DIGITS when every
+    match consumes a \\d char, else a punctuation char every match
+    consumes (the text must hold it), else None (always scan).
+
+    A DIGITS match is at most ``width`` long, so it starts in
     ``[d - width + 1, d]`` for some digit offset ``d``; an attempt starting
     at ``s`` reads no char at or past ``s + reach``.  So scanning with
     ``pos = first - width`` and ``endpos = last + reach`` around a run of
     digits finds exactly the matches that start at or before ``last``.
-    ``(False, None, None)`` = full scan."""
+    ``(None, None, None)`` = full scan."""
     try:
         parsed = _sp.parse(regex.pattern, regex.flags)
         width = parsed.getwidth()[1]
         reach = width + _lookahead(parsed) + 2
-        needs = _needs_digit(parsed)
+        anchor = DIGITS if _needs(parsed, _is_digit) else _punct_anchor(parsed)
     except (re.error, AttributeError, LookupError, TypeError, ValueError):
-        return False, None, None    # private parser API moved: full scan
+        return None, None, None    # private parser API moved: full scan
     if reach >= _sp.MAXWIDTH:
-        return needs, None, None
-    return needs, width, reach
+        return anchor, None, None
+    return anchor, width, reach
 
 
-def _rule_spans(rule: Rule, clusters: list[tuple[int, int]],
-                whole: list[tuple[int, int]]) -> list[tuple[int, int]]:
+def _rule_spans(rule: Rule, text: str,
+                clusters: list[tuple[int, int]]) -> list[tuple[int, int]]:
     """The ``(pos, endpos)`` spans to scan ``rule`` over, given the text's
-    digit clusters: one window per cluster for a windowed rule, ``whole``
-    (the whole text) for any other, none when the rule needs a digit and
-    the text has none."""
-    if not rule.needs_digit:
-        return whole
-    if not clusters:
+    digit clusters: none when the text lacks the rule's anchor, one
+    window per cluster for a windowed DIGITS rule, else the whole text."""
+    anchor = rule.anchor
+    if anchor == DIGITS:
+        if not clusters:
+            return []
+        if rule.width is not None:
+            return [(first - rule.width, last + rule.reach)
+                    for first, last in clusters]
+    elif anchor is not None and anchor not in text:
         return []
-    if rule.width is None:
-        return whole
-    return [(first - rule.width, last + rule.reach) for first, last in clusters]
+    return [(0, len(text))]
 
 
 class ScanCtx:
     """Per-text context shared by the pattern managers scanning one turn:
-    memoizes features such as the first digit's offset, so the digit
-    search runs once per text, not once per manager or family."""
+    memoizes the text's digit runs, so the digit search runs once per
+    text, not once per manager."""
 
-    __slots__ = ("text", "_lower", "_first_digit", "memo")
+    __slots__ = ("text", "_runs", "_clusters")
 
     def __init__(self, text: str):
         self.text = text
-        self._lower = None
-        self._first_digit = None
-        self.memo: dict = {}
-
-    @property
-    def lower(self) -> str:
-        if self._lower is None:
-            self._lower = self.text.lower()
-        return self._lower
-
-    @property
-    def first_digit(self) -> int:
-        """Offset of the first \\d char, or -1 when the text has none."""
-        if self._first_digit is None:
-            m = _DIGIT_RE.search(self.text)
-            self._first_digit = m.start() if m else -1
-        return self._first_digit
-
-    @property
-    def has_digit(self) -> bool:
-        return self.first_digit >= 0
+        self._runs: list[tuple[int, int]] | None = None
+        self._clusters: dict[int, list[tuple[int, int]]] = {}
 
     def digit_clusters(self, gap: int) -> list[tuple[int, int]]:
         """``(first, last)`` offsets of the text's digits, grouped so that
         consecutive digits less than ``gap`` apart share a group."""
-        key = ("digit_clusters", gap)
-        out = self.memo.get(key)
+        out = self._clusters.get(gap)
         if out is None:
+            if self._runs is None:
+                # one \d search settles a digit-free text faster than \d+
+                m = _DIGIT_RE.search(self.text)
+                self._runs = [r.span() for r in _DIGIT_RUN_RE.finditer(
+                    self.text, m.start())] if m else []
             out = []
-            if self.first_digit >= 0:
-                first = last = self.first_digit
-                for m in _DIGIT_RUN_RE.finditer(self.text, first):
-                    s, e = m.span()
-                    if s - last >= gap:
-                        out.append((first, last))
-                        first = s
-                    last = e - 1
-                out.append((first, last))
-            self.memo[key] = out
+            for s, e in self._runs:
+                if out and s - out[-1][1] < gap:
+                    out[-1] = (out[-1][0], e - 1)
+                else:
+                    out.append((s, e - 1))
+            self._clusters[gap] = out
         return out
 
 
@@ -298,22 +317,13 @@ class PatternManager:
     (``doc/pydoc/opensextant/FlexPat.html`` source L198-385).
     """
 
-    def __init__(self, cfg_path: str,
-                 prescreen: dict[str, str] | None = None):
+    def __init__(self, cfg_path: str):
         self.cfg_path = cfg_path if os.path.exists(cfg_path) else pattern_file(cfg_path)
         self.defines: dict[str, str] = {}
         self.rules: dict[str, Rule] = {}
         self.families: set[str] = set()
         self.test_cases: list[TestCase] = []
         self.normalizer_family: dict[str, str] = {}
-        # family -> cheap necessary condition; when it fails the whole
-        # family's rules skip (hot-path pruning: most text has no
-        # digits/symbols, so 30+ rule scans collapse to one char scan).
-        # A value is either a regex string or a callable(ScanCtx) -> bool
-        # (callables share per-text memoized features like has-digit).
-        self.prescreen: dict[str, object] = {
-            fam: (rx if callable(rx) else re.compile(rx))
-            for fam, rx in (prescreen or {}).items()}
         self._parse()
 
     def _parse(self) -> None:
@@ -350,10 +360,9 @@ class PatternManager:
                     raise ValueError(f"rule {key}: <{slot}> has no #DEFINE")
                 compiled = compiled.replace(f"<{slot}>", f"({self.defines[slot]})")
             regex = re.compile(compiled, re.IGNORECASE)
-            needs_digit, width, reach = _scan_window(regex)
+            anchor, width, reach = _scan_window(regex)
             self.rules[key] = Rule(fam, key, raw, regex, group_names,
-                                   needs_digit=needs_digit, width=width,
-                                   reach=reach)
+                                   anchor=anchor, width=width, reach=reach)
         self.rules_by_family: dict[str, list[Rule]] = {}
         for rule in self.rules.values():
             self.rules_by_family.setdefault(rule.family, []).append(rule)
@@ -362,19 +371,14 @@ class PatternManager:
         # every rule's reach, it also keeps each window short of the next
         # cluster's digits, so no match in a window starts past its last.
         self.cluster_gap = max((r.width + r.reach for r in self.rules.values()
-                                if r.needs_digit and r.width is not None),
+                                if r.anchor == DIGITS and r.width is not None),
                                default=0)
-
-    def set_enabled(self, prefix: str, flag: bool) -> None:
-        for rule in self.rules.values():
-            if rule.rule_id.startswith(prefix):
-                rule.enabled = flag
 
     # -- scanning -----------------------------------------------------------
 
     def scan(self, text: str, families=None, context_len: int = 20,
              ctx: "ScanCtx | None" = None) -> list[PatternMatch]:
-        """Apply every enabled rule to ``text``; normalize + reduce.
+        """Apply every rule of ``families`` to ``text``; normalize + reduce.
 
         Same pipeline as the reference PatternExtractor.extract_patterns
         (``FlexPat.html`` source L462-513): finditer per rule, digest groups,
@@ -384,31 +388,18 @@ class PatternManager:
         unknown = fams - self.families
         if unknown:
             raise ValueError(f"unknown pattern families: {sorted(unknown)}")
-        # a caller-shared ScanCtx memoizes lower()/first-digit across the
+        # a caller-shared ScanCtx memoizes the digit search across the
         # three pattern managers scanning the same turn
         if ctx is None:
             ctx = ScanCtx(text)
-        if self.prescreen:
-            keep = set()
-            for f in fams:
-                pre = self.prescreen.get(f)
-                if pre is None or (pre(ctx) if callable(pre)
-                                   else pre.search(text)):
-                    keep.add(f)
-            fams = keep
-            if not fams:
-                return []
         tlen = len(text)
-        whole = [(0, tlen)]
         clusters = ctx.digit_clusters(self.cluster_gap)
         found: list[PatternMatch] = []
         for fam in self.rules_by_family:
             if fam not in fams:
                 continue
             for rule in self.rules_by_family[fam]:
-                if not rule.enabled:
-                    continue
-                spans = _rule_spans(rule, clusters, whole)
+                spans = _rule_spans(rule, text, clusters)
                 if spans:
                     self._scan_rule(rule, text, tlen, found, context_len,
                                     spans)

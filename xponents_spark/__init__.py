@@ -26,6 +26,11 @@ Sub-packages
 ``sources``      transcript readers + deterministic synthesizer
 ``plans``        Spark plan helpers: salting, ordering, checkpoint manifests
 ``streaming``    Structured Streaming variant of the extraction pipeline
+``zipcache``     lazy zipimport invalidation: cuts PySpark's per-task fixed cost
 """
 
+from xponents_spark import zipcache as _zipcache
+
 __version__ = "0.1.0"
+
+_zipcache.install()

@@ -41,8 +41,9 @@ def spread_small_input(df: DataFrame, key_cols: tuple[str, ...] = (),
     the light Arrow stages these inputs feed, per-task worker/Arrow
     overhead outweighs straggler smoothing — measured at sf0.1, the
     image-codec stage ran 0.95 s at 32 partitions vs 1.16 s at 64, and
-    1-task-light stages pay ~0.15-0.3 s per extra 32 tasks; raise
-    ``factor`` for stages with heavy per-row skew) and is a NO-OP
+    a light Arrow stage over 4,000 rows at ``local[4]`` on a 4-vCPU host
+    takes ~0.6 s longer at 36 tasks than at 4; raise ``factor`` for
+    stages with heavy per-row skew) and is a NO-OP
     whenever the plan already carries at least ``defaultParallelism``
     partitions — i.e. at cluster scale,
     where the scan's own splits provide the parallelism and an extra

@@ -286,3 +286,41 @@ def test_false_positive_traps():
     for t in traps:
         _, ms = extract_turn(t, DEFAULT_FEATURES)
         assert ms == [], (t, [(m["label"], m["matchtext"]) for m in ms])
+
+
+def test_extractors_run_from_the_package_zip_alone(tmp_path):
+    """With only the package zip on ``sys.path`` (a cluster's
+    ``--py-files``) and a working directory without ``xponents_spark/``,
+    the pattern cfgs load as package resources and every extractor runs
+    one of its #TEST cases."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+    import zipfile
+
+    import xponents_spark
+
+    pkg = pathlib.Path(xponents_spark.__file__).parent
+    zpath = tmp_path / "xponents_spark.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for f in sorted(pkg.rglob("*")):
+            if f.is_file() and "__pycache__" not in f.parts:
+                zf.write(f, f.relative_to(pkg.parent))
+    script = f"""
+import xponents_spark
+assert xponents_spark.__file__.startswith({str(zpath)!r}), xponents_spark.__file__
+from xponents_spark.extractors import poli, xcoord, xtemporal
+for mod, extract in ((xcoord, xcoord.extract_coordinates),
+                     (xtemporal, xtemporal.extract_dates),
+                     (poli, poli.extract_poli)):
+    case = next(c for c in mod.manager().test_cases if c.expect_match)
+    ids = [m.pattern_id for m in extract(case.text)]
+    assert case.rule_id in ids, (case.test_id, ids)
+print("ZIP_OK")
+"""
+    env = dict(os.environ, PYTHONPATH=str(zpath))
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert out.returncode == 0 and "ZIP_OK" in out.stdout, out.stderr

@@ -77,6 +77,18 @@ def test_squeeze_whitespace_idempotent(s):
     assert "  " not in once and "\t" not in once and "\n" not in once
 
 
+# every code point str.isspace() accepts (29 of them); re's \s matches
+# exactly this set
+_WHITESPACE = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.text(alphabet=_WHITESPACE + "ab\u200b", max_size=40))
+def test_squeeze_whitespace_equals_regex_form(s):
+    assert len(_WHITESPACE) == 29
+    assert squeeze_whitespace(s) == re.sub(r"\s+", " ", s).strip()
+
+
 @settings(max_examples=150, deadline=None)
 @given(st.lists(st.tuples(st.integers(0, 50), st.integers(1, 20)), max_size=10))
 def test_reduce_matches_invariants(spans):

@@ -2666,16 +2666,30 @@ def test_session_scheduling_defaults(spark):
         "spark.sql.optimizer.excludedRules")
 
 
-def test_hashed_gram_paths_equal_string_paths(spark):
-    """The hashed exchanges are plan optimizations, not semantics: on a
-    seeded randomized corpus (repeats, ties, empties, unicode, huge
-    runs), ngram_repetition_stats(hash_grams=) and
-    ngram_jaccard_pairs(hash_shingles=) produce IDENTICAL rows to their
-    string-keyed paths."""
-    import random
+def _duckdb_documents(docs):
+    """A DuckDB connection whose ``documents`` table (the view every
+    oracle reads) holds ``docs``."""
+    import duckdb
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    return con
 
-    from xponents_spark.operators.dedup import ngram_jaccard_pairs
+
+def test_ngram_and_span_operators_equal_oracles(spark):
+    """On a seeded randomized corpus (repeats, ties, empties, unicode,
+    huge runs): ngram_jaccard_pairs and remove_duplicated_spans equal
+    their DuckDB oracles, and ngram_repetition_stats a brute-force
+    recomputation.  The corpus holds 8 empty docs: none of them may pair
+    (each once emitted the shingle '', so every two paired at 1.0)."""
+    import random
+    import re
+    from collections import Counter
+
+    from xponents_spark.operators.dedup import (ngram_jaccard_pairs,
+                                                remove_duplicated_spans)
     from xponents_spark.operators.textstats import ngram_repetition_stats
+    from xponents_spark.oracle import NGRAM_JACCARD_ORACLE, remove_spans_oracle
 
     rng = random.Random(0xC0FFEE)
     vocab = ["the", "cat", "sat", "mat", "δ", "東京", "a", "b", "--", "x1"]
@@ -2687,50 +2701,50 @@ def test_hashed_gram_paths_equal_string_paths(spark):
             words = words[:5] * (n // 5)
         docs.append((i, " ".join(words)))
     docs += [(100, ""), (101, "x " * 200), (102, "solo")]
+    empty = {d for d, t in docs if not t.strip()}
+    assert len(empty) == 8
     df = spark.createDataFrame(docs, "doc_id long, text string")
+    con = _duckdb_documents(docs)
 
-    a = {r["doc_id"]: r.asDict() for r in
-         ngram_repetition_stats(df, hash_grams=True).collect()}
-    b = {r["doc_id"]: r.asDict() for r in
-         ngram_repetition_stats(df, hash_grams=False).collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        for col, va in a[k].items():
-            vb = b[k][col]
-            assert (va is None and vb is None) or va == vb or \
-                abs(va - vb) < 1e-12, (k, col, va, vb)
+    pairs = sorted((r["doc_a"], r["doc_b"], r["n_inter"], round(r["jaccard"], 12))
+                   for r in ngram_jaccard_pairs(df).collect())
+    want = sorted((a, b, n, round(j, 12))
+                  for a, b, n, j in con.sql(NGRAM_JACCARD_ORACLE).fetchall())
+    assert pairs == want and len(pairs) == 8   # non-vacuous
+    assert not any(a in empty or b in empty for a, b, _n, _j in pairs)
 
-    pa = sorted((r["doc_a"], r["doc_b"], r["n_inter"], round(r["jaccard"], 12))
-                for r in ngram_jaccard_pairs(
-                    df, threshold=0.2, hash_shingles=True).collect())
-    pb = sorted((r["doc_a"], r["doc_b"], r["n_inter"], round(r["jaccard"], 12))
-                for r in ngram_jaccard_pairs(
-                    df, threshold=0.2, hash_shingles=False).collect())
-    assert pa == pb and pa            # non-vacuous: repeats guarantee pairs
+    removed = sorted(map(tuple, remove_duplicated_spans(df, k=4).collect()))
+    assert removed == sorted(con.sql(remove_spans_oracle(4)).fetchall())
+    assert any(r[3] > 0 for r in removed)  # non-vacuous: something was cut
 
-    # ExactSubstr: the 128-bit-key extreme-scale path removes IDENTICAL
-    # spans to the string-keyed default (the destructive op, so exactness
-    # of the hashed path matters most here)
-    from xponents_spark.operators.dedup import remove_duplicated_spans
-    ra = sorted(map(tuple, remove_duplicated_spans(
-        df, k=4, hash_grams=True).collect()))
-    rb = sorted(map(tuple, remove_duplicated_spans(
-        df, k=4, hash_grams=False).collect()))
-    assert ra == rb
-    assert any(r[3] > 0 for r in ra)  # non-vacuous: something was removed
+    def brute(text, n):
+        """(top, dup) n-gram char fractions; NULL on an empty doc."""
+        if not text:
+            return None, None
+        w = re.split("[ \t\n\x0b\f\r]+", text.strip(" "))
+        c = Counter(" ".join(w[i:i + n]) for i in range(len(w) - n + 1))
+        top = max(((cnt, len(g)) for g, cnt in c.items()), default=(0, 0))
+        dup = sum((cnt - 1) * len(g) for g, cnt in c.items() if cnt > 1)
+        return (min(top[0] * top[1] / len(text), 1.0),
+                min(dup / len(text), 1.0))
+
+    out = {r["doc_id"]: r for r in ngram_repetition_stats(df).collect()}
+    for doc_id, text in docs:
+        want = [(f"top_{n}gram_char_frac", brute(text, n)[0])
+                for n in (2, 3, 4)]
+        want += [(f"dup_{n}gram_char_frac", brute(text, n)[1])
+                 for n in (5, 6, 7, 8, 9, 10)]
+        for col, exp in want:
+            got = out[doc_id][col]
+            assert (got is None and exp is None) or \
+                abs(got - exp) < 1e-12, (doc_id, col, got, exp)
 
 
-def test_single_pass_textstats_equal_relational(spark):
-    """r7: the single-pass (zero-Exchange) defaults of repetition_stats
-    and gopher_quality_filter_full produce IDENTICAL rows to their
-    relational twins on a seeded randomized corpus with repeated lines,
-    blank-line paragraphs, heavy n-gram repetition, empties and unicode
-    (the structures every Table-A1 signal keys on)."""
+def _gopher_corpus():
+    """Seeded docs with repeated lines, blank-line paragraphs, heavy n-gram
+    repetition, empties, unicode, tab/space-edge and NULL-text docs — the
+    structures every Table-A1 signal keys on."""
     import random
-
-    from xponents_spark.operators.textstats import (
-        gopher_quality_filter_full, repetition_stats)
-
     rng = random.Random(0xBEEF7)
     vocab = ["the", "cat", "sat", "mat", "δ", "東京", "a", "b", "--", "x1"]
 
@@ -2748,53 +2762,124 @@ def test_single_pass_textstats_equal_relational(spark):
         if rng.random() < 0.3:                         # heavy gram repeats
             text = text + "\n" + " ".join(["spam ham"] * 40)
         docs.append((i, text))
-    docs += [(100, ""), (101, "x " * 200), (102, "solo"),
-             (103, "p1\n\np1\n\np2"), (104, "\n\n\n"),
-             (105, "a b c d e f g h i j " * 30)]
+    return docs + [
+        (100, ""), (101, "x " * 200), (102, "solo"),
+        (103, "p1\n\np1\n\np2"), (104, "\n\n\n"),
+        (105, "a b c d e f g h i j " * 30),
+        (200, None), (201, "\tx y z"), (202, " spaced  out "),
+        (203, "\n\np\n\np\n\n"), (300, None), (301, "\tx y z"),
+        (302, "l\nl\nl2")]
+
+
+def _assert_gopher_outputs_equal_oracles(spark, docs):
+    """repetition_stats, both base gates and the full gate equal their
+    DuckDB oracles on ``docs``; NULL-text docs, which the oracles do not
+    model, have literal rows."""
+    from xponents_spark.operators.textstats import (
+        _repetition_stats_relational, gopher_quality_filter,
+        gopher_quality_filter_full, gopher_quality_filter_single_pass,
+        repetition_stats)
+    from xponents_spark.oracle import (REPETITION_ORACLE,
+                                       gopher_filter_full_oracle,
+                                       gopher_filter_oracle)
+
     df = spark.createDataFrame(docs, "doc_id long, text string")
+    con = _duckdb_documents([d for d in docs if d[1] is not None])
+    nulls = {d for d, t in docs if t is None}
 
-    edge_rep = spark.createDataFrame(
-        [(300, None), (301, "\tx y z"), (302, "l\nl\nl2")],
-        "doc_id long, text string")
-    rdf = df.unionByName(edge_rep)
-    a = {r["doc_id"]: r.asDict() for r in
-         repetition_stats(rdf, single_pass=True, arrow=True).collect()}
-    j = {r["doc_id"]: r.asDict() for r in
-         repetition_stats(rdf, single_pass=True, arrow=False).collect()}
-    b = {r["doc_id"]: r.asDict() for r in
-         repetition_stats(rdf, single_pass=False).collect()}
-    assert a.keys() == j.keys() == b.keys()
-    for k in a:
-        for col, va in a[k].items():
-            vj, vb = j[k][col], b[k][col]
-            assert (va is None and vj is None) or va == vj or \
-                abs(va - vj) < 1e-12, (k, col, va, vj)
-            assert (va is None and vb is None) or va == vb or \
-                abs(va - vb) < 1e-12, (k, col, va, vb)
+    def rows(frame):
+        got = sorted(map(tuple, frame.collect()))
+        return ([r for r in got if r[0] not in nulls],
+                [r[1:] for r in got if r[0] in nulls])
 
-    # r7: three full-gate paths — numpy signal kernel (default), JVM
-    # in-row walks, relational composition — must agree row-for-row,
-    # including the NULL/empty/tab-leading token edge docs
-    edge = spark.createDataFrame(
-        [(200, None), (201, "\tx y z"), (202, " spaced  out "),
-         (203, "\n\np\n\np\n\n")],
-        "doc_id long, text string")
-    df = df.unionByName(edge)
-    fa = sorted(map(tuple, gopher_quality_filter_full(
-        df, single_pass=True, arrow=True).collect()))
-    fj = sorted(map(tuple, gopher_quality_filter_full(
-        df, single_pass=True, arrow=False).collect()))
-    fb = sorted(map(tuple, gopher_quality_filter_full(
-        df, single_pass=False).collect()))
-    assert fa == fj
-    # relational runs over the non-NULL docs only for comparison (its
-    # explode frames drop a NULL-text doc's id entirely in some joins);
-    # the kernels' NULL semantics are pinned against the JVM single-pass
-    fb_ids = {r[0] for r in fb}
-    assert sorted(r for r in fa if r[0] in fb_ids) == fb
+    rep, rep_null = rows(repetition_stats(df))
+    assert rep == sorted(con.sql(REPETITION_ORACLE).fetchall())
+    assert rep_null == [(0, None, None, 1.0, 1.0)] * len(nulls)
+    assert rows(_repetition_stats_relational(df)) == (rep, rep_null)
+    for gate, sql in ((gopher_quality_filter_single_pass,
+                       gopher_filter_oracle()),
+                      (gopher_quality_filter, gopher_filter_oracle()),
+                      (gopher_quality_filter_full,
+                       gopher_filter_full_oracle())):
+        got, got_null = rows(gate(df))
+        assert got == sorted(con.sql(sql).fetchall()), gate.__name__
+        assert got_null == [(False, "top-2gram|dup-5grams")] * len(nulls)
+    return got
+
+
+def test_gopher_outputs_equal_oracles(spark):
+    """The single-pass Gopher outputs, all read from one signal kernel,
+    equal their independent DuckDB oracles row for row on a seeded corpus
+    (51 docs plus 2 NULL-text docs)."""
+    full = _assert_gopher_outputs_equal_oracles(spark, _gopher_corpus())
     # non-vacuous: the corpus must trip Table-A1-specific reasons
-    joined = "|".join(r[2] for r in fa)
-    assert "dup-" in joined and "top-" in joined
+    joined = "|".join(r[2] for r in full)
+    assert "dup-para" in joined and "top-3gram" in joined
+
+
+def test_gopher_outputs_on_one_huge_document(spark):
+    """One document of 200k tokens (~1.4 MB) — the case a relational
+    fallback used to be kept for — goes through the signal kernel in one
+    row.  The DuckDB oracles are quadratic in a document's length, so the
+    reference here is the relational Spark operators: repetition_stats
+    equals _repetition_stats_relational, and the full gate equals the
+    base relational gate plus the Table-A1 checks applied to
+    ngram_repetition_stats and paragraph_repetition_stats."""
+    import random
+
+    from xponents_spark.operators.textstats import (
+        GOPHER_THRESHOLDS_FULL, _repetition_stats_relational,
+        gopher_quality_filter, gopher_quality_filter_full,
+        ngram_repetition_stats, paragraph_repetition_stats,
+        repetition_stats)
+
+    rng = random.Random(0x5EED)
+    vocab = [f"w{i}" for i in range(2000)]
+    lines, seen = [], []
+    for i in range(20_000):                            # 10 tokens a line
+        if i % 7 == 6:                                 # a repeated line
+            lines.append(seen[rng.randrange(len(seen))])
+        else:
+            seen.append(" ".join(rng.choice(vocab) for _ in range(10)))
+            lines.append(seen[-1])
+        if i % 50 == 49:
+            lines.append("")                           # paragraph break
+    huge = "\n".join(lines)
+    assert len(huge.split()) == 200_000
+    df = spark.createDataFrame([(1, huge), (2, "the cat sat on the mat")],
+                               "doc_id long, text string")
+
+    def by_id(frame):
+        return {r["doc_id"]: r.asDict() for r in frame.collect()}
+
+    rep = by_id(_repetition_stats_relational(df))
+    assert by_id(repetition_stats(df)) == rep
+
+    t = GOPHER_THRESHOLDS_FULL
+    base = by_id(gopher_quality_filter(df, thresholds=t))
+    ng = by_id(ngram_repetition_stats(df, top_ns=(3, 4),
+                                      dup_ns=(6, 7, 8, 9, 10)))
+    ps = by_id(paragraph_repetition_stats(df))
+    want = {}
+    for d in base:
+        sig = {**rep[d], **ng[d], **ps[d]}
+        checks = [("dup_line_char_frac", "max_dup_line_char_frac",
+                   "dup-line-chars"),
+                  ("dup_para_frac", "max_dup_para_frac", "dup-paras"),
+                  ("dup_para_char_frac", "max_dup_para_char_frac",
+                   "dup-para-chars")]
+        checks += [(f"top_{n}gram_char_frac", f"max_top{n}gram_char_frac",
+                    f"top-{n}gram") for n in (3, 4)]
+        checks += [(f"dup_{n}gram_char_frac", f"max_dup{n}gram_char_frac",
+                    f"dup-{n}grams") for n in (6, 7, 8, 9, 10)]
+        reasons = [base[d]["reasons"]] if base[d]["reasons"] else []
+        reasons += [name for col, key, name in checks
+                    if sig[col] is not None and sig[col] > t[key]]
+        want[d] = "|".join(reasons)
+    got = {d: r["reasons"] for d, r in by_id(gopher_quality_filter_full(df)).items()}
+    assert got == want
+    # non-vacuous: base and Table-A1 checks both fire on the huge doc
+    assert "too-many-words" in got[1] and "dup-10grams" in got[1]
 
 
 def test_gopher_full_single_pass_plan_has_no_exchange(spark):

@@ -110,9 +110,9 @@ def main():
                      "over text)",
                      formatted(gopher_quality_filter(docs))))
 
-    sections.append(("gopher quality gate SINGLE-PASS (expect: one Project "
-                     "over the scan — zero Exchange, zero joins; the "
-                     "run-length walk is array_sort + aggregate in-row)",
+    sections.append(("gopher quality gate SINGLE-PASS (expect: one "
+                     "MapInPandas over the scan — the Gopher signal "
+                     "kernel — then a Project; zero Exchange, zero joins)",
                      formatted(gopher_quality_filter_single_pass(docs))))
 
     from xponents_spark.operators.similarity import (semantic_dedup,

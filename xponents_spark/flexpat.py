@@ -31,7 +31,8 @@ broadcast to Spark executors.
 
 from __future__ import annotations
 
-import os
+import importlib.resources
+import pathlib
 import re
 from dataclasses import dataclass, field
 from re import _constants as _sc, _parser as _sp   # sre parse tree
@@ -48,13 +49,11 @@ def register_normalizer(family: str, fn: Callable[["PatternMatch"], None]) -> No
     _NORMALIZERS[family] = fn
 
 
-def pattern_file(name: str) -> str:
-    """Resolve a pattern cfg shipped in xponents_spark/patterns/."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, "patterns", name)
-    if not os.path.exists(path):
-        raise FileNotFoundError(path)
-    return path
+def pattern_file(name: str):
+    """A pattern cfg shipped in xponents_spark/patterns/, as a package
+    resource: it reads the same from a source tree or from a zip on
+    ``sys.path`` (a cluster's ``--py-files``)."""
+    return importlib.resources.files("xponents_spark") / "patterns" / name
 
 
 @dataclass
@@ -317,39 +316,41 @@ class PatternManager:
     (``doc/pydoc/opensextant/FlexPat.html`` source L198-385).
     """
 
-    def __init__(self, cfg_path: str):
-        self.cfg_path = cfg_path if os.path.exists(cfg_path) else pattern_file(cfg_path)
+    def __init__(self, cfg_path):
+        """``cfg_path``: a :func:`pattern_file` resource or a filesystem
+        path."""
+        if not hasattr(cfg_path, "read_text"):
+            cfg_path = pathlib.Path(cfg_path)
         self.defines: dict[str, str] = {}
         self.rules: dict[str, Rule] = {}
         self.families: set[str] = set()
         self.test_cases: list[TestCase] = []
         self.normalizer_family: dict[str, str] = {}
-        self._parse()
+        self._parse(cfg_path.read_text(encoding="utf-8"))
 
-    def _parse(self) -> None:
+    def _parse(self, cfg: str) -> None:
         raw_rules: list[tuple[str, str, str]] = []
         testcount = 0
-        with open(self.cfg_path, encoding="utf-8") as fh:
-            for line in fh:
-                stmt = line.strip()
-                if stmt.startswith("#DEFINE"):
-                    _, name, pat = re.split(r"[\t ]+", stmt, maxsplit=2)
-                    self.defines[name] = pat
-                elif stmt.startswith("#RULE"):
-                    _, fam, rid, pat = re.split(r"[\t ]+", stmt, maxsplit=3)
-                    key = f"{fam}-{rid}"
-                    if any(k == key for _f, k, _p in raw_rules):
-                        raise ValueError(f"duplicate rule {key}")
-                    raw_rules.append((fam, key, pat))
-                elif stmt.startswith("#TEST"):
-                    _, fam, rid, text = re.split(r"[\t ]+", stmt, maxsplit=3)
-                    testcount += 1
-                    self.test_cases.append(
-                        TestCase(f"{fam}-{rid}#{testcount}", fam, f"{fam}-{rid}",
-                                 text.strip().replace("$NL", "\n")))
-                elif stmt.startswith("#CLASS"):
-                    _, fam, clsname = re.split(r"[\t ]+", stmt, maxsplit=2)
-                    self.normalizer_family[fam] = clsname
+        for line in cfg.split("\n"):
+            stmt = line.strip()
+            if stmt.startswith("#DEFINE"):
+                _, name, pat = re.split(r"[\t ]+", stmt, maxsplit=2)
+                self.defines[name] = pat
+            elif stmt.startswith("#RULE"):
+                _, fam, rid, pat = re.split(r"[\t ]+", stmt, maxsplit=3)
+                key = f"{fam}-{rid}"
+                if any(k == key for _f, k, _p in raw_rules):
+                    raise ValueError(f"duplicate rule {key}")
+                raw_rules.append((fam, key, pat))
+            elif stmt.startswith("#TEST"):
+                _, fam, rid, text = re.split(r"[\t ]+", stmt, maxsplit=3)
+                testcount += 1
+                self.test_cases.append(
+                    TestCase(f"{fam}-{rid}#{testcount}", fam, f"{fam}-{rid}",
+                             text.strip().replace("$NL", "\n")))
+            elif stmt.startswith("#CLASS"):
+                _, fam, clsname = re.split(r"[\t ]+", stmt, maxsplit=2)
+                self.normalizer_family[fam] = clsname
 
         for fam, key, raw in raw_rules:
             self.families.add(fam)

@@ -13,7 +13,6 @@ from __future__ import annotations
 import re
 import unicodedata
 
-_WS_SQUEEZE = re.compile(r"\s+")
 _FORMATTING_WS = re.compile(r"[\n\r\t\f\v]")
 _IRREGULAR_PUNCT = re.compile(r"[—–;:!?<>={}\[\]()_~^%$#@*+|\\/\"]|[,.'-]{2,}")
 _ABBREV = re.compile(r"^[A-Za-z](?:[.][A-Za-z])+[.]?$|^[A-Za-z]{1,4}[.]$")
@@ -25,9 +24,10 @@ _TOKEN = re.compile(r"\S+")
 
 
 def squeeze_whitespace(text: str) -> str:
-    """Collapse runs of whitespace to one space
-    (used at GazetteerMatcher.java:510)."""
-    return _WS_SQUEEZE.sub(" ", text).strip()
+    """Collapse runs of whitespace to one space and strip the ends
+    (used at GazetteerMatcher.java:510).  ``str.split()`` splits on
+    exactly the characters ``re``'s ``\\s`` matches (``str.isspace``)."""
+    return " ".join(text.split())
 
 
 def is_ascii(text: str) -> bool:

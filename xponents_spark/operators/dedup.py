@@ -165,23 +165,21 @@ def minhash_near_dups(df: DataFrame, text_col: str = "text",
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
-                        threshold: float = 0.5,
-                        hash_shingles: bool = True) -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """EXACT word-n-gram Jaccard similarity join — the ground truth that
     ``minhash_near_dups`` approximates.
 
     Pure DataFrame ops, no Python UDF: per doc, the distinct set of word
-    n-grams (docs shorter than n words contribute one whole-text shingle);
+    n-grams (docs shorter than n words contribute one whole-text shingle;
+    empty or whitespace-only docs contribute none, so they never pair);
     explode -> equi-self-join on shingle -> pair intersection counts ->
     ``|A∩B| / (|A|+|B|-|A∩B|)``.  Returns (doc_a, doc_b, n_inter, jaccard)
     with doc_a < doc_b and jaccard >= threshold.
 
-    With ``hash_shingles`` (default) the exchange and join keys are
-    ``xxhash64(shingle)`` longs, not the shingle strings — set counts are
-    hash-invariant (distinct applies AFTER hashing) and a false
-    intersection needs a cross-doc 64-bit collision (~|A||B|/2^64 per
-    pair), the same budget ``decontaminate(hash_grams=)`` documents.
-    ``hash_shingles=False`` keeps the string path.
+    The exchange and join keys are ``xxhash64(shingle)`` longs, not the
+    shingle strings — set counts are hash-invariant (distinct applies
+    AFTER hashing) and a false intersection needs a cross-doc 64-bit
+    collision (~|A||B|/2^64 per pair).
 
     Scale note: the shuffle is keyed on shingles, so cost is driven by
     shingle document-frequency (a shingle in d docs yields O(d²) join rows).
@@ -193,20 +191,22 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # Java \s class): Spark's split('\s+') below IS that class, empties
     # dropped — so 'exact ground truth for MinHash' holds on text with
     # newlines/tabs/vertical-tabs/repeated spaces too
-    w = f"filter(split({text_col}, '\\\\s+'), x -> x != '')"
-    gram = f"concat_ws(' ', slice({w}, i, {n}))"
-    if hash_shingles:
-        gram = f"xxhash64({gram})"
+    w = F.expr(f"filter(split({text_col}, '\\\\s+'), x -> x != '')")
+    # the tokens materialize as their own projection first (inlined into
+    # the transform lambda they would re-tokenize per gram position — the
+    # decontaminate note)
     grams = F.expr(
-        f"array_distinct(transform("
-        f"  sequence(1, greatest(size({w}) - {n - 1}, 1)),"
-        f"  i -> {gram}))")
+        "CASE WHEN size(_w) > 0 THEN array_distinct(transform("
+        f"  sequence(1, greatest(size(_w) - {n - 1}, 1)),"
+        f"  i -> xxhash64(concat_ws(' ', slice(_w, i, {n})))))"
+        " ELSE array() END")
     # r7 (guide §2.4): the per-doc set size is size(grams) — a zero-shuffle
     # scalar computed BEFORE the explode and carried through it (one extra
     # int per exchange row), so the former sizes groupBy + two id-keyed
     # re-attach joins (3 exchanges) disappear; the only wide ops left are
     # the shingle self-join and the pair aggregation
-    sh = (df.select(F.col(id_col), grams.alias("g"))
+    sh = (df.select(F.col(id_col), w.alias("_w"))
+            .select(F.col(id_col), grams.alias("g"))
             .select(F.col(id_col), F.size("g").alias("n_sh"),
                     F.explode("g").alias("s")))
     inter = (sh.alias("a")
@@ -545,8 +545,7 @@ def near_dup_components(pairs: DataFrame, docs: DataFrame,
 
 def duplicated_spans(df: DataFrame, k: int = 8,
                      text_col: str = "text",
-                     id_col: str = "doc_id",
-                     hash_grams: bool = False) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Exact duplicated-substring detection (the Lee et al. 2022
     "Deduplicating Training Data" ExactSubstr operator): find, per
     document, the maximal token spans covered by any ``k``-token substring
@@ -574,24 +573,14 @@ def duplicated_spans(df: DataFrame, k: int = 8,
     join-back exchange already carried, so total exchanged bytes DROP by
     the old count-side exchange; a pathological hot shingle lands in one
     window partition, the same skew the old join had (AQE skew handling
-    applies to neither window, so the hashed-key path remains the
-    extreme-scale answer).
+    applies to neither window).
 
-    Exact by construction: the default group key is the shingle STRING
-    (no hash collisions — this operator DELETES text downstream, so the
-    default takes zero collision risk).  ``hash_grams=True`` is the
-    documented extreme-scale path: the key becomes a struct of two
-    independently-seeded ``xxhash64`` values (an effective 128-bit key,
-    collision ~n²/2¹²⁸ — vanishing even at 10¹² shingles) so the
-    (shingle) exchange carries 16 bytes instead of a k-token string; the
-    plan is unchanged.
+    Exact by construction: the group key is the shingle STRING (no hash
+    collisions — this operator DELETES text downstream, so it takes zero
+    collision risk).
     """
     from pyspark.sql import Window
 
-    gram_sql = f"concat_ws(' ', slice(w, i, {k}))"
-    if hash_grams:
-        gram_sql = (f"struct(xxhash64({gram_sql}) AS h1, "
-                    f"xxhash64(2654435761, {gram_sql}) AS h2)")
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     # the short-doc guard lives INSIDE the expression (explode of an empty
     # array emits nothing) rather than as a .filter(size(w) >= k): a
@@ -604,7 +593,7 @@ def duplicated_spans(df: DataFrame, k: int = 8,
                 F.posexplode(F.expr(
                     f"CASE WHEN size(w) >= {k} THEN "
                     f"transform(sequence(1, size(w) - {k - 1}), "
-                    f"i -> {gram_sql}) ELSE array() END"))
+                    f"i -> concat_ws(' ', slice(w, i, {k}))) ELSE array() END"))
                  .alias("pos", "gram")))
     w_gram = Window.partitionBy("gram")
     cov = (sh.withColumn("cnt", F.count("*").over(w_gram))
@@ -634,8 +623,7 @@ def duplicated_spans(df: DataFrame, k: int = 8,
 
 def remove_duplicated_spans(df: DataFrame, k: int = 8,
                             text_col: str = "text",
-                            id_col: str = "doc_id",
-                            hash_grams: bool = False) -> DataFrame:
+                            id_col: str = "doc_id") -> DataFrame:
     """The removal half of the ExactSubstr pass: cut every duplicated span
     found by :func:`duplicated_spans` out of each document, returning
     ``(doc_id, clean_text, n_tokens, n_tokens_removed)``.
@@ -645,7 +633,7 @@ def remove_duplicated_spans(df: DataFrame, k: int = 8,
     (x, i) -> ..)`` + ``exists`` filter drops covered token positions —
     no Python in the path, no extra shuffle beyond duplicated_spans' own.
     """
-    spans = (duplicated_spans(df, k, text_col, id_col, hash_grams)
+    spans = (duplicated_spans(df, k, text_col, id_col)
              .groupBy(id_col)
              .agg(F.collect_list(F.struct("span_start", "span_end"))
                   .alias("_spans")))
@@ -671,7 +659,7 @@ def remove_duplicated_spans(df: DataFrame, k: int = 8,
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
                   text_col: str = "text", id_col: str = "doc_id",
                   bench_text_col: str = "text", bench_id_col: str = "bench_id",
-                  n: int = 13, hash_grams: bool = False,
+                  n: int = 13,
                   broadcast_benchmark: bool = True) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any word
     ``n``-gram with an evaluation/benchmark set (the GPT-3 appendix-C /
@@ -691,19 +679,9 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     the corpus scan shuffle-free, and the only wide op is the final
     groupBy over the (tiny) contaminated-gram hit set.  Set
     ``broadcast_benchmark=False`` to fall back to a shuffle hash join when
-    the benchmark side genuinely exceeds executor memory; set
-    ``hash_grams=True`` to join on ``xxhash64(gram)`` instead of the
-    13-token strings — 8 bytes/gram in the broadcast map and the join
-    probes instead of ~80, with a ~n²/2⁶⁴ false-positive chance
-    (flagging is review-oriented, so collisions are benign; the default
-    stays string-exact for oracle parity).
+    the benchmark side genuinely exceeds executor memory.  The join key
+    is the gram string, so flags are exact (oracle parity).
     """
-    return _decontaminate(docs, benchmark, text_col, id_col, bench_text_col,
-                          bench_id_col, n, broadcast_benchmark, hash_grams)
-
-
-def _decontaminate(docs, benchmark, text_col, id_col, bench_text_col,
-                   bench_id_col, n, broadcast_benchmark, hash_grams=False):
     def grams(col: str) -> str:
         # tokens materialize as their own projection first: inlining the
         # split+filter into the transform lambda re-tokenizes per gram
@@ -715,27 +693,19 @@ def _decontaminate(docs, benchmark, text_col, id_col, bench_text_col,
     def toks(col: str) -> str:
         return f"filter(split({col}, '\\\\s+'), x -> x != '')"
 
-    def gram_key(expr: str) -> str:
-        # hash inside the transform lambda (before array_distinct) so the
-        # explode emits 8-byte longs, not 13-token strings; a generator
-        # cannot be nested in xxhash64(...) after the fact
-        if hash_grams:
-            return f"transform({expr}, g -> xxhash64(g))"
-        return expr
-
     # materialize the gram ARRAY in its own projection before exploding:
     # putting size(<gram expr>) next to explode(<gram expr>) makes Spark
     # re-evaluate the whole array-building expression per OUTPUT row of
     # the Generate (measured 17x slower); referencing the aliased column
     # twice blocks CollapseProject from re-inlining it (non-cheap expr)
     d = (docs.select(F.col(id_col), F.expr(toks(text_col)).alias("w"))
-         .select(F.col(id_col), F.expr(gram_key(grams("w"))).alias("grams"))
+         .select(F.col(id_col), F.expr(grams("w")).alias("grams"))
          .select(F.col(id_col), F.size("grams").alias("n_grams"),
                  F.explode("grams").alias("gram")))
     b = (benchmark.select(F.col(bench_id_col),
                           F.expr(toks(bench_text_col)).alias("w"))
          .select(F.col(bench_id_col),
-                 F.explode(F.expr(gram_key(grams("w")))).alias("gram")))
+                 F.explode(F.expr(grams("w"))).alias("gram")))
     if broadcast_benchmark:
         b = F.broadcast(b)
     return (d.join(b, "gram")

@@ -1,9 +1,17 @@
-"""Text analysis operators — all JVM-side (whole-stage codegen; no Python in
-the hot path).  Token semantics assume whitespace tokenization; inputs are
-normalized by the main-content stage first.
+"""Text analysis operators.  Token semantics assume whitespace
+tokenization; inputs are normalized by the main-content stage first.
+
+Most operators are JVM-side expressions (whole-stage codegen, no Python in
+the hot path).  The single-pass Gopher outputs — ``repetition_stats``,
+``gopher_quality_filter_single_pass`` and ``gopher_quality_filter_full`` —
+read one exact numpy signal kernel (``_gopher_signals_arrow``) in one
+Arrow stage, then assemble fractions and reasons with Catalyst
+expressions.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -143,44 +151,38 @@ def fingerprint(df: DataFrame, text_col: str = "text",
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     single_pass: bool = True,
-                     arrow: bool = False) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Within-document repetition signals in the Gopher family (Rae et al.
     2021, §A1.1 repetition filters — published quality heuristics for
-    training-data curation).
+    training-data curation):
 
-    r7 (guide §2.4 "remove shuffles outright"): every signal here is a
-    WITHIN-document statistic, so the default is now the ``single_pass``
-    in-row plan — ONE Project over the scan, zero Exchange, zero joins,
-    using the same ``array_sort`` + ``aggregate`` run-length walks the
-    driver-gated ``gopher_quality_filter_single_pass`` variant already
-    proved value-identical (O(m log m) per doc, NOT the O(m²)
-    self-filter shape).  ``single_pass=False`` keeps the relational
-    explode -> groupBy plan for corpora whose individual documents are
-    too large to hold as in-row arrays.  ``arrow=True`` sources the
-    integers from the shared numpy signal kernel
-    (``_gopher_signals_arrow`` — see gopher_quality_filter_full) with
-    the fractions assembled by the SAME Catalyst expressions; measured
-    at sf0.1 the JVM walks stay the better default HERE (0.48 s vs
-    0.55 s: this operator needs only the n∈{2,5} signals, so the
-    kernel's full n=2..10 sweep plus the python-stage overhead is not
-    paid back — unlike the 17-signal full gate, where arrow wins 2.3x).
-    All paths are value-identical (randomized equivalence pytest + the
-    SQL oracle).
+    * ``n_lines``               — newline-delimited line count;
+    * ``dup_line_frac``         — repeated line occurrences / lines
+                                  (occurrences beyond each line's first);
+    * ``dup_line_char_frac``    — characters in those repeated occurrences
+                                  / length(text);
+    * ``top_2gram_char_frac``   — characters covered by ALL occurrences of
+                                  the most frequent word 2-gram
+                                  / length(text) (ties: the longest gram —
+                                  any (count, length)-tied gram yields the
+                                  same product, so the value is
+                                  deterministic);
+    * ``dup_5gram_char_frac``   — characters in repeated occurrences of
+                                  all duplicated word 5-grams
+                                  / length(text).
+
+    Both gram fractions clamp at 1.0: the count x gram-length numerator
+    over-counts overlapping repeats (degenerate 'w w w ...' text), and the
+    signal is interpreted as a character fraction.  Empty docs yield NULL
+    line fractions, while the gram fractions read 1.0 (``least(NULL,
+    1.0)``) — a quirk ``REPETITION_ORACLE`` pins.
+
+    Every signal is a within-document statistic, so the plan is ONE
+    narrow map stage with no Exchange and no join: the exact integers
+    come from the shared Gopher signal kernel (swept to n = 5, the
+    largest n read here) and the fractions from Catalyst expressions.
     """
-    if single_pass:
-        if arrow:
-            return _repetition_stats_assemble(
-                _gopher_signals_arrow(df, text_col, id_col), id_col)
-        return _repetition_stats_single_pass(df, text_col, id_col)
-    return _repetition_stats_relational(df, text_col, id_col)
-
-
-def _repetition_stats_assemble(sig: DataFrame, id_col: str) -> DataFrame:
-    """repetition_stats outputs from the shared flat signal columns —
-    the literal single-pass expressions, so the fractions (and the
-    least(NULL, 1.0) = 1.0 empty-doc quirk) are bit-identical."""
+    sig = _gopher_signals_arrow(df, text_col, id_col, extras=False)
     nc = F.nullif(F.col("_nchars").cast("double"), F.lit(0.0))
     line_total = F.col("_nlines")
     return sig.select(
@@ -198,78 +200,12 @@ def _repetition_stats_assemble(sig: DataFrame, id_col: str) -> DataFrame:
                 / nc, F.lit(1.0)).alias("dup_5gram_char_frac"))
 
 
-def _repetition_stats_single_pass(df: DataFrame, text_col: str,
-                                  id_col: str) -> DataFrame:
-    """In-row repetition_stats: identical output (including the
-    least(NULL, 1.0) = 1.0 empty-doc quirk its oracle pins), one
-    codegen'd Project.  ``_w``/``_lines`` materialize in a first
-    projection so the split runs once, not once per consuming
-    expression (the decontaminate CollapseProject note)."""
-    pre = df.select(
-        F.col(id_col), F.col(text_col).alias("_t"),
-        F.split(F.col(text_col), "\n").alias("_lines"),
-        _tokens(text_col).alias("_w"))
-    g2 = ("CASE WHEN size(_w) >= 2 THEN transform(sequence(1, size(_w) - 1), "
-          "i -> concat_ws(' ', slice(_w, i, 2))) ELSE array() END")
-    g5 = ("CASE WHEN size(_w) >= 5 THEN transform(sequence(1, size(_w) - 4), "
-          "i -> concat_ws(' ', slice(_w, i, 5))) ELSE array() END")
-    # signal layer: every O(m log m) walk lands in ONE column, so the
-    # output layer's fractions only touch cheap scalars (a struct field
-    # accessed twice would otherwise re-run its whole aggregate — HOFs
-    # are CodegenFallback, no subexpression elimination saves them)
-    sig = pre.select(
-        F.col(id_col),
-        F.length("_t").alias("_nchars"),
-        F.size("_lines").alias("_nlines"),
-        F.size(F.array_distinct("_lines")).alias("_nlines_d"),
-        F.expr(_dup_chars("_lines")).alias("_line_dup_chars"),
-        F.expr(_run_length_top(g2)).alias("_top2"),
-        F.expr(_dup_chars(g5)).alias("_g5_dup_chars"))
-    nc = F.nullif(F.col("_nchars").cast("double"), F.lit(0.0))
-    line_total = F.col("_nlines")
-    return sig.select(
-        F.col(id_col),
-        F.coalesce(line_total, F.lit(0)).cast("int").alias("n_lines"),
-        ((line_total - F.col("_nlines_d")).cast("double")
-         / F.nullif(line_total.cast("double"), F.lit(0.0)))
-        .alias("dup_line_frac"),
-        (F.coalesce("_line_dup_chars", F.lit(0)).cast("double")
-         / nc).alias("dup_line_char_frac"),
-        F.least(F.coalesce(F.col("_top2.cnt") * F.col("_top2.glen"),
-                           F.lit(0)).cast("double") / nc, F.lit(1.0))
-        .alias("top_2gram_char_frac"),
-        F.least(F.coalesce("_g5_dup_chars", F.lit(0)).cast("double")
-                / nc, F.lit(1.0)).alias("dup_5gram_char_frac"))
-
-
 def _repetition_stats_relational(df: DataFrame, text_col: str = "text",
                                  id_col: str = "doc_id") -> DataFrame:
-    """The relational (explode -> groupBy(id, gram) -> per-doc agg) plan:
-
-    * ``n_lines``               — newline-delimited line count;
-    * ``dup_line_frac``         — repeated line occurrences / lines
-                                  (occurrences beyond each line's first);
-    * ``dup_line_char_frac``    — characters in those repeated occurrences
-                                  / length(text);
-    * ``top_2gram_char_frac``   — characters covered by ALL occurrences of
-                                  the most frequent word 2-gram
-                                  / length(text) (ties: lexicographically
-                                  largest gram — deterministic);
-    * ``dup_5gram_char_frac``   — characters in repeated occurrences of
-                                  all duplicated word 5-grams
-                                  / length(text).
-
-    Both gram fractions clamp at 1.0: the count x gram-length numerator
-    over-counts overlapping repeats (degenerate 'w w w ...' text), and the
-    signal is interpreted as a character fraction.
-
-    Implemented RELATIONALLY (explode -> groupBy(id, gram) -> per-doc agg)
-    rather than with in-row O(len^2) higher-order functions: per-doc array
-    self-filters blow up on long documents, while the exchange here is on
-    (doc_id, gram) with map-side partial aggregation — the 100 TB shape.
-    Exact integer/char arithmetic; empty docs yield NULL fractions (nullif
-    guard, same contract as quality_score).
-    """
+    """``repetition_stats``' values through the relational plan: explode
+    -> groupBy(id, gram) -> per-doc agg, joined back on the id.  The
+    base ``gopher_quality_filter`` composes it; its exchange is on
+    (doc_id, gram) with map-side partial aggregation."""
     text = F.col(text_col)
     n_chars = F.length(text)
     base = df.select(
@@ -304,7 +240,7 @@ def _repetition_stats_relational(df: DataFrame, text_col: str = "text",
             "ELSE array() END")).alias("gram"))
     # top 2-gram by (count, length): deterministic under ties, and any
     # (cnt, len)-tied gram yields the SAME cnt*len product — the family's
-    # uniform tie rule (ngram_repetition_stats, the single-pass walk and
+    # uniform tie rule (ngram_repetition_stats, the signal kernel and
     # every oracle use it), chosen so the hashed-gram exchange never needs
     # the string back
     top2 = (g2.groupBy(id_col, "gram").agg(F.count("*").alias("cnt"))
@@ -381,10 +317,10 @@ def gopher_quality_filter(df: DataFrame, text_col: str = "text",
         id_col, "n_tokens", "token_chars")
     qs = quality_score(df, text_col, id_col).select(
         id_col, "punct_ratio", "stopword_ratio")
-    # single_pass=False on purpose: THIS variant's point (and its gate
-    # row's) is the relational plan shape; the one-Project twin is
+    # the relational repetition plan on purpose: THIS gate's point (and
+    # its gate row's) is the join-based plan shape; the one-stage twin is
     # gopher_quality_filter_single_pass
-    rs = repetition_stats(df, text_col, id_col, single_pass=False).select(
+    rs = _repetition_stats_relational(df, text_col, id_col).select(
         id_col, "dup_line_frac", "top_2gram_char_frac",
         "dup_5gram_char_frac")
     j = ts.join(qs, id_col).join(rs, id_col)
@@ -412,115 +348,26 @@ def gopher_quality_filter(df: DataFrame, text_col: str = "text",
         reasons.alias("reasons"))
 
 
-def _run_length_top(arr_sql: str) -> str:
-    """SQL: max (count, length) run over a SORTED string array — count of
-    the most frequent element, ties to the LONGEST (the family's uniform
-    tie rule; same semantics as the relational
-    ``max(struct(cnt, length(gram)))``, and any (cnt, len)-tied gram
-    yields the same cnt*len product downstream).  One O(n log n)
-    array_sort + one O(n) aggregate walk, all JVM-side."""
-    return (
-        "aggregate(array_sort({a}), "
-        "named_struct('prev', '', 'run', 0, 'bc', 0, 'bl', 0), "
-        "(acc, x) -> named_struct("
-        "  'prev', x, "
-        "  'run', IF(x = acc.prev, acc.run + 1, 1), "
-        "  'bc', IF(IF(x = acc.prev, acc.run + 1, 1) > acc.bc "
-        "           OR (IF(x = acc.prev, acc.run + 1, 1) = acc.bc "
-        "               AND length(x) >= acc.bl), "
-        "           IF(x = acc.prev, acc.run + 1, 1), acc.bc), "
-        "  'bl', IF(IF(x = acc.prev, acc.run + 1, 1) > acc.bc "
-        "           OR (IF(x = acc.prev, acc.run + 1, 1) = acc.bc "
-        "               AND length(x) >= acc.bl), "
-        "           length(x), acc.bl)), "
-        "acc -> named_struct('cnt', acc.bc, 'glen', acc.bl))"
-    ).format(a=arr_sql)
-
-
-def _dup_chars(arr_sql: str) -> str:
-    """SQL: characters in repeated occurrences (each occurrence beyond an
-    element's first) of a string array — sorted walk, no shuffle."""
-    return (
-        "aggregate(array_sort({a}), "
-        "named_struct('prev', '', 'first', true, 'dup', CAST(0 AS BIGINT)), "
-        "(acc, x) -> named_struct("
-        "  'prev', x, 'first', false, "
-        "  'dup', acc.dup + IF(NOT acc.first AND x = acc.prev, "
-        "                      CAST(length(x) AS BIGINT), CAST(0 AS BIGINT))), "
-        "acc -> acc.dup)"
-    ).format(a=arr_sql)
-
-
 def gopher_quality_filter_single_pass(
         df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         thresholds: dict | None = None) -> DataFrame:
     """The same Gopher-family gate as :func:`gopher_quality_filter`, computed
-    in ONE narrow projection — zero shuffle, zero joins.
+    in ONE narrow map stage — zero shuffle, zero joins.
 
     The three-frame version exchanges (doc_id, gram) rows; but every signal
     here is a within-document statistic, so nothing actually requires a
-    shuffle.  The repetition signals become in-row array expressions:
-    ``dup_line_frac`` via ``array_distinct``, the gram signals via an
-    O(n log n) ``array_sort`` + O(n) ``aggregate`` run-length walk (NOT the
-    O(n²) per-element self-filter the relational docstring warns about).
-    At 100 TB this is a map-only stage that pipelines into the scan.
+    shuffle.  The exact integers come from the shared Gopher signal kernel
+    (swept to n = 5), the fractions, thresholds and reason strings from
+    the base checks of :func:`gopher_quality_filter_full`.  At 100 TB this
+    is a map-only stage that pipelines into the scan.
 
     Output is row-for-row identical to the relational gate (pytest-pinned
     and driver-gated against the same SQL oracle).
     """
     t = thresholds or GOPHER_THRESHOLDS
-    text = F.col(text_col)
-    w = f"split(trim({text_col}), '\\\\s+')"
-    g2_sql = (f"CASE WHEN size({w}) >= 2 THEN transform(sequence(1, size({w}) - 1), "
-              f"i -> concat_ws(' ', slice({w}, i, 2))) ELSE array() END")
-    g5_sql = (f"CASE WHEN size({w}) >= 5 THEN transform(sequence(1, size({w}) - 4), "
-              f"i -> concat_ws(' ', slice({w}, i, 5))) ELSE array() END")
-    lines_sql = f"split({text_col}, '\n')"
-
-    toks = _tokens(text_col)
-    n_tok = F.size(toks)
-    n_chars = F.length(text)
-    token_chars = F.expr(
-        f"aggregate(transform({w}, x -> length(x)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-    stop_arr = ", ".join(f"'{s}'" for s in _STOPWORDS)
-    n_stop = F.expr(f"size(filter({w}, x -> x IN ({stop_arr})))")
-    n_punct = n_chars - F.length(
-        F.regexp_replace(text, r"[!-/:-@\[-`{-~]", ""))
-    n_chars_nz = F.nullif(n_chars, F.lit(0))
-    n_tok_nz = F.nullif(n_tok, F.lit(0))
-    nc = F.nullif(n_chars.cast("double"), F.lit(0.0))
-
-    punct_ratio = n_punct.cast("double") / n_chars_nz
-    stopword_ratio = n_stop.cast("double") / n_tok_nz
-    mean_wl = token_chars.cast("double") / n_tok_nz.cast("double")
-    dup_line_frac = (
-        (F.expr(f"size({lines_sql})")
-         - F.expr(f"size(array_distinct({lines_sql}))")).cast("double")
-        / F.nullif(F.expr(f"size({lines_sql})").cast("double"), F.lit(0.0)))
-    top2 = F.expr(_run_length_top(g2_sql))
-    top2_frac = F.least(
-        (top2["cnt"] * top2["glen"]).cast("double") / nc, F.lit(1.0))
-    dup5_frac = F.least(
-        F.expr(_dup_chars(g5_sql)).cast("double") / nc, F.lit(1.0))
-
-    checks = [
-        (n_tok < t["min_words"], "too-few-words"),
-        (n_tok > t["max_words"], "too-many-words"),
-        (mean_wl < t["min_mean_word_len"], "short-words"),
-        (mean_wl > t["max_mean_word_len"], "long-words"),
-        (punct_ratio > t["max_punct_ratio"], "punct-heavy"),
-        (stopword_ratio < t["min_stopword_ratio"], "no-stopwords"),
-        (dup_line_frac > t["max_dup_line_frac"], "dup-lines"),
-        (top2_frac > t["max_top2gram_char_frac"], "top-2gram"),
-        (dup5_frac > t["max_dup5gram_char_frac"], "dup-5grams"),
-    ]
-    reasons = F.concat_ws("|", *[
-        F.when(cond, F.lit(name)) for cond, name in checks])
-    return df.select(
-        F.col(id_col),
-        (reasons == "").alias("keep"),
-        reasons.alias("reasons"))
+    return _gopher_gate(_gopher_signals_arrow(df, text_col, id_col,
+                                              extras=False),
+                        id_col, _gopher_base_checks(t))
 
 
 def c4_quality_filter(df: DataFrame, text_col: str = "text",
@@ -540,8 +387,7 @@ def c4_quality_filter(df: DataFrame, text_col: str = "text",
 
     Plan shape: ONE Project over the scan — zero Exchange, zero joins;
     line filtering and sentence counting are higher-order array
-    expressions inside whole-stage codegen, the same single-pass shape as
-    ``gopher_quality_filter_single_pass``.
+    expressions inside whole-stage codegen.
 
     Returns (doc_id, keep, reasons, n_lines, n_lines_kept, n_sentences,
     text_clean): ``text_clean`` is the retained-line text the paper would
@@ -582,8 +428,8 @@ def c4_quality_filter(df: DataFrame, text_col: str = "text",
 def ngram_repetition_stats(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id",
                            top_ns: tuple[int, ...] = (2, 3, 4),
-                           dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-                           hash_grams: bool = True) -> DataFrame:
+                           dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10)
+                           ) -> DataFrame:
     """The FULL Gopher n-gram repetition family (Rae et al. 2021 Table A1):
     ``top_{n}gram_char_frac`` for each n in ``top_ns`` (characters covered
     by all occurrences of the most frequent word n-gram / length) and
@@ -596,13 +442,12 @@ def ngram_repetition_stats(df: DataFrame, text_col: str = "text",
     (id, n, gram) structs — so all nine signals ride a single
     (id, n, gram) exchange with map-side partial aggregation plus one
     (id) rollup, instead of len(top_ns)+len(dup_ns) separate wide passes.
-    With ``hash_grams`` (default) the gram STRING never leaves the scan
-    stage: the exchange and agg keys carry (id, n, xxhash64(gram)) with
-    the gram's char length riding along — all fractions only need counts
-    and lengths, never the text, so rows shrink from up-to-10-word
-    strings to two fixed ints (same trick, same collision math as
-    ``decontaminate(hash_grams=)``: a cross-gram collision within one
-    (doc, n) needs ~2^32 distinct grams in ONE doc to reach even 1e-9).
+    The gram STRING never leaves the scan stage: the exchange and agg
+    keys carry (id, n, xxhash64(gram)) with the gram's char length riding
+    along — all fractions only need counts and lengths, never the text,
+    so rows shrink from up-to-10-word strings to two fixed ints.  A
+    cross-gram collision within one (doc, n) needs ~2^32 distinct grams
+    in ONE doc to reach even 1e-9.
     Same clamp-at-1.0 contract as ``repetition_stats``; empty docs yield
     NULL fractions here (repetition_stats' gram fractions return 1.0 on
     empty docs via the least(NULL, 1.0) quirk — pinned by its oracle, so
@@ -611,25 +456,21 @@ def ngram_repetition_stats(df: DataFrame, text_col: str = "text",
     text = F.col(text_col)
     base = df.select(F.col(id_col), F.length(text).alias("n_chars"),
                      _tokens(text_col).alias("w"))
-    gram_expr = ("concat_ws(' ', slice(w, i, {n}))" if not hash_grams else
-                 "xxhash64(concat_ws(' ', slice(w, i, {n})))")
-    gram_type = "gram" if not hash_grams else "gh"
     arms = ", ".join(
         f"CASE WHEN size(w) >= {n} THEN "
         f"transform(sequence(1, size(w) - {n - 1}), "
-        f"i -> struct({n} AS n, " + gram_expr.format(n=n) +
-        f" AS {gram_type}, "
+        f"i -> struct({n} AS n, xxhash64(concat_ws(' ', slice(w, i, {n})))"
+        " AS gh, "
         # gram char length = word lengths + (n-1) separators; computed
-        # in-scan so the hashed path never materializes the string twice
+        # in-scan so the string is never materialized twice
         f"aggregate(slice(w, i, {n}), {n - 1}, "
         f"(a, x) -> a + length(x)) AS glen)) "
         "ELSE array() END" for n in ns)
     grams = (base.select(
         id_col, F.explode(F.expr(f"flatten(array({arms}))")).alias("t"))
-        .select(id_col, F.col("t.n").alias("n"),
-                F.col(f"t.{gram_type}").alias(gram_type),
+        .select(id_col, F.col("t.n").alias("n"), F.col("t.gh").alias("gh"),
                 F.col("t.glen").alias("glen")))
-    counts = grams.groupBy(id_col, "n", gram_type).agg(
+    counts = grams.groupBy(id_col, "n", "gh").agg(
         F.count("*").alias("cnt"), F.first("glen").alias("glen"))
     aggs = []
     for n in top_ns:
@@ -684,99 +525,93 @@ GOPHER_THRESHOLDS_FULL = dict(GOPHER_THRESHOLDS, **{
 
 def gopher_quality_filter_full(df: DataFrame, text_col: str = "text",
                                id_col: str = "doc_id",
-                               thresholds: dict | None = None,
-                               single_pass: bool = True,
-                               arrow: bool = True) -> DataFrame:
+                               thresholds: dict | None = None) -> DataFrame:
     """The Gopher gate with the COMPLETE Table-A1 repetition family: the
     base ``gopher_quality_filter`` checks plus dup-line-char, paragraph
     duplicates, top-3/4-gram and dup-6..10-gram fractions.  Reasons merge
     with the base gate's; a doc keeps iff every check passes.
 
-    r7 (guide §2.4/§1.2 "the distributed algorithm first"): every
-    Table-A1 signal is a WITHIN-document statistic, so the default is
-    ONE narrow map stage — zero Exchange, zero joins.  The previous
-    composition recomputed the line/2-gram/5-gram explodes THREE times
-    across ~8 aggregation frames and 4 joins (sf0.1: 10.0 s).
+    Every Table-A1 signal is a WITHIN-document statistic, so the plan is
+    ONE narrow map stage — zero Exchange, zero joins.  It is split into a
+    SIGNAL layer and a JVM ASSEMBLY layer:
 
-    The stage is split into a SIGNAL layer (exact integer statistics per
-    document) and a shared JVM ASSEMBLY layer (fractions, thresholds,
-    reason strings) so every double/NULL comparison runs through ONE set
-    of Catalyst expressions regardless of which signal kernel produced
-    the ints:
+    * the signal layer is a vectorized numpy kernel in one mapInPandas
+      stage (``_gopher_signals_arrow``), giving exact integer statistics
+      per document.  Catalyst's higher-order functions are
+      CodegenFallback (interpreted per element): the in-row
+      ``array_sort`` + ``aggregate`` walks this replaced cost ~50
+      core-seconds at sf0.1 where the kernel does the same integer
+      combinatorics in 1.7.  The kernel is EXACT, not probabilistic —
+      n-gram identity is dense token-id pairing (two 32-bit ids packed
+      into 64 bits, renumbered via np.unique per n), never a lossy hash
+      — and reproduces Spark's tokenization semantics (space-only
+      ``trim``, the Java whitespace class with kept empty fields,
+      codepoint lengths);
+    * the assembly layer turns those integers into fractions, threshold
+      checks and reason strings with Catalyst expressions, the same
+      base checks ``gopher_quality_filter_single_pass`` and
+      ``repetition_stats`` read, so every double/NULL comparison runs
+      through one expression set.
 
-    * ``arrow=True`` (default): the signals come from a vectorized
-      numpy kernel in one mapInPandas stage (guide §4.2 — hand whole
-      batches to native code).  Catalyst's higher-order functions are
-      CodegenFallback (interpreted per element), and the measured gap is
-      ~30x: the JVM walk set costs ~50 core-seconds at sf0.1 where the
-      numpy kernel does the same exact integer combinatorics in 1.7.
-      The kernel is EXACT, not probabilistic — n-gram identity is dense
-      token-id pairing (two 32-bit ids packed into 64 bits, renumbered
-      via np.unique per n), never a lossy hash — and reproduces Spark's
-      exact tokenization semantics (space-only ``trim``, the Java
-      whitespace class with kept empty fields, codepoint lengths).
-    * ``arrow=False``: the signals come from the in-row ``array_sort`` +
-      ``aggregate`` run-length walks (pure JVM; the
-      ``gopher_quality_filter_single_pass`` machinery).
-    * ``single_pass=False``: the pre-r7 relational composition (the
-      huge-single-document fallback).
-
-    All three paths are value-identical (randomized equivalence pytest
-    incl. NULL/empty/tab-edge docs + the driver's SQL oracle)."""
+    Value-pinned against ``gopher_filter_full_oracle`` (the gate's SQL
+    oracle and a randomized pytest incl. empty/tab-edge docs)."""
     t = thresholds or GOPHER_THRESHOLDS_FULL
-    if single_pass:
-        sig = (_gopher_signals_arrow(df, text_col, id_col) if arrow
-               else _gopher_signals_jvm(df, text_col, id_col))
-        return _gopher_assemble(sig, id_col, t)
-    return _gopher_full_relational(df, text_col, id_col, thresholds)
+    return _gopher_gate(_gopher_signals_arrow(df, text_col, id_col,
+                                              extras=True),
+                        id_col,
+                        _gopher_base_checks(t) + _gopher_extra_checks(t))
 
 
-# flat signal-layer columns shared by the numpy and JVM kernels; the
-# assembly layer only ever sees these names, so the kernels are
-# interchangeable and equivalence is testable column-by-column
-_GOPHER_SIG_INT32 = ("_ntok", "_nchars", "_nstop", "_nkeep", "_nlines",
-                     "_nlines_d", "_nparas", "_nparas_d",
-                     "_top2_cnt", "_top2_glen", "_top3_cnt", "_top3_glen",
-                     "_top4_cnt", "_top4_glen")
-_GOPHER_SIG_INT64 = ("_tchars", "_line_dup_chars", "_para_dup_chars",
-                     "_dup5", "_dup6", "_dup7", "_dup8", "_dup9", "_dup10")
+# The n-grams each assembly layer reads, as (top ns, dup ns): the base
+# checks (and repetition_stats) read the top 2-gram and the duplicated
+# 5-grams; the Table-A1 extras add the top 3/4-grams and the duplicated
+# 6..10-grams.  The kernel's n sweep stops at the largest n its caller
+# reads.
+_BASE_NS = ((2,), (5,))
+_FULL_NS = ((2, 3, 4), (5, 6, 7, 8, 9, 10))
+
+# signal-layer columns: the plain per-document statistics, then
+# _top{n}_cnt/_top{n}_glen per top n and _dup{n} per dup n, then (extras
+# only) the paragraph statistics
+_SIG_PLAIN = ("_ntok", "_nchars", "_nstop", "_nkeep", "_tchars",
+              "_nlines", "_nlines_d", "_line_dup_chars")
+_SIG_PARAS = ("_nparas", "_nparas_d", "_para_dup_chars")
+
+
+def _gopher_sig_names(extras: bool) -> tuple[str, ...]:
+    top_ns, dup_ns = _FULL_NS if extras else _BASE_NS
+    return (_SIG_PLAIN
+            + tuple(f"_top{n}_{f}" for n in top_ns for f in ("cnt", "glen"))
+            + tuple(f"_dup{n}" for n in dup_ns)
+            + (_SIG_PARAS if extras else ()))
+
 
 # exact mirrors of the Spark-side tokenization (pinned empirically and by
-# the randomized equivalence test):
+# the randomized oracle test):
 #   Spark trim()          == str.strip(' ')          (space only)
 #   Spark split(_, '\s+') == the Java \s class with ALL empty fields kept
 #   Spark length()        == codepoint count == python len()
-import re as _re
-
-_GOPHER_WS_RE = _re.compile("[ \t\n\x0b\f\r]+")
-_GOPHER_PARA_RE = _re.compile("\n{2,}")
-_GOPHER_PUNCT_RE = _re.compile(r"[!-/:-@\[-`{-~]")
+_GOPHER_WS_RE = re.compile("[ \t\n\x0b\f\r]+")
+_GOPHER_PARA_RE = re.compile("\n{2,}")
+_GOPHER_PUNCT_RE = re.compile(r"[!-/:-@\[-`{-~]")
 _GOPHER_STOPSET = frozenset(_STOPWORDS)
 
 
-def _gopher_sig_row(text):
-    """All signal-layer integers for one document — exact, vectorized.
-    Null-ness mirrors the JVM kernel on NULL text: every plain statistic
-    is NULL, while the gram signals are (0, 0)/0 (the JVM CASE falls to
-    ELSE array() and the walks return zeros)."""
+def _gopher_sig_row(text, extras: bool) -> tuple:
+    """The signal-layer integers for one document, in
+    ``_gopher_sig_names(extras)`` order — exact, vectorized.  On NULL text
+    every plain and paragraph statistic is NULL while the gram signals are
+    0, as the assembly's NULL semantics expect."""
     import numpy as np
+    top_ns, dup_ns = _FULL_NS if extras else _BASE_NS
     if text is None:
-        return (None,) * 8 + (0, 0, 0, 0, 0, 0) + (None, None, None,
-                                                   0, 0, 0, 0, 0, 0)
+        return ((None,) * len(_SIG_PLAIN)
+                + (0,) * (2 * len(top_ns) + len(dup_ns))
+                + ((None,) * len(_SIG_PARAS) if extras else ()))
     from collections import Counter
-    nchars = len(text)
-    nkeep = len(_GOPHER_PUNCT_RE.sub("", text))
     lines = text.split("\n")
-    nlines = len(lines)
     lc = Counter(lines)
-    nlines_d = len(lc)
     line_dup_chars = sum((c - 1) * len(v) for v, c in lc.items() if c > 1)
-    pc = Counter(p for p in
-                 (q.strip(" ") for q in _GOPHER_PARA_RE.split(text))
-                 if p != "")
-    nparas = sum(pc.values())
-    nparas_d = len(pc)
-    para_dup_chars = sum((c - 1) * len(v) for v, c in pc.items() if c > 1)
     w = _GOPHER_WS_RE.split(text.strip(" "))
     ntok = len(w)
     tchars = 0
@@ -789,19 +624,16 @@ def _gopher_sig_row(text):
         if x in _GOPHER_STOPSET:
             nstop += 1
         id_list.append(setdefault(x, len(tok_ids)))
+    row = [ntok, len(text), nstop, len(_GOPHER_PUNCT_RE.sub("", text)),
+           tchars, len(lines), len(lc), line_dup_chars]
+
     ids = np.asarray(id_list, dtype=np.uint64)
     lens = np.fromiter((len(x) for x in w), dtype=np.int64, count=ntok)
     glen_ps = np.concatenate(([0], np.cumsum(lens)))
     cur = ids
     tops = {}
     dups = {}
-    for n in range(2, 11):
-        if ntok < n:
-            if n <= 4:
-                tops[n] = (0, 0)
-            else:
-                dups[n] = 0
-            continue
+    for n in range(2, min(max(top_ns + dup_ns), ntok) + 1):
         # EXACT n-gram identity: extend each (n-1)-gram id with the next
         # token id — both < 2^32, packed losslessly into one uint64 —
         # then renumber densely.  No hashing, no collisions.
@@ -812,36 +644,40 @@ def _gopher_sig_row(text):
         glen = glen_ps[n:] - glen_ps[:-n] + (n - 1)
         cnts = np.bincount(inv)
         gl_u = glen[first_idx]
-        if n <= 4:
+        if n in top_ns:
             k = np.lexsort((gl_u, cnts))[-1]   # max (cnt, glen) — the
             tops[n] = (int(cnts[k]), int(gl_u[k]))  # family tie rule
-        else:
+        elif n in dup_ns:
             mask = cnts > 1
             dups[n] = int(((cnts[mask] - 1) * gl_u[mask]).sum())
-    return (ntok, nchars, nstop, nkeep, nlines, nlines_d, nparas, nparas_d,
-            tops[2][0], tops[2][1], tops[3][0], tops[3][1],
-            tops[4][0], tops[4][1],
-            tchars, line_dup_chars, para_dup_chars,
-            dups[5], dups[6], dups[7], dups[8], dups[9], dups[10])
+    for n in top_ns:
+        row += tops.get(n, (0, 0))
+    row += [dups.get(n, 0) for n in dup_ns]
+    if extras:
+        pc = Counter(p for p in
+                     (q.strip(" ") for q in _GOPHER_PARA_RE.split(text))
+                     if p != "")
+        row += [sum(pc.values()), len(pc),
+                sum((c - 1) * len(v) for v, c in pc.items() if c > 1)]
+    return tuple(row)
 
 
-def _gopher_signals_arrow(df: DataFrame, text_col: str,
-                          id_col: str) -> DataFrame:
-    """Signal layer via the numpy kernel (one Arrow stage, no shuffle)."""
+def _gopher_signals_arrow(df: DataFrame, text_col: str, id_col: str,
+                          extras: bool) -> DataFrame:
+    """Signal layer: the numpy kernel in one Arrow stage, no shuffle.
+    ``extras`` adds the Table-A1 columns (and sweeps n to 10)."""
     import pandas as pd
 
     from pyspark.sql import types as T
-    fields = [T.StructField(id_col, df.schema[id_col].dataType, False)]
-    fields += [T.StructField(c, T.IntegerType(), True)
-               for c in _GOPHER_SIG_INT32]
-    fields += [T.StructField(c, T.LongType(), True)
-               for c in _GOPHER_SIG_INT64]
-    schema = T.StructType(fields)
-    names = _GOPHER_SIG_INT32 + _GOPHER_SIG_INT64
+    names = _gopher_sig_names(extras)
+    schema = T.StructType(
+        [T.StructField(id_col, df.schema[id_col].dataType, False)]
+        + [T.StructField(c, T.LongType(), True) for c in names])
 
     def kernel(batches):
         for pdf in batches:
-            rows = [_gopher_sig_row(x) for x in pdf[text_col].tolist()]
+            rows = [_gopher_sig_row(x, extras)
+                    for x in pdf[text_col].tolist()]
             out = {id_col: pdf[id_col]}
             for i, c in enumerate(names):
                 out[c] = [r[i] for r in rows]
@@ -850,66 +686,10 @@ def _gopher_signals_arrow(df: DataFrame, text_col: str,
     return df.select(id_col, text_col).mapInPandas(kernel, schema=schema)
 
 
-def _gopher_signals_jvm(df: DataFrame, text_col: str,
-                        id_col: str) -> DataFrame:
-    """Signal layer via in-row array_sort + aggregate walks (pure JVM).
-    Each walk evaluates ONCE into its own column (HOFs are
-    CodegenFallback — a struct field accessed twice, or ``keep``
-    re-deriving ``reasons``, would re-run the whole walk); a final cheap
-    projection flattens the top-gram structs to the shared column set."""
-    stop_arr = ", ".join(f"'{s}'" for s in _STOPWORDS)
-    pre = df.select(
-        F.col(id_col), F.col(text_col).alias("_t"),
-        F.split(F.col(text_col), "\n").alias("_lines"),
-        F.expr(f"filter(transform(split({text_col}, '\\n{{2,}}'), "
-               "p -> trim(p)), p -> p != '')").alias("_paras"),
-        _tokens(text_col).alias("_w"))
-
-    def gram(n: int) -> str:
-        return (f"CASE WHEN size(_w) >= {n} THEN "
-                f"transform(sequence(1, size(_w) - {n - 1}), "
-                f"i -> concat_ws(' ', slice(_w, i, {n}))) "
-                "ELSE array() END")
-
-    sig_cols = [
-        F.col(id_col),
-        F.size("_w").alias("_ntok"),
-        F.length("_t").alias("_nchars"),
-        F.expr("aggregate(transform(_w, x -> length(x)), "
-               "CAST(0 AS BIGINT), (acc, x) -> acc + x)").alias("_tchars"),
-        F.expr(f"size(filter(_w, x -> x IN ({stop_arr})))").alias("_nstop"),
-        F.length(F.regexp_replace(F.col("_t"), r"[!-/:-@\[-`{-~]", ""))
-         .alias("_nkeep"),
-        F.size("_lines").alias("_nlines"),
-        F.size(F.array_distinct("_lines")).alias("_nlines_d"),
-        F.expr(_dup_chars("_lines")).alias("_line_dup_chars"),
-        F.size("_paras").alias("_nparas"),
-        F.size(F.array_distinct("_paras")).alias("_nparas_d"),
-        F.expr(_dup_chars("_paras")).alias("_para_dup_chars"),
-    ]
-    for n in (2, 3, 4):
-        sig_cols.append(F.expr(_run_length_top(gram(n))).alias(f"_top{n}"))
-    for n in (5, 6, 7, 8, 9, 10):
-        sig_cols.append(F.expr(_dup_chars(gram(n))).alias(f"_dup{n}"))
-    sig = pre.select(*sig_cols)
-    flat = [F.col(id_col),
-            F.col("_ntok"), F.col("_nchars"), F.col("_nstop"),
-            F.col("_nkeep"), F.col("_nlines"), F.col("_nlines_d"),
-            F.col("_nparas"), F.col("_nparas_d")]
-    for n in (2, 3, 4):
-        flat.append(F.col(f"_top{n}.cnt").alias(f"_top{n}_cnt"))
-        flat.append(F.col(f"_top{n}.glen").alias(f"_top{n}_glen"))
-    flat += [F.col("_tchars"), F.col("_line_dup_chars"),
-             F.col("_para_dup_chars")]
-    flat += [F.col(f"_dup{n}") for n in (5, 6, 7, 8, 9, 10)]
-    return sig.select(*flat)
-
-
-def _gopher_assemble(sig: DataFrame, id_col: str, t: dict) -> DataFrame:
-    """Shared JVM assembly over the flat signal columns: fractions,
-    thresholds, reason strings — the literal expression set of the
-    relational gate, so every double/NULL comparison is bit-identical no
-    matter which kernel produced the integers."""
+def _gopher_base_checks(t: dict) -> list:
+    """The base gate's nine (condition, reason) checks over the signal
+    columns — the literal expression set of the relational gate, so
+    every double/NULL comparison is bit-identical to it."""
     n_tok = F.col("_ntok")
     n_chars = F.col("_nchars")
     n_punct = n_chars - F.col("_nkeep")
@@ -928,7 +708,7 @@ def _gopher_assemble(sig: DataFrame, id_col: str, t: dict) -> DataFrame:
         F.lit(1.0))
     dup5_frac = F.least(
         F.col("_dup5").cast("double") / nc, F.lit(1.0))
-    base_checks = [
+    return [
         (n_tok < t["min_words"], "too-few-words"),
         (n_tok > t["max_words"], "too-many-words"),
         (mean_wl < t["min_mean_word_len"], "short-words"),
@@ -940,7 +720,11 @@ def _gopher_assemble(sig: DataFrame, id_col: str, t: dict) -> DataFrame:
         (dup5_frac > t["max_dup5gram_char_frac"], "dup-5grams"),
     ]
 
-    # Table-A1 extras — the literal relational expressions, in-row
+
+def _gopher_extra_checks(t: dict) -> list:
+    """The Table-A1 extras' (condition, reason) checks — the literal
+    expressions of ``gopher_filter_full_oracle``."""
+    nc = F.nullif(F.col("_nchars").cast("double"), F.lit(0.0))
     dup_line_char_frac = (
         F.coalesce("_line_dup_chars", F.lit(0)).cast("double") / nc)
     para_total = F.col("_nparas")
@@ -948,7 +732,7 @@ def _gopher_assemble(sig: DataFrame, id_col: str, t: dict) -> DataFrame:
                      / F.nullif(para_total.cast("double"), F.lit(0.0)))
     dup_para_char_frac = (
         F.coalesce("_para_dup_chars", F.lit(0)).cast("double") / nc)
-    extra_checks = [
+    checks = [
         (dup_line_char_frac > t["max_dup_line_char_frac"], "dup-line-chars"),
         (dup_para_frac > t["max_dup_para_frac"], "dup-paras"),
         (dup_para_char_frac > t["max_dup_para_char_frac"], "dup-para-chars"),
@@ -958,63 +742,24 @@ def _gopher_assemble(sig: DataFrame, id_col: str, t: dict) -> DataFrame:
             (F.coalesce(F.col(f"_top{n}_cnt"), F.lit(0))
              * F.coalesce(F.col(f"_top{n}_glen"), F.lit(0)))
             .cast("double") / nc, F.lit(1.0)))
-        extra_checks.append(
-            (frac > t[f"max_top{n}gram_char_frac"], f"top-{n}gram"))
+        checks.append((frac > t[f"max_top{n}gram_char_frac"], f"top-{n}gram"))
     for n in (6, 7, 8, 9, 10):
         frac = F.when(nc.isNotNull(), F.least(
             F.coalesce(F.col(f"_dup{n}"), F.lit(0))
             .cast("double") / nc, F.lit(1.0)))
-        extra_checks.append(
-            (frac > t[f"max_dup{n}gram_char_frac"], f"dup-{n}grams"))
+        checks.append((frac > t[f"max_dup{n}gram_char_frac"], f"dup-{n}grams"))
+    return checks
 
-    base = F.concat_ws("|", *[
-        F.when(cond, F.lit(name)) for cond, name in base_checks])
-    extra = F.concat_ws("|", *[
-        F.when(cond, F.lit(name)) for cond, name in extra_checks])
-    reasons = F.concat_ws("|", F.nullif(base, F.lit("")),
-                          F.nullif(extra, F.lit("")))
+
+def _gopher_gate(sig: DataFrame, id_col: str, checks: list) -> DataFrame:
+    """(id, keep, reasons) from the checks: reasons '|'-join the failed
+    checks in order, and a doc keeps iff none failed."""
+    reasons = F.concat_ws("|", *[
+        F.when(cond, F.lit(name)) for cond, name in checks])
     return (sig.select(F.col(id_col), reasons.alias("reasons"))
             .select(F.col(id_col),
                     (F.col("reasons") == "").alias("keep"),
                     F.col("reasons")))
-
-
-def _gopher_full_relational(df: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id",
-                            thresholds: dict | None = None) -> DataFrame:
-    """The pre-r7 relational composition (base gate + repetition_stats +
-    ngram_repetition_stats tagged explode + paragraph stats, joined on
-    id): kept as the huge-single-document fallback and as the
-    equivalence anchor for the single-pass default."""
-    t = thresholds or GOPHER_THRESHOLDS_FULL
-    base_gate = gopher_quality_filter(df, text_col, id_col, t)
-    rs = repetition_stats(df, text_col, id_col, single_pass=False).select(
-        id_col, "dup_line_char_frac")
-    ng = ngram_repetition_stats(df, text_col, id_col)
-    ps = paragraph_repetition_stats(df, text_col, id_col).select(
-        id_col, "dup_para_frac", "dup_para_char_frac")
-    j = base_gate.join(rs, id_col).join(ng, id_col).join(ps, id_col)
-    checks = [
-        (F.col("dup_line_char_frac") > t["max_dup_line_char_frac"],
-         "dup-line-chars"),
-        (F.col("dup_para_frac") > t["max_dup_para_frac"], "dup-paras"),
-        (F.col("dup_para_char_frac") > t["max_dup_para_char_frac"],
-         "dup-para-chars"),
-    ]
-    for n in (3, 4):
-        checks.append((F.col(f"top_{n}gram_char_frac")
-                       > t[f"max_top{n}gram_char_frac"], f"top-{n}gram"))
-    for n in (6, 7, 8, 9, 10):
-        checks.append((F.col(f"dup_{n}gram_char_frac")
-                       > t[f"max_dup{n}gram_char_frac"], f"dup-{n}grams"))
-    extra = F.concat_ws("|", *[
-        F.when(cond, F.lit(name)) for cond, name in checks])
-    reasons = F.concat_ws("|", F.nullif(F.col("reasons"), F.lit("")),
-                          F.nullif(extra, F.lit("")))
-    return j.select(
-        F.col(id_col),
-        (reasons == "").alias("keep"),
-        reasons.alias("reasons"))
 
 
 def paragraph_repetition_stats(df: DataFrame, text_col: str = "text",

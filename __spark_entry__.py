@@ -1014,7 +1014,8 @@ def q_conv_scoped_invariants(spark, sf_dir):
         conversations are eligible for redo).
     I2: for an identical (turn, span, place_id) kept across passes, pass-2
         confidence never drops (the preferred-geography bias only adds)."""
-    from xponents_spark.pipeline import extract_conversation_scoped
+    from xponents_spark.pipeline import (VOTE_CONFIDENCE,
+                                         extract_conversation_scoped)
     t = _transcripts_spread(spark, sf_dir)
     keys = ["conv_id", "turn_idx", "span_start", "span_end"]
     ex1 = exploded_matches(extract(t))
@@ -1023,11 +1024,11 @@ def q_conv_scoped_invariants(spark, sf_dir):
     m2 = (exploded_matches(extract_conversation_scoped(t))
           .filter(F.col("label").isin("place", "country"))
           .select(*keys, "place_id", "confidence"))
-    # eligibility mirrors the vote: confident geotags OR reverse-geocoded
-    # coordinates (A3 coordinate-inferred scope)
+    # eligibility is the engine's vote rule: confident geotags OR
+    # reverse-geocoded coordinates (A3 coordinate-inferred scope)
     voted = (ex1.filter(F.col("cc").isNotNull()
                         & ((F.col("label").isin("place", "country")
-                            & (F.col("confidence") >= 65))
+                            & (F.col("confidence") >= VOTE_CONFIDENCE))
                            | (F.col("label") == "coord")))
              .select("conv_id").distinct())
     changed = (m2.exceptAll(m1.select(*keys, "place_id", "confidence"))

@@ -358,9 +358,14 @@ def test_exploded_matches_shape(spark, sf_dir):
 def test_conversation_scope_rescoring(spark):
     """Two-pass conversation-scope extraction: a confident country mention
     in one turn flips an ambiguous city in another turn of the SAME
-    conversation; other conversations are untouched."""
+    conversation; other conversations are untouched.  Both sides of the
+    redo tag: c1's ambiguous turn is redone, c2's equally ambiguous turn
+    has no vote and passes through as pass 1 wrote it."""
     import datetime
-    from xponents_spark.pipeline import extract_conversation_scoped
+    from xponents_spark.pipeline import (AMBIGUOUS_CONFIDENCE,
+                                         DEFAULT_FEATURES,
+                                         extract_conversation_scoped,
+                                         extract_turn)
     ts = datetime.datetime(2025, 1, 1)
     rows = [
         ("c1", 0, "user", "we are based in United States these days", None, ts),
@@ -370,12 +375,22 @@ def test_conversation_scope_rescoring(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
+    res = extract_conversation_scoped(df).collect()
     out = {(r["conv_id"], r["turn_idx"]):
-           [(m["matchtext"], m["cc"]) for m in r["matches"]
-            if m["label"] == "place"]
-           for r in extract_conversation_scoped(df).collect()}
-    assert out[("c1", 1)] == [("Vancouver", "US")]   # conv context applied
-    assert out[("c2", 0)] == [("Vancouver", "CA")]   # no context: default
+           [(m["label"], m["matchtext"], m["cc"], m["confidence"])
+            for m in r["matches"]] for r in res}
+    assert len(res) == len(out) == len(rows)         # each key exactly once
+    pass1 = {(c, i): [(m["label"], m["matchtext"], m["cc"], m["confidence"])
+                      for m in extract_turn(text, DEFAULT_FEATURES)[1]]
+             for c, i, _r, text, _t, _ts in rows}
+    # the Vancouver turns are ambiguous in pass 1, in both conversations
+    for k in (("c1", 1), ("c2", 0)):
+        assert [(lab, cc) for lab, _t, cc, conf in pass1[k]
+                if conf < AMBIGUOUS_CONFIDENCE] == [("place", "CA")]
+    assert [m[:3] for m in out[("c1", 1)]] == [
+        ("place", "Vancouver", "US")]                # conv context applied
+    assert out[("c1", 0)] == pass1[("c1", 0)]        # voter, not ambiguous
+    assert out[("c2", 0)] == pass1[("c2", 0)]        # no vote: unchanged
 
 
 def test_conversation_scope_taxcat_env_read_once(spark, tmp_path,
@@ -922,7 +937,8 @@ def test_conv_scoped_two_pass_resumes_from_checkpoint(spark, sf_dir,
     table: a second invocation over the same work_dir must (a) produce the
     identical result and (b) never re-run pass-1 extraction (all bucket
     manifests committed), and the returned plan must contain no
-    InMemoryRelation (VERDICT r3 item 2)."""
+    InMemoryRelation (VERDICT r3 item 2) and no anti-join.  The output
+    keys are the input keys, each exactly once."""
     from xponents_spark.pipeline import extract_conversation_scoped
     from xponents_spark.sources import synthesize_transcripts
 
@@ -931,7 +947,14 @@ def test_conv_scoped_two_pass_resumes_from_checkpoint(spark, sf_dir,
     out1 = extract_conversation_scoped(t, work_dir=wd)
     plan = out1._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    # pass 2 is one keyed merge: tagged rows split by complementary
+    # filters, no anti-join to find the kept rows
+    assert "LeftAnti" not in plan
     rows1 = sorted(map(tuple, out1.select("conv_id", "turn_idx").collect()))
+    # every input key comes out exactly once
+    assert rows1 == sorted(map(tuple, t.select("conv_id", "turn_idx")
+                                       .collect()))
+    assert len(set(rows1)) == len(rows1)
 
     # resume: every bucket manifest is committed, so pass-1 extract must
     # not be invoked again — make it explode if it is

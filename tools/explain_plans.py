@@ -83,10 +83,11 @@ def main():
     from xponents_spark.pipeline import extract_conversation_scoped
     sections.append(("conversation-scoped two-pass rescore (expect: pass-1 "
                      "read back from the resumable CHECKPOINT TABLE — no "
-                     "InMemoryRelation anywhere; BroadcastHashJoin on the "
-                     "conv->country pref map, redo mapInPandas only over "
-                     "the joined ambiguous slice, left-anti join for kept "
-                     "rows)",
+                     "InMemoryRelation anywhere; one keyed merge: each "
+                     "checkpoint row left-joins the broadcast conv->country "
+                     "pref map and is tagged _redo, the _redo filter feeds "
+                     "the redo mapInPandas, its NOT-_redo complement is the "
+                     "kept rows; no anti-join)",
                      formatted(extract_conversation_scoped(t))))
 
     from xponents_spark.operators.dedup import minhash_near_dups

@@ -30,6 +30,11 @@ DEFAULT_FEATURES = ("content", "coordinates", "dates", "patterns",
 
 _MATCH_TEMPLATE = {name: None for name in MATCH_FIELD_NAMES}
 
+# conversation scope: a place match below AMBIGUOUS_CONFIDENCE sends its turn
+# to pass 2; place/country matches at VOTE_CONFIDENCE or above vote
+AMBIGUOUS_CONFIDENCE = 60
+VOTE_CONFIDENCE = 65
+
 
 def _match_row(**kw) -> dict:
     row = dict(_MATCH_TEMPLATE)
@@ -189,6 +194,19 @@ def _reset_worker_state(gaz_path: str | None, postal_path: str | None,
     set_taxcat_parquet(taxcat_path)
 
 
+def _with_extraction(pdf: pd.DataFrame, extracted: Iterable) -> pd.DataFrame:
+    """A copy of the batch ``pdf`` with ``main_text`` and ``matches`` filled
+    from ``extracted``, one ``(main, rows)`` pair per row in batch order."""
+    mains, matches = [], []
+    for main, rows in extracted:
+        mains.append(main)
+        matches.append(rows)
+    pdf = pdf.copy()
+    pdf["main_text"] = mains
+    pdf["matches"] = matches
+    return pdf
+
+
 def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
             text_col: str = "text",
             prefer_countries: Iterable[str] = (),
@@ -233,30 +251,19 @@ def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _reset_worker_state(gaz_path, postal_path, taxcat_path)
         for pdf in batches:
-            mains = []
-            matches = []
-            for text in pdf[text_col].tolist():
-                main, rows = extract_turn(
-                    text, feats, prefs_cc, prefs_loc,
-                    coord_families=cfams, date_families=dfams,
-                    strict_coords=strict_coords,
-                    today_epoch=today_epoch, emit_filtered=emit_filtered,
-                    match_filter=mfilter)
-                mains.append(main)
-                matches.append(rows)
-            pdf = pdf.copy()
-            pdf["main_text"] = mains
-            pdf["matches"] = matches
-            yield pdf
+            yield _with_extraction(pdf, (
+                extract_turn(text, feats, prefs_cc, prefs_loc,
+                             coord_families=cfams, date_families=dfams,
+                             strict_coords=strict_coords,
+                             today_epoch=today_epoch,
+                             emit_filtered=emit_filtered,
+                             match_filter=mfilter)
+                for text in pdf[text_col].tolist()))
 
     return df.mapInPandas(run, schema=out_schema)
 
 
 def extract_conversation_scoped(df: DataFrame,
-                                features: Iterable[str] = DEFAULT_FEATURES,
-                                text_col: str = "text",
-                                min_confidence: int = 60,
-                                vote_confidence: int = 65,
                                 gazetteer_parquet: str | None = None,
                                 postal_parquet: str | None = None,
                                 work_dir: str | None = None,
@@ -268,26 +275,26 @@ def extract_conversation_scoped(df: DataFrame,
 
     Pass 1: per-turn extraction (map-only), written to ``work_dir`` as a
     RESUMABLE checkpointed table (``plans.run_resumable`` — per-bucket
-    manifests with lineage + metrics), then read back for its three
-    consumers: the country vote, the redo slice, and the kept anti-join.
-    One narrow shuffle computes each conversation's dominant country from
-    its CONFIDENT geo matches, and ONLY turns that carry a low-confidence
-    place match re-extract with that country as preferred geography (K11
-    +0.5 bias) — the second Arrow pass touches just the ambiguous slice,
-    and the conv->country map rides a broadcast join.
+    manifests with lineage + metrics).  Pass 2 reads it back for the
+    country vote (one narrow shuffle over CONFIDENT geo matches) and for
+    one keyed merge: a broadcast join of the conv->country map tags each
+    row ``_redo`` when it carries an ambiguous place match and its
+    conversation voted, and two complementary filters split the rows — the
+    redo slice re-extracts with that country as preferred geography (K11
+    +0.5 bias), every other row passes through, each exactly once.
 
-    The write-then-read-twice shape replaces round-3's
-    ``persist(MEMORY_AND_DISK)``: at 100 TB a persist held the WHOLE pass-1
-    corpus live inside the returned plan, while the checkpoint table (a)
-    spills to storage whose bandwidth scales with the cluster, (b) makes
-    pass 1 resumable mid-corpus via the existing manifests, and (c) leaves
-    the returned plan free of InMemoryRelation.  Calling this function
-    RUNS pass 1 eagerly (it is a checkpoint, not a lazy view); the caller
-    owns ``work_dir``'s lifecycle — pass the same dir to resume, delete it
-    to reclaim space.  ``work_dir=None`` uses a fresh DRIVER-LOCAL temp
-    dir — valid only for local/local-cluster masters; cluster runs MUST
-    pass ``work_dir`` on shared storage (HDFS/S3/NFS) and the function
-    raises otherwise (round 5: fail loudly, not silently-corrupt).
+    The checkpoint replaces round-3's ``persist(MEMORY_AND_DISK)``: at
+    100 TB a persist held the WHOLE pass-1 corpus live inside the returned
+    plan, while the checkpoint table (a) spills to storage whose bandwidth
+    scales with the cluster, (b) makes pass 1 resumable mid-corpus via the
+    existing manifests, and (c) leaves the returned plan free of
+    InMemoryRelation.  Calling this function RUNS pass 1 eagerly (it is a
+    checkpoint, not a lazy view); the caller owns ``work_dir``'s lifecycle
+    — pass the same dir to resume, delete it to reclaim space.
+    ``work_dir=None`` uses a fresh DRIVER-LOCAL temp dir — valid only for
+    local/local-cluster masters; cluster runs MUST pass ``work_dir`` on
+    shared storage (HDFS/S3/NFS) and the function raises otherwise (round
+    5: fail loudly, not silently-corrupt).
     """
     import os as _os
     import tempfile as _tempfile
@@ -296,7 +303,6 @@ def extract_conversation_scoped(df: DataFrame,
 
     from .plans.checkpoints import read_resumable_output, run_resumable
 
-    feats = tuple(features)
     gaz_path = gazetteer_parquet or _os.environ.get("XPONENTS_GAZETTEER_PARQUET")
     postal_path = postal_parquet or _os.environ.get("XPONENTS_POSTAL_PARQUET")
     # read once on the driver: both passes tag taxons from the same file
@@ -326,13 +332,12 @@ def extract_conversation_scoped(df: DataFrame,
         work_dir = _tempfile.mkdtemp(prefix="convscope_pass1_")
         _atexit.register(_shutil.rmtree, work_dir, ignore_errors=True)
     run_resumable(
-        df, work_dir, buckets=buckets, features=feats,
+        df, work_dir, buckets=buckets,
         input_desc="conversation-scoped pass 1",
         # computed inputs (synthesized transcripts) are the common caller;
         # they own input identity, and a count() would re-run the synth
         verify_input=False,
-        extract_kwargs={"text_col": text_col,
-                        "gazetteer_parquet": gaz_path,
+        extract_kwargs={"gazetteer_parquet": gaz_path,
                         "postal_parquet": postal_path,
                         "taxcat_parquet": taxcat_path})
     ext = read_resumable_output(df.sparkSession, work_dir)
@@ -345,7 +350,7 @@ def extract_conversation_scoped(df: DataFrame,
     geo = (ext.select("conv_id", F.explode("matches").alias("m"))
               .filter(F.col("m.cc").isNotNull()
                       & ((F.col("m.label").isin("place", "country")
-                          & (F.col("m.confidence") >= vote_confidence))
+                          & (F.col("m.confidence") >= VOTE_CONFIDENCE))
                          | (F.col("m.label") == "coord"))))
     votes = (geo.groupBy("conv_id", F.col("m.cc").alias("cc"))
                 .agg(F.count("*").alias("n")))
@@ -354,9 +359,11 @@ def extract_conversation_scoped(df: DataFrame,
 
     ambiguous = F.exists(
         "matches", lambda m: (m["label"] == "place")
-        & (m["confidence"] < F.lit(min_confidence)))
-    redo = (ext.filter(ambiguous)
-               .join(F.broadcast(pref), "conv_id", "inner"))
+        & (m["confidence"] < F.lit(AMBIGUOUS_CONFIDENCE)))
+    # coalesce: a NULL ``exists`` (NULL matches or confidence) keeps the row
+    tagged = ext.join(F.broadcast(pref), "conv_id", "left").withColumn(
+        "_redo", F.coalesce(ambiguous & F.col("cc_pref").isNotNull(),
+                            F.lit(False)))
 
     out_schema = ext.schema
     in_names = [f.name for f in out_schema.fields]
@@ -364,21 +371,13 @@ def extract_conversation_scoped(df: DataFrame,
     def rerun(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _reset_worker_state(gaz_path, postal_path, taxcat_path)
         for pdf in batches:
-            mains, matches = [], []
-            for text, cc in zip(pdf[text_col].tolist(),
-                                pdf["cc_pref"].tolist()):
-                main, rows = extract_turn(text, feats,
-                                          prefer_countries=(cc,))
-                mains.append(main)
-                matches.append(rows)
-            pdf = pdf.copy()
-            pdf["main_text"] = mains
-            pdf["matches"] = matches
-            yield pdf[in_names]
+            yield _with_extraction(pdf, (
+                extract_turn(text, DEFAULT_FEATURES, prefer_countries=(cc,))
+                for text, cc in zip(pdf["text"].tolist(),
+                                    pdf["cc_pref"].tolist())))[in_names]
 
-    redone = redo.mapInPandas(rerun, schema=out_schema)
-    kept = ext.join(redo.select("conv_id", "turn_idx"),
-                    ["conv_id", "turn_idx"], "left_anti")
+    redone = tagged.filter("_redo").mapInPandas(rerun, schema=out_schema)
+    kept = tagged.filter("NOT _redo").select(*in_names)
     out = kept.unionByName(redone)
     # the pass-1 checkpoint location, for callers that want to resume or
     # reclaim it after materializing the result
@@ -405,7 +404,7 @@ def characterize(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def exploded_matches(df: DataFrame, label: str | None = None) -> DataFrame:
     """matches array -> one row per match with turn keys, span-ordered
-    columns promoted to top level.  ``F.inline`` keeps it JVM-side."""
+    columns promoted to top level (``F.explode`` + ``m.*``, JVM-side)."""
     from pyspark.sql import functions as F
     out = df.select("conv_id", "turn_idx", F.explode("matches").alias("m"))
     out = out.select("conv_id", "turn_idx", "m.*")

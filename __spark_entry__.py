@@ -105,9 +105,10 @@ def q_transcripts(spark, sf_dir):
 
 
 def q_main_content(spark, sf_dir):
-    # NOT spread (r7): content-only extraction is ~60 us/turn of python —
-    # the 32-task spread overhead (~0.3 s) exceeds the whole single-task
-    # stage; full-feature extraction queries (xcoord etc.) DO spread
+    # NOT spread (r7): content-only extraction is ~7 us/turn of python
+    # (sf0.1 transcripts, 4-vCPU host) — the 32-task spread overhead
+    # (~0.3 s) exceeds the whole single-task stage; full-feature
+    # extraction queries (xcoord etc.) DO spread
     t = synthesize_transcripts(spark, sf_dir)
     return extract(t, features=("content",)).select("conv_id", "turn_idx", "main_text")
 

@@ -12,6 +12,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from xponents_spark import flexpat
 from xponents_spark.flexpat import (DIGITS, PatternManager, PatternMatch,
                                     ScanCtx, _rule_spans, pattern_file,
                                     reduce_matches)
@@ -217,6 +218,30 @@ def test_digit_free_turn_skips_digit_bound_rules(monkeypatch):
     # no digit, "@" or ":": no PoLi rule runs at all
     assert rules_run(poli.manager(),
                      text.replace("@", " ").replace(":", " ")) == []
+
+
+def test_ascii_digit_free_text_skips_the_digit_search(monkeypatch):
+    """An ASCII text without 0-9 has no digit runs, settled by C-level
+    ``in`` checks: the ``\\d`` search does not run.  Any other text still
+    takes it (``\\d`` also matches "٣")."""
+    calls = []
+
+    class Counting:
+        def __init__(self, real):
+            self.real = real
+
+        def search(self, *a):
+            calls.append(a[0])
+            return self.real.search(*a)
+
+    monkeypatch.setattr(flexpat, "_DIGIT_RE", Counting(flexpat._DIGIT_RE))
+    text = "No digits in this ASCII turn, only words."
+    assert ScanCtx(text).digit_clusters(10) == []
+    assert calls == []
+    assert ScanCtx("ab 12 c 345").digit_clusters(3) == [(3, 4), (8, 10)]
+    assert ScanCtx("café, no digits").digit_clusters(10) == []
+    assert ScanCtx("floor ٣٧ of 5").digit_clusters(2) == [(6, 7), (12, 12)]
+    assert calls == ["ab 12 c 345", "café, no digits", "floor ٣٧ of 5"]
 
 
 _NO_DIGITS = str.maketrans("", "", "0123456789٣٧")

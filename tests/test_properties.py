@@ -5,7 +5,7 @@ import math
 import os
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from xponents_spark.flexpat import PatternMatch, reduce_matches
@@ -82,9 +82,32 @@ def test_squeeze_whitespace_idempotent(s):
 _WHITESPACE = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
 
 
-@settings(max_examples=500, deadline=None)
-@given(st.text(alphabet=_WHITESPACE + "ab\u200b", max_size=40))
+# non-whitespace characters that are not printable, next to printable ones
+_NONPRINTABLE = "\x00\x7f\u200b\u200d\u00ad\ufeff"
+_SQUEEZED = st.lists(st.text(alphabet="abcé-" + _NONPRINTABLE, min_size=1,
+                             max_size=6), max_size=6).map(" ".join)
+
+
+def test_space_is_the_only_printable_whitespace():
+    assert [c for c in _WHITESPACE if c.isprintable()] == [" "]
+
+
+@settings(max_examples=800, deadline=None)
+@given(st.one_of(
+    st.text(alphabet=_WHITESPACE + "ab\u200b", max_size=40),
+    st.text(alphabet=" \xa0\t\nab" + _NONPRINTABLE, max_size=40),
+    _SQUEEZED,
+    _SQUEEZED.map(lambda t: f" {t}\xa0\xa0"),
+    st.text(alphabet="ab ", max_size=20)))
+@example("already squeezed ascii")
+@example("déjà squeezed")
+@example("nul\x00 zwj\u200d shy\u00ad")
+@example("a\xa0\xa0b")
+@example(" a  b ")
 def test_squeeze_whitespace_equals_regex_form(s):
+    """Every branch: an already squeezed ASCII or non-ASCII text returned
+    as is, non-printable non-whitespace kept, and the split fallback for
+    runs, NBSP and other whitespace."""
     assert len(_WHITESPACE) == 29
     assert squeeze_whitespace(s) == re.sub(r"\s+", " ", s).strip()
 

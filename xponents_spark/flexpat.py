@@ -277,6 +277,21 @@ def _rule_spans(rule: Rule, text: str,
     return [(0, len(text))]
 
 
+def _digit_runs(text: str) -> list[tuple[int, int]]:
+    """Spans of the ``\\d+`` runs of ``text``.  An ASCII text's only
+    ``\\d`` chars are 0-9, and ten C-level ``in`` checks settle "none" far
+    faster than a regex search; other text (``\\d`` also matches "٣")
+    takes one ``\\d`` search, which settles a digit-free text faster than
+    ``\\d+``."""
+    if text.isascii() and not (
+            "0" in text or "1" in text or "2" in text or "3" in text
+            or "4" in text or "5" in text or "6" in text or "7" in text
+            or "8" in text or "9" in text):
+        return []
+    m = _DIGIT_RE.search(text)
+    return [r.span() for r in _DIGIT_RUN_RE.finditer(text, m.start())] if m else []
+
+
 class ScanCtx:
     """Per-text context shared by the pattern managers scanning one turn:
     memoizes the text's digit runs, so the digit search runs once per
@@ -295,10 +310,7 @@ class ScanCtx:
         out = self._clusters.get(gap)
         if out is None:
             if self._runs is None:
-                # one \d search settles a digit-free text faster than \d+
-                m = _DIGIT_RE.search(self.text)
-                self._runs = [r.span() for r in _DIGIT_RUN_RE.finditer(
-                    self.text, m.start())] if m else []
+                self._runs = _digit_runs(self.text)
             out = []
             for s, e in self._runs:
                 if out and s - out[-1][1] < gap:
@@ -367,6 +379,10 @@ class PatternManager:
         self.rules_by_family: dict[str, list[Rule]] = {}
         for rule in self.rules.values():
             self.rules_by_family.setdefault(rule.family, []).append(rule)
+        # what a digit-free text visits: the DIGITS rules would skip it
+        self._digit_free_rules = {
+            fam: [r for r in rules if r.anchor != DIGITS]
+            for fam, rules in self.rules_by_family.items()}
         # digits closer than this share one scan window: below it, the
         # widest rule's windows around them would overlap.  Being at least
         # every rule's reach, it also keeps each window short of the next
@@ -396,10 +412,11 @@ class PatternManager:
         tlen = len(text)
         clusters = ctx.digit_clusters(self.cluster_gap)
         found: list[PatternMatch] = []
-        for fam in self.rules_by_family:
+        by_family = self.rules_by_family if clusters else self._digit_free_rules
+        for fam, rules in by_family.items():
             if fam not in fams:
                 continue
-            for rule in self.rules_by_family[fam]:
+            for rule in rules:
                 spans = _rule_spans(rule, text, clusters)
                 if spans:
                     self._scan_rule(rule, text, tlen, found, context_len,

@@ -26,8 +26,22 @@ _TOKEN = re.compile(r"\S+")
 def squeeze_whitespace(text: str) -> str:
     """Collapse runs of whitespace to one space and strip the ends
     (used at GazetteerMatcher.java:510).  ``str.split()`` splits on
-    exactly the characters ``re``'s ``\\s`` matches (``str.isspace``)."""
-    return " ".join(text.split())
+    exactly the characters ``re``'s ``\\s`` matches (``str.isspace``).
+    A stripped text with no double space that is printable is already
+    squeezed: U+0020 is the only printable whitespace character.  On
+    ASCII text the cheaper test is the absence of the nine other ASCII
+    whitespace characters."""
+    t = text.strip()
+    if "  " not in t and (_no_ascii_ws(t) if t.isascii() else t.isprintable()):
+        return t
+    return " ".join(t.split())
+
+
+def _no_ascii_ws(t: str) -> bool:
+    """No ASCII whitespace but U+0020 in ``t`` (nine C-level scans; faster
+    than ``isprintable`` on ASCII text)."""
+    return not ("\n" in t or "\t" in t or "\r" in t or "\x0b" in t or "\x0c" in t
+                or "\x1c" in t or "\x1d" in t or "\x1e" in t or "\x1f" in t)
 
 
 def is_ascii(text: str) -> bool:

@@ -23,7 +23,15 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from .extractors import poli as _poli
+from .extractors import xcoord as _xcoord
+from .extractors import xtemporal as _xtemporal
+from .flexpat import ScanCtx
+from .gazetteer import geocode
+from .gazetteer.matcher import TagLimitExceeded
+from .gazetteer.spatial import reverse_geocode
 from .schemas import MATCH_FIELD_NAMES, extraction_output_schema
+from .textract import extract_main_content
 
 DEFAULT_FEATURES = ("content", "coordinates", "dates", "patterns",
                     "places", "countries", "taxons", "postal")
@@ -66,8 +74,9 @@ def extract_turn(text: str, features: tuple,
                  emit_filtered: bool = False,
                  match_filter: frozenset[str] | None = None) -> tuple[str, list[dict]]:
     """Pure per-turn extraction: main-content recovery then pattern families.
-    Offsets are into ``main_text``.  Import-inside keeps executor pickles
-    small; modules cache their compiled managers process-wide.
+    Offsets are into ``main_text``.  Modules cache their compiled managers
+    process-wide; a closure that calls this function pickles it by
+    reference, so the module-level imports do not grow executor pickles.
 
     ``coord_families``: XCoord per-family enables (match_DD/DM/DMS/MGRS/UTM,
     XCoord.html method summary); None = all.  ``strict_coords``: XCoord
@@ -82,11 +91,6 @@ def extract_turn(text: str, features: tuple,
     map<string,string>, which at 100 TB is real Arrow + parquet weight for a
     debug-grade field — like the reference's Xlayer feature params, payload
     extras are opt-in."""
-    from .extractors import poli as _poli
-    from .extractors import xcoord as _xcoord
-    from .extractors import xtemporal as _xtemporal
-    from .textract import extract_main_content
-
     if text is None:
         return None, []
     main = extract_main_content(text) if "content" in features else text
@@ -94,14 +98,12 @@ def extract_turn(text: str, features: tuple,
     coords: list[tuple[float, float]] = []
     # one scan context shared by all three pattern managers: the digit
     # search over the turn runs once, not per manager
-    from .flexpat import ScanCtx
     sctx = ScanCtx(main)
     slot_of = _slot_map if "slots" in features else (lambda m: None)
 
     if "coordinates" in features:
-        revgeo = None
-        if "places" in features or "revgeo" in features:
-            from .gazetteer.spatial import reverse_geocode as revgeo
+        revgeo = reverse_geocode if "places" in features or "revgeo" in features \
+            else None
         for m in _xcoord.extract_coordinates(main, families=coord_families,
                                              ctx=sctx):
             if m.filtered_out:
@@ -153,8 +155,6 @@ def extract_turn(text: str, features: tuple,
     geo_feats = tuple(f for f in ("places", "countries", "taxons", "postal")
                       if f in features)
     if geo_feats:
-        from .gazetteer import geocode
-        from .gazetteer.matcher import TagLimitExceeded
         try:
             for g in geocode(main, coords=coords, features=geo_feats,
                              prefer_countries=list(prefer_countries),

@@ -8,8 +8,18 @@ already a text column, so "conversion" means
 
 1. charset repair for byte payloads (:func:`decode_bytes`),
 2. HTML boilerplate removal via a block-level tag/link-density heuristic
-   (the published boilerpipe/readability family of methods),
+   (the boilerpipe family: Kohlschütter et al., "Boilerplate Detection
+   using Shallow Text Features", WSDM 2010),
 3. whitespace canonicalization (``squeeze_whitespace``).
+
+Boilerplate removal costs one forward scan per stage, linear in the text
+on any markup: every tag ends at a ``>``, so no pattern reads past the
+last one; each container's close search resumes from a per-name offset
+that only moves forward; a flagged element's end comes from one bracket
+match over its tag name's events.  ASCII text is scanned as a ``.lower()``
+copy with case-sensitive patterns; other text runs the same code with
+``re.I`` patterns on the text itself (``re.I`` also folds ``ſ``/``K``/
+``İ``, which a lowered copy would not).
 
 Everything is pure-Python over single strings; the Spark pipeline maps it
 over pandas batches inside ``mapInPandas`` (no per-row Python UDFs).
@@ -19,22 +29,55 @@ from __future__ import annotations
 
 import html as _html
 import re
+from bisect import bisect_left
 
 from ..functions.textnorm import squeeze_whitespace
 
 _HTML_HINT = re.compile(r"<\s*(?:html|body|div|p|br|span|head|nav|table|h[1-6])\b", re.I)
 # containers stripped wholesale: non-content by construction
-_DROP_BLOCKS = re.compile(
-    r"<(script|style|head|nav|header|footer|aside|noscript|svg|form|iframe)\b[^>]*>.*?</\1\s*>",
-    re.I | re.S)
-_COMMENTS = re.compile(r"<!--.*?-->", re.S)
+_CONTAINERS = ("script", "style", "head", "nav", "header", "footer", "aside",
+               "noscript", "svg", "form", "iframe")
 # id/class naming that marks boilerplate even in generic divs
-_BOILER_ATTR = re.compile(r'(?:id|class)\s*=\s*["\'][^"\']*'
-                          r'(?:nav|menu|footer|sidebar|banner|breadcrumb|advert|cookie|share|social)',
-                          re.I)
-_BLOCK_SPLIT = re.compile(r"<(?:p|div|td|th|li|article|section|main|h[1-6]|blockquote|pre|tr|br)\b[^>]*/?>", re.I)
+_BOILER_WORDS = ("(?:nav|menu|footer|sidebar|banner|breadcrumb|advert|cookie"
+                 "|share|social)")
 _TAG = re.compile(r"<[^>]+>")
-_ANCHOR_TEXT = re.compile(r"<a\b[^>]*>(.*?)</a\s*>", re.I | re.S)
+# sre's backreference rule for a container close: "</SCRIPT>" closes
+# "<script>", "</script>" does not close "<ſcript>"
+_SAME_NAME = re.compile(r"(\w+)\x00\1", re.I)
+
+
+class _Grammar:
+    """The scrubber's patterns in one case mode: ``flags=0`` over
+    ``text.lower()`` of an ASCII text (exactly ``re.I`` there), or
+    ``re.I`` over the text itself."""
+
+    def __init__(self, flags: int, anchor_hints: tuple[str, ...]):
+        names = "|".join(_CONTAINERS)
+        self.flags = flags
+        self.container = re.compile(rf"<({names})\b", flags)
+        self.close = {n: re.compile(rf"</({n})\s*>", flags) for n in _CONTAINERS}
+        self.close_head = re.compile(rf"</(?:{names})\s*", flags)
+        self.boiler = re.compile(r'(?:id|class)\s*=\s*["\'][^"\']*' + _BOILER_WORDS, flags)
+        # the part of a boiler match from its '=' on, within one tag: a
+        # literal first char makes this scan cheap where the full one is not
+        self.boiler_value = re.compile(r'=\s*["\'][^"\'>]*' + _BOILER_WORDS, flags)
+        self.open_tag = re.compile(r"<([a-z][a-z0-9]*)\b[^>]*>", flags)
+        self.block = re.compile(r"<(?:p|div|td|th|li|article|section|main|h[1-6]"
+                                r"|blockquote|pre|tr|br)\b[^>]*/?>", flags)
+        self.anchor_hints = anchor_hints
+        self.anchor_open = re.compile(r"<a\b[^>]*>", flags)
+        self.anchor_close = re.compile(r"</a\s*>", flags)
+
+    def container_name(self, key: str) -> str:
+        """The container name an open tag's name text ``key`` matched."""
+        if key in self.close:
+            return key
+        return next(n for n in _CONTAINERS if re.fullmatch(n, key, self.flags))
+
+
+_ASCII = _Grammar(0, ("<a",))
+# only "A" folds to "a" under re.I
+_UNICODE = _Grammar(re.I, ("<a", "<A"))
 
 
 def is_htmlish(text: str) -> bool:
@@ -45,69 +88,236 @@ def extract_main_content(text: str) -> str:
     """Turn text -> extracted main content.
 
     Plain text passes through whitespace-squeezed.  HTML-ish text is scrubbed:
-    script/style/nav/header/footer/aside blocks drop, remaining markup splits
-    into blocks, and each block is kept if its link density < 0.5 and it
-    carries real text (len >= 3 after tag strip).  Survivors join with single
-    spaces.  Deterministic; tested for exact recovery of wrapped content.
+    comments and script/style/head/nav/header/footer/aside/noscript/svg/
+    form/iframe elements drop, so do elements whose id/class names
+    boilerplate; the remaining markup splits into blocks, and each block
+    is kept if its link density < 0.5 and it carries real text (len >= 3
+    after tag strip).  Survivors join with single spaces.  Deterministic;
+    tested for exact recovery of wrapped content and, on generated markup,
+    for equality with the regex form it replaced.
     """
     if not text:
         return ""
     if not is_htmlish(text):
         return squeeze_whitespace(text)
-
-    doc = _COMMENTS.sub(" ", text)
-    # iterate: nested same-name blocks need repeated passes (regex is non-nesting)
-    prev = None
-    while prev != doc:
-        prev = doc
-        doc = _DROP_BLOCKS.sub(" ", doc)
-
-    # drop generic elements whose id/class flags boilerplate (non-nested scan)
-    doc = _drop_flagged_elements(doc)
-
+    doc = _drop_comments(text)
+    g, low = (_ASCII, doc.lower()) if doc.isascii() else (_UNICODE, doc)
+    doc, low = _drop_flagged(*_drop_containers(doc, low, g), g)
+    cuts = [0]
+    for m in g.block.finditer(low, 0, low.rfind(">") + 1):
+        cuts += m.span()
+    cuts.append(len(doc))
+    anchors = any(h in low for h in g.anchor_hints)
     kept: list[str] = []
-    for block in _BLOCK_SPLIT.split(doc):
-        if not block or not block.strip():
+    for bs, be in zip(cuts[::2], cuts[1::2]):
+        block = doc[bs:be]
+        if not block or block.isspace():
             continue
-        anchor_len = sum(len(_TAG.sub("", m)) for m in _ANCHOR_TEXT.findall(block))
-        visible = squeeze_whitespace(_html.unescape(_TAG.sub(" ", block)))
-        if not visible or len(visible) < 3:
-            continue
-        link_density = anchor_len / max(1, len(visible))
-        if link_density >= 0.5:
-            continue
-        kept.append(visible)
-    return squeeze_whitespace(" ".join(kept))
+        visible = squeeze_whitespace(_html.unescape(_strip_tags(block, " ")))
+        # link density = anchor chars / visible chars, kept below 0.5
+        if len(visible) >= 3 and not (
+                anchors and 2 * _anchor_chars(doc, low, bs, be, g) >= len(visible)):
+            kept.append(visible)
+    # kept blocks are squeezed and non-empty: the join is squeezed too
+    return " ".join(kept)
 
 
-_FLAGGED_OPEN = re.compile(r"<([a-z][a-z0-9]*)\b[^>]*>", re.I)
+def _strip_tags(s: str, repl: str) -> str:
+    """``_TAG.sub(repl, s)`` over the span from the first ``<`` to the
+    last ``>`` only: no tag starts before the one or ends after the other
+    (and a ``<`` after the last ``>`` is never rescanned)."""
+    i = s.find("<")
+    j = s.rfind(">") + 1
+    if i < 0 or j <= i:
+        return s
+    if s.find(">", i) == j - 1:            # one '>': the span is one tag
+        return s[:i] + repl + s[j:] if j - i > 2 else s
+    return s[:i] + _TAG.sub(repl, s[i:j]) + s[j:]
 
 
-def _drop_flagged_elements(doc: str) -> str:
-    """Remove elements whose open tag carries a boilerplate id/class.
-    Single linear scan balancing same-name tags."""
-    out = []
-    i = 0
-    n = len(doc)
-    while i < n:
-        m = _FLAGGED_OPEN.search(doc, i)
-        if not m:
-            out.append(doc[i:])
+def _splice(doc: str, low: str, cuts: list[tuple[int, int]], repl: str):
+    """``(doc, low)`` with each span in ``cuts`` (sorted, disjoint)
+    replaced by ``repl``."""
+    out, lout, last = [], [], 0
+    for s, e in cuts:
+        out.append(doc[last:s])
+        lout.append(low[last:s])
+        last = e
+    out.append(doc[last:])
+    lout.append(low[last:])
+    new = repl.join(out)
+    return new, (new if low is doc else repl.join(lout))
+
+
+def _drop_comments(text: str) -> str:
+    """``<!--.*?-->`` (dotall) -> one space each, leftmost first.  An
+    unclosed ``<!--`` ends the search: no later one can close either."""
+    s = text.find("<!--")
+    if s < 0:
+        return text
+    out, last = [], 0
+    while s >= 0:
+        e = text.find("-->", s + 4)
+        if e < 0:
             break
-        if not _BOILER_ATTR.search(m.group(0)):
-            out.append(doc[i:m.end()])
-            i = m.end()
-            continue
-        out.append(doc[i:m.start()])
-        name = m.group(1).lower()
-        depth = 1
-        j = m.end()
-        pat = re.compile(rf"<(/?){name}\b[^>]*>", re.I)
-        while depth and (m2 := pat.search(doc, j)):
-            depth += -1 if m2.group(1) else 1
-            j = m2.end()
-        i = j if depth == 0 else m.end()
+        out += (text[last:s], " ")
+        last = e + 3
+        s = text.find("<!--", last)
+    out.append(text[last:])
     return "".join(out)
+
+
+def _drop_containers(doc: str, low: str, g: _Grammar) -> tuple[str, str]:
+    """Each container element -> one space: the fixed point of the
+    leftmost-first substitution ``<(name)\\b[^>]*>.*?</\\1\\s*>``.
+
+    A pass scans the opens left to right.  An open ends at the first
+    ``>`` after its name (one pointer, only moving forward), and its close
+    is the first ``</name\\s*>`` after that; each name's last close search
+    is cached, so an unclosed open costs one failed search, not a rescan
+    to the end.  A later pass can only match through a close whose
+    ``\\s*`` a replacement made (``</script<nav>..</nav>>``), so a pass
+    runs again only after a replacement right behind ``</name\\s*``."""
+    while True:
+        end = low.rfind(">") + 1          # no tag reaches past the last '>'
+        cuts: list[tuple[int, int]] = []
+        closes: dict[str, tuple[int, int]] = {}
+        pos, gt, again = 0, -1, False
+        while (m := g.container.search(low, pos, end)) is not None:
+            if gt < m.end():
+                gt = low.find(">", m.end(), end)
+            key = m.group(1)
+            hit = closes.get(key)
+            if hit is None or 0 <= hit[0] <= gt:
+                hit = closes[key] = _close_after(
+                    low, g.close[g.container_name(key)], key, gt + 1)
+            if hit[0] < 0:
+                pos = m.start() + 1
+                continue
+            s = m.start()
+            if not again:
+                b = low.rfind("</", 0, s)
+                again = b >= 0 and g.close_head.fullmatch(low, b, s) is not None
+            cuts.append((s, hit[1]))
+            pos = hit[1]
+        if not cuts:
+            return doc, low
+        doc, low = _splice(doc, low, cuts, " ")
+        if not again:
+            return doc, low
+
+
+def _close_after(low: str, close, key: str, pos: int) -> tuple[int, int]:
+    """Span of the first close of the element named ``key`` at or after
+    ``pos``, or ``(-1, -1)``."""
+    c = close.search(low, pos)
+    while c is not None and c.group(1) != key and \
+            _SAME_NAME.fullmatch(key + "\x00" + c.group(1)) is None:
+        c = close.search(low, c.end())
+    return c.span() if c is not None else (-1, -1)
+
+
+def _drop_flagged(doc: str, low: str, g: _Grammar) -> tuple[str, str]:
+    """Remove each element whose open tag carries a boilerplate id/class,
+    through its balancing same-name close; an unbalanced one loses only
+    its open tag.  Open tags are visited left to right, resuming after a
+    removed element.
+
+    Only tags holding a ``boiler_value`` match are examined.  ``pos`` is
+    always a token boundary (0, just after a ``>``, or a tag's start), so
+    the tag holding a candidate is the first one at or after the last
+    ``>`` before it; every scan resumes where the last one stopped."""
+    end = low.rfind(">") + 1
+    cuts: list[tuple[int, int]] = []
+    nests: dict[str, _Nesting] = {}
+    pos, tag = 0, None
+    for c in g.boiler_value.finditer(low, 0, end):
+        q = c.start()
+        if q < pos:
+            continue
+        gt = low.rfind(">", pos, q)
+        if gt >= 0:
+            pos = gt + 1
+        if tag is None or tag.start() < pos:
+            tag = g.open_tag.search(low, pos, end)
+            if tag is None:
+                break
+        s = tag.start()
+        if s > q:                        # q is not inside a tag
+            pos = s
+            continue
+        pos = tag.end()
+        if g.boiler.search(low, s, pos) is None:
+            continue
+        name = tag.group(1).lower()
+        nest = nests.get(name)
+        if nest is None:
+            nest = nests[name] = _Nesting(low, name, g.flags, pos, end)
+        j = nest.close_end(pos)
+        if j >= 0:
+            pos = j
+        cuts.append((s, pos))
+    if not cuts:
+        return doc, low
+    return _splice(doc, low, cuts, "")
+
+
+class _Nesting:
+    """The open/close events of one tag name, read left to right on
+    demand from the first query: an element opened just before ``pos``
+    ends with the first event after which the nesting depth falls below
+    its depth at ``pos``.  Each event is read once per document."""
+
+    __slots__ = ("_events", "starts", "ends", "depth", "closer", "_open")
+
+    def __init__(self, low: str, name: str, flags: int, pos: int, end: int):
+        self._events = re.compile(rf"<(/?){name}\b[^>]*>", flags).finditer(low, pos, end)
+        self.starts: list[int] = []
+        self.ends: list[int] = []
+        self.depth = [0]        # depth[i]: before event i
+        self.closer = [-1]      # closer[i]: first t > i with depth[t] < depth[i]
+        self._open = [0]        # depth indices still waiting for their closer
+
+    def close_end(self, pos: int) -> int:
+        """End of the element whose open tag ends at ``pos``; -1 if it
+        never closes."""
+        while (not self.starts or self.starts[-1] < pos) and self._read():
+            pass
+        i = bisect_left(self.starts, pos)
+        while self.closer[i] < 0 and self._read():
+            pass
+        t = self.closer[i]
+        return self.ends[t - 1] if t > 0 else -1
+
+    def _read(self) -> bool:
+        e = next(self._events, None)
+        if e is None:
+            return False
+        self.starts.append(e.start())
+        self.ends.append(e.end())
+        d = self.depth[-1] + (-1 if e.group(1) else 1)
+        t = len(self.depth)
+        self.depth.append(d)
+        self.closer.append(-1)
+        while self._open and self.depth[self._open[-1]] > d:
+            self.closer[self._open.pop()] = t
+        self._open.append(t)
+        return True
+
+
+def _anchor_chars(doc: str, low: str, bs: int, be: int, g: _Grammar) -> int:
+    """Total tag-stripped length of the anchor texts in ``doc[bs:be]``:
+    ``<a\\b[^>]*>(.*?)</a\\s*>`` leftmost first.  Stops at the first
+    anchor with no close: no later one has a close either."""
+    end = low.rfind(">", bs, be) + 1
+    n, pos = 0, bs
+    while (a := g.anchor_open.search(low, pos, end)) is not None:
+        c = g.anchor_close.search(low, a.end(), end)
+        if c is None:
+            break
+        n += len(_strip_tags(doc[a.end():c.start()], ""))
+        pos = c.end()
+    return n
 
 
 def convert_document(payload: bytes, doc_password: str | None = None) -> str:

@@ -158,21 +158,23 @@ _TAXCAT_GATE_DIR: str | None = None
 
 
 def _taxcat_gate_parquet(spark) -> str:
-    """Taxcat runtime parquet built from the embedded lexicons: the gate's
-    taxon rows then verify the PARQUET-BACKED index path (T4's scale
+    """Taxcat artifact compiled from the embedded lexicons: the gate's
+    taxon rows then verify the MMAP-BACKED index path (T4's scale
     artifact, mirroring T1/T5) against the same literal-VALUES oracle —
     output is identical to the embedded path by construction."""
     global _TAXCAT_GATE_DIR
     if _TAXCAT_GATE_DIR is None:
         import tempfile
 
+        from xponents_spark.gazetteer.mmapstore import build_taxcat_mmap
         from xponents_spark.sources.taxcat_etl import (build_taxcat_parquet,
                                                        embedded_taxcat_df)
-        d = tempfile.mkdtemp(prefix="taxcat_gate_") + "/taxcat.parquet"
+        d = tempfile.mkdtemp(prefix="taxcat_gate_")
         build_taxcat_parquet(
             embedded_taxcat_df(spark).repartition(1)
-            .sortWithinPartitions("kind", "name"), d)
-        _TAXCAT_GATE_DIR = d
+            .sortWithinPartitions("kind", "name"), d + "/taxcat.parquet")
+        build_taxcat_mmap(d + "/taxcat.parquet", d + "/taxcat.mmap")
+        _TAXCAT_GATE_DIR = d + "/taxcat.mmap"
     return _TAXCAT_GATE_DIR
 
 

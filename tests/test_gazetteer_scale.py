@@ -1,15 +1,23 @@
-"""Scale-path gazetteer: synth generator -> ETL -> tagger parquet ->
-executor-side ParquetGazetteerIndex / CompactSpatialIndex, with parity
-against the in-memory PhraseIndex on identical rows (VERDICT r1 item 3)."""
+"""Scale-path reference tables: synth generator -> ETL -> parquet ->
+compiled mmap artifact -> executor-side index, with parity against the
+in-memory indexes (PhraseIndex, SpatialIndex, the postal dict) built from
+identical rows (VERDICT r1 item 3)."""
 
 import numpy as np
 import pytest
 
 from xponents_spark.gazetteer import matcher
 from xponents_spark.gazetteer.matcher import PhraseIndex, Place
+from xponents_spark.gazetteer.mmapstore import (MmapGazetteerIndex,
+                                                MmapSpatialIndex,
+                                                build_mmap_artifact,
+                                                build_taxcat_mmap)
 from xponents_spark.sources.gazetteer_etl import (build_tagger_parquet,
                                                   gazetteer_etl)
 from xponents_spark.sources.gazetteer_synth import synthesize_gazetteer_raw
+
+_COLS = ["place_id", "name", "name_type", "feat_class", "feat_code",
+         "cc", "adm1", "lat", "lon", "id_bias", "pop"]
 
 
 @pytest.fixture(scope="module")
@@ -18,6 +26,31 @@ def tagger_pq(spark, tmp_path_factory):
     raw = synthesize_gazetteer_raw(spark, n_rows=20_000, partitions=8)
     build_tagger_parquet(gazetteer_etl(raw), out)
     return out
+
+
+@pytest.fixture(scope="module")
+def mmap_dir(tagger_pq, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("gazmm") / "tagger.mmap")
+    meta = build_mmap_artifact(tagger_pq, out)
+    assert meta["n_phrases"] > 0 and meta["n_rows"] >= meta["n_phrases"]
+    return out
+
+
+def _phrase_index(rows) -> PhraseIndex:
+    """The in-memory reference index over tagger parquet rows."""
+    return PhraseIndex([(r["name"], Place(*[r[c] for c in _COLS]))
+                        for r in rows])
+
+
+def _taxcat_mmap(rows, out_dir) -> str:
+    """Taxcat rows -> parquet -> compiled artifact; returns its path."""
+    from xponents_spark.sources.taxcat_etl import build_taxcat_parquet
+    pq_dir = str(out_dir / "taxcat.parquet")
+    build_taxcat_parquet(rows, pq_dir)
+    mm_dir = str(out_dir / "taxcat.mmap")
+    meta = build_taxcat_mmap(pq_dir, mm_dir)
+    assert meta["n_rows"] > 0
+    return mm_dir
 
 
 def test_synth_is_deterministic_and_collides(spark):
@@ -32,99 +65,145 @@ def test_synth_is_deterministic_and_collides(spark):
     assert len(ccs) > 5
 
 
-def test_parquet_index_matches_phrase_index(spark, tagger_pq):
-    """Same rows -> ParquetGazetteerIndex.scan == PhraseIndex.scan
-    (spans and place_id sets) on texts containing known names."""
-    from xponents_spark.gazetteer.store import ParquetGazetteerIndex
-
+def test_parquet_index_matches_phrase_index(spark, tagger_pq, mmap_dir):
+    """Same rows -> the index ``set_gazetteer_parquet`` opens over the
+    compiled artifact scans like PhraseIndex (spans and place_id sets) on
+    texts containing known names."""
     rows = spark.read.parquet(tagger_pq).collect()
-    cols = ["place_id", "name", "name_type", "feat_class", "feat_code",
-            "cc", "adm1", "lat", "lon", "id_bias", "pop"]
-    mem = PhraseIndex([(r["name"], Place(*[r[c] for c in cols]))
-                       for r in rows])
-    pq_idx = ParquetGazetteerIndex(tagger_pq)
-
-    sample = [r["name"] for r in rows[:50]]
-    for name in sample:
-        text = f"we visited {name} on the way home"
-        a = [(s, e, m, sorted(p.place_id for p in pl))
-             for s, e, m, pl in mem.scan(text)]
-        b = [(s, e, m, sorted(p.place_id for p in pl))
-             for s, e, m, pl in pq_idx.scan(text)]
-        assert a == b, name
+    mem = _phrase_index(rows)
+    matcher.set_gazetteer_parquet(mmap_dir)
+    try:
+        idx = matcher.gaz_index()
+        for name in [r["name"] for r in rows[:50]]:
+            text = f"we visited {name} on the way home"
+            a = [(s, e, m, sorted(p.place_id for p in pl))
+                 for s, e, m, pl in mem.scan(text)]
+            b = [(s, e, m, sorted(p.place_id for p in pl))
+                 for s, e, m, pl in idx.scan(text)]
+            assert a == b, name
+    finally:
+        matcher.set_gazetteer_parquet(None)
 
 
 def test_extract_with_parquet_gazetteer(spark, tagger_pq):
-    """The Spark path: workers read the tagger parquet directly (no driver
-    collect) and tag a known synthetic name."""
+    """A plain tagger parquet is not a runtime artifact: the Spark job
+    fails with the compile step to run instead of tagging from it."""
     import datetime
 
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
 
     from xponents_spark.pipeline import extract
     from xponents_spark.schemas import TRANSCRIPT_SCHEMA
 
-    name = spark.read.parquet(tagger_pq) \
-        .filter("name_type = 'N' AND length(name) >= 8") \
-        .orderBy("place_id").first()["name"]
     rows = [Row(conv_id="c0", turn_idx=i, role="user",
-                text=f"meeting in {name} tomorrow", tool=None,
-                ts=datetime.datetime(2025, 1, 1)) for i in range(8)]
+                text="meeting in London tomorrow", tool=None,
+                ts=datetime.datetime(2025, 1, 1)) for i in range(2)]
     df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     out = extract(df, features=("places", "countries"),
                   gazetteer_parquet=tagger_pq)
-    got = (out.select(F.explode("matches").alias("m"))
-              .filter(F.col("m.label").isin("place", "country"))
-              .select("m.matchtext").collect())
-    assert len(got) == 8
-    assert all(r["matchtext"] == name for r in got)
+    with pytest.raises(Exception, match="build_mmap_artifact"):
+        out.collect()
 
 
-def test_compact_spatial_matches_reference_impl(spark, tagger_pq):
+@pytest.mark.parametrize("table", ["gazetteer", "taxcat", "postal"])
+def test_plain_parquet_refused_at_open(table, tagger_pq, tmp_path):
+    """Each table's path setter accepts any path, and opening a directory
+    that is not its compiled artifact raises a ValueError naming the
+    compile function."""
+    from xponents_spark.gazetteer import postal
+
+    setter, opener, build = {
+        "gazetteer": (matcher.set_gazetteer_parquet, matcher.gaz_index,
+                      "build_mmap_artifact"),
+        "taxcat": (matcher.set_taxcat_parquet, matcher.tax_index,
+                   "build_taxcat_mmap"),
+        "postal": (postal.set_postal_parquet, postal._codes,
+                   "build_postal_mmap"),
+    }[table]
+    try:
+        for path in (tagger_pq, str(tmp_path / "missing")):
+            setter(path)
+            with pytest.raises(ValueError, match=build):
+                opener()
+    finally:
+        setter(None)
+    opener()      # the embedded table opens again after the reset
+
+
+def test_tag_limit_degrades_through_mmap(spark, tagger_pq, mmap_dir,
+                                        monkeypatch):
+    """The one matcher.TAG_LIMIT guards the mmap index too: a turn over
+    the limit degrades to the filtered ``tag_limit_exceeded`` sentinel
+    and keeps its regex-family matches (the limit is patched low so the
+    turn stays small)."""
+    from xponents_spark.pipeline import DEFAULT_FEATURES, extract_turn
+
+    names = [r["name"] for r in spark.read.parquet(tagger_pq)
+             .filter("name_type = 'N'").limit(10).collect()]
+    text = "at 42.3N; 102.4W we passed " + ", ".join(names)
+    monkeypatch.setattr(matcher, "TAG_LIMIT", 3)
+    matcher.set_gazetteer_parquet(mmap_dir)
+    try:
+        _main, ms = extract_turn(text, DEFAULT_FEATURES)
+    finally:
+        matcher.set_gazetteer_parquet(None)
+    sentinel = [m for m in ms if m["label"] == "tag_limit_exceeded"]
+    assert len(sentinel) == 1 and sentinel[0]["filtered_out"]
+    assert any(m["label"] == "coord" for m in ms)
+
+
+def test_mmap_spatial_matches_reference_impl(spark, tagger_pq, mmap_dir):
+    """Same rows -> MmapSpatialIndex.places_at agrees with SpatialIndex."""
     from xponents_spark.gazetteer.spatial import SpatialIndex
-    from xponents_spark.gazetteer.store import CompactSpatialIndex
 
     rows = spark.read.parquet(tagger_pq).collect()
-    cols = ["place_id", "name", "name_type", "feat_class", "feat_code",
-            "cc", "adm1", "lat", "lon", "id_bias", "pop"]
-    mem = SpatialIndex([Place(*[r[c] for c in cols]) for r in rows])
-    cmp_idx = CompactSpatialIndex(tagger_pq)
-    rng = np.random.RandomState(7)
-    for _ in range(40):
-        lat = float(rng.uniform(-80, 80))
-        lon = float(rng.uniform(-175, 175))
-        a = [(round(d), p.place_id) for d, p in mem.places_at(lat, lon, 50)]
-        b = [(round(d), p.place_id) for d, p in cmp_idx.places_at(lat, lon, 50)]
-        # same distances; id tie-breaks may differ between impls
-        assert [x[0] for x in a] == [x[0] for x in b]
-        assert {x[1] for x in a} == {x[1] for x in b} or a == b
+    mem = SpatialIndex([Place(*[r[c] for c in _COLS]) for r in rows])
+    mm_idx = MmapSpatialIndex(mmap_dir)
+    for seed in (7, 11):
+        rng = np.random.RandomState(seed)
+        for _ in range(40):
+            lat = float(rng.uniform(-80, 80))
+            lon = float(rng.uniform(-175, 175))
+            a = [(d, p.place_id) for d, p in mem.places_at(lat, lon, 50)]
+            b = [(d, p.place_id) for d, p in mm_idx.places_at(lat, lon, 50)]
+            # same distances up to the earth radius (6,371,000 m here,
+            # 6,371,008.8 m in functions.geo: 1.4 ppm, < 0.1 m at 50 km);
+            # id tie-breaks may differ between impls
+            assert [x[0] for x in b] == pytest.approx([x[0] for x in a],
+                                                      rel=2e-6)
+            assert {x[1] for x in a} == {x[1] for x in b} or a == b
 
 
-def test_parquet_gazetteer_resets_cleanly(tagger_pq):
-    matcher.set_gazetteer_parquet(tagger_pq)
+def test_parquet_gazetteer_resets_cleanly(mmap_dir):
+    from xponents_spark.gazetteer import spatial
+    matcher.set_gazetteer_parquet(mmap_dir)
     try:
-        idx = matcher.gaz_index()
-        assert idx.loc   # built from parquet
+        assert isinstance(matcher.gaz_index(), MmapGazetteerIndex)
+        assert isinstance(spatial.spatial_index(), MmapSpatialIndex)
     finally:
         matcher.set_gazetteer_parquet(None)
     # back to the embedded fixture gazetteer
+    assert isinstance(matcher.gaz_index(), PhraseIndex)
+    assert isinstance(spatial.spatial_index(), spatial.SpatialIndex)
     assert matcher.gaz_index().scan("the London office") != []
 
 
 def test_postal_parquet_path(spark, tmp_path_factory):
-    """Parquet-backed postal table: worker-side load, reset semantics, and
+    """Compiled postal table: lazy worker-side open, reset semantics, and
     an end-to-end tag against a synthesized code."""
     from xponents_spark.gazetteer import postal
     from xponents_spark.sources.gazetteer_synth import synthesize_postal_raw
 
-    out = str(tmp_path_factory.mktemp("postal") / "postal.parquet")
+    base = tmp_path_factory.mktemp("postal")
+    out = str(base / "postal.parquet")
+    mm = str(base / "postal.mmap")
     synthesize_postal_raw(spark, n_rows=5_000, partitions=4) \
         .write.mode("overwrite").parquet(out)
+    assert postal.build_postal_mmap(out, mm)["n_keys"] > 3_000
     try:
-        postal.set_postal_parquet(out)
+        postal.set_postal_parquet(mm)
         assert postal._BY_CODE is None   # lazy until first lookup
-        assert len(postal._codes()) > 3_000
+        assert isinstance(postal._codes(), postal._MmapCodes)
         row = spark.read.parquet(out).first()
         # a code adjacent to country scope resolves through the big table
         hits = postal.tag_postals(f"parcel code {row['code']} sent", [],
@@ -136,24 +215,21 @@ def test_postal_parquet_path(spark, tmp_path_factory):
     assert len(postal._codes()) == len(postal.POSTAL_ROWS)
 
 
-def test_taxcat_parquet_path(spark, tmp_path_factory):
+def test_taxcat_parquet_path(spark, tmp_path):
     """T4 scale artifact (VERDICT r2 item 7): synth JRC/person-scale
-    lexicon -> ETL -> parquet -> worker-side index; known names tag, the
-    valid:false gate holds, and reset semantics restore the embedded
-    lexicons."""
-    from xponents_spark.sources.taxcat_etl import (build_taxcat_parquet,
-                                                   synthesize_taxcat_raw,
+    lexicon -> ETL -> parquet -> compiled artifact -> worker-side index;
+    known names tag, the valid:false gate holds, and reset semantics
+    restore the embedded lexicons."""
+    from xponents_spark.sources.taxcat_etl import (synthesize_taxcat_raw,
                                                    taxcat_etl)
 
-    out = str(tmp_path_factory.mktemp("taxcat") / "taxcat.parquet")
-    raw = synthesize_taxcat_raw(spark, n_rows=40_000, partitions=8)
-    build_taxcat_parquet(taxcat_etl(raw), out)
-
-    rows = spark.read.parquet(out).collect()
+    mm = _taxcat_mmap(taxcat_etl(synthesize_taxcat_raw(
+        spark, n_rows=40_000, partitions=8)), tmp_path)
+    rows = spark.read.parquet(str(tmp_path / "taxcat.parquet")).collect()
     assert len(rows) > 1_000
     valid = next(r for r in rows if r["valid"])
     try:
-        matcher.set_taxcat_parquet(out)
+        matcher.set_taxcat_parquet(mm)
         hits = matcher.tag_taxons(f"meeting with {valid['name']} tomorrow")
         assert any(m == valid["name"] and k == valid["kind"]
                    for _s, _e, m, k, _c, _cc in hits)
@@ -172,28 +248,31 @@ def test_taxcat_parquet_path(spark, tmp_path_factory):
     assert matcher.tag_taxons("the Australian delegation")
 
 
-def test_taxcat_parquet_matches_embedded(spark, tmp_path_factory):
-    """Embedded lexicons written through the taxcat ETL produce the exact
-    same taxon tags as the in-memory path (the driver-gate equivalence)."""
-    from xponents_spark.sources.taxcat_etl import (build_taxcat_parquet,
-                                                   embedded_taxcat_df)
+def _embedded_taxcat_mmap(spark, tmp_path) -> str:
+    from xponents_spark.sources.taxcat_etl import embedded_taxcat_df
+    return _taxcat_mmap(embedded_taxcat_df(spark).repartition(1)
+                        .sortWithinPartitions("kind", "name"), tmp_path)
 
-    out = str(tmp_path_factory.mktemp("taxcat_emb") / "taxcat.parquet")
-    build_taxcat_parquet(embedded_taxcat_df(spark).repartition(1)
-                         .sortWithinPartitions("kind", "name"), out)
+
+def test_taxcat_parquet_matches_embedded(spark, tmp_path):
+    """Embedded lexicons written through the taxcat ETL and compiled
+    produce the exact same taxon tags as the in-memory path (the driver
+    gate's equivalence)."""
+    mm = _embedded_taxcat_mmap(spark, tmp_path)
     probe = ("Mr Smith of Acme Corporation met the Australian envoy "
              "and French officials in town")
     base = matcher.tag_taxons(probe)
     try:
-        matcher.set_taxcat_parquet(out)
+        matcher.set_taxcat_parquet(mm)
         assert matcher.tag_taxons(probe) == base
     finally:
         matcher.set_taxcat_parquet(None)
 
 
-def test_postal_mmap_path(spark, tmp_path_factory):
-    """Keyed mmap postal table: same tags as the parquet-dict path for the
-    same rows, O(1) private heap (the 4M-tuple reference-scale answer)."""
+def test_postal_mmap_path(spark, tmp_path_factory, monkeypatch):
+    """Keyed mmap postal table: same tags as the in-memory code map built
+    from the same rows, O(1) private heap (the 4M-tuple reference-scale
+    answer)."""
     from xponents_spark.gazetteer import postal
     from xponents_spark.sources.gazetteer_synth import synthesize_postal_raw
 
@@ -203,90 +282,71 @@ def test_postal_mmap_path(spark, tmp_path_factory):
     synthesize_postal_raw(spark, n_rows=5_000, partitions=4) \
         .write.mode("overwrite").parquet(pq_path)
     meta = postal.build_postal_mmap(pq_path, mm_path)
-    assert meta["n_rows"] == spark.read.parquet(pq_path).count()
+    rows = [tuple(r) for r in spark.read.parquet(pq_path)
+            .select("cc", "adm1", "code", "name", "lat", "lon").collect()]
+    assert meta["n_rows"] == len(rows)
 
-    row = spark.read.parquet(pq_path).first()
-    probe = f"parcel code {row['code']} sent"
+    probes = [(f"parcel code {r[2]} sent", r[0]) for r in rows[:40]]
+    # the reference side: the embedded table's dict, over the same rows
+    monkeypatch.setattr(postal, "_BY_CODE", postal._build_code_map(rows))
+    via_dict = [postal.tag_postals(t, [], {cc}) for t, cc in probes]
     try:
-        postal.set_postal_parquet(pq_path)
-        via_parquet = postal.tag_postals(probe, [], {row["cc"]})
         postal.set_postal_parquet(mm_path)
         assert postal._BY_CODE is None   # lazy
-        via_mmap = postal.tag_postals(probe, [], {row["cc"]})
-        assert via_mmap == via_parquet and via_mmap
+        via_mmap = [postal.tag_postals(t, [], {cc}) for t, cc in probes]
     finally:
         postal.set_postal_parquet(None)
+    assert via_mmap == via_dict and all(via_mmap)
 
 
 def test_normalization_version_fingerprint(spark, tmp_path_factory):
-    """A tagger parquet built under different normalization semantics is
-    refused at load time instead of silently not matching."""
+    """The compile step copies the tagger parquet's normalization version
+    into the artifact, and opening an artifact built under different
+    normalization semantics is refused instead of silently not matching."""
     import json
     import os
 
-    from xponents_spark.gazetteer.store import ParquetGazetteerIndex
-
-    out = str(tmp_path_factory.mktemp("gazv") / "tagger.parquet")
+    base = tmp_path_factory.mktemp("gazv")
+    out = str(base / "tagger.parquet")
     raw = synthesize_gazetteer_raw(spark, n_rows=500, partitions=2)
     build_tagger_parquet(gazetteer_etl(raw), out)
     meta = os.path.join(out, "_normalization.json")
     assert json.load(open(meta))["normalization_version"] >= 2
-    ParquetGazetteerIndex(out)     # current version loads
+    cur = str(base / "cur")
+    build_mmap_artifact(out, cur)
+    MmapGazetteerIndex(cur)     # current version opens
     json.dump({"normalization_version": 1}, open(meta, "w"))
+    stale = str(base / "stale")
+    assert build_mmap_artifact(out, stale)["normalization_version"] == 1
+    with open(os.path.join(stale, "meta.json")) as fh:
+        assert json.load(fh)["normalization_version"] == 1
     with pytest.raises(ValueError, match="normalized with version"):
-        ParquetGazetteerIndex(out)
+        MmapGazetteerIndex(stale)
 
 
-@pytest.fixture(scope="module")
-def mmap_dir(tagger_pq, tmp_path_factory):
-    from xponents_spark.gazetteer.mmapstore import build_mmap_artifact
-    out = str(tmp_path_factory.mktemp("gazmm") / "tagger.mmap")
-    meta = build_mmap_artifact(tagger_pq, out)
-    assert meta["n_phrases"] > 0 and meta["n_rows"] >= meta["n_phrases"]
-    return out
-
-
-def test_mmap_index_matches_parquet_index(spark, tagger_pq, mmap_dir):
+def test_mmap_index_matches_phrase_index(spark, tagger_pq, mmap_dir):
     """Shared-memory path parity: MmapGazetteerIndex.scan must equal
-    ParquetGazetteerIndex.scan (spans, matchtext, hydrated places) on texts
-    containing known names, multi-token names, and misses."""
-    from xponents_spark.gazetteer.mmapstore import MmapGazetteerIndex
-    from xponents_spark.gazetteer.store import ParquetGazetteerIndex
-
-    pq_idx = ParquetGazetteerIndex(tagger_pq)
+    PhraseIndex.scan over the same rows (spans, matchtext, hydrated
+    places) on texts containing known names, multi-token names, and
+    misses."""
+    rows = spark.read.parquet(tagger_pq).collect()
+    mem = _phrase_index(rows)
     mm_idx = MmapGazetteerIndex(mmap_dir)
-    rows = spark.read.parquet(tagger_pq).limit(80).collect()
-    texts = [f"we visited {r['name']} on the way home" for r in rows]
+    texts = [f"we visited {r['name']} on the way home" for r in rows[:80]]
     texts += ["no placenames at all here", "", "a b c d e f g",
               f"{rows[0]['name']} and {rows[1]['name']} twice "
               f"{rows[0]['name']}"]
     for text in texts:
         a = [(s, e, m, sorted((p.place_id, p.cc, p.lat, p.pop) for p in pl))
-             for s, e, m, pl in pq_idx.scan(text)]
+             for s, e, m, pl in mem.scan(text)]
         b = [(s, e, m, sorted((p.place_id, p.cc, p.lat, p.pop) for p in pl))
              for s, e, m, pl in mm_idx.scan(text)]
         assert a == b, text[:60]
 
 
-def test_mmap_spatial_matches_compact(spark, tagger_pq, mmap_dir):
-    from xponents_spark.gazetteer.mmapstore import MmapSpatialIndex
-    from xponents_spark.gazetteer.store import CompactSpatialIndex
-
-    cmp_idx = CompactSpatialIndex(tagger_pq)
-    mm_idx = MmapSpatialIndex(mmap_dir)
-    rng = np.random.RandomState(11)
-    for _ in range(40):
-        lat = float(rng.uniform(-80, 80))
-        lon = float(rng.uniform(-175, 175))
-        a = [(round(d), p.place_id) for d, p in cmp_idx.places_at(lat, lon, 50)]
-        b = [(round(d), p.place_id) for d, p in mm_idx.places_at(lat, lon, 50)]
-        assert [x[0] for x in a] == [x[0] for x in b]
-        assert {x[1] for x in a} == {x[1] for x in b} or a == b
-
-
 def test_extract_with_mmap_gazetteer(spark, tagger_pq, mmap_dir):
-    """End-to-end Spark path over the mmap artifact: gazetteer_parquet may
-    point at either artifact kind; workers dispatch on layout."""
+    """End-to-end Spark path over the mmap artifact: workers map the
+    compiled gazetteer (no driver collect) and tag a known name."""
     import datetime
 
     from pyspark.sql import Row
@@ -315,8 +375,6 @@ def test_mmap_version_fingerprint(tagger_pq, tmp_path_factory):
     import json
     import os
 
-    from xponents_spark.gazetteer.mmapstore import (MmapGazetteerIndex,
-                                                    build_mmap_artifact)
     out = str(tmp_path_factory.mktemp("gazmmv") / "tagger.mmap")
     build_mmap_artifact(tagger_pq, out)
     MmapGazetteerIndex(out)
@@ -333,46 +391,47 @@ def test_mmap_version_fingerprint(tagger_pq, tmp_path_factory):
 
 def test_cjk_names_tag_through_parquet_index(spark, tmp_path_factory):
     """CJK names in the scale gazetteer index as per-char phrases and tag
-    inside unsegmented runs through the parquet-backed index."""
-    from xponents_spark.gazetteer.store import ParquetGazetteerIndex
-
-    out = str(tmp_path_factory.mktemp("gazcjk") / "tagger.parquet")
+    inside unsegmented runs through the index ``set_gazetteer_parquet``
+    opens over the compiled artifact."""
+    base = tmp_path_factory.mktemp("gazcjk")
+    out = str(base / "tagger.parquet")
     raw = synthesize_gazetteer_raw(spark, n_rows=30_000, partitions=8)
     build_tagger_parquet(gazetteer_etl(raw), out)
     cjk = (spark.read.parquet(out)
            .filter("name rlike '[\\\\x{4e00}-\\\\x{9fff}]'").limit(5).collect())
     assert cjk, "synth should emit CJK names"
-    idx = ParquetGazetteerIndex(out)
-    for r in cjk:
-        hits = idx.scan(f"前往{r['name']}旅行")
-        assert any(m == r["name"] for _s, _e, m, _p in hits), r["name"]
+    mm = str(base / "tagger.mmap")
+    build_mmap_artifact(out, mm)
+    matcher.set_gazetteer_parquet(mm)
+    try:
+        idx = matcher.gaz_index()
+        for r in cjk:
+            hits = idx.scan(f"前往{r['name']}旅行")
+            assert any(m == r["name"] for _s, _e, m, _p in hits), r["name"]
+    finally:
+        matcher.set_gazetteer_parquet(None)
 
 
 def test_taxcat_mmap_parity(spark, tmp_path):
-    """The taxcat mmap artifact must tag IDENTICALLY to the parquet dict
-    path over the fixture payload texts (same phrases, spans, payloads)."""
-    from xponents_spark.gazetteer import matcher
-    from xponents_spark.gazetteer.mmapstore import (build_taxcat_mmap,
-                                                    is_tax_mmap)
-    from xponents_spark.sources.payloads import PAYLOADS
-    from xponents_spark.sources.taxcat_etl import (build_taxcat_parquet,
-                                                   embedded_taxcat_df)
+    """The taxcat mmap artifact must tag IDENTICALLY to the embedded
+    in-memory lexicons it was compiled from over the fixture payload
+    texts (same phrases, spans, payloads)."""
+    import json
+    import os
 
-    pq_dir = str(tmp_path / "taxcat.parquet")
-    build_taxcat_parquet(
-        embedded_taxcat_df(spark).repartition(1)
-        .sortWithinPartitions("kind", "name"), pq_dir)
-    mm_dir = str(tmp_path / "taxcat.mmap")
-    meta = build_taxcat_mmap(pq_dir, mm_dir)
-    assert is_tax_mmap(mm_dir) and meta["n_rows"] > 0
+    from xponents_spark.gazetteer import mmapstore
+    from xponents_spark.sources.payloads import PAYLOADS
+
+    mm_dir = _embedded_taxcat_mmap(spark, tmp_path)
+    with open(os.path.join(mm_dir, "meta.json")) as fh:
+        assert json.load(fh)["format"] == mmapstore._TAX_FORMAT
 
     texts = [body for _kind, body in PAYLOADS if body] + [
         "Dr. Maria Santos of the World Health Organization met the "
         "Brazilian delegation",
         "", "no entities here at all"]
+    a = [matcher.tag_taxons(t) for t in texts]
     try:
-        matcher.set_taxcat_parquet(pq_dir)
-        a = [matcher.tag_taxons(t) for t in texts]
         matcher.set_taxcat_parquet(mm_dir)
         b = [matcher.tag_taxons(t) for t in texts]
     finally:

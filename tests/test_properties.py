@@ -231,13 +231,13 @@ def _ascii_scan_word(draw, names):
 @settings(max_examples=25, deadline=None)
 @given(st.data())
 def test_mmap_scan_equals_phrase_index(data):
-    """Random dictionaries x random texts: MmapGazetteerIndex.scan and
-    ParquetGazetteerIndex.scan must equal PhraseIndex.scan exactly (spans,
-    matchtext, place_id sets) — including multi-token phrases,
-    phrase-prefix relationships, unicode names, dictionary misses, and
-    mixed-case ASCII text with edge punctuation (the tokenizer's fast
-    path).  Each index is given the TokenView, the legacy
-    ``tokens_with_offsets`` list, and no tokens; all nine scans agree."""
+    """Random dictionaries x random texts: MmapGazetteerIndex.scan must
+    equal PhraseIndex.scan exactly (spans, matchtext, place_id sets) —
+    including multi-token phrases, phrase-prefix relationships, unicode
+    names, dictionary misses, and mixed-case ASCII text with edge
+    punctuation (the tokenizer's fast path).  Each index is given the
+    TokenView, the legacy ``tokens_with_offsets`` list, and no tokens;
+    all six scans agree."""
     import shutil
     import tempfile
 
@@ -245,7 +245,6 @@ def test_mmap_scan_equals_phrase_index(data):
     from xponents_spark.gazetteer.matcher import (Place, PhraseIndex,
                                                   TokenView,
                                                   tokens_with_offsets)
-    from xponents_spark.gazetteer.store import ParquetGazetteerIndex
 
     names = data.draw(st.lists(
         st.lists(st.sampled_from(_WORDS), min_size=1, max_size=3)
@@ -270,8 +269,7 @@ def test_mmap_scan_equals_phrase_index(data):
         mem = PhraseIndex([
             (r["name"], Place(*[r[c] for c in cols]))
             for r in tbl.to_pylist()])
-        indices = [mem, ParquetGazetteerIndex(pq_dir),
-                   mmapstore.MmapGazetteerIndex(mm_dir)]
+        indices = [mem, mmapstore.MmapGazetteerIndex(mm_dir)]
         want = [(s, e, m, sorted(p.place_id for p in pl))
                 for s, e, m, pl in mem.scan(text)]
         for idx in indices:

@@ -400,15 +400,17 @@ def test_conversation_scope_taxcat_env_read_once(spark, tmp_path,
     workers' environment, yet the re-extracted turn must tag taxons from
     the same file as pass 1."""
     import datetime
+    from xponents_spark.gazetteer.mmapstore import build_taxcat_mmap
     from xponents_spark.pipeline import extract_conversation_scoped
     from xponents_spark.sources.taxcat_etl import build_taxcat_parquet
-    taxcat = str(tmp_path / "taxcat.parquet")
     build_taxcat_parquet(spark.createDataFrame(
         [("JRC", "JRC.org", "Zorblax Dynamics", "org", "Zorblax Dynamics",
           None, "N", True)],
         "catalog string, taxnode string, name string, kind string, "
         "canonical string, cc string, name_type string, valid boolean"),
-        taxcat)
+        str(tmp_path / "taxcat.parquet"))
+    taxcat = str(tmp_path / "taxcat.mmap")
+    build_taxcat_mmap(str(tmp_path / "taxcat.parquet"), taxcat)
     monkeypatch.setenv("XPONENTS_TAXCAT_PARQUET", taxcat)
     ts = datetime.datetime(2025, 1, 1)
     rows = [

@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """Shared-memory gazetteer at the reference's scale class (VERDICT r2 item 4).
 
-Builds a >=10M-name synthetic gazetteer, compiles BOTH runtime artifacts
-(per-worker ParquetGazetteerIndex heap path vs mmap shared-page path), then
-runs the multi-worker Spark tagging job against the mmap artifact and
+Builds a >=10M-name synthetic gazetteer, compiles its mmap shared-page
+artifact, then runs the multi-worker Spark tagging job against it and
 accounts memory PER NODE, not per worker:
 
   * per-worker PRIVATE memory (Private_Clean+Private_Dirty from
@@ -15,9 +14,6 @@ accounts memory PER NODE, not per worker:
 The reference shares one ~3 GB Solr FST per node across all mappers
 (Examples/MapReduce/README.md, solr/README.md:164-166); the mmap artifact
 reproduces that sharing for Spark python workers.
-
-For the heap path at this scale only ONE probe process is measured (its
-per-worker RSS extrapolates linearly; 8 workers would need ~8x).
 
 Usage: python tools/gaz_mmap_bench.py [n_rows] [workers] [out_dir]
 Writes JSON to stdout (and BENCH/gaz_mmap_<n>.json if run from repo root).
@@ -122,7 +118,7 @@ def main():
     res["mmap_artifact_mb"] = round(_du(mmap_dir) / 1e6, 1)
     res["parquet_artifact_mb"] = round(_du(tagger_pq) / 1e6, 1)
 
-    # single-process probes: index open cost + scan sanity for both paths
+    # single-process probe: index open cost + scan sanity
     import resource
 
     from xponents_spark.gazetteer.mmapstore import MmapGazetteerIndex
@@ -172,37 +168,6 @@ def main():
         res["node_total_private_mb"] = round(sum(priv) / 1024, 1)
         res["node_cost_mb"] = round(
             sum(priv) / 1024 + _du(mmap_dir) / 1e6, 1)
-
-    # heap-path reference point at the same scale: ONE worker's index RSS
-    # (per-worker; a node pays workers x this)
-    if os.environ.get("GAZ_HEAP_PROBE", "1") == "1":
-        import subprocess
-        code = (
-            "import os, sys, time\n"
-            "sys.path.insert(0, %r)\n"
-            "def priv():\n"
-            "    t = 0\n"
-            "    for ln in open(f'/proc/{os.getpid()}/smaps_rollup'):\n"
-            "        p = ln.split()\n"
-            "        if p and p[0].rstrip(':') in ('Private_Clean', 'Private_Dirty'):\n"
-            "            t += int(p[1])\n"
-            "    return t\n"
-            "p0 = priv()\n"
-            "t0 = time.time()\n"
-            "from xponents_spark.gazetteer.store import ParquetGazetteerIndex\n"
-            "ix = ParquetGazetteerIndex(%r)\n"
-            "dt = time.time() - t0\n"
-            "print((priv() - p0) // 1024, round(dt, 1), len(ix.loc))\n"
-            % (os.path.join(os.path.dirname(__file__), ".."), tagger_pq))
-        try:
-            out = subprocess.run([sys.executable, "-c", code], timeout=1800,
-                                 capture_output=True, text=True)
-            mb, sec, nloc = out.stdout.split()
-            res["heap_index_private_mb_per_worker"] = int(mb)
-            res["heap_index_build_sec"] = float(sec)
-            res["heap_node_cost_mb_at_workers"] = int(mb) * workers
-        except Exception as e:   # noqa: BLE001 — report, don't die
-            res["heap_probe_error"] = str(e)[:200]
 
     print(json.dumps(res))
     bench_dir = os.path.join(os.path.dirname(__file__), "..", "BENCH")

@@ -22,7 +22,6 @@ from .matcher import (  # noqa: F401
     Place,
     PlaceCandidate,
     gaz_index,
-    set_gazetteer,
     tag_places,
     tag_taxons,
 )

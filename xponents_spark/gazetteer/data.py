@@ -3,10 +3,12 @@
 Schema follows the reference's Solr gazetteer core
 (``/root/reference/solr/solr7/gazetteer/conf/schema.xml:108-178``):
 ``place_id, name, name_type (N=name, A=abbreviation, C=code), feat_class,
-feat_code, cc, adm1, lat, lon, id_bias, pop``.  The real deployment swaps
-this module for a parquet built by the ETL (:func:`load_gazetteer_parquet`),
-pared the way the reference's ETL does (``search_only`` filter, A/P bias —
-solr/README.md:198); at runtime rows broadcast to executors either way.
+feat_code, cc, adm1, lat, lon, id_bias, pop``.  A real deployment swaps
+these rows for a gazetteer compiled by the ETL, pared the way the
+reference's ETL does (``search_only`` filter, A/P bias — solr/README.md:198):
+``sources.gazetteer_etl.build_tagger_parquet`` then
+``mmapstore.build_mmap_artifact``, which every executor maps in place
+(``extract(gazetteer_parquet=...)``).
 
 Content covers the reference's disambiguation probe corpus
 (``src/test/resources/data/placename-tests.txt``): name collisions across
@@ -245,15 +247,3 @@ NATIONALITIES: dict[str, str] = {
     "portuguese": "PT", "argentine": "AR", "italian": "IT",
 }
 
-
-def load_gazetteer_parquet(spark, path: str) -> list[tuple]:
-    """SMALL-table path: collect gazetteer rows to the driver for
-    ``set_gazetteer`` (closure broadcast).  Only for dictionaries that fit
-    driver memory comfortably (tests, curated subsets).
-
-    The SCALE path does not collect: build the tagger parquet with
-    ``sources.gazetteer_etl.build_tagger_parquet`` and point workers at it
-    via ``extract(gazetteer_parquet=...)`` / ``set_gazetteer_parquet`` —
-    each executor reads the artifact directly (gazetteer/store.py)."""
-    rows = spark.read.parquet(path).collect()
-    return [tuple(r) for r in rows]

@@ -40,15 +40,19 @@ _EDGE_PUNCT_SET = frozenset(_EDGE_PUNCT)
 
 
 # bump when tokenization/normalization SEMANTICS change (NFKC fold, CJK
-# per-char, Arabic variant fold + light stem...).  Tagger parquets record
-# the version they were normalized with; the runtime index refuses an
-# artifact built under different semantics — silent mismatches would just
-# stop matching (store.ParquetGazetteerIndex checks this).
+# per-char, Arabic variant fold + light stem...).  Tagger and taxcat
+# parquets record the version they were normalized with, the compiled
+# artifact carries it, and opening it refuses any other version — silent
+# mismatches would just stop matching (mmapstore checks this).
 NORMALIZATION_VERSION = 2   # v2: round-2 Arabic light stem
+
+# reference guardrail: DEFAULT_TAG_LIMIT per doc hard error beyond
+# (SolrMatcherSupport.java:46,186-195); every phrase index reads this one
+TAG_LIMIT = 100_000
 
 
 class TagLimitExceeded(RuntimeError):
-    """Raised when one document exceeds PhraseIndex.TAG_LIMIT tags
+    """Raised when one document exceeds TAG_LIMIT tags
     (reference: hard error per doc, SolrMatcherSupport.java:46,186-195).
     A dedicated type so the pipeline's degrade-don't-fail handler cannot
     swallow unrelated RuntimeErrors."""
@@ -294,67 +298,56 @@ class PhraseIndex:
     def __init__(self, entries: list[tuple[str, object]]):
         """entries: (phrase, payload); phrases normalize at build time.
 
-        Layout (shared with store.ParquetGazetteerIndex, which measured ~30%
-        faster than the round-1 nested tuple-keyed dicts): one flat dict
-        keyed by the space-joined normalized phrase, plus a per-first-token
-        max phrase length so the scan's inner loop is bounded by THAT
-        token's longest dictionary phrase, not the global max."""
+        Layout (measured ~30% faster than the round-1 nested tuple-keyed
+        dicts): one flat dict keyed by the space-joined normalized phrase,
+        plus a per-first-token max phrase length so the scan's inner loop
+        is bounded by THAT token's longest dictionary phrase, not the
+        global max."""
         self.index: dict[str, list] = {}
         self.first_max: dict[str, int] = {}
-        self.max_len = 1
         for phrase, payload in entries:
             # same tokenization as tag time (CJK names -> char sequences)
             toks = tuple(t for t, _s, _e in tokens_with_offsets(phrase) if t)
             if not toks:
                 continue
-            self.max_len = max(self.max_len, len(toks))
             if len(toks) > self.first_max.get(toks[0], 0):
                 self.first_max[toks[0]] = len(toks)
             self.index.setdefault(" ".join(toks), []).append(payload)
 
-    # reference guardrail: DEFAULT_TAG_LIMIT per doc hard error beyond
-    # (SolrMatcherSupport.java:46,186-195)
-    TAG_LIMIT = 100_000
-
     def scan(self, text: str, toks: Tokens = None
              ) -> list[tuple[int, int, str, list]]:
         """All (start, end, matchtext, payloads) phrase hits, LDR-resolved.
-        Pass precomputed ``toks`` to share tokenization across indices."""
-        return scan_phrases(text, toks, self.first_max, self.index.get,
-                            self.TAG_LIMIT)
+        Pass precomputed ``toks`` to share tokenization across indices.
 
-
-def scan_phrases(text: str, toks: Tokens, first_max: dict[str, int],
-                 lookup, tag_limit: int) -> list[tuple[int, int, str, list]]:
-    """The phrase scan of PhraseIndex and store.ParquetGazetteerIndex.
-    ``lookup(phrase)`` returns the payloads of a space-joined normalized
-    phrase, or None.
-
-    The first-token gate returns at once when no token of the turn starts
-    a dictionary phrase.  Otherwise only positions holding a dictionary
-    first token try their phrases, longest first (bounded by that token's
-    longest phrase), and token offsets are read only once a phrase hits."""
-    view = token_view(text, toks)
-    firsts = first_max.keys() & view.vocab
-    if not firsts:
-        return []
-    norms = view.norms
-    n = len(norms)
-    raw: list[tuple[int, int, str, list]] = []
-    spans = None
-    # positions holding a first token, found in one C-level pass
-    for i in _compress(range(n), map(firsts.__contains__, norms)):
-        for ln in range(min(first_max[norms[i]], n - i), 0, -1):
-            payloads = lookup(" ".join(norms[i:i + ln]))
-            if payloads:
-                if spans is None:
-                    spans = view.spans
-                s, e = spans[i][0], spans[i + ln - 1][1]
-                raw.append((s, e, text[s:e], payloads))
-                if len(raw) > tag_limit:
-                    raise TagLimitExceeded(
-                        f"tag limit {tag_limit} exceeded in one document")
-    return _longest_dominant_right(raw)
+        The first-token gate returns at once when no token of the turn
+        starts a dictionary phrase.  Otherwise only positions holding a
+        dictionary first token try their phrases, longest first (bounded
+        by that token's longest phrase), and token offsets are read only
+        once a phrase hits."""
+        view = token_view(text, toks)
+        first_max = self.first_max
+        firsts = first_max.keys() & view.vocab
+        if not firsts:
+            return []
+        lookup = self.index.get
+        limit = TAG_LIMIT
+        norms = view.norms
+        n = len(norms)
+        raw: list[tuple[int, int, str, list]] = []
+        spans = None
+        # positions holding a first token, found in one C-level pass
+        for i in _compress(range(n), map(firsts.__contains__, norms)):
+            for ln in range(min(first_max[norms[i]], n - i), 0, -1):
+                payloads = lookup(" ".join(norms[i:i + ln]))
+                if payloads:
+                    if spans is None:
+                        spans = view.spans
+                    s, e = spans[i][0], spans[i + ln - 1][1]
+                    raw.append((s, e, text[s:e], payloads))
+                    if len(raw) > limit:
+                        raise TagLimitExceeded(
+                            f"tag limit {limit} exceeded in one document")
+        return _longest_dominant_right(raw)
 
 
 # Candidate cap per phrase (the hard analog of the reference's O6
@@ -371,9 +364,9 @@ CANDIDATE_CAP = 500
 def _cap_places(places: list) -> list:
     if len(places) <= CANDIDATE_CAP:
         return places
-    # stable sort on bias only: ties keep source order, which is the SAME
-    # underlying artifact order in the parquet and mmap paths — the three
-    # index kinds cap to the same candidate set
+    # stable sort on bias only: ties keep source order, which is the
+    # artifact's row order on the mmap path too — both index kinds cap to
+    # the same candidate set
     return sorted(places, key=lambda p: -p.id_bias)[:CANDIDATE_CAP]
 
 
@@ -400,30 +393,22 @@ def _longest_dominant_right(matches):
 
 # --- gazetteer index (lazy process singleton — executor 'pump priming') -----
 
-_GAZ_INDEX = None                     # PhraseIndex | ParquetGazetteerIndex
-_GAZ_ROWS: list[tuple] | None = None
+_GAZ_INDEX = None                     # PhraseIndex | MmapGazetteerIndex
 _GAZ_PATH: str | None = None
 
 
-def set_gazetteer(rows: list[tuple]) -> None:
-    """Swap in external gazetteer rows (broadcast value) before first tag."""
-    global _GAZ_ROWS, _GAZ_INDEX, _GAZ_PATH
-    _GAZ_ROWS = rows
-    _GAZ_PATH = None
-    _GAZ_INDEX = None
-
-
 def set_gazetteer_parquet(path: str | None) -> None:
-    """Scale path: point this worker process at a tagger parquet (built by
-    ``sources.gazetteer_etl.build_tagger_parquet``).  The index builds
-    lazily ONCE per process from the local/shared file — no driver collect,
-    no broadcast of rows through the JVM.  Idempotent per path (called from
-    every Arrow batch of ``pipeline.extract``)."""
-    global _GAZ_PATH, _GAZ_ROWS, _GAZ_INDEX
+    """Scale path: point this worker process at a compiled gazetteer
+    artifact directory (``sources.gazetteer_etl.build_tagger_parquet``,
+    then ``mmapstore.build_mmap_artifact``).  The index opens lazily ONCE
+    per process by mapping the local/shared files — no driver collect, no
+    broadcast of rows through the JVM; any other directory is refused when
+    it opens.  ``None`` resets to the embedded gazetteer.  Idempotent per
+    path (called from every Arrow batch of ``pipeline.extract``)."""
+    global _GAZ_PATH, _GAZ_INDEX
     if path == _GAZ_PATH:
         return
     _GAZ_PATH = path
-    _GAZ_ROWS = None
     _GAZ_INDEX = None
 
 
@@ -431,16 +416,12 @@ def gaz_index():
     global _GAZ_INDEX
     if _GAZ_INDEX is None:
         if _GAZ_PATH is not None:
-            from .mmapstore import MmapGazetteerIndex, is_mmap_artifact
-            if is_mmap_artifact(_GAZ_PATH):
-                # shared-memory scale path: page-cache-shared per node
-                _GAZ_INDEX = MmapGazetteerIndex(_GAZ_PATH)
-            else:
-                from .store import ParquetGazetteerIndex
-                _GAZ_INDEX = ParquetGazetteerIndex(_GAZ_PATH)
+            # shared-memory scale path: page-cache-shared per node
+            from .mmapstore import MmapGazetteerIndex
+            _GAZ_INDEX = MmapGazetteerIndex(_GAZ_PATH)
         else:
-            rows = _GAZ_ROWS if _GAZ_ROWS is not None else data.GAZETTEER_ROWS
-            _GAZ_INDEX = PhraseIndex([(r[1], Place(*r)) for r in rows])
+            _GAZ_INDEX = PhraseIndex([(r[1], Place(*r))
+                                      for r in data.GAZETTEER_ROWS])
             # O6 candidate cap on the in-memory path (see CANDIDATE_CAP)
             for key, places in _GAZ_INDEX.index.items():
                 if len(places) > CANDIDATE_CAP:
@@ -547,18 +528,20 @@ def _apply_tag_filters(cand: PlaceCandidate, lowercase_doc: bool) -> None:
 
 # --- taxcat-style lexicons (T4): person / org / nationality ------------------
 
-_TAX_INDEX: PhraseIndex | None = None
+_TAX_INDEX = None                     # PhraseIndex | MmapTaxcatIndex
 _TAX_PATH: str | None = None
 
 
 def set_taxcat_parquet(path: str | None) -> None:
     """Scale path for the reference's taxcat core (JRC entities, person
     names, WFB — solr/build.sh:24-57, TaxonMatcher.java:69-85): point this
-    worker at a taxcat parquet built by
-    ``sources.taxcat_etl.build_taxcat_parquet``.  The index builds lazily
-    once per process from the file — no driver collect.  ``None`` resets
-    to the embedded lexicons (reused python workers must not leak a
-    previous job's table).  Idempotent per path."""
+    worker at a compiled taxcat artifact directory
+    (``sources.taxcat_etl.build_taxcat_parquet``, then
+    ``mmapstore.build_taxcat_mmap``).  The index opens lazily once per
+    process — no driver collect; any other directory is refused when it
+    opens.  ``None`` resets to the embedded lexicons (reused python
+    workers must not leak a previous job's table).  Idempotent per
+    path."""
     global _TAX_PATH, _TAX_INDEX
     if path == _TAX_PATH:
         return
@@ -566,61 +549,22 @@ def set_taxcat_parquet(path: str | None) -> None:
     _TAX_INDEX = None
 
 
-def _tax_index_from_parquet(path: str) -> PhraseIndex:
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-
-    meta_path = os.path.join(path, "_normalization.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(f"taxcat parquet {path} has no _normalization.json "
-                         f"sidecar — rebuild with build_taxcat_parquet")
-    with open(meta_path) as fh:
-        ver = json.load(fh).get("normalization_version")
-    if ver != NORMALIZATION_VERSION:
-        raise ValueError(f"taxcat parquet {path} normalized with version "
-                         f"{ver}, engine expects {NORMALIZATION_VERSION}")
-    tbl = pq.read_table(path, columns=["phrase", "kind",
-                                       "canonical", "cc", "valid"])
-    idx = PhraseIndex([])
-    index, first_max = idx.index, idx.first_max
-    # phrases are pre-normalized at ETL time (same contract as the tagger
-    # parquet): index build is pure dict assembly, no re-tokenization
-    for phrase, kind, canonical, cc, valid in zip(
-            tbl.column("phrase").to_pylist(), tbl.column("kind").to_pylist(),
-            tbl.column("canonical").to_pylist(), tbl.column("cc").to_pylist(),
-            tbl.column("valid").to_pylist()):
-        if not valid or not phrase:
-            continue
-        ntoks = phrase.count(" ") + 1
-        idx.max_len = max(idx.max_len, ntoks)
-        ft = phrase.split(" ", 1)[0]
-        if ntoks > first_max.get(ft, 0):
-            first_max[ft] = ntoks
-        index.setdefault(phrase, []).append((kind, canonical, cc or None))
-    return idx
-
-
-def tax_index() -> PhraseIndex:
+def tax_index():
     global _TAX_INDEX
     if _TAX_INDEX is None:
         if _TAX_PATH is not None:
-            from .mmapstore import MmapTaxcatIndex, is_tax_mmap
-            if is_tax_mmap(_TAX_PATH):
-                # shared-memory scale path (page cache shared per node)
-                _TAX_INDEX = MmapTaxcatIndex(_TAX_PATH)
-            else:
-                _TAX_INDEX = _tax_index_from_parquet(_TAX_PATH)
-            return _TAX_INDEX
-        entries: list[tuple[str, object]] = []
-        for n in data.PERSON_NAMES:
-            entries.append((n, ("person", n, None)))
-        for key, canonical in data.ORG_NAMES.items():
-            entries.append((key, ("org", canonical, None)))
-        for nat, cc in data.NATIONALITIES.items():
-            entries.append((nat, ("nationality", nat, cc)))
-        _TAX_INDEX = PhraseIndex(entries)
+            # shared-memory scale path (page cache shared per node)
+            from .mmapstore import MmapTaxcatIndex
+            _TAX_INDEX = MmapTaxcatIndex(_TAX_PATH)
+        else:
+            entries: list[tuple[str, object]] = []
+            for n in data.PERSON_NAMES:
+                entries.append((n, ("person", n, None)))
+            for key, canonical in data.ORG_NAMES.items():
+                entries.append((key, ("org", canonical, None)))
+            for nat, cc in data.NATIONALITIES.items():
+                entries.append((nat, ("nationality", nat, cc)))
+            _TAX_INDEX = PhraseIndex(entries)
     return _TAX_INDEX
 
 

@@ -1,11 +1,11 @@
-"""Mmap-backed gazetteer index — the shared-memory path for the reference's
-25M-name class.
+"""Mmap-backed gazetteer index — the one file-backed path for the
+reference's 25M-name class.
 
-Why this exists: ``store.ParquetGazetteerIndex`` builds a python dict of
-phrase keys PER WORKER PROCESS (~563 B/name end-to-end measured at 1.2M
-names) — linear extrapolation to the reference's 25M names
-(solr/README.md:164-166) is ~14 GB per worker, ~450 GB per 32-worker node.
-The reference shares ONE ~3 GB Solr FST per node across all mappers
+Why this is the file-backed path: a python dict of phrase keys built PER
+WORKER PROCESS costs ~563 B/name end-to-end (measured at 1.2M names) —
+linear extrapolation to the reference's 25M names (solr/README.md:164-166)
+is ~14 GB per worker, ~450 GB per 32-worker node (SCALE.md).  The
+reference shares ONE ~3 GB Solr FST per node across all mappers
 (Examples/MapReduce/README.md).  This module is the Spark-native equivalent
 of that sharing: the gazetteer compiles offline into a flat, binary,
 mmap-able artifact; every executor python worker maps the same files, so
@@ -15,8 +15,9 @@ open-file state plus a bounded hydration memo.
 
 Artifact layout (directory)::
 
-    meta.json         normalization_version + counts (refused on mismatch,
-                      same contract as the tagger parquet sidecar)
+    meta.json         format + normalization_version + counts (the version
+                      is copied from the tagger parquet sidecar; opening
+                      refuses a mismatch)
     phrases.bin       UTF-8 phrase keys, bytewise-sorted, concatenated
     phrase_off.npy    uint64[P+1] offsets into phrases.bin
     row_bounds.npy    uint64[P+1] phrase k -> payload rows [b[k], b[k+1])
@@ -36,8 +37,8 @@ Lookup is incremental longest-match over the sorted phrase array: for each
 token, binary-search the exact token and the ``token + ' '`` prefix range,
 then extend one token at a time while the prefix range stays non-empty —
 every exact hit along the way is recorded, reproducing exactly the
-all-lengths probe of ``PhraseIndex.scan`` / ``ParquetGazetteerIndex.scan``
-(LONGEST_DOMINANT_RIGHT resolves overlaps afterwards, identical policy).
+all-lengths probe of ``PhraseIndex.scan`` (LONGEST_DOMINANT_RIGHT resolves
+overlaps afterwards, identical policy).
 UTF-8 byte order equals code-point order, so ``np.argsort`` at build time
 and byte compares at query time agree.
 
@@ -61,9 +62,11 @@ import json
 import math
 import mmap
 import os
+from itertools import compress as _compress
 
 import numpy as np
 
+from . import matcher
 from .matcher import (Place, TagLimitExceeded, Tokens,
                       _longest_dominant_right, token_view)
 
@@ -72,6 +75,7 @@ _STR_COLS = ["place_id", "name", "name_type", "feat_class", "feat_code",
 _SEP = "\x1f"
 _NULL = "\x00"     # NULL sentinel in rows.bin (distinct from '')
 _FORMAT = "xponents-mmap-1"
+_TAX_FORMAT = "xponents-taxmmap-1"
 _CELL_DEG = 0.5
 _CELL_MUL = 1_000_003
 
@@ -198,51 +202,78 @@ def build_mmap_artifact(tagger_parquet: str, out_dir: str) -> dict:
     return meta
 
 
-def is_mmap_artifact(path: str) -> bool:
-    return os.path.isdir(path) and \
-        os.path.exists(os.path.join(path, "phrases.bin"))
-
-
-class _MmapFiles:
-    """Shared open-file state for the phrase and payload tables."""
-
-    def __init__(self, path: str):
-        from .matcher import NORMALIZATION_VERSION
+def _read_meta(path: str, fmt: str, what: str, build: str) -> dict:
+    """The artifact's meta.json.  A directory that is not a ``fmt``
+    artifact — a plain parquet directory, say — is refused with the
+    compile step that makes one."""
+    try:
         with open(os.path.join(path, "meta.json")) as fh:
             meta = json.load(fh)
-        if meta.get("format") != _FORMAT:
-            raise ValueError(f"{path}: unknown mmap artifact format")
-        if meta.get("normalization_version") != NORMALIZATION_VERSION:
+    except (OSError, ValueError):
+        meta = {}
+    if not isinstance(meta, dict) or meta.get("format") != fmt:
+        raise ValueError(f"{path} is not a compiled {what} artifact — "
+                         f"compile it with {build}")
+    return meta
+
+
+class _PhraseFiles:
+    """Open-file state of a phrase-table artifact: sorted phrase keys,
+    their 2-byte prefix buckets and the payload rows.  Opening refuses
+    another format and another normalization version."""
+
+    FORMAT, WHAT, BUILD = (_TAX_FORMAT, "taxcat",
+                           "mmapstore.build_taxcat_mmap")
+
+    def __init__(self, path: str):
+        meta = _read_meta(path, self.FORMAT, self.WHAT, self.BUILD)
+        if meta.get("normalization_version") != matcher.NORMALIZATION_VERSION:
             raise ValueError(
-                f"mmap artifact {path} normalized with version "
+                f"{self.WHAT} artifact {path} normalized with version "
                 f"{meta.get('normalization_version')}, engine expects "
-                f"{NORMALIZATION_VERSION} — rebuild with build_mmap_artifact")
+                f"{matcher.NORMALIZATION_VERSION} — rebuild with "
+                f"{self.BUILD}")
         self.meta = meta
-
-        def load(name):
-            return np.load(os.path.join(path, name), mmap_mode="r")
-
+        self.path = path
         self._pf = open(os.path.join(path, "phrases.bin"), "rb")
         self.pbuf = mmap.mmap(self._pf.fileno(), 0, access=mmap.ACCESS_READ)
-        self.poff = load("phrase_off.npy")
-        self.row_bounds = load("row_bounds.npy")
-        self.prefix2 = load("prefix2.npy")
+        self.poff = self._load("phrase_off.npy")
+        self.row_bounds = self._load("row_bounds.npy")
+        self.prefix2 = self._load("prefix2.npy")
         self._rf = open(os.path.join(path, "rows.bin"), "rb")
         self.rbuf = mmap.mmap(self._rf.fileno(), 0, access=mmap.ACCESS_READ)
-        self.roff = load("row_off.npy")
-        self.lat = load("lat.npy")
-        self.lon = load("lon.npy")
-        self.id_bias = load("id_bias.npy")
-        self.pop = load("pop.npy")
-        self.grid_cells = load("grid_cells.npy")
-        self.grid_bounds = load("grid_bounds.npy")
-        self.grid_rows = load("grid_rows.npy")
+        self.roff = self._load("row_off.npy")
+
+    def _load(self, name: str) -> np.ndarray:
+        return np.load(os.path.join(self.path, name), mmap_mode="r")
+
+    def record(self, row: int) -> list[str | None]:
+        """Payload row ``row``'s string fields (NUL decodes to None)."""
+        return [None if f == _NULL else f
+                for f in self.rbuf[int(self.roff[row]):
+                                   int(self.roff[row + 1])]
+                .decode("utf-8").split(_SEP)]
+
+
+class _MmapFiles(_PhraseFiles):
+    """The gazetteer artifact: the phrase table plus typed coordinate and
+    rank columns and the reverse-geocode grid."""
+
+    FORMAT, WHAT, BUILD = (_FORMAT, "gazetteer",
+                           "mmapstore.build_mmap_artifact")
+
+    def __init__(self, path: str):
+        super().__init__(path)
+        self.lat = self._load("lat.npy")
+        self.lon = self._load("lon.npy")
+        self.id_bias = self._load("id_bias.npy")
+        self.pop = self._load("pop.npy")
+        self.grid_cells = self._load("grid_cells.npy")
+        self.grid_bounds = self._load("grid_bounds.npy")
+        self.grid_rows = self._load("grid_rows.npy")
 
     def place(self, row: int) -> Place:
-        rec = [None if f == _NULL else f
-               for f in self.rbuf[int(self.roff[row]):
-                                  int(self.roff[row + 1])]
-               .decode("utf-8").split(_SEP)]
+        rec = self.record(row)
         lat = float(self.lat[row])
         lon = float(self.lon[row])
         return Place(*rec,
@@ -266,10 +297,8 @@ def _files(path: str) -> _MmapFiles:
 
 class MmapGazetteerIndex:
     """Phrase tagger over the mmap artifact; same scan contract as
-    ``PhraseIndex`` / ``ParquetGazetteerIndex``: returns LDR-resolved
-    ``(start, end, matchtext, places)`` tuples."""
-
-    TAG_LIMIT = 100_000
+    ``PhraseIndex``: returns LDR-resolved ``(start, end, matchtext,
+    places)`` tuples."""
 
     def __init__(self, path: str):
         self.f = _files(path)
@@ -278,9 +307,11 @@ class MmapGazetteerIndex:
         # so most tokens repeat constantly and most MISS the dictionary —
         # caching (exact-hit phrase idx, extension range) per token turns
         # the dominant top-level binary search into one dict hit.  Bounded:
-        # ~200k entries ≈ 20-30 MB private/worker, still ~100x under the
-        # heap-path footprint at 10M names.
+        # ~200k entries ≈ 20-30 MB private/worker, still ~100x under a
+        # per-worker phrase dict's footprint at 10M names.
         self._tok_memo: dict[str, tuple[int, int, int]] = {}
+        # tokens known to start no phrase: the scan's first-token gate
+        self._dead: set[str] = set()
 
     # binary search over the sorted phrase byte table
     def _bisect(self, key: bytes, lo: int, hi: int) -> int:
@@ -319,49 +350,67 @@ class MmapGazetteerIndex:
             self._memo[k] = hit
         return hit
 
+    def _probe(self, norm: str) -> tuple[int, int, int]:
+        """(exact-hit phrase index or -1, [lo, hi) range of the phrases
+        extending ``norm``) for one token, memoized."""
+        memo = self._tok_memo
+        ent = memo.get(norm)
+        if ent is None:
+            key = norm.encode("utf-8")
+            T = self.f.prefix2
+            if not key:
+                lo = hi = 0
+            elif len(key) >= 2:
+                c = (key[0] << 8) | key[1]
+                lo, hi = int(T[c]), int(T[c + 1])
+            else:   # 1-byte token: cover the whole first-byte band
+                lo, hi = int(T[key[0] << 8]), int(T[(key[0] + 1) << 8])
+            if lo >= hi:
+                ent = (-1, 0, 0)
+            else:
+                k = self._bisect(key, lo, hi)
+                exact = k if k < hi and self._phrase(k) == key else -1
+                pref = key + b" "
+                lo2 = self._bisect(pref, k, hi)
+                ent = (exact, lo2, self._bisect(pref + b"\xff", lo2, hi))
+            if len(memo) > 200_000:
+                memo.clear()
+            memo[norm] = ent
+        return ent
+
     def scan(self, text: str, toks: Tokens = None
              ) -> list[tuple[int, int, str, list]]:
         view = token_view(text, toks)
+        # first-token gate: tokens already known to start no phrase drop
+        # out in one C-level set difference, the rest are probed once, and
+        # the turn returns at once when none of its tokens starts a phrase
+        dead = self._dead
+        if len(dead) > 200_000:
+            dead.clear()
+        firsts = set()
+        for norm in view.vocab - dead:
+            exact, lo2, hi2 = self._probe(norm)
+            if exact >= 0 or lo2 < hi2:
+                firsts.add(norm)
+            else:
+                dead.add(norm)
+        if not firsts:
+            return []
         norms = view.norms
         spans = None            # offsets are read only once a phrase hits
-        T = self.f.prefix2
         n = len(norms)
         raw: list[tuple[int, int, int]] = []
-        memo = self._tok_memo
-        for i, norm in enumerate(norms):
-            ent = memo.get(norm)
-            if ent is None:
-                key = norm.encode("utf-8")
-                if not key:
-                    continue
-                b0 = key[0]
-                if len(key) >= 2:
-                    c = (b0 << 8) | key[1]
-                    lo, hi = int(T[c]), int(T[c + 1])
-                else:   # 1-byte token: cover the whole first-byte band
-                    lo, hi = int(T[b0 << 8]), int(T[(b0 + 1) << 8])
-                if lo >= hi:
-                    exact, lo2, hi2 = -1, 0, 0
-                else:
-                    k = self._bisect(key, lo, hi)
-                    exact = k if k < hi and self._phrase(k) == key else -1
-                    pref = key + b" "
-                    lo2 = self._bisect(pref, k, hi)
-                    hi2 = self._bisect(pref + b"\xff", lo2, hi)
-                if len(memo) > 200_000:
-                    memo.clear()
-                memo[norm] = ent = (exact, lo2, hi2)
-            exact, lo2, hi2 = ent
-            if exact < 0 and lo2 >= hi2:
-                continue
+        limit = matcher.TAG_LIMIT
+        for i in _compress(range(n), map(firsts.__contains__, norms)):
+            norm = norms[i]
+            exact, lo2, hi2 = self._probe(norm)
             if exact >= 0:
                 if spans is None:
                     spans = view.spans
                 raw.append((spans[i][0], spans[i][1], exact))
-                if len(raw) > self.TAG_LIMIT:
+                if len(raw) > limit:
                     raise TagLimitExceeded(
-                        f"tag limit {self.TAG_LIMIT} exceeded in one "
-                        f"document")
+                        f"tag limit {limit} exceeded in one document")
             pref = norm.encode("utf-8") + b" "
             j = i + 1
             while lo2 < hi2 and j < n:
@@ -371,10 +420,9 @@ class MmapGazetteerIndex:
                     if spans is None:
                         spans = view.spans
                     raw.append((spans[i][0], spans[j][1], k2))
-                    if len(raw) > self.TAG_LIMIT:
+                    if len(raw) > limit:
                         raise TagLimitExceeded(
-                            f"tag limit {self.TAG_LIMIT} exceeded in one "
-                            f"document")
+                            f"tag limit {limit} exceeded in one document")
                 pref = cur + b" "
                 lo2 = self._bisect(pref, k2, hi2)
                 hi2 = self._bisect(pref + b"\xff", lo2, hi2)
@@ -386,7 +434,7 @@ class MmapGazetteerIndex:
 
 class MmapSpatialIndex:
     """Reverse-geocode grid over the mmap artifact; same ``places_at``
-    contract as ``spatial.SpatialIndex`` / ``store.CompactSpatialIndex``.
+    contract as ``spatial.SpatialIndex``.
     All lookups are ``np.searchsorted`` over mmap'd arrays — zero
     per-worker build cost."""
 
@@ -438,8 +486,6 @@ class MmapSpatialIndex:
 
 # --- taxcat mmap artifact (T4 shared-memory path) ----------------------------
 
-_TAX_FORMAT = "xponents-taxmmap-1"
-
 
 def build_taxcat_mmap(taxcat_parquet: str, out_dir: str) -> dict:
     """Compile a taxcat parquet (``build_taxcat_parquet`` output) into a
@@ -462,8 +508,7 @@ def build_taxcat_mmap(taxcat_parquet: str, out_dir: str) -> dict:
                         columns=["phrase", "kind", "canonical", "cc", "valid"])
     cols = {c: tbl.column(c).to_pylist()
             for c in ("phrase", "kind", "canonical", "cc", "valid")}
-    # cc '' -> None: parity with the parquet dict path (`cc or None` in
-    # matcher._tax_index_from_parquet)
+    # cc '' -> None: the embedded lexicons carry None for "no country"
     rows = [(p, k, cn, cc or None) for p, k, cn, cc, v in
             zip(cols["phrase"], cols["kind"], cols["canonical"],
                 cols["cc"], cols["valid"]) if v and p]
@@ -523,47 +568,6 @@ def build_taxcat_mmap(taxcat_parquet: str, out_dir: str) -> dict:
     return meta
 
 
-def is_tax_mmap(path: str) -> bool:
-    if not os.path.isdir(path) or \
-            not os.path.exists(os.path.join(path, "meta.json")):
-        return False
-    try:
-        with open(os.path.join(path, "meta.json")) as fh:
-            return json.load(fh).get("format") == _TAX_FORMAT
-    except (OSError, ValueError):
-        return False
-
-
-class _TaxFiles:
-    """Open-file state for the taxcat artifact — duck-typed subset of
-    ``_MmapFiles`` (pbuf/poff/prefix2/row_bounds + payload rows)."""
-
-    def __init__(self, path: str):
-        from .matcher import NORMALIZATION_VERSION
-        with open(os.path.join(path, "meta.json")) as fh:
-            meta = json.load(fh)
-        if meta.get("format") != _TAX_FORMAT:
-            raise ValueError(f"{path}: not a taxcat mmap artifact")
-        if meta.get("normalization_version") != NORMALIZATION_VERSION:
-            raise ValueError(
-                f"taxcat mmap {path} normalized with version "
-                f"{meta.get('normalization_version')}, engine expects "
-                f"{NORMALIZATION_VERSION} — rebuild with build_taxcat_mmap")
-        self.meta = meta
-
-        def load(name):
-            return np.load(os.path.join(path, name), mmap_mode="r")
-
-        self._pf = open(os.path.join(path, "phrases.bin"), "rb")
-        self.pbuf = mmap.mmap(self._pf.fileno(), 0, access=mmap.ACCESS_READ)
-        self.poff = load("phrase_off.npy")
-        self.row_bounds = load("row_bounds.npy")
-        self.prefix2 = load("prefix2.npy")
-        self._rf = open(os.path.join(path, "rows.bin"), "rb")
-        self.rbuf = mmap.mmap(self._rf.fileno(), 0, access=mmap.ACCESS_READ)
-        self.roff = load("row_off.npy")
-
-
 class MmapTaxcatIndex(MmapGazetteerIndex):
     """Taxon phrase tagger over the taxcat mmap artifact — inherits the
     gazetteer artifact's scan (prefix2 buckets, binary-search extension,
@@ -572,19 +576,16 @@ class MmapTaxcatIndex(MmapGazetteerIndex):
     payload contract ``tag_taxons`` expects."""
 
     def __init__(self, path: str):
-        self.f = _TaxFiles(path)
+        self.f = _PhraseFiles(path)
         self._memo = {}
         self._tok_memo = {}
+        self._dead = set()
 
     def _places(self, k: int) -> list[tuple]:
         hit = self._memo.get(k)
         if hit is None:
             b0, b1 = int(self.f.row_bounds[k]), int(self.f.row_bounds[k + 1])
-            hit = []
-            for r in range(b0, b1):
-                rec = self.f.rbuf[int(self.f.roff[r]):int(self.f.roff[r + 1])] \
-                    .decode("utf-8").split(_SEP)
-                hit.append(tuple(None if v == _NULL else v for v in rec))
+            hit = [tuple(self.f.record(r)) for r in range(b0, b1)]
             if len(self._memo) > 200_000:
                 self._memo.clear()
             self._memo[k] = hit
@@ -674,20 +675,14 @@ def build_keyed_mmap(out_dir: str, keys: list[str],
     return meta
 
 
-def is_kv_mmap(path: str) -> bool:
-    return os.path.isdir(path) and \
-        os.path.exists(os.path.join(path, "keys.bin"))
-
-
 class MmapKeyedTable:
     """Sorted-key binary-search lookup over the keyed mmap artifact; page
     cache shared across workers, O(1) private heap + a bounded memo."""
 
     def __init__(self, path: str):
-        with open(os.path.join(path, "meta.json")) as fh:
-            meta = json.load(fh)
-        if meta.get("format") != _KV_FORMAT:
-            raise ValueError(f"{path}: not a keyed mmap artifact")
+        meta = _read_meta(path, _KV_FORMAT, "keyed-table",
+                          "mmapstore.build_keyed_mmap (a postal parquet: "
+                          "postal.build_postal_mmap)")
         self.n = meta["n_keys"]
         self._kf = open(os.path.join(path, "keys.bin"), "rb")
         self.kbuf = mmap.mmap(self._kf.fileno(), 0, access=mmap.ACCESS_READ)

@@ -54,12 +54,14 @@ _POSTAL_PATH: str | None = None
 
 def set_postal_parquet(path: str | None) -> None:
     """Scale path for the reference's ~4M COUNTRY+CODE tuples
-    (PostalGeocoder.java:25-33): point this worker process at a postal
-    parquet with columns (cc, adm1, code, name, lat, lon).  The code map
-    builds LAZILY on first postal lookup — a job whose feature set never
-    tags postal codes pays nothing even with the env var exported.
-    ``None`` resets to the embedded fixture rows (reused python workers
-    must not leak a previous job's table).  Idempotent per path."""
+    (PostalGeocoder.java:25-33): point this worker process at a compiled
+    postal artifact directory (``build_postal_mmap`` over a postal parquet
+    with columns cc, adm1, code, name, lat, lon).  The table opens LAZILY
+    on first postal lookup — a job whose feature set never tags postal
+    codes pays nothing even with the env var exported; any other directory
+    is refused when it opens.  ``None`` resets to the embedded fixture
+    rows (reused python workers must not leak a previous job's table).
+    Idempotent per path."""
     global _POSTAL_PATH, _BY_CODE
     if path == _POSTAL_PATH:
         return
@@ -69,8 +71,8 @@ def set_postal_parquet(path: str | None) -> None:
 
 class _MmapCodes:
     """dict-like .get() over the keyed mmap artifact (shared page cache,
-    O(1) private heap — the 4M-tuple postal table costs ~1 GB of dict
-    heap PER WORKER on the parquet path)."""
+    O(1) private heap — as a dict the 4M-tuple postal table costs ~1 GB
+    of heap PER WORKER)."""
 
     def __init__(self, path: str):
         from .mmapstore import MmapKeyedTable
@@ -103,16 +105,7 @@ def build_postal_mmap(postal_parquet: str, out_dir: str) -> dict:
 def _codes():
     global _BY_CODE
     if _BY_CODE is None:
-        from .mmapstore import is_kv_mmap
-        if is_kv_mmap(_POSTAL_PATH):
-            _BY_CODE = _MmapCodes(_POSTAL_PATH)
-        else:
-            import pyarrow.parquet as pq
-            tbl = pq.read_table(_POSTAL_PATH, columns=["cc", "adm1", "code",
-                                                       "name", "lat", "lon"])
-            cols = [tbl.column(c).to_pylist() for c in ("cc", "adm1", "code",
-                                                        "name", "lat", "lon")]
-            _BY_CODE = _build_code_map(zip(*cols))
+        _BY_CODE = _MmapCodes(_POSTAL_PATH)
     return _BY_CODE
 
 # candidate postal tokens: alnum with optional internal space/dash, len>=4

@@ -226,10 +226,18 @@ def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
     options (preferred geography bias, TaggerResource.java:176-224),
     shipped to executors via closure capture as job parameters.
 
-    ``gazetteer_parquet`` (or env ``XPONENTS_GAZETTEER_PARQUET``): path to a
-    tagger parquet built by ``sources.gazetteer_etl.build_tagger_parquet``;
-    each executor worker reads it directly and builds one process-wide
-    index — the driver never collects or broadcasts gazetteer rows.
+    ``gazetteer_parquet`` (or env ``XPONENTS_GAZETTEER_PARQUET``): a
+    compiled gazetteer artifact directory — a tagger parquet
+    (``sources.gazetteer_etl.build_tagger_parquet``) compiled by
+    ``gazetteer.mmapstore.build_mmap_artifact``.  ``taxcat_parquet`` (env
+    ``XPONENTS_TAXCAT_PARQUET``) is one compiled by
+    ``mmapstore.build_taxcat_mmap``, ``postal_parquet`` (env
+    ``XPONENTS_POSTAL_PARQUET``) one compiled by
+    ``gazetteer.postal.build_postal_mmap``.  Each executor worker maps the
+    files in place, so a node's workers share one page-cache copy and the
+    driver never collects or broadcasts the rows.  Any other directory,
+    a plain parquet one included, fails the task with a ``ValueError``
+    naming the compile step.  Unset, the embedded tables are used.
 
     The plan stays scan -> project -> mapInPandas: no shuffle, predicate
     pushdown and column pruning reach the parquet scan untouched.

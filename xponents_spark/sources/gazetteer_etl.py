@@ -141,13 +141,14 @@ def synthesize_raw_gazetteer(spark, sf_dir: str) -> DataFrame:
 
 
 def build_tagger_parquet(taggable: DataFrame, path: str) -> None:
-    """Taggable gazetteer rows -> the tagger's runtime artifact.
+    """Taggable gazetteer rows -> the tagger parquet (the compile input).
 
     Appends ``phrase`` — the name normalized by the MATCHER'S OWN
     tokenization (``tokens_with_offsets``: NFKC fold, per-char CJK, Arabic
-    variant fold), so index build on each executor is pure dict assembly
-    with zero re-normalization.  The equivalent of the reference's Solr
-    index build step (solr/build.sh) emitting the FST artifact.
+    variant fold), so ``mmapstore.build_mmap_artifact`` compiles it with
+    zero re-normalization.  With that compile step, the equivalent of the
+    reference's Solr index build (solr/build.sh) emitting the FST
+    artifact.
 
     Normalization is python (unicodedata), so it runs as one Arrow-batched
     mapInPandas over the ETL output — a one-time ETL cost (the reference

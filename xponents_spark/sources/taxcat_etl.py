@@ -6,8 +6,9 @@ solr/solr7/taxcat/conf/schema.xml:111-124: id, catalog, taxnode, tag[],
 phrase, valid, name_type).  This module gives T4 the same scale-artifact
 path T1/T5 already have: an offline ETL emits a parquet with the phrase
 pre-normalized by the matcher's own tokenization, plus the
-normalization-version sidecar; each executor worker builds its index from
-the file directly (``matcher.set_taxcat_parquet``), no driver collect.
+normalization-version sidecar; ``mmapstore.build_taxcat_mmap`` compiles it
+into the artifact every executor worker maps in place
+(``matcher.set_taxcat_parquet``), no driver collect.
 
 Synthesis shape mirrors the reference catalogs: person names as FIRST LAST
 (and FIRST M. LAST) combinations, org names with legal/institutional

@@ -152,26 +152,65 @@ def test_tag_limit_degrades_through_mmap(spark, tagger_pq, mmap_dir,
     assert any(m["label"] == "coord" for m in ms)
 
 
-def test_mmap_spatial_matches_reference_impl(spark, tagger_pq, mmap_dir):
-    """Same rows -> MmapSpatialIndex.places_at agrees with SpatialIndex."""
+def _spatial_probes(seed: int):
+    rng = np.random.RandomState(seed)
+    for _ in range(40):
+        yield float(rng.uniform(-80, 80)), float(rng.uniform(-175, 175))
+
+
+def test_compact_spatial_matches_reference_impl(spark, tagger_pq, mmap_dir):
+    """The compact array grid (file-backed as MmapSpatialIndex) agrees
+    with SpatialIndex built from the same rows."""
     from xponents_spark.gazetteer.spatial import SpatialIndex
 
     rows = spark.read.parquet(tagger_pq).collect()
     mem = SpatialIndex([Place(*[r[c] for c in _COLS]) for r in rows])
+    cmp_idx = MmapSpatialIndex(mmap_dir)
+    for lat, lon in _spatial_probes(7):
+        a = [(round(d), p.place_id) for d, p in mem.places_at(lat, lon, 50)]
+        b = [(round(d), p.place_id)
+             for d, p in cmp_idx.places_at(lat, lon, 50)]
+        # same distances; id tie-breaks may differ between impls
+        assert [x[0] for x in a] == [x[0] for x in b]
+        assert {x[1] for x in a} == {x[1] for x in b} or a == b
+
+
+def _compact_places_at(rows, lat, lon, radius_km, limit):
+    """Exhaustive scan over the tagger rows' columns with the compact
+    grid's filters and earth radius (6,371,000 m): what the grid lookup
+    must return, without the grid."""
+    keep = [r for r in rows
+            if r["lat"] is not None and r["lon"] is not None
+            and r["feat_class"] in ("P", "A") and r["cc"]
+            and not str(r["feat_code"]).startswith("PCL")]
+    la = np.radians(np.array([r["lat"] for r in keep], dtype=np.float64))
+    lo = np.radians(np.array([r["lon"] for r in keep], dtype=np.float64))
+    qa, qo = np.radians(lat), np.radians(lon)
+    h = (np.sin((la - qa) / 2) ** 2
+         + np.cos(qa) * np.cos(la) * np.sin((lo - qo) / 2) ** 2)
+    d = 2 * 6_371_000.0 * np.arcsin(np.sqrt(h))
+    out, seen = [], set()
+    for k in np.argsort(d, kind="stable"):
+        if d[k] > radius_km * 1000 or len(out) >= limit:
+            break
+        pid = keep[k]["place_id"]
+        if pid not in seen:
+            seen.add(pid)
+            out.append((float(d[k]), pid))
+    return out
+
+
+def test_mmap_spatial_matches_compact(spark, tagger_pq, mmap_dir):
+    """MmapSpatialIndex's grid lookup returns what an exhaustive scan of
+    the same columns returns, to the metre."""
+    rows = spark.read.parquet(tagger_pq).collect()
     mm_idx = MmapSpatialIndex(mmap_dir)
-    for seed in (7, 11):
-        rng = np.random.RandomState(seed)
-        for _ in range(40):
-            lat = float(rng.uniform(-80, 80))
-            lon = float(rng.uniform(-175, 175))
-            a = [(d, p.place_id) for d, p in mem.places_at(lat, lon, 50)]
-            b = [(d, p.place_id) for d, p in mm_idx.places_at(lat, lon, 50)]
-            # same distances up to the earth radius (6,371,000 m here,
-            # 6,371,008.8 m in functions.geo: 1.4 ppm, < 0.1 m at 50 km);
-            # id tie-breaks may differ between impls
-            assert [x[0] for x in b] == pytest.approx([x[0] for x in a],
-                                                      rel=2e-6)
-            assert {x[1] for x in a} == {x[1] for x in b} or a == b
+    for lat, lon in _spatial_probes(11):
+        a = [(round(d), pid)
+             for d, pid in _compact_places_at(rows, lat, lon, 50, 5)]
+        b = [(round(d), p.place_id) for d, p in mm_idx.places_at(lat, lon, 50)]
+        assert [x[0] for x in a] == [x[0] for x in b]
+        assert {x[1] for x in a} == {x[1] for x in b} or a == b
 
 
 def test_parquet_gazetteer_resets_cleanly(mmap_dir):

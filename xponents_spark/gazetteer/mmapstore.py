@@ -69,6 +69,7 @@ import numpy as np
 from . import matcher
 from .matcher import (Place, TagLimitExceeded, Tokens,
                       _longest_dominant_right, token_view)
+from .spatial import cell_reach
 
 _STR_COLS = ["place_id", "name", "name_type", "feat_class", "feat_code",
              "cc", "adm1"]
@@ -441,13 +442,13 @@ class MmapSpatialIndex:
     def __init__(self, path: str):
         self.f = _files(path)
 
-    def _cand(self, lat: float, lon: float, reach: int) -> np.ndarray:
+    def _cand(self, lat: float, lon: float, ri: int, rj: int) -> np.ndarray:
         f = self.f
         ci, cj = int(math.floor(lat / _CELL_DEG)), \
             int(math.floor(lon / _CELL_DEG))
         want = np.asarray([(ci + di) * _CELL_MUL + (cj + dj)
-                           for di in range(-reach, reach + 1)
-                           for dj in range(-reach, reach + 1)],
+                           for di in range(-ri, ri + 1)
+                           for dj in range(-rj, rj + 1)],
                           dtype=np.int64)
         pos = np.searchsorted(f.grid_cells, want)
         pos = pos[pos < len(f.grid_cells)]
@@ -461,7 +462,7 @@ class MmapSpatialIndex:
     def places_at(self, lat: float, lon: float, radius_km: float = 50,
                   limit: int = 5) -> list[tuple[float, Place]]:
         f = self.f
-        idx = self._cand(lat, lon, max(1, int(math.ceil(radius_km / 55.0))))
+        idx = self._cand(lat, lon, *cell_reach(lat, radius_km))
         if not len(idx):
             return []
         la, lo = np.radians(f.lat[idx]), np.radians(f.lon[idx])

@@ -5,7 +5,8 @@ The reference answers ``placesAt(latlon, radiusKM)`` with a Solr
 coordinate to its nearest populated place (top-5 nearby, 25/50 km fallbacks,
 PlaceGeocoder.java:874-978).  Here the gazetteer's located rows bucket into a
 0.5-degree grid (~55 km cells) built once per executor; a query scans the
-3x3 neighborhood and ranks by haversine — a broadcast spatial range join.
+cells that can hold a place within its radius and ranks by haversine — a
+broadcast spatial range join.
 """
 
 from __future__ import annotations
@@ -22,6 +23,26 @@ _CELL_DEG = 0.5
 
 def _cell(lat: float, lon: float) -> tuple[int, int]:
     return int(math.floor(lat / _CELL_DEG)), int(math.floor(lon / _CELL_DEG))
+
+
+def cell_reach(lat: float, radius_km: float) -> tuple[int, int]:
+    """Cells to scan on each side of the query's cell, (lat, lon), so that
+    every place within ``radius_km`` is a candidate.  A cell is ~55 km
+    tall but only ~55·cos(lat) km wide, so the longitude reach grows
+    toward the poles; past the point where the radius circles the pole it
+    is the whole ring."""
+    ri = max(1, int(math.ceil(radius_km / 55.0)))
+    # no candidate lies poleward of this latitude (ri cells >= radius)
+    band = abs(lat) + ri * _CELL_DEG
+    if band >= 90.0:
+        return ri, int(360 / _CELL_DEG)
+    # two points on or equatorward of ``band``, dlon apart, are at least
+    # 2R·asin(cos(band)·sin(dlon/2)) apart; the smaller R over-reaches
+    s = math.sin(radius_km / (2 * 6371.0)) / math.cos(math.radians(band))
+    if s >= 1.0:
+        return ri, int(360 / _CELL_DEG)
+    dlon = math.degrees(2 * math.asin(s))
+    return ri, max(1, int(math.ceil(dlon / _CELL_DEG)))
 
 
 class SpatialIndex:
@@ -43,10 +64,10 @@ class SpatialIndex:
         """Nearest places within radius, ascending distance, capped at
         ``limit`` (the reference's max=5 nearby places)."""
         ci, cj = _cell(lat, lon)
-        reach = max(1, int(math.ceil(radius_km / 55.0)))
+        ri, rj = cell_reach(lat, radius_km)
         cand: list[tuple[float, str, Place]] = []
-        for di in range(-reach, reach + 1):
-            for dj in range(-reach, reach + 1):
+        for di in range(-ri, ri + 1):
+            for dj in range(-rj, rj + 1):
                 for p in self.grid.get((ci + di, cj + dj), ()):
                     d = haversine_m(lat, lon, p.lat, p.lon)
                     if d <= radius_km * 1000:

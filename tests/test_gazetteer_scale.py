@@ -3,10 +3,13 @@ compiled mmap artifact -> executor-side index, with parity against the
 in-memory indexes (PhraseIndex, SpatialIndex, the postal dict) built from
 identical rows (VERDICT r1 item 3)."""
 
+import contextlib
+
 import numpy as np
 import pytest
 
-from xponents_spark.gazetteer import matcher
+from xponents_spark.functions.geo import haversine_m
+from xponents_spark.gazetteer import matcher, tables
 from xponents_spark.gazetteer.matcher import PhraseIndex, Place
 from xponents_spark.gazetteer.mmapstore import (MmapGazetteerIndex,
                                                 MmapSpatialIndex,
@@ -42,6 +45,17 @@ def _phrase_index(rows) -> PhraseIndex:
                         for r in rows])
 
 
+@contextlib.contextmanager
+def _serving(**paths):
+    """This process's table slot entered with ``paths`` (``tables.Tables``
+    fields), as a worker enters it for a job; embedded again afterwards."""
+    tables.enter(tables.Tables(**paths))
+    try:
+        yield
+    finally:
+        tables.enter(tables.Tables())
+
+
 def _taxcat_mmap(rows, out_dir) -> str:
     """Taxcat rows -> parquet -> compiled artifact; returns its path."""
     from xponents_spark.sources.taxcat_etl import build_taxcat_parquet
@@ -66,13 +80,12 @@ def test_synth_is_deterministic_and_collides(spark):
 
 
 def test_parquet_index_matches_phrase_index(spark, tagger_pq, mmap_dir):
-    """Same rows -> the index ``set_gazetteer_parquet`` opens over the
-    compiled artifact scans like PhraseIndex (spans and place_id sets) on
-    texts containing known names."""
+    """Same rows -> the index the job's tables open over the compiled
+    artifact scans like PhraseIndex (spans and place_id sets) on texts
+    containing known names."""
     rows = spark.read.parquet(tagger_pq).collect()
     mem = _phrase_index(rows)
-    matcher.set_gazetteer_parquet(mmap_dir)
-    try:
+    with _serving(gazetteer=mmap_dir):
         idx = matcher.gaz_index()
         for name in [r["name"] for r in rows[:50]]:
             text = f"we visited {name} on the way home"
@@ -81,8 +94,6 @@ def test_parquet_index_matches_phrase_index(spark, tagger_pq, mmap_dir):
             b = [(s, e, m, sorted(p.place_id for p in pl))
                  for s, e, m, pl in idx.scan(text)]
             assert a == b, name
-    finally:
-        matcher.set_gazetteer_parquet(None)
 
 
 def test_extract_with_parquet_gazetteer(spark, tagger_pq):
@@ -107,26 +118,18 @@ def test_extract_with_parquet_gazetteer(spark, tagger_pq):
 
 @pytest.mark.parametrize("table", ["gazetteer", "taxcat", "postal"])
 def test_plain_parquet_refused_at_open(table, tagger_pq, tmp_path):
-    """Each table's path setter accepts any path, and opening a directory
-    that is not its compiled artifact raises a ValueError naming the
+    """Entering tables accepts any path, and opening a directory that is
+    not the table's compiled artifact raises a ValueError naming the
     compile function."""
-    from xponents_spark.gazetteer import postal
-
-    setter, opener, build = {
-        "gazetteer": (matcher.set_gazetteer_parquet, matcher.gaz_index,
-                      "build_mmap_artifact"),
-        "taxcat": (matcher.set_taxcat_parquet, matcher.tax_index,
-                   "build_taxcat_mmap"),
-        "postal": (postal.set_postal_parquet, postal._codes,
-                   "build_postal_mmap"),
+    opener, build = {
+        "gazetteer": (tables.gaz_index, "build_mmap_artifact"),
+        "taxcat": (tables.tax_index, "build_taxcat_mmap"),
+        "postal": (tables.postal_codes, "build_postal_mmap"),
     }[table]
-    try:
-        for path in (tagger_pq, str(tmp_path / "missing")):
-            setter(path)
+    for path in (tagger_pq, str(tmp_path / "missing")):
+        with _serving(**{table: path}):
             with pytest.raises(ValueError, match=build):
                 opener()
-    finally:
-        setter(None)
     opener()      # the embedded table opens again after the reset
 
 
@@ -142,53 +145,64 @@ def test_tag_limit_degrades_through_mmap(spark, tagger_pq, mmap_dir,
              .filter("name_type = 'N'").limit(10).collect()]
     text = "at 42.3N; 102.4W we passed " + ", ".join(names)
     monkeypatch.setattr(matcher, "TAG_LIMIT", 3)
-    matcher.set_gazetteer_parquet(mmap_dir)
-    try:
+    with _serving(gazetteer=mmap_dir):
         _main, ms = extract_turn(text, DEFAULT_FEATURES)
-    finally:
-        matcher.set_gazetteer_parquet(None)
     sentinel = [m for m in ms if m["label"] == "tag_limit_exceeded"]
     assert len(sentinel) == 1 and sentinel[0]["filtered_out"]
     assert any(m["label"] == "coord" for m in ms)
 
 
-def _spatial_probes(seed: int):
+def _spatial_probes(seed: int, rows):
+    """40 random probes; then, for each located row within 0.3° of ±180°,
+    a probe at ±179.9° on the other side of the line, and for each row
+    past 84.5° a probe 2° of longitude away at 84.9°."""
     rng = np.random.RandomState(seed)
     for _ in range(40):
         yield float(rng.uniform(-80, 80)), float(rng.uniform(-175, 175))
+    for r in rows:
+        lat, lon = r["lat"], r["lon"]
+        if lat is None or lon is None:
+            continue
+        if abs(lon) >= 179.7:
+            yield lat, -179.9 if lon > 0 else 179.9
+        if abs(lat) >= 84.5:
+            yield (84.9 if lat > 0 else -84.9), (lon + 182.0) % 360.0 - 180.0
+
+
+def _agree(got, want):
+    """Same places at the same distances, to < 1 mm; exact distance ties
+    may order their ids differently."""
+    assert len(got) == len(want), (got, want)
+    assert all(abs(a - b) < 1e-3 for (a, _), (b, _) in zip(got, want))
+    assert {pid for _d, pid in got} == {pid for _d, pid in want}
+    assert len({pid for _d, pid in got}) == len(got)   # each place once
+
+
+def _places_at(idx, lat, lon, radius_km=50, limit=5):
+    return [(d, p.place_id)
+            for d, p in idx.places_at(lat, lon, radius_km, limit=limit)]
 
 
 def test_compact_spatial_matches_reference_impl(spark, tagger_pq, mmap_dir):
     """The compact array grid (file-backed as MmapSpatialIndex) agrees
-    with SpatialIndex built from the same rows."""
+    with SpatialIndex built from the same rows, to < 1 mm."""
     from xponents_spark.gazetteer.spatial import SpatialIndex
 
     rows = spark.read.parquet(tagger_pq).collect()
     mem = SpatialIndex([Place(*[r[c] for c in _COLS]) for r in rows])
     cmp_idx = MmapSpatialIndex(mmap_dir)
-    for lat, lon in _spatial_probes(7):
-        a = [(round(d), p.place_id) for d, p in mem.places_at(lat, lon, 50)]
-        b = [(round(d), p.place_id)
-             for d, p in cmp_idx.places_at(lat, lon, 50)]
-        # same distances; id tie-breaks may differ between impls
-        assert [x[0] for x in a] == [x[0] for x in b]
-        assert {x[1] for x in a} == {x[1] for x in b} or a == b
+    for lat, lon in _spatial_probes(7, rows):
+        _agree(_places_at(cmp_idx, lat, lon), _places_at(mem, lat, lon))
 
 
-def _compact_places_at(rows, lat, lon, radius_km, limit):
-    """Exhaustive scan over the tagger rows' columns with the compact
-    grid's filters and earth radius (6,371,000 m): what the grid lookup
-    must return, without the grid."""
+def _exhaustive_places_at(rows, lat, lon, radius_km, limit):
+    """Exhaustive ``haversine_m`` scan over the rows with the grids'
+    filters: what a grid lookup must return, without the grid."""
     keep = [r for r in rows
             if r["lat"] is not None and r["lon"] is not None
             and r["feat_class"] in ("P", "A") and r["cc"]
             and not str(r["feat_code"]).startswith("PCL")]
-    la = np.radians(np.array([r["lat"] for r in keep], dtype=np.float64))
-    lo = np.radians(np.array([r["lon"] for r in keep], dtype=np.float64))
-    qa, qo = np.radians(lat), np.radians(lon)
-    h = (np.sin((la - qa) / 2) ** 2
-         + np.cos(qa) * np.cos(la) * np.sin((lo - qo) / 2) ** 2)
-    d = 2 * 6_371_000.0 * np.arcsin(np.sqrt(h))
+    d = [haversine_m(lat, lon, r["lat"], r["lon"]) for r in keep]
     out, seen = [], set()
     for k in np.argsort(d, kind="stable"):
         if d[k] > radius_km * 1000 or len(out) >= limit:
@@ -201,26 +215,104 @@ def _compact_places_at(rows, lat, lon, radius_km, limit):
 
 
 def test_mmap_spatial_matches_compact(spark, tagger_pq, mmap_dir):
-    """MmapSpatialIndex's grid lookup returns what an exhaustive scan of
-    the same columns returns, to the metre."""
+    """Both grid lookups, SpatialIndex and MmapSpatialIndex, return what
+    an exhaustive scan of the same rows returns, to < 1 mm, including
+    across ±180° and near the poles."""
+    from xponents_spark.gazetteer.spatial import SpatialIndex
+
     rows = spark.read.parquet(tagger_pq).collect()
-    mm_idx = MmapSpatialIndex(mmap_dir)
-    for lat, lon in _spatial_probes(11):
-        a = [(round(d), pid)
-             for d, pid in _compact_places_at(rows, lat, lon, 50, 5)]
-        b = [(round(d), p.place_id) for d, p in mm_idx.places_at(lat, lon, 50)]
-        assert [x[0] for x in a] == [x[0] for x in b]
-        assert {x[1] for x in a} == {x[1] for x in b} or a == b
+    grids = (SpatialIndex([Place(*[r[c] for c in _COLS]) for r in rows]),
+             MmapSpatialIndex(mmap_dir))
+    lon_of = {r["place_id"]: r["lon"] for r in rows}
+    crossed = 0
+    for lat, lon in _spatial_probes(11, rows):
+        want = _exhaustive_places_at(rows, lat, lon, 50, 5)
+        for idx in grids:
+            _agree(_places_at(idx, lat, lon), want)
+        if abs(lon) == 179.9:
+            crossed += sum(lon_of[pid] * lon < 0 for _d, pid in want)
+    assert crossed    # some probes' nearest places lie across ±180°
+
+
+def _compile_rows(rows, pq_dir, mm_dir) -> str:
+    """A gazetteer artifact at ``mm_dir`` compiled from ``rows``
+    (one-token ``_COLS`` tuples) through a tagger parquet at ``pq_dir``."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(pq_dir)
+    recs = [dict(zip(_COLS, r), phrase=r[1].lower()) for r in rows]
+    pq.write_table(pa.Table.from_pylist(recs),
+                   os.path.join(pq_dir, "part-0.parquet"))
+    with open(os.path.join(pq_dir, "_normalization.json"), "w") as fh:
+        json.dump({"normalization_version": matcher.NORMALIZATION_VERSION},
+                  fh)
+    build_mmap_artifact(pq_dir, mm_dir)
+    return mm_dir
+
+
+def test_grids_wrap_at_antimeridian_and_poles(tmp_path):
+    """Places across ±180° and around a pole, where the reach spans the
+    whole ring of longitude cells: both grids find each place once, as
+    the exhaustive scan does."""
+    from xponents_spark.gazetteer.spatial import SpatialIndex
+
+    rows = [("E1", "Eastedge", "N", "P", "PPL", "FJ", "", 0.0, 179.95, 0, 1),
+            ("W1", "Westedge", "N", "P", "PPL", "WS", "", 0.05, -179.95, 0, 1),
+            ("W2", "Farwest", "N", "A", "ADM1", "WS", "01", 60.0, -179.8, 0,
+             1),
+            ("N1", "Northa", "N", "P", "PPL", "XX", "", 89.8, 10.0, 0, 1),
+            ("N2", "Northb", "N", "P", "PPL", "XX", "", 89.7, -170.0, 0, 1),
+            ("S1", "Southa", "N", "P", "PPL", "AQ", "", -89.9, 135.0, 0, 1)]
+    mem = SpatialIndex([Place(*r) for r in rows])
+    mm = MmapSpatialIndex(_compile_rows(rows, str(tmp_path / "pq"),
+                                        str(tmp_path / "mm")))
+    dicts = [dict(zip(_COLS, r)) for r in rows]
+    for lat, lon in [(0.0, 179.9), (0.0, -179.9), (60.0, 179.9),
+                     (89.95, 0.0), (90.0, 0.0), (-89.95, -45.0)]:
+        want = _exhaustive_places_at(dicts, lat, lon, 50, 10)
+        assert want, (lat, lon)
+        for idx in (mem, mm):
+            _agree(_places_at(idx, lat, lon, limit=10), want)
+
+
+def test_recompiled_artifact_is_reopened(spark, tmp_path):
+    """An artifact recompiled in place between two jobs of one session
+    is opened again: the second job tags the new rows, in every reused
+    python worker."""
+    import datetime
+
+    from xponents_spark.pipeline import extract
+    from xponents_spark.schemas import TRANSCRIPT_SCHEMA
+
+    mm = str(tmp_path / "tagger.mmap")
+    text = "we met in Qwertyville and then in Zxcvbton"
+    df = spark.createDataFrame(
+        [(f"c{i}", 0, "user", text, None, datetime.datetime(2025, 1, 1))
+         for i in range(16)], TRANSCRIPT_SCHEMA).repartition(8)
+
+    def places():
+        out = extract(df, features=("places",), gazetteer_parquet=mm)
+        return sorted({m["matchtext"] for r in out.collect()
+                       for m in r["matches"] if m["label"] == "place"})
+
+    for i, name in enumerate(["Qwertyville", "Zxcvbton"]):
+        _compile_rows([(f"Q{i}", name, "N", "P", "PPLA", "US", "CA",
+                        34.0 + i, -118.0, 5, 500_000)],
+                      str(tmp_path / f"pq{i}"), mm)
+        assert places() == [name]
 
 
 def test_parquet_gazetteer_resets_cleanly(mmap_dir):
     from xponents_spark.gazetteer import spatial
-    matcher.set_gazetteer_parquet(mmap_dir)
-    try:
+    with _serving(gazetteer=mmap_dir):
         assert isinstance(matcher.gaz_index(), MmapGazetteerIndex)
         assert isinstance(spatial.spatial_index(), MmapSpatialIndex)
-    finally:
-        matcher.set_gazetteer_parquet(None)
+        # the phrase index and the grid share one set of open files
+        assert matcher.gaz_index().f is spatial.spatial_index().f
     # back to the embedded fixture gazetteer
     assert isinstance(matcher.gaz_index(), PhraseIndex)
     assert isinstance(spatial.spatial_index(), spatial.SpatialIndex)
@@ -239,19 +331,18 @@ def test_postal_parquet_path(spark, tmp_path_factory):
     synthesize_postal_raw(spark, n_rows=5_000, partitions=4) \
         .write.mode("overwrite").parquet(out)
     assert postal.build_postal_mmap(out, mm)["n_keys"] > 3_000
-    try:
-        postal.set_postal_parquet(mm)
-        assert postal._BY_CODE is None   # lazy until first lookup
-        assert isinstance(postal._codes(), postal._MmapCodes)
+    from xponents_spark.gazetteer.mmapstore import MmapKeyedTable
+    with _serving(postal=mm):
+        # lazy until first lookup
+        assert "postal_codes" not in vars(tables._slot)
+        assert isinstance(tables.postal_codes(), MmapKeyedTable)
         row = spark.read.parquet(out).first()
         # a code adjacent to country scope resolves through the big table
         hits = postal.tag_postals(f"parcel code {row['code']} sent", [],
                                   {row["cc"]})
         assert any(h["cc"] == row["cc"] and h["matchtext"] == row["code"]
                    for h in hits)
-    finally:
-        postal.set_postal_parquet(None)
-    assert len(postal._codes()) == len(postal.POSTAL_ROWS)
+    assert len(tables.postal_codes()) == len(postal.POSTAL_ROWS)
 
 
 def test_taxcat_parquet_path(spark, tmp_path):
@@ -267,8 +358,7 @@ def test_taxcat_parquet_path(spark, tmp_path):
     rows = spark.read.parquet(str(tmp_path / "taxcat.parquet")).collect()
     assert len(rows) > 1_000
     valid = next(r for r in rows if r["valid"])
-    try:
-        matcher.set_taxcat_parquet(mm)
+    with _serving(taxcat=mm):
         hits = matcher.tag_taxons(f"meeting with {valid['name']} tomorrow")
         assert any(m == valid["name"] and k == valid["kind"]
                    for _s, _e, m, k, _c, _cc in hits)
@@ -281,8 +371,6 @@ def test_taxcat_parquet_path(spark, tmp_path):
             hits = matcher.tag_taxons(f"meeting with {bad['name']} tomorrow")
             assert not any(m == bad["name"]
                            for _s, _e, m, _k, _c, _cc in hits)
-    finally:
-        matcher.set_taxcat_parquet(None)
     # embedded lexicons restored
     assert matcher.tag_taxons("the Australian delegation")
 
@@ -301,11 +389,8 @@ def test_taxcat_parquet_matches_embedded(spark, tmp_path):
     probe = ("Mr Smith of Acme Corporation met the Australian envoy "
              "and French officials in town")
     base = matcher.tag_taxons(probe)
-    try:
-        matcher.set_taxcat_parquet(mm)
+    with _serving(taxcat=mm):
         assert matcher.tag_taxons(probe) == base
-    finally:
-        matcher.set_taxcat_parquet(None)
 
 
 def test_postal_mmap_path(spark, tmp_path_factory, monkeypatch):
@@ -327,14 +412,13 @@ def test_postal_mmap_path(spark, tmp_path_factory, monkeypatch):
 
     probes = [(f"parcel code {r[2]} sent", r[0]) for r in rows[:40]]
     # the reference side: the embedded table's dict, over the same rows
-    monkeypatch.setattr(postal, "_BY_CODE", postal._build_code_map(rows))
-    via_dict = [postal.tag_postals(t, [], {cc}) for t, cc in probes]
-    try:
-        postal.set_postal_parquet(mm_path)
-        assert postal._BY_CODE is None   # lazy
+    by_code = postal._build_code_map(rows)
+    with monkeypatch.context() as m:
+        m.setattr(postal, "postal_codes", lambda: by_code)
+        via_dict = [postal.tag_postals(t, [], {cc}) for t, cc in probes]
+    with _serving(postal=mm_path):
+        assert "postal_codes" not in vars(tables._slot)     # lazy
         via_mmap = [postal.tag_postals(t, [], {cc}) for t, cc in probes]
-    finally:
-        postal.set_postal_parquet(None)
     assert via_mmap == via_dict and all(via_mmap)
 
 
@@ -421,17 +505,14 @@ def test_mmap_version_fingerprint(tagger_pq, tmp_path_factory):
     m = json.load(open(meta))
     m["normalization_version"] = 1
     json.dump(m, open(meta, "w"))
-    # fresh process-level state: drop the shared-file memo for this path
-    from xponents_spark.gazetteer import mmapstore
-    mmapstore._FILES.pop(out, None)
     with pytest.raises(ValueError, match="normalized with version"):
         MmapGazetteerIndex(out)
 
 
 def test_cjk_names_tag_through_parquet_index(spark, tmp_path_factory):
     """CJK names in the scale gazetteer index as per-char phrases and tag
-    inside unsegmented runs through the index ``set_gazetteer_parquet``
-    opens over the compiled artifact."""
+    inside unsegmented runs through the index the job's tables open over
+    the compiled artifact."""
     base = tmp_path_factory.mktemp("gazcjk")
     out = str(base / "tagger.parquet")
     raw = synthesize_gazetteer_raw(spark, n_rows=30_000, partitions=8)
@@ -441,14 +522,11 @@ def test_cjk_names_tag_through_parquet_index(spark, tmp_path_factory):
     assert cjk, "synth should emit CJK names"
     mm = str(base / "tagger.mmap")
     build_mmap_artifact(out, mm)
-    matcher.set_gazetteer_parquet(mm)
-    try:
+    with _serving(gazetteer=mm):
         idx = matcher.gaz_index()
         for r in cjk:
             hits = idx.scan(f"前往{r['name']}旅行")
             assert any(m == r["name"] for _s, _e, m, _p in hits), r["name"]
-    finally:
-        matcher.set_gazetteer_parquet(None)
 
 
 def test_taxcat_mmap_parity(spark, tmp_path):
@@ -470,10 +548,7 @@ def test_taxcat_mmap_parity(spark, tmp_path):
         "Brazilian delegation",
         "", "no entities here at all"]
     a = [matcher.tag_taxons(t) for t in texts]
-    try:
-        matcher.set_taxcat_parquet(mm_dir)
+    with _serving(taxcat=mm_dir):
         b = [matcher.tag_taxons(t) for t in texts]
-    finally:
-        matcher.set_taxcat_parquet(None)
     assert a == b
     assert any(a)    # fixtures actually contain taxons

@@ -279,7 +279,6 @@ def test_mmap_scan_equals_phrase_index(data):
                 assert got == want, (type(idx).__name__, type(toks),
                                      names, text)
     finally:
-        mmapstore._FILES.pop(os.path.join(tmpdir, "tagger.mmap"), None)
         shutil.rmtree(tmpdir, ignore_errors=True)
 
 

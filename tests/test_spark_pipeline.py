@@ -192,6 +192,61 @@ def test_stateful_conversation_stream(spark, sf_dir):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _one_org_taxcat(spark, out_dir) -> str:
+    """A compiled taxcat artifact whose one row is the org "Zorblax
+    Dynamics", which the embedded lexicons do not know."""
+    from xponents_spark.gazetteer.mmapstore import build_taxcat_mmap
+    from xponents_spark.sources.taxcat_etl import build_taxcat_parquet
+    build_taxcat_parquet(spark.createDataFrame(
+        [("JRC", "JRC.org", "Zorblax Dynamics", "org", "Zorblax Dynamics",
+          None, "N", True)],
+        "catalog string, taxnode string, name string, kind string, "
+        "canonical string, cc string, name_type string, valid boolean"),
+        str(out_dir / "taxcat.parquet"))
+    build_taxcat_mmap(str(out_dir / "taxcat.parquet"),
+                      str(out_dir / "taxcat.mmap"))
+    return str(out_dir / "taxcat.mmap")
+
+
+def test_stateful_stream_uses_the_jobs_tables(spark, tmp_path):
+    """Python workers are reused across jobs: after a one-partition
+    ``extract`` job tags against a taxcat artifact, the stateful stream
+    over the same turns, with no path set, still counts the matches of
+    the embedded tables."""
+    from xponents_spark.pipeline import DEFAULT_FEATURES, extract_turn
+    from xponents_spark.streaming import (conversation_state_stream,
+                                          read_transcript_stream)
+
+    taxcat = _one_org_taxcat(spark, tmp_path)
+    ts = datetime.datetime(2025, 1, 1)
+    rows = [(f"c{c}", i, "user",
+             f"meet Zorblax Dynamics in Vancouver, turn {i} of {c}", None, ts)
+            for c in range(12) for i in range(2)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1) \
+        .write.parquet(src)
+    turns = spark.read.parquet(src)
+
+    tagged = extract(turns.coalesce(1), taxcat_parquet=taxcat)
+    orgs = tagged.select(F.explode("matches").alias("m")) \
+        .filter("m.label = 'org'").count()
+    assert orgs == len(rows)          # the job tagged from the artifact
+
+    q = (conversation_state_stream(read_transcript_stream(spark, src),
+                                   features=DEFAULT_FEATURES)
+         .writeStream.format("memory").queryName("convstate_tables")
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    final = {}
+    for r in spark.sql("select * from convstate_tables").collect():
+        if r["n_turns"] >= final.get(r["conv_id"], (0, 0))[0]:
+            final[r["conv_id"]] = (r["n_turns"], r["n_matches"])
+    embedded = sum(len(extract_turn(r[3], DEFAULT_FEATURES)[1]) for r in rows)
+    assert sum(n for _t, n in final.values()) == embedded
+
+
 def test_multimodal_plumbing(spark):
     from xponents_spark.operators.multimodal import (
         extract_media_features, make_fake_media, sample_frames)
@@ -399,19 +454,9 @@ def test_conversation_scope_taxcat_env_read_once(spark, tmp_path,
     passes: set after the session started, it never reaches the python
     workers' environment, yet the re-extracted turn must tag taxons from
     the same file as pass 1."""
-    import datetime
-    from xponents_spark.gazetteer.mmapstore import build_taxcat_mmap
     from xponents_spark.pipeline import extract_conversation_scoped
-    from xponents_spark.sources.taxcat_etl import build_taxcat_parquet
-    build_taxcat_parquet(spark.createDataFrame(
-        [("JRC", "JRC.org", "Zorblax Dynamics", "org", "Zorblax Dynamics",
-          None, "N", True)],
-        "catalog string, taxnode string, name string, kind string, "
-        "canonical string, cc string, name_type string, valid boolean"),
-        str(tmp_path / "taxcat.parquet"))
-    taxcat = str(tmp_path / "taxcat.mmap")
-    build_taxcat_mmap(str(tmp_path / "taxcat.parquet"), taxcat)
-    monkeypatch.setenv("XPONENTS_TAXCAT_PARQUET", taxcat)
+    monkeypatch.setenv("XPONENTS_TAXCAT_PARQUET",
+                       _one_org_taxcat(spark, tmp_path))
     ts = datetime.datetime(2025, 1, 1)
     rows = [
         ("c1", 0, "user", "we are based in United States these days", None, ts),

@@ -62,10 +62,14 @@ def geohash_encode(lat: float, lon: float, precision: int = 6) -> str:
     return gh
 
 
+# mean earth radius (IUGG), the one radius every distance in metres uses
+EARTH_RADIUS_M = 6371008.8
+
+
 def haversine_m(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
     """Great-circle distance in meters (GeodeticUtility.distanceMeters,
     used at rules/CoordinateAssociationRule.java:109)."""
-    r = 6371008.8
+    r = EARTH_RADIUS_M
     p1, p2 = math.radians(lat1), math.radians(lat2)
     dp = p2 - p1
     dl = math.radians(lon2 - lon1)

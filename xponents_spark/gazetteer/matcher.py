@@ -34,6 +34,7 @@ from ..functions.textnorm import (
     strip_diacritics,
 )
 from . import data
+from .tables import gaz_index, tax_index
 
 _EDGE_PUNCT = ".,;:'\"!?()[]|"
 _EDGE_PUNCT_SET = frozenset(_EDGE_PUNCT)
@@ -391,44 +392,6 @@ def _longest_dominant_right(matches):
     return by_start
 
 
-# --- gazetteer index (lazy process singleton — executor 'pump priming') -----
-
-_GAZ_INDEX = None                     # PhraseIndex | MmapGazetteerIndex
-_GAZ_PATH: str | None = None
-
-
-def set_gazetteer_parquet(path: str | None) -> None:
-    """Scale path: point this worker process at a compiled gazetteer
-    artifact directory (``sources.gazetteer_etl.build_tagger_parquet``,
-    then ``mmapstore.build_mmap_artifact``).  The index opens lazily ONCE
-    per process by mapping the local/shared files — no driver collect, no
-    broadcast of rows through the JVM; any other directory is refused when
-    it opens.  ``None`` resets to the embedded gazetteer.  Idempotent per
-    path (called from every Arrow batch of ``pipeline.extract``)."""
-    global _GAZ_PATH, _GAZ_INDEX
-    if path == _GAZ_PATH:
-        return
-    _GAZ_PATH = path
-    _GAZ_INDEX = None
-
-
-def gaz_index():
-    global _GAZ_INDEX
-    if _GAZ_INDEX is None:
-        if _GAZ_PATH is not None:
-            # shared-memory scale path: page-cache-shared per node
-            from .mmapstore import MmapGazetteerIndex
-            _GAZ_INDEX = MmapGazetteerIndex(_GAZ_PATH)
-        else:
-            _GAZ_INDEX = PhraseIndex([(r[1], Place(*r))
-                                      for r in data.GAZETTEER_ROWS])
-            # O6 candidate cap on the in-memory path (see CANDIDATE_CAP)
-            for key, places in _GAZ_INDEX.index.items():
-                if len(places) > CANDIDATE_CAP:
-                    _GAZ_INDEX.index[key] = _cap_places(places)
-    return _GAZ_INDEX
-
-
 def tag_places(text: str, lowercase_doc: bool | None = None,
                toks: Tokens = None) -> list[PlaceCandidate]:
     """Scan + build candidates with tag-time filters F1-F10."""
@@ -527,46 +490,6 @@ def _apply_tag_filters(cand: PlaceCandidate, lowercase_doc: bool) -> None:
 
 
 # --- taxcat-style lexicons (T4): person / org / nationality ------------------
-
-_TAX_INDEX = None                     # PhraseIndex | MmapTaxcatIndex
-_TAX_PATH: str | None = None
-
-
-def set_taxcat_parquet(path: str | None) -> None:
-    """Scale path for the reference's taxcat core (JRC entities, person
-    names, WFB — solr/build.sh:24-57, TaxonMatcher.java:69-85): point this
-    worker at a compiled taxcat artifact directory
-    (``sources.taxcat_etl.build_taxcat_parquet``, then
-    ``mmapstore.build_taxcat_mmap``).  The index opens lazily once per
-    process — no driver collect; any other directory is refused when it
-    opens.  ``None`` resets to the embedded lexicons (reused python
-    workers must not leak a previous job's table).  Idempotent per
-    path."""
-    global _TAX_PATH, _TAX_INDEX
-    if path == _TAX_PATH:
-        return
-    _TAX_PATH = path
-    _TAX_INDEX = None
-
-
-def tax_index():
-    global _TAX_INDEX
-    if _TAX_INDEX is None:
-        if _TAX_PATH is not None:
-            # shared-memory scale path (page cache shared per node)
-            from .mmapstore import MmapTaxcatIndex
-            _TAX_INDEX = MmapTaxcatIndex(_TAX_PATH)
-        else:
-            entries: list[tuple[str, object]] = []
-            for n in data.PERSON_NAMES:
-                entries.append((n, ("person", n, None)))
-            for key, canonical in data.ORG_NAMES.items():
-                entries.append((key, ("org", canonical, None)))
-            for nat, cc in data.NATIONALITIES.items():
-                entries.append((nat, ("nationality", nat, cc)))
-            _TAX_INDEX = PhraseIndex(entries)
-    return _TAX_INDEX
-
 
 def tag_taxons(text: str, toks: Tokens = None
                ) -> list[tuple[int, int, str, str, str, str | None]]:

@@ -66,10 +66,11 @@ from itertools import compress as _compress
 
 import numpy as np
 
+from ..functions.geo import EARTH_RADIUS_M
 from . import matcher
 from .matcher import (Place, TagLimitExceeded, Tokens,
                       _longest_dominant_right, token_view)
-from .spatial import cell_reach
+from .spatial import _CELL_DEG, _wrap, cells_near
 
 _STR_COLS = ["place_id", "name", "name_type", "feat_class", "feat_code",
              "cc", "adm1"]
@@ -77,7 +78,6 @@ _SEP = "\x1f"
 _NULL = "\x00"     # NULL sentinel in rows.bin (distinct from '')
 _FORMAT = "xponents-mmap-1"
 _TAX_FORMAT = "xponents-taxmmap-1"
-_CELL_DEG = 0.5
 _CELL_MUL = 1_000_003
 
 
@@ -104,43 +104,7 @@ def build_mmap_artifact(tagger_parquet: str, out_dir: str) -> dict:
     n_rows = len(phrases)
 
     os.makedirs(out_dir, exist_ok=True)
-
-    # phrase table: distinct keys + row bounds
-    blob_parts: list[bytes] = []
-    poff = [0]
-    bounds = [0]
-    prev = None
-    for i, p in enumerate(phrases):
-        if p != prev:
-            if prev is not None:
-                bounds.append(i)
-            b = p.encode("utf-8")
-            blob_parts.append(b)
-            poff.append(poff[-1] + len(b))
-            prev = p
-    bounds.append(n_rows)
-    blob = b"".join(blob_parts)
-    n_phrases = len(blob_parts)
-    with open(os.path.join(out_dir, "phrases.bin"), "wb") as fh:
-        fh.write(blob)
-    poff_a = np.asarray(poff, dtype=np.uint64)
-    np.save(os.path.join(out_dir, "phrase_off.npy"), poff_a)
-    np.save(os.path.join(out_dir, "row_bounds.npy"),
-            np.asarray(bounds, dtype=np.uint64))
-
-    # 2-byte bucket table over the sorted phrase keys
-    bb = np.frombuffer(blob, dtype=np.uint8)
-    starts = poff_a[:-1].astype(np.int64)
-    lens = np.diff(poff_a.astype(np.int64))
-    first = bb[starts].astype(np.uint32)
-    second = np.where(lens >= 2,
-                      bb[np.minimum(starts + 1, max(len(bb) - 1, 0))],
-                      0).astype(np.uint32)
-    code = (first << 8) | second
-    table = np.concatenate([
-        np.searchsorted(code, np.arange(65536), side="left"),
-        [n_phrases]]).astype(np.uint64)
-    np.save(os.path.join(out_dir, "prefix2.npy"), table)
+    n_phrases = _write_phrase_table(out_dir, phrases)
 
     # payload rows (0x1F-joined strings; numerics as typed arrays)
     cols = {c: tbl.column(c).to_pylist() for c in _STR_COLS}
@@ -184,7 +148,7 @@ def build_mmap_artifact(tagger_parquet: str, out_dir: str) -> dict:
             & ~np.array([str(f).startswith("PCL") for f in fcode]))
     rows_idx = np.flatnonzero(keep)
     ci = np.floor(lat[rows_idx] / _CELL_DEG).astype(np.int64)
-    cj = np.floor(lon[rows_idx] / _CELL_DEG).astype(np.int64)
+    cj = _wrap(np.floor(lon[rows_idx] / _CELL_DEG).astype(np.int64))
     cell = ci * _CELL_MUL + cj
     o = np.argsort(cell, kind="stable")
     cell, rows_idx = cell[o], rows_idx[o]
@@ -201,6 +165,52 @@ def build_mmap_artifact(tagger_parquet: str, out_dir: str) -> dict:
     with open(os.path.join(out_dir, "meta.json"), "w") as fh:
         json.dump(meta, fh)
     return meta
+
+
+def _write_phrase_table(out_dir: str, phrases) -> int:
+    """The phrase table of an artifact whose payload row i has the sorted
+    key ``phrases[i]``: distinct keys (phrases.bin, phrase_off.npy), each
+    key's row range (row_bounds.npy) and the 2-byte bucket table over the
+    keys (prefix2.npy).  Returns the number of distinct keys."""
+    blob_parts: list[bytes] = []
+    poff = [0]
+    bounds = []
+    prev = None
+    for i, p in enumerate(phrases):
+        if p != prev:
+            bounds.append(i)
+            b = p.encode("utf-8")
+            blob_parts.append(b)
+            poff.append(poff[-1] + len(b))
+            prev = p
+    bounds.append(len(phrases))
+    blob = b"".join(blob_parts)
+    with open(os.path.join(out_dir, "phrases.bin"), "wb") as fh:
+        fh.write(blob)
+    poff_a = np.asarray(poff, dtype=np.uint64)
+    np.save(os.path.join(out_dir, "phrase_off.npy"), poff_a)
+    np.save(os.path.join(out_dir, "row_bounds.npy"),
+            np.asarray(bounds, dtype=np.uint64))
+
+    bb = np.frombuffer(blob, dtype=np.uint8)
+    starts = poff_a[:-1].astype(np.int64)
+    lens = np.diff(poff_a.astype(np.int64))
+    first = bb[starts].astype(np.uint32)
+    second = np.where(lens >= 2,
+                      bb[np.minimum(starts + 1, max(len(bb) - 1, 0))],
+                      0).astype(np.uint32)
+    code = (first << 8) | second
+    table = np.concatenate([
+        np.searchsorted(code, np.arange(65536), side="left"),
+        [len(blob_parts)]]).astype(np.uint64)
+    np.save(os.path.join(out_dir, "prefix2.npy"), table)
+    return len(blob_parts)
+
+
+def _map(path: str) -> mmap.mmap:
+    """Read-only map of a whole file (the map holds its own descriptor)."""
+    with open(path, "rb") as fh:
+        return mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ)
 
 
 def _read_meta(path: str, fmt: str, what: str, build: str) -> dict:
@@ -236,17 +246,21 @@ class _PhraseFiles:
                 f"{self.BUILD}")
         self.meta = meta
         self.path = path
-        self._pf = open(os.path.join(path, "phrases.bin"), "rb")
-        self.pbuf = mmap.mmap(self._pf.fileno(), 0, access=mmap.ACCESS_READ)
+        self.pbuf = _map(os.path.join(path, "phrases.bin"))
         self.poff = self._load("phrase_off.npy")
         self.row_bounds = self._load("row_bounds.npy")
         self.prefix2 = self._load("prefix2.npy")
-        self._rf = open(os.path.join(path, "rows.bin"), "rb")
-        self.rbuf = mmap.mmap(self._rf.fileno(), 0, access=mmap.ACCESS_READ)
+        self.rbuf = _map(os.path.join(path, "rows.bin"))
         self.roff = self._load("row_off.npy")
 
     def _load(self, name: str) -> np.ndarray:
         return np.load(os.path.join(self.path, name), mmap_mode="r")
+
+    def close(self) -> None:
+        """Unmap the byte tables (the ``.npy`` maps go with their last
+        reference)."""
+        self.pbuf.close()
+        self.rbuf.close()
 
     def record(self, row: int) -> list[str | None]:
         """Payload row ``row``'s string fields (NUL decodes to None)."""
@@ -284,25 +298,18 @@ class _MmapFiles(_PhraseFiles):
                      pop=int(self.pop[row]))
 
 
-# one _MmapFiles per (process, path): MmapGazetteerIndex and
-# MmapSpatialIndex in the same worker share mappings
-_FILES: dict[str, _MmapFiles] = {}
-
-
-def _files(path: str) -> _MmapFiles:
-    f = _FILES.get(path)
-    if f is None:
-        f = _FILES[path] = _MmapFiles(path)
-    return f
-
-
 class MmapGazetteerIndex:
     """Phrase tagger over the mmap artifact; same scan contract as
     ``PhraseIndex``: returns LDR-resolved ``(start, end, matchtext,
-    places)`` tuples."""
+    places)`` tuples.  ``source`` is an artifact directory, or its files
+    already open (``tables`` shares one set with the reverse-geocode
+    grid)."""
 
-    def __init__(self, path: str):
-        self.f = _files(path)
+    FILES = _MmapFiles
+
+    def __init__(self, source: str | _PhraseFiles):
+        self.f = (source if isinstance(source, _PhraseFiles)
+                  else self.FILES(source))
         self._memo: dict[int, list[Place]] = {}
         # first-token probe memo: text vocabularies are Zipf-distributed,
         # so most tokens repeat constantly and most MISS the dictionary —
@@ -328,28 +335,28 @@ class MmapGazetteerIndex:
     def _phrase(self, k: int) -> bytes:
         return self.f.pbuf[int(self.f.poff[k]):int(self.f.poff[k + 1])]
 
-    def _places(self, k: int) -> list[Place]:
+    def _places(self, k: int) -> list:
+        """Phrase ``k``'s payloads, memoized."""
         hit = self._memo.get(k)
         if hit is None:
-            from .matcher import CANDIDATE_CAP
-            b0, b1 = int(self.f.row_bounds[k]), int(self.f.row_bounds[k + 1])
-            if b1 - b0 > CANDIDATE_CAP:
-                # O6 candidate cap — selected from the mmap'd id_bias
-                # array alone, so a pathological 10^5-row phrase never
-                # hydrates beyond the cap (stable argsort: bias ties keep
-                # artifact order, matching _cap_places on the other paths)
-                bias = np.asarray(self.f.id_bias[b0:b1])
-                keep = np.sort(np.argsort(-bias, kind="stable")
-                               [:CANDIDATE_CAP])
-                rows = [b0 + int(i) for i in keep]
-                hit = sorted((self.f.place(r) for r in rows),
-                             key=lambda p: -p.id_bias)
-            else:
-                hit = [self.f.place(r) for r in range(b0, b1)]
             if len(self._memo) > 200_000:    # bound worker memory growth
                 self._memo.clear()
-            self._memo[k] = hit
+            hit = self._memo[k] = self._hydrate(
+                int(self.f.row_bounds[k]), int(self.f.row_bounds[k + 1]))
         return hit
+
+    def _hydrate(self, b0: int, b1: int) -> list[Place]:
+        if b1 - b0 > matcher.CANDIDATE_CAP:
+            # O6 candidate cap — selected from the mmap'd id_bias array
+            # alone, so a pathological 10^5-row phrase never hydrates
+            # beyond the cap (stable argsort: bias ties keep artifact
+            # order, matching _cap_places on the other paths)
+            bias = np.asarray(self.f.id_bias[b0:b1])
+            keep = np.sort(np.argsort(-bias, kind="stable")
+                           [:matcher.CANDIDATE_CAP])
+            return sorted((self.f.place(b0 + int(i)) for i in keep),
+                          key=lambda p: -p.id_bias)
+        return [self.f.place(r) for r in range(b0, b1)]
 
     def _probe(self, norm: str) -> tuple[int, int, int]:
         """(exact-hit phrase index or -1, [lo, hi) range of the phrases
@@ -439,17 +446,16 @@ class MmapSpatialIndex:
     All lookups are ``np.searchsorted`` over mmap'd arrays — zero
     per-worker build cost."""
 
-    def __init__(self, path: str):
-        self.f = _files(path)
+    def __init__(self, source: str | _MmapFiles):
+        self.f = (source if isinstance(source, _MmapFiles)
+                  else _MmapFiles(source))
 
-    def _cand(self, lat: float, lon: float, ri: int, rj: int) -> np.ndarray:
+    def _cand(self, lat: float, lon: float, radius_km: float) -> np.ndarray:
         f = self.f
-        ci, cj = int(math.floor(lat / _CELL_DEG)), \
-            int(math.floor(lon / _CELL_DEG))
-        want = np.asarray([(ci + di) * _CELL_MUL + (cj + dj)
-                           for di in range(-ri, ri + 1)
-                           for dj in range(-rj, rj + 1)],
-                          dtype=np.int64)
+        # np.unique sorts the cell codes: candidates come in grid order
+        want = np.unique(np.asarray([ci * _CELL_MUL + cj for ci, cj
+                                     in cells_near(lat, lon, radius_km)],
+                                    dtype=np.int64))
         pos = np.searchsorted(f.grid_cells, want)
         pos = pos[pos < len(f.grid_cells)]
         hit = pos[np.isin(f.grid_cells[pos], want)]
@@ -462,14 +468,14 @@ class MmapSpatialIndex:
     def places_at(self, lat: float, lon: float, radius_km: float = 50,
                   limit: int = 5) -> list[tuple[float, Place]]:
         f = self.f
-        idx = self._cand(lat, lon, *cell_reach(lat, radius_km))
+        idx = self._cand(lat, lon, radius_km)
         if not len(idx):
             return []
         la, lo = np.radians(f.lat[idx]), np.radians(f.lon[idx])
         qa, qo = math.radians(lat), math.radians(lon)
         a = (np.sin((la - qa) / 2) ** 2
              + math.cos(qa) * np.cos(la) * np.sin((lo - qo) / 2) ** 2)
-        d = 2 * 6_371_000.0 * np.arcsin(np.sqrt(a))
+        d = 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
         ok = d <= radius_km * 1000
         idx, d = idx[ok], d[ok]
         out: list[tuple[float, Place]] = []
@@ -516,54 +522,19 @@ def build_taxcat_mmap(taxcat_parquet: str, out_dir: str) -> dict:
     rows.sort(key=lambda r: r[0])            # codepoint == UTF-8 byte order
 
     os.makedirs(out_dir, exist_ok=True)
-    blob_parts: list[bytes] = []
-    poff = [0]
-    bounds = [0]
-    prev = None
+    n_phrases = _write_phrase_table(out_dir, [r[0] for r in rows])
     roff = [0]
     with open(os.path.join(out_dir, "rows.bin"), "wb") as fh:
-        for i, (p, k, cn, cc) in enumerate(rows):
-            if p != prev:
-                if prev is not None:
-                    bounds.append(i)
-                b = p.encode("utf-8")
-                blob_parts.append(b)
-                poff.append(poff[-1] + len(b))
-                prev = p
+        for _p, k, cn, cc in rows:
             rec = _SEP.join(_NULL if v is None else v.replace(_SEP, " ")
                             for v in (k, cn, cc)).encode("utf-8")
             fh.write(rec)
             roff.append(roff[-1] + len(rec))
-    bounds.append(len(rows))
-    blob = b"".join(blob_parts)
-    with open(os.path.join(out_dir, "phrases.bin"), "wb") as fh:
-        fh.write(blob)
-    poff_a = np.asarray(poff, dtype=np.uint64)
-    np.save(os.path.join(out_dir, "phrase_off.npy"), poff_a)
-    np.save(os.path.join(out_dir, "row_bounds.npy"),
-            np.asarray(bounds, dtype=np.uint64))
     np.save(os.path.join(out_dir, "row_off.npy"),
             np.asarray(roff, dtype=np.uint64))
 
-    # 2-byte prefix buckets (same scheme as the gazetteer artifact)
-    bb = np.frombuffer(blob, dtype=np.uint8)
-    if len(blob_parts):
-        starts = poff_a[:-1].astype(np.int64)
-        lens = np.diff(poff_a.astype(np.int64))
-        first = bb[starts].astype(np.uint32)
-        second = np.where(lens >= 2,
-                          bb[np.minimum(starts + 1, max(len(bb) - 1, 0))],
-                          0).astype(np.uint32)
-        code = (first << 8) | second
-    else:
-        code = np.empty(0, dtype=np.uint32)
-    table = np.concatenate([
-        np.searchsorted(code, np.arange(65536), side="left"),
-        [len(blob_parts)]]).astype(np.uint64)
-    np.save(os.path.join(out_dir, "prefix2.npy"), table)
-
     meta = {"format": _TAX_FORMAT, "normalization_version": norm_ver,
-            "n_phrases": len(blob_parts), "n_rows": len(rows)}
+            "n_phrases": n_phrases, "n_rows": len(rows)}
     with open(os.path.join(out_dir, "meta.json"), "w") as fh:
         json.dump(meta, fh)
     return meta
@@ -576,21 +547,10 @@ class MmapTaxcatIndex(MmapGazetteerIndex):
     differs: rows are (kind, canonical, cc) tuples, the PhraseIndex
     payload contract ``tag_taxons`` expects."""
 
-    def __init__(self, path: str):
-        self.f = _PhraseFiles(path)
-        self._memo = {}
-        self._tok_memo = {}
-        self._dead = set()
+    FILES = _PhraseFiles
 
-    def _places(self, k: int) -> list[tuple]:
-        hit = self._memo.get(k)
-        if hit is None:
-            b0, b1 = int(self.f.row_bounds[k]), int(self.f.row_bounds[k + 1])
-            hit = [tuple(self.f.record(r)) for r in range(b0, b1)]
-            if len(self._memo) > 200_000:
-                self._memo.clear()
-            self._memo[k] = hit
-        return hit
+    def _hydrate(self, b0: int, b1: int) -> list[tuple]:
+        return [tuple(self.f.record(r)) for r in range(b0, b1)]
 
 
 # --- generic keyed mmap table (postal-class side tables) ---------------------
@@ -685,18 +645,21 @@ class MmapKeyedTable:
                           "mmapstore.build_keyed_mmap (a postal parquet: "
                           "postal.build_postal_mmap)")
         self.n = meta["n_keys"]
-        self._kf = open(os.path.join(path, "keys.bin"), "rb")
-        self.kbuf = mmap.mmap(self._kf.fileno(), 0, access=mmap.ACCESS_READ)
+        self.kbuf = _map(os.path.join(path, "keys.bin"))
         self.koff = np.load(os.path.join(path, "key_off.npy"), mmap_mode="r")
         self.bounds = np.load(os.path.join(path, "row_bounds.npy"),
                               mmap_mode="r")
-        self._rf = open(os.path.join(path, "rows.bin"), "rb")
-        self.rbuf = mmap.mmap(self._rf.fileno(), 0, access=mmap.ACCESS_READ)
+        self.rbuf = _map(os.path.join(path, "rows.bin"))
         self.roff = np.load(os.path.join(path, "row_off.npy"), mmap_mode="r")
         _CONV = {"str": str, "int": int, "float": float,
                  "bool": lambda s: s == "True"}
         self._conv = [_CONV.get(t, str) for t in meta.get("types", [])]
         self._memo: dict[str, list[tuple]] = {}
+
+    def close(self) -> None:
+        """Unmap the key and row tables."""
+        self.kbuf.close()
+        self.rbuf.close()
 
     def _key_at(self, k: int) -> bytes:
         return self.kbuf[int(self.koff[k]):int(self.koff[k + 1])]
@@ -720,16 +683,13 @@ class MmapKeyedTable:
             for r in range(b0, b1):
                 rec = self.rbuf[int(self.roff[r]):int(self.roff[r + 1])] \
                     .decode("utf-8").split(_SEP)
-                if conv:
-                    # index-based (not zip): a record wider than the type
-                    # list keeps its trailing fields as strings instead of
-                    # silently dropping them (review finding)
-                    out.append(tuple(
-                        None if f == _NULL
-                        else (conv[i](f) if i < len(conv) else f)
-                        for i, f in enumerate(rec)))
-                else:    # pre-typed-meta artifact: stringly fallback
-                    out.append(tuple(None if f == _NULL else f for f in rec))
+                # index-based (not zip): a record wider than the type list
+                # keeps its trailing fields as strings instead of silently
+                # dropping them (review finding)
+                out.append(tuple(
+                    None if f == _NULL
+                    else (conv[i](f) if i < len(conv) else f)
+                    for i, f in enumerate(rec)))
         if len(self._memo) > 100_000:
             self._memo.clear()
         self._memo[key] = out

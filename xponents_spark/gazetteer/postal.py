@@ -12,9 +12,12 @@ The reference tags postal codes against a 4M-row COUNTRY+CODE Solr core
 * a trivial chooser whose confidence derives from match complexity and
   linked geography (rules/PostalLocationChooser.java:1-138).
 
-Here the postal table is an embedded fixture keyed by (cc, code); the
-tagger proposes digit/alnum tokens and the association rule against the
-already-tagged place/admin candidates validates them.
+Here the postal table is an embedded fixture keyed by (cc, code), or at
+the reference's scale a keyed artifact compiled by ``build_postal_mmap``
+that the job's ``tables.Tables`` names (opened lazily, on the first
+lookup, by ``tables.postal_codes``); the tagger proposes digit/alnum
+tokens and the association rule against the already-tagged place/admin
+candidates validates them.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import re
 from ..functions.geo import geohash_encode
 from . import data
 from .matcher import PlaceCandidate
+from .tables import postal_codes
 
 # (cc, adm1, code, place name, lat, lon)
 POSTAL_ROWS: list[tuple] = [
@@ -48,44 +52,6 @@ def _build_code_map(rows) -> dict[str, list[tuple]]:
     return by_code
 
 
-_BY_CODE: dict[str, list[tuple]] | None = _build_code_map(POSTAL_ROWS)
-_POSTAL_PATH: str | None = None
-
-
-def set_postal_parquet(path: str | None) -> None:
-    """Scale path for the reference's ~4M COUNTRY+CODE tuples
-    (PostalGeocoder.java:25-33): point this worker process at a compiled
-    postal artifact directory (``build_postal_mmap`` over a postal parquet
-    with columns cc, adm1, code, name, lat, lon).  The table opens LAZILY
-    on first postal lookup — a job whose feature set never tags postal
-    codes pays nothing even with the env var exported; any other directory
-    is refused when it opens.  ``None`` resets to the embedded fixture
-    rows (reused python workers must not leak a previous job's table).
-    Idempotent per path."""
-    global _POSTAL_PATH, _BY_CODE
-    if path == _POSTAL_PATH:
-        return
-    _POSTAL_PATH = path
-    _BY_CODE = _build_code_map(POSTAL_ROWS) if path is None else None
-
-
-class _MmapCodes:
-    """dict-like .get() over the keyed mmap artifact (shared page cache,
-    O(1) private heap — as a dict the 4M-tuple postal table costs ~1 GB
-    of heap PER WORKER)."""
-
-    def __init__(self, path: str):
-        from .mmapstore import MmapKeyedTable
-        self._t = MmapKeyedTable(path)
-
-    def get(self, key: str):
-        rows = self._t.get(key)
-        return [(cc, adm1, code, name,
-                 None if lat is None else float(lat),
-                 None if lon is None else float(lon))
-                for cc, adm1, code, name, lat, lon in rows] or None
-
-
 def build_postal_mmap(postal_parquet: str, out_dir: str) -> dict:
     """Compile a postal parquet (cc, adm1, code, name, lat, lon) into the
     keyed mmap artifact; keys are the normalized code (spaces stripped,
@@ -101,12 +67,6 @@ def build_postal_mmap(postal_parquet: str, out_dir: str) -> dict:
     keys = [(r[2] or "").replace(" ", "").upper() for r in rows]
     return build_keyed_mmap(out_dir, keys, rows)
 
-
-def _codes():
-    global _BY_CODE
-    if _BY_CODE is None:
-        _BY_CODE = _MmapCodes(_POSTAL_PATH)
-    return _BY_CODE
 
 # candidate postal tokens: alnum with optional internal space/dash, len>=4
 _POSTAL_TOKEN = re.compile(r"(?<![\w-])[A-Z0-9]{3,5}(?:[ -]?[A-Z0-9]{2,4})?(?![\w-])")
@@ -164,7 +124,7 @@ def tag_postals(text: str, cands: list[PlaceCandidate],
         for cand_code, s_, e_ in variants:
             if not _passes_filter(cand_code):
                 continue
-            found = _codes().get(cand_code.replace(" ", "").upper())
+            found = postal_codes().get(cand_code.replace(" ", "").upper())
             if found:
                 code, s0, e0, rows = cand_code, s_, e_, found
                 break

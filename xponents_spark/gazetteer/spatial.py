@@ -17,12 +17,21 @@ import math
 from ..functions.geo import haversine_m
 from . import data
 from .matcher import Place
+from .tables import spatial_index
 
 _CELL_DEG = 0.5
+_RING = int(360 / _CELL_DEG)       # longitude cells around a parallel
+
+
+def _wrap(cj):
+    """Longitude cell index (or array of them) wrapped into [-_RING/2,
+    _RING/2): the cells either side of ±180° are neighbours."""
+    return (cj + _RING // 2) % _RING - _RING // 2
 
 
 def _cell(lat: float, lon: float) -> tuple[int, int]:
-    return int(math.floor(lat / _CELL_DEG)), int(math.floor(lon / _CELL_DEG))
+    return (int(math.floor(lat / _CELL_DEG)),
+            _wrap(int(math.floor(lon / _CELL_DEG))))
 
 
 def cell_reach(lat: float, radius_km: float) -> tuple[int, int]:
@@ -35,14 +44,24 @@ def cell_reach(lat: float, radius_km: float) -> tuple[int, int]:
     # no candidate lies poleward of this latitude (ri cells >= radius)
     band = abs(lat) + ri * _CELL_DEG
     if band >= 90.0:
-        return ri, int(360 / _CELL_DEG)
+        return ri, _RING
     # two points on or equatorward of ``band``, dlon apart, are at least
     # 2R·asin(cos(band)·sin(dlon/2)) apart; the smaller R over-reaches
     s = math.sin(radius_km / (2 * 6371.0)) / math.cos(math.radians(band))
     if s >= 1.0:
-        return ri, int(360 / _CELL_DEG)
+        return ri, _RING
     dlon = math.degrees(2 * math.asin(s))
     return ri, max(1, int(math.ceil(dlon / _CELL_DEG)))
+
+
+def cells_near(lat: float, lon: float,
+               radius_km: float) -> list[tuple[int, int]]:
+    """The grid cells that can hold a place within ``radius_km`` of
+    (lat, lon), each once, wrapping at ±180°."""
+    ci, cj = _cell(lat, lon)
+    ri, rj = cell_reach(lat, radius_km)
+    cols = {_wrap(cj + dj) for dj in range(-rj, rj + 1)}
+    return [(ci + di, c) for di in range(-ri, ri + 1) for c in cols]
 
 
 class SpatialIndex:
@@ -63,36 +82,14 @@ class SpatialIndex:
                   limit: int = 5) -> list[tuple[float, Place]]:
         """Nearest places within radius, ascending distance, capped at
         ``limit`` (the reference's max=5 nearby places)."""
-        ci, cj = _cell(lat, lon)
-        ri, rj = cell_reach(lat, radius_km)
         cand: list[tuple[float, str, Place]] = []
-        for di in range(-ri, ri + 1):
-            for dj in range(-rj, rj + 1):
-                for p in self.grid.get((ci + di, cj + dj), ()):
-                    d = haversine_m(lat, lon, p.lat, p.lon)
-                    if d <= radius_km * 1000:
-                        cand.append((d, p.place_id, p))
+        for cell in cells_near(lat, lon, radius_km):
+            for p in self.grid.get(cell, ()):
+                d = haversine_m(lat, lon, p.lat, p.lon)
+                if d <= radius_km * 1000:
+                    cand.append((d, p.place_id, p))
         top = heapq.nsmallest(limit, cand)
         return [(d, p) for d, _pid, p in top]
-
-
-_INDEX = None          # SpatialIndex | mmapstore.MmapSpatialIndex
-_INDEX_PATH = None     # the gazetteer artifact _INDEX reads; None: embedded
-
-
-def spatial_index():
-    global _INDEX, _INDEX_PATH
-    from . import matcher
-    path = matcher._GAZ_PATH
-    if _INDEX is None or _INDEX_PATH != path:
-        if path is not None:
-            # shared-memory scale path: grid lives in the mmap artifact
-            from .mmapstore import MmapSpatialIndex
-            _INDEX = MmapSpatialIndex(path)
-        else:
-            _INDEX = SpatialIndex([Place(*r) for r in data.GAZETTEER_ROWS])
-        _INDEX_PATH = path
-    return _INDEX
 
 
 def reverse_geocode(lat: float, lon: float) -> dict:

@@ -29,6 +29,7 @@ from .extractors import xtemporal as _xtemporal
 from .flexpat import ScanCtx
 from .gazetteer import geocode
 from .gazetteer.matcher import TagLimitExceeded
+from .gazetteer import tables
 from .gazetteer.spatial import reverse_geocode
 from .schemas import MATCH_FIELD_NAMES, extraction_output_schema
 from .textract import extract_main_content
@@ -180,20 +181,6 @@ def extract_turn(text: str, features: tuple,
     return main, out
 
 
-def _reset_worker_state(gaz_path: str | None, postal_path: str | None,
-                        taxcat_path: str | None) -> None:
-    """Point this python worker at the job's reference-data paths.  Call
-    it at the start of every worker function, with paths read on the
-    driver: python workers are reused across jobs, so a path left behind
-    by a previous job would silently redirect this job's tagging (None
-    resets; no-op when unchanged)."""
-    from .gazetteer.matcher import set_gazetteer_parquet, set_taxcat_parquet
-    from .gazetteer.postal import set_postal_parquet
-    set_gazetteer_parquet(gaz_path)
-    set_postal_parquet(postal_path)
-    set_taxcat_parquet(taxcat_path)
-
-
 def _with_extraction(pdf: pd.DataFrame, extracted: Iterable) -> pd.DataFrame:
     """A copy of the batch ``pdf`` with ``main_text`` and ``matches`` filled
     from ``extracted``, one ``(main, rows)`` pair per row in batch order."""
@@ -237,12 +224,13 @@ def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
     files in place, so a node's workers share one page-cache copy and the
     driver never collects or broadcasts the rows.  Any other directory,
     a plain parquet one included, fails the task with a ``ValueError``
-    naming the compile step.  Unset, the embedded tables are used.
+    naming the compile step.  Unset, the embedded tables are used.  The
+    paths and env vars are read here, on the driver, once per job
+    (``gazetteer.tables``).
 
     The plan stays scan -> project -> mapInPandas: no shuffle, predicate
     pushdown and column pruning reach the parquet scan untouched.
     """
-    import os as _os
     feats = tuple(features)
     prefs_cc = tuple(prefer_countries)
     prefs_loc = tuple(tuple(x) for x in prefer_locations)
@@ -251,13 +239,11 @@ def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
     # F8 user MatchFilter: normalized stop values ride the closure to every
     # worker (the 'optional broadcast set' in SURVEY §2.4)
     mfilter = frozenset(match_filter) or None
-    gaz_path = gazetteer_parquet or _os.environ.get("XPONENTS_GAZETTEER_PARQUET")
-    postal_path = postal_parquet or _os.environ.get("XPONENTS_POSTAL_PARQUET")
-    taxcat_path = taxcat_parquet or _os.environ.get("XPONENTS_TAXCAT_PARQUET")
+    tabs = tables.resolve(gazetteer_parquet, taxcat_parquet, postal_parquet)
     out_schema = extraction_output_schema(df.schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _reset_worker_state(gaz_path, postal_path, taxcat_path)
+        tables.enter(tabs)
         for pdf in batches:
             yield _with_extraction(pdf, (
                 extract_turn(text, feats, prefs_cc, prefs_loc,
@@ -304,17 +290,14 @@ def extract_conversation_scoped(df: DataFrame,
     shared storage (HDFS/S3/NFS) and the function raises otherwise (round
     5: fail loudly, not silently-corrupt).
     """
-    import os as _os
     import tempfile as _tempfile
 
     from pyspark.sql import functions as F
 
     from .plans.checkpoints import read_resumable_output, run_resumable
 
-    gaz_path = gazetteer_parquet or _os.environ.get("XPONENTS_GAZETTEER_PARQUET")
-    postal_path = postal_parquet or _os.environ.get("XPONENTS_POSTAL_PARQUET")
-    # read once on the driver: both passes tag taxons from the same file
-    taxcat_path = _os.environ.get("XPONENTS_TAXCAT_PARQUET")
+    # read once on the driver: both passes tag from the same tables
+    tabs = tables.resolve(gazetteer_parquet, None, postal_parquet)
     if work_dir is None:
         # CLUSTER CONTRACT (VERDICT r4): the default scratch dir is
         # DRIVER-LOCAL.  On a real multi-executor cluster the pass-1
@@ -345,9 +328,9 @@ def extract_conversation_scoped(df: DataFrame,
         # computed inputs (synthesized transcripts) are the common caller;
         # they own input identity, and a count() would re-run the synth
         verify_input=False,
-        extract_kwargs={"gazetteer_parquet": gaz_path,
-                        "postal_parquet": postal_path,
-                        "taxcat_parquet": taxcat_path})
+        extract_kwargs={"gazetteer_parquet": tabs.gazetteer,
+                        "postal_parquet": tabs.postal,
+                        "taxcat_parquet": tabs.taxcat})
     ext = read_resumable_output(df.sparkSession, work_dir)
 
     # votes: confident geotags PLUS reverse-geocoded coordinates — the
@@ -377,7 +360,7 @@ def extract_conversation_scoped(df: DataFrame,
     in_names = [f.name for f in out_schema.fields]
 
     def rerun(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _reset_worker_state(gaz_path, postal_path, taxcat_path)
+        tables.enter(tabs)
         for pdf in batches:
             yield _with_extraction(pdf, (
                 extract_turn(text, DEFAULT_FEATURES, prefer_countries=(cc,))

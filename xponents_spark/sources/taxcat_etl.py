@@ -8,7 +8,8 @@ path T1/T5 already have: an offline ETL emits a parquet with the phrase
 pre-normalized by the matcher's own tokenization, plus the
 normalization-version sidecar; ``mmapstore.build_taxcat_mmap`` compiles it
 into the artifact every executor worker maps in place
-(``matcher.set_taxcat_parquet``), no driver collect.
+(``extract(taxcat_parquet=...)``, served through ``gazetteer.tables``),
+no driver collect.
 
 Synthesis shape mirrors the reference catalogs: person names as FIRST LAST
 (and FIRST M. LAST) combinations, org names with legal/institutional

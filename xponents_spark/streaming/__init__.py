@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..gazetteer import tables
 from ..pipeline import DEFAULT_FEATURES, extract
 from ..schemas import TRANSCRIPT_SCHEMA
 
@@ -56,7 +57,9 @@ def conversation_state_stream(stream_df: DataFrame,
     ``applyInPandasWithState`` keeps (n_turns, n_matches, max_turn_idx) per
     conv_id across micro-batches and emits the updated row each time a
     conversation receives turns — the streaming analog of the per-document
-    scope state the reference rebuilds per request.
+    scope state the reference rebuilds per request.  It tags against the
+    reference tables the ``XPONENTS_*_PARQUET`` env vars name on the
+    driver, like ``extract`` (``gazetteer.tables``).
     """
     import pandas as pd  # noqa: F811
 
@@ -75,7 +78,10 @@ def conversation_state_stream(stream_df: DataFrame,
         T.StructField("max_turn_idx", T.IntegerType(), False),
     ])
 
+    tabs = tables.resolve()
+
     def update(key, pdf_iter, state):
+        tables.enter(tabs)
         n_turns, n_matches, max_idx = (state.get if state.exists else (0, 0, -1))
         from ..pipeline import extract_turn
         for pdf in pdf_iter:

@@ -1,16 +1,19 @@
 """Scale-path reference tables: synth generator -> ETL -> parquet ->
-compiled mmap artifact -> executor-side index, with parity against the
-in-memory indexes (PhraseIndex, SpatialIndex, the postal dict) built from
-identical rows (VERDICT r1 item 3)."""
+compiled mmap artifact -> executor-side index, with parity against
+reference implementations over identical rows (the phrase oracle, an
+exhaustive haversine scan, a plain code dict), and the embedded rows
+compiled in memory byte-equal to the same rows through the file route
+(VERDICT r1 item 3)."""
 
 import contextlib
 
 import numpy as np
 import pytest
+from phrase_oracle import PhraseIndex, _cap_places
 
 from xponents_spark.functions.geo import haversine_m
 from xponents_spark.gazetteer import matcher, tables
-from xponents_spark.gazetteer.matcher import PhraseIndex, Place
+from xponents_spark.gazetteer.matcher import Place
 from xponents_spark.gazetteer.mmapstore import (MmapGazetteerIndex,
                                                 MmapSpatialIndex,
                                                 build_mmap_artifact,
@@ -81,8 +84,8 @@ def test_synth_is_deterministic_and_collides(spark):
 
 def test_parquet_index_matches_phrase_index(spark, tagger_pq, mmap_dir):
     """Same rows -> the index the job's tables open over the compiled
-    artifact scans like PhraseIndex (spans and place_id sets) on texts
-    containing known names."""
+    artifact scans like the phrase oracle (spans and place_id sets) on
+    texts containing known names."""
     rows = spark.read.parquet(tagger_pq).collect()
     mem = _phrase_index(rows)
     with _serving(gazetteer=mmap_dir):
@@ -184,15 +187,13 @@ def _places_at(idx, lat, lon, radius_km=50, limit=5):
 
 
 def test_compact_spatial_matches_reference_impl(spark, tagger_pq, mmap_dir):
-    """The compact array grid (file-backed as MmapSpatialIndex) agrees
-    with SpatialIndex built from the same rows, to < 1 mm."""
-    from xponents_spark.gazetteer.spatial import SpatialIndex
-
+    """The artifact's grid agrees with an exhaustive scan of the same
+    rows, to < 1 mm."""
     rows = spark.read.parquet(tagger_pq).collect()
-    mem = SpatialIndex([Place(*[r[c] for c in _COLS]) for r in rows])
-    cmp_idx = MmapSpatialIndex(mmap_dir)
+    grid = MmapSpatialIndex(mmap_dir)
     for lat, lon in _spatial_probes(7, rows):
-        _agree(_places_at(cmp_idx, lat, lon), _places_at(mem, lat, lon))
+        _agree(_places_at(grid, lat, lon),
+               _exhaustive_places_at(rows, lat, lon, 50, 5))
 
 
 def _exhaustive_places_at(rows, lat, lon, radius_km, limit):
@@ -215,22 +216,18 @@ def _exhaustive_places_at(rows, lat, lon, radius_km, limit):
 
 
 def test_mmap_spatial_matches_compact(spark, tagger_pq, mmap_dir):
-    """Both grid lookups, SpatialIndex and MmapSpatialIndex, return what
-    an exhaustive scan of the same rows returns, to < 1 mm, including
+    """The grid the job's tables open over the artifact returns what an
+    exhaustive scan of the same rows returns, to < 1 mm, including
     across ±180° and near the poles."""
-    from xponents_spark.gazetteer.spatial import SpatialIndex
-
     rows = spark.read.parquet(tagger_pq).collect()
-    grids = (SpatialIndex([Place(*[r[c] for c in _COLS]) for r in rows]),
-             MmapSpatialIndex(mmap_dir))
     lon_of = {r["place_id"]: r["lon"] for r in rows}
     crossed = 0
-    for lat, lon in _spatial_probes(11, rows):
-        want = _exhaustive_places_at(rows, lat, lon, 50, 5)
-        for idx in grids:
-            _agree(_places_at(idx, lat, lon), want)
-        if abs(lon) == 179.9:
-            crossed += sum(lon_of[pid] * lon < 0 for _d, pid in want)
+    with _serving(gazetteer=mmap_dir):
+        for lat, lon in _spatial_probes(11, rows):
+            want = _exhaustive_places_at(rows, lat, lon, 50, 5)
+            _agree(_places_at(tables.spatial_index(), lat, lon), want)
+            if abs(lon) == 179.9:
+                crossed += sum(lon_of[pid] * lon < 0 for _d, pid in want)
     assert crossed    # some probes' nearest places lie across ±180°
 
 
@@ -256,10 +253,8 @@ def _compile_rows(rows, pq_dir, mm_dir) -> str:
 
 def test_grids_wrap_at_antimeridian_and_poles(tmp_path):
     """Places across ±180° and around a pole, where the reach spans the
-    whole ring of longitude cells: both grids find each place once, as
+    whole ring of longitude cells: the grid finds each place once, as
     the exhaustive scan does."""
-    from xponents_spark.gazetteer.spatial import SpatialIndex
-
     rows = [("E1", "Eastedge", "N", "P", "PPL", "FJ", "", 0.0, 179.95, 0, 1),
             ("W1", "Westedge", "N", "P", "PPL", "WS", "", 0.05, -179.95, 0, 1),
             ("W2", "Farwest", "N", "A", "ADM1", "WS", "01", 60.0, -179.8, 0,
@@ -267,16 +262,43 @@ def test_grids_wrap_at_antimeridian_and_poles(tmp_path):
             ("N1", "Northa", "N", "P", "PPL", "XX", "", 89.8, 10.0, 0, 1),
             ("N2", "Northb", "N", "P", "PPL", "XX", "", 89.7, -170.0, 0, 1),
             ("S1", "Southa", "N", "P", "PPL", "AQ", "", -89.9, 135.0, 0, 1)]
-    mem = SpatialIndex([Place(*r) for r in rows])
-    mm = MmapSpatialIndex(_compile_rows(rows, str(tmp_path / "pq"),
-                                        str(tmp_path / "mm")))
+    grid = MmapSpatialIndex(_compile_rows(rows, str(tmp_path / "pq"),
+                                          str(tmp_path / "mm")))
     dicts = [dict(zip(_COLS, r)) for r in rows]
     for lat, lon in [(0.0, 179.9), (0.0, -179.9), (60.0, 179.9),
                      (89.95, 0.0), (90.0, 0.0), (-89.95, -45.0)]:
         want = _exhaustive_places_at(dicts, lat, lon, 50, 10)
         assert want, (lat, lon)
-        for idx in (mem, mm):
-            _agree(_places_at(idx, lat, lon, limit=10), want)
+        _agree(_places_at(grid, lat, lon, limit=10), want)
+
+
+def test_dense_grid_matches_exhaustive(tmp_path, monkeypatch):
+    """A probe with more candidates than ``MmapSpatialIndex.SMALL``
+    measures them in one numpy pass: it returns what the exhaustive scan
+    returns, and the same places in the same order as the per-candidate
+    path, ties at equal distance ranked by place_id."""
+    rng = np.random.RandomState(3)
+    rows = [(f"D{i:03d}", f"Dense{i}", "N", "P", "PPL", "FR", "",
+             48.85 + float(rng.uniform(-0.3, 0.3)),
+             2.35 + float(rng.uniform(-0.3, 0.3)), 0, 1) for i in range(150)]
+    rows += [("T2", "Twinb", "N", "P", "PPL", "FR", "", 48.9, 2.4, 0, 1),
+             ("T1", "Twina", "N", "P", "PPL", "FR", "", 48.9, 2.4, 0, 1)]
+    mm = _compile_rows(rows, str(tmp_path / "pq"), str(tmp_path / "mm"))
+    dicts = [dict(zip(_COLS, r)) for r in rows]
+    probes = [(48.9, 2.4)] + [(48.85 + float(rng.uniform(-0.4, 0.4)),
+                               2.35 + float(rng.uniform(-0.4, 0.4)))
+                              for _ in range(20)]
+    for lat, lon in probes:
+        want = _exhaustive_places_at(dicts, lat, lon, 50, 10)
+        by_path = []
+        for small in (0, 10**6):
+            monkeypatch.setattr(MmapSpatialIndex, "SMALL", small)
+            grid = MmapSpatialIndex(mm)     # its cells read under ``small``
+            got = _places_at(grid, lat, lon, limit=10)
+            _agree(got, want)
+            by_path.append([pid for _d, pid in got])
+        assert by_path[0] == by_path[1]
+    assert _places_at(grid, 48.9, 2.4, limit=2)[0][1] == "T1"
 
 
 def test_recompiled_artifact_is_reopened(spark, tmp_path):
@@ -307,15 +329,22 @@ def test_recompiled_artifact_is_reopened(spark, tmp_path):
 
 
 def test_parquet_gazetteer_resets_cleanly(mmap_dir):
+    """The file-backed and the embedded slots serve the same index
+    classes, and leaving the artifact goes back to the embedded rows."""
     from xponents_spark.gazetteer import spatial
-    with _serving(gazetteer=mmap_dir):
-        assert isinstance(matcher.gaz_index(), MmapGazetteerIndex)
-        assert isinstance(spatial.spatial_index(), MmapSpatialIndex)
+
+    def served():
         # the phrase index and the grid share one set of open files
         assert matcher.gaz_index().f is spatial.spatial_index().f
-    # back to the embedded fixture gazetteer
-    assert isinstance(matcher.gaz_index(), PhraseIndex)
-    assert isinstance(spatial.spatial_index(), spatial.SpatialIndex)
+        return type(matcher.gaz_index()), type(spatial.spatial_index())
+
+    with _serving(gazetteer=mmap_dir):
+        file_backed = served()
+    assert file_backed == (MmapGazetteerIndex, MmapSpatialIndex)
+    # back to the embedded fixture gazetteer, served by the same classes
+    assert served() == file_backed
+    assert matcher.gaz_index().f.meta is tables.embedded("gazetteer")[
+        "meta.json"]
     assert matcher.gaz_index().scan("the London office") != []
 
 
@@ -342,7 +371,7 @@ def test_postal_parquet_path(spark, tmp_path_factory):
                                   {row["cc"]})
         assert any(h["cc"] == row["cc"] and h["matchtext"] == row["code"]
                    for h in hits)
-    assert len(tables.postal_codes()) == len(postal.POSTAL_ROWS)
+    assert tables.postal_codes().n == len(postal.POSTAL_ROWS)
 
 
 def test_taxcat_parquet_path(spark, tmp_path):
@@ -382,9 +411,9 @@ def _embedded_taxcat_mmap(spark, tmp_path) -> str:
 
 
 def test_taxcat_parquet_matches_embedded(spark, tmp_path):
-    """Embedded lexicons written through the taxcat ETL and compiled
-    produce the exact same taxon tags as the in-memory path (the driver
-    gate's equivalence)."""
+    """Embedded lexicons written through the taxcat ETL (in another row
+    order) and compiled produce the exact same taxon tags as the embedded
+    table (the correctness gate's equivalence)."""
     mm = _embedded_taxcat_mmap(spark, tmp_path)
     probe = ("Mr Smith of Acme Corporation met the Australian envoy "
              "and French officials in town")
@@ -394,9 +423,8 @@ def test_taxcat_parquet_matches_embedded(spark, tmp_path):
 
 
 def test_postal_mmap_path(spark, tmp_path_factory, monkeypatch):
-    """Keyed mmap postal table: same tags as the in-memory code map built
-    from the same rows, O(1) private heap (the 4M-tuple reference-scale
-    answer)."""
+    """Keyed mmap postal table: same tags as a code dict built from the
+    same rows, O(1) private heap (the 4M-tuple reference-scale answer)."""
     from xponents_spark.gazetteer import postal
     from xponents_spark.sources.gazetteer_synth import synthesize_postal_raw
 
@@ -411,8 +439,10 @@ def test_postal_mmap_path(spark, tmp_path_factory, monkeypatch):
     assert meta["n_rows"] == len(rows)
 
     probes = [(f"parcel code {r[2]} sent", r[0]) for r in rows[:40]]
-    # the reference side: the embedded table's dict, over the same rows
-    by_code = postal._build_code_map(rows)
+    # the reference side: a plain dict of normalized code -> rows
+    by_code = {}
+    for r in rows:
+        by_code.setdefault(r[2].replace(" ", "").upper(), []).append(r)
     with monkeypatch.context() as m:
         m.setattr(postal, "postal_codes", lambda: by_code)
         via_dict = [postal.tag_postals(t, [], {cc}) for t, cc in probes]
@@ -448,8 +478,8 @@ def test_normalization_version_fingerprint(spark, tmp_path_factory):
 
 
 def test_mmap_index_matches_phrase_index(spark, tagger_pq, mmap_dir):
-    """Shared-memory path parity: MmapGazetteerIndex.scan must equal
-    PhraseIndex.scan over the same rows (spans, matchtext, hydrated
+    """Shared-memory path parity: MmapGazetteerIndex.scan must equal the
+    phrase oracle's scan over the same rows (spans, matchtext, hydrated
     places) on texts containing known names, multi-token names, and
     misses."""
     rows = spark.read.parquet(tagger_pq).collect()
@@ -530,25 +560,165 @@ def test_cjk_names_tag_through_parquet_index(spark, tmp_path_factory):
 
 
 def test_taxcat_mmap_parity(spark, tmp_path):
-    """The taxcat mmap artifact must tag IDENTICALLY to the embedded
-    in-memory lexicons it was compiled from over the fixture payload
-    texts (same phrases, spans, payloads)."""
+    """The taxcat mmap artifact compiled from the embedded lexicons must
+    tag IDENTICALLY to the phrase oracle over the same lexicons, over the
+    fixture payload texts (same phrases, spans, payloads)."""
     import json
     import os
 
-    from xponents_spark.gazetteer import mmapstore
+    from xponents_spark.gazetteer import data, mmapstore
     from xponents_spark.sources.payloads import PAYLOADS
 
     mm_dir = _embedded_taxcat_mmap(spark, tmp_path)
     with open(os.path.join(mm_dir, "meta.json")) as fh:
         assert json.load(fh)["format"] == mmapstore._TAX_FORMAT
+    oracle = PhraseIndex(
+        [(n, ("person", n, None)) for n in data.PERSON_NAMES]
+        + [(k, ("org", c, None)) for k, c in data.ORG_NAMES.items()]
+        + [(n, ("nationality", n, cc))
+           for n, cc in data.NATIONALITIES.items()])
 
     texts = [body for _kind, body in PAYLOADS if body] + [
         "Dr. Maria Santos of the World Health Organization met the "
         "Brazilian delegation",
         "", "no entities here at all"]
-    a = [matcher.tag_taxons(t) for t in texts]
+    a = [[(s, e, m, *pl[0]) for s, e, m, pl in oracle.scan(t)]
+         for t in texts]
+    assert [matcher.tag_taxons(t) for t in texts] == a     # embedded
     with _serving(taxcat=mm_dir):
         b = [matcher.tag_taxons(t) for t in texts]
     assert a == b
     assert any(a)    # fixtures actually contain taxons
+
+
+def test_candidate_cap_matches_oracle(tmp_path, monkeypatch):
+    """A phrase with more places than ``matcher.CANDIDATE_CAP`` hydrates
+    only the top places by id_bias, bias ties kept in table order, as
+    the oracle's cap over the same rows does (the cap patched low)."""
+    biases = [3, 5, 5, 1, 7, 5, 2]
+    rows = [(f"CV{i}", "Capville", "N", "P", "PPL", "US", "CA", 34.0,
+             -118.0 + i, b, 1000) for i, b in enumerate(biases)]
+    grid = MmapGazetteerIndex(_compile_rows(rows, str(tmp_path / "pq"),
+                                            str(tmp_path / "mm")))
+    oracle = PhraseIndex([(r[1], Place(*r)) for r in rows])
+    monkeypatch.setattr(matcher, "CANDIDATE_CAP", 3)
+    text = "we drove to Capville today"
+    (_s, _e, _m, got), = grid.scan(text)
+    (_s, _e, _m, want), = oracle.scan(text)
+    assert [p.place_id for p in got] == \
+        [p.place_id for p in _cap_places(want)] == ["CV4", "CV1", "CV2"]
+
+
+def test_empty_tables_open(tmp_path):
+    """A gazetteer, taxcat and postal parquet with no rows each compile
+    through the file route into an artifact that opens and tags
+    nothing."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xponents_spark.gazetteer import geocode, postal
+    from xponents_spark.gazetteer.spatial import reverse_geocode
+
+    def empty_parquet(name, schema, sidecar=True):
+        path = str(tmp_path / name)
+        os.makedirs(path)
+        pq.write_table(pa.schema(schema).empty_table(),
+                       os.path.join(path, "part-0.parquet"))
+        if sidecar:
+            with open(os.path.join(path, "_normalization.json"), "w") as fh:
+                json.dump({"normalization_version":
+                           matcher.NORMALIZATION_VERSION}, fh)
+        return path
+
+    s, f, i = pa.string(), pa.float64(), pa.int64()
+    gaz = str(tmp_path / "gaz.mmap")
+    assert build_mmap_artifact(empty_parquet(
+        "gaz.parquet", [(c, s) for c in _COLS[:7]]
+        + [("lat", f), ("lon", f), ("id_bias", i), ("pop", i),
+           ("phrase", s)]), gaz)["n_rows"] == 0
+    tax = str(tmp_path / "tax.mmap")
+    assert build_taxcat_mmap(empty_parquet(
+        "tax.parquet", [("phrase", s), ("kind", s), ("canonical", s),
+                        ("cc", s), ("valid", pa.bool_())]),
+        tax)["n_rows"] == 0
+    pos = str(tmp_path / "postal.mmap")
+    assert postal.build_postal_mmap(empty_parquet(
+        "postal.parquet", [("cc", s), ("adm1", s), ("code", s), ("name", s),
+                           ("lat", f), ("lon", f)], sidecar=False),
+        pos)["n_keys"] == 0
+
+    text = "Mr Smith met the Australian envoy in London, NSW 2019"
+    want = geocode(text)
+    assert {m["label"] for m in want} >= {"place", "nationality", "postal"}
+    with _serving(gazetteer=gaz, taxcat=tax, postal=pos):
+        assert geocode(text) == []
+        assert reverse_geocode(51.5, -0.12) == {}
+        assert tables.postal_codes().n == 0
+        assert tables.postal_codes().get("2019") == []
+    assert geocode(text) == want        # the embedded tables again
+
+
+def test_embedded_compiles_like_file_route(spark, sf_dir, tmp_path):
+    """The embedded rows compiled in memory equal, buffer for buffer and
+    byte for byte, the same rows compiled through the public file route,
+    and ``extract`` over the sf0.01 turns gives equal rows from both."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xponents_spark.gazetteer import data, postal
+    from xponents_spark.pipeline import extract
+    from xponents_spark.sources import synthesize_transcripts
+    from xponents_spark.sources.taxcat_etl import (build_taxcat_parquet,
+                                                   embedded_taxcat_df)
+
+    gaz_pq, gaz = str(tmp_path / "gaz.parquet"), str(tmp_path / "gaz.mmap")
+    build_tagger_parquet(spark.createDataFrame(
+        data.GAZETTEER_ROWS,
+        "place_id string, name string, name_type string, feat_class string, "
+        "feat_code string, cc string, adm1 string, lat double, lon double, "
+        "id_bias int, pop bigint").coalesce(1), gaz_pq)
+    build_mmap_artifact(gaz_pq, gaz)
+    tax_pq, tax = str(tmp_path / "tax.parquet"), str(tmp_path / "tax.mmap")
+    build_taxcat_parquet(embedded_taxcat_df(spark).coalesce(1), tax_pq)
+    build_taxcat_mmap(tax_pq, tax)
+    pos_pq, pos = str(tmp_path / "pos.parquet"), str(tmp_path / "pos.mmap")
+    os.makedirs(pos_pq)
+    pq.write_table(pa.Table.from_pylist(
+        [dict(zip(("cc", "adm1", "code", "name", "lat", "lon"), r))
+         for r in postal.POSTAL_ROWS]), os.path.join(pos_pq, "part-0.parquet"))
+    postal.build_postal_mmap(pos_pq, pos)
+
+    for table, path in (("gazetteer", gaz), ("taxcat", tax), ("postal", pos)):
+        bufs = tables.embedded(table)
+        assert sorted(bufs) == sorted(os.listdir(path)), table
+        for name, buf in bufs.items():
+            with open(os.path.join(path, name), "rb") as fh:
+                raw = fh.read()
+            if name == "meta.json":
+                assert json.loads(raw) == buf, table
+            elif name.endswith(".npy"):
+                got = np.load(os.path.join(path, name))
+                assert got.dtype == buf.dtype and got.shape == buf.shape
+                assert got.tobytes() == buf.tobytes(), (table, name)
+            else:
+                assert raw == buf, (table, name)
+
+    turns = synthesize_transcripts(
+        spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+
+    def rows(**paths):
+        return sorted(extract(turns, **paths).collect(),
+                      key=lambda r: (r["conv_id"], r["turn_idx"]))
+
+    embedded = rows()
+    assert rows(gazetteer_parquet=gaz, taxcat_parquet=tax,
+                postal_parquet=pos) == embedded
+    labels = {m["label"] for r in embedded for m in r["matches"]}
+    assert {"place", "country", "postal"} <= labels
+    assert labels & {"person", "org", "nationality"}

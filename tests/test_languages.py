@@ -84,17 +84,32 @@ def test_cjk_percharacter_equals_bigram_matching():
     index would (overlapping bigram AND-chain), fuzz-checked."""
     import random
 
-    from xponents_spark.gazetteer.matcher import PhraseIndex, Place
+    from phrase_oracle import PhraseIndex
+
+    from xponents_spark.gazetteer.matcher import (NORMALIZATION_VERSION,
+                                                  Place, phrase_key)
+    from xponents_spark.gazetteer.mmapstore import (MmapGazetteerIndex,
+                                                    compile_gazetteer)
 
     rng = random.Random(11)
     chars = "北京都東海南西山川口市区街村"
-    names = {"".join(rng.choice(chars) for _ in range(rng.randint(2, 4)))
-             for _ in range(30)}
-    idx = PhraseIndex([(n, Place(n, n, "N", "P", "PPL", "CN", "", 0.0, 0.0,
-                                 5, 1000)) for n in names])
+    names = sorted({"".join(rng.choice(chars)
+                            for _ in range(rng.randint(2, 4)))
+                    for _ in range(30)})
+    places = [Place(n, n, "N", "P", "PPL", "CN", "", 0.0, 0.0, 5, 1000)
+              for n in names]
+    cols = {f: [getattr(p, f) for p in places]
+            for f in Place.__dataclass_fields__}
+    cols["phrase"] = [phrase_key(n) for n in names]
+    # the production index, compiled in memory, and the phrase oracle
+    indices = (MmapGazetteerIndex(compile_gazetteer(cols,
+                                                    NORMALIZATION_VERSION)),
+               PhraseIndex([(p.name, p) for p in places]))
     for _ in range(200):
         text = "".join(rng.choice(chars) for _ in range(rng.randint(4, 18)))
-        got = {(s, e) for s, e, _m, _p in idx.scan(text)}
+        got, oracle = ({(s, e) for s, e, _m, _p in idx.scan(text)}
+                       for idx in indices)
+        assert got == oracle, text
         # oracle: greedy longest-dominant-right over brute-force substring
         # hits == what a bigram-chain matcher resolves to
         hits = []

@@ -123,7 +123,7 @@ def main():
     res["all_mmap_turns_per_sec"] = round(n / (time.time() - t0), 1)
     res["n_turns"] = n
 
-    stats = [_smaps(p) for p in _pyspark_workers()]
+    stats = [_smaps(p) for p in _pyspark_workers(spark)]
     stats = [s for s in stats if s.get("Rss", 0) > 50_000]
     if stats:
         priv = [s.get("Private_Clean", 0) + s.get("Private_Dirty", 0)

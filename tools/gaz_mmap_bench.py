@@ -46,19 +46,32 @@ def _smaps(pid: int) -> dict[str, int]:
     return out
 
 
-def _pyspark_workers() -> list[int]:
-    """PIDs of pyspark worker processes (children of pyspark.daemon)."""
-    pids = []
+def _pyspark_workers(spark) -> list[int]:
+    """PIDs of this run's pyspark worker processes: the pyspark.daemon
+    and pyspark.worker descendants of this Spark application's JVM, so
+    workers of another Spark application on the host (still exiting,
+    say) are not counted."""
+    children: dict[int, list[int]] = {}
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
             continue
         try:
-            with open(f"/proc/{pid}/cmdline", "rb") as fh:
-                cmd = fh.read().decode(errors="replace")
-        except OSError:
+            with open(f"/proc/{pid}/stat") as fh:      # "pid (comm) S ppid"
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
             continue
-        if "pyspark.daemon" in cmd or "pyspark.worker" in cmd:
-            pids.append(int(pid))
+        children.setdefault(ppid, []).append(int(pid))
+    pids, todo = [], [spark.sparkContext._gateway.proc.pid]
+    while todo:
+        for pid in children.get(todo.pop(), ()):
+            todo.append(pid)
+            try:
+                with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                    cmd = fh.read().decode(errors="replace")
+            except OSError:
+                continue
+            if "pyspark.daemon" in cmd or "pyspark.worker" in cmd:
+                pids.append(pid)
     return pids
 
 
@@ -155,7 +168,7 @@ def main():
     res["tag_turns_per_sec_mmap"] = round(n / (time.time() - t0), 1)
     res["n_turns"] = n
 
-    stats = [_smaps(p) for p in _pyspark_workers()]
+    stats = [_smaps(p) for p in _pyspark_workers(spark)]
     stats = [s for s in stats if s.get("Rss", 0) > 50_000]   # real workers
     if stats:
         priv = [s.get("Private_Clean", 0) + s.get("Private_Dirty", 0)

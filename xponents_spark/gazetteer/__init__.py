@@ -12,8 +12,8 @@ Orchestrates the per-turn pipeline traced in SURVEY.md §3.1
   7. related-name merge (J7): 'NAME, ADMIN' emits one merged span
 
 Pure per-turn function given module-level reference data — runs inside the
-same mapInPandas stage as the FlexPat families; the gazetteer index builds
-once per executor process.
+same mapInPandas stage as the FlexPat families; the job's reference tables
+(``tables``) open once per executor process.
 """
 
 from __future__ import annotations

@@ -3,8 +3,9 @@
 The reference streams text through a Solr FST of ~25M normalized names with
 ``overlaps=LONGEST_DOMINANT_RIGHT``
 (solr/solr7/gazetteer/conf/solrconfig.xml:1114-1120,
-GazetteerMatcher.java:151-163).  Here the dictionary is a token-keyed phrase
-index built once per executor process from broadcast gazetteer rows:
+GazetteerMatcher.java:151-163).  Here the dictionary is the compiled
+phrase table of ``mmapstore`` (sorted phrase keys with a 2-byte prefix
+bucket table), file-backed or compiled in memory from the embedded rows:
 
 * normalization (T3): ASCII-fold -> lowercase -> edge-punct strip, applied
   identically to gazetteer phrases at build time and document tokens at tag
@@ -14,8 +15,8 @@ index built once per executor process from broadcast gazetteer rows:
   per-token NFKC/Arabic/CJK loop over any other; offsets build lazily;
 * scan: a first-token gate skips the turn when no token starts a
   dictionary phrase; otherwise only positions holding a dictionary first
-  token try their longest phrase first (bounded by that token's longest
-  phrase), and offsets are read only for hits;
+  token extend through the phrases they start, and offsets are read only
+  for hits;
 * overlap resolution: longest-dominant-right sweep (longer span wins; equal
   length prefers the rightmost), same policy as the Solr tagger.
 
@@ -37,7 +38,6 @@ from . import data
 from .tables import gaz_index, tax_index
 
 _EDGE_PUNCT = ".,;:'\"!?()[]|"
-_EDGE_PUNCT_SET = frozenset(_EDGE_PUNCT)
 
 
 # bump when tokenization/normalization SEMANTICS change (NFKC fold, CJK
@@ -133,7 +133,7 @@ class PlaceCandidate:
 
 import re as _re
 import unicodedata as _ud
-from itertools import compress as _compress, repeat as _repeat
+from itertools import repeat as _repeat
 from operator import itemgetter as _itemgetter
 
 _WS_TOKEN = _re.compile(r"\S+")
@@ -293,62 +293,11 @@ def tokens_with_offsets(text: str) -> list[tuple[str, int, int]]:
     return [(t, s, e) for t, (s, e) in zip(view.norms, view.spans)]
 
 
-class PhraseIndex:
-    """Token-keyed phrase dictionary with longest-first lookup."""
-
-    def __init__(self, entries: list[tuple[str, object]]):
-        """entries: (phrase, payload); phrases normalize at build time.
-
-        Layout (measured ~30% faster than the round-1 nested tuple-keyed
-        dicts): one flat dict keyed by the space-joined normalized phrase,
-        plus a per-first-token max phrase length so the scan's inner loop
-        is bounded by THAT token's longest dictionary phrase, not the
-        global max."""
-        self.index: dict[str, list] = {}
-        self.first_max: dict[str, int] = {}
-        for phrase, payload in entries:
-            # same tokenization as tag time (CJK names -> char sequences)
-            toks = tuple(t for t, _s, _e in tokens_with_offsets(phrase) if t)
-            if not toks:
-                continue
-            if len(toks) > self.first_max.get(toks[0], 0):
-                self.first_max[toks[0]] = len(toks)
-            self.index.setdefault(" ".join(toks), []).append(payload)
-
-    def scan(self, text: str, toks: Tokens = None
-             ) -> list[tuple[int, int, str, list]]:
-        """All (start, end, matchtext, payloads) phrase hits, LDR-resolved.
-        Pass precomputed ``toks`` to share tokenization across indices.
-
-        The first-token gate returns at once when no token of the turn
-        starts a dictionary phrase.  Otherwise only positions holding a
-        dictionary first token try their phrases, longest first (bounded
-        by that token's longest phrase), and token offsets are read only
-        once a phrase hits."""
-        view = token_view(text, toks)
-        first_max = self.first_max
-        firsts = first_max.keys() & view.vocab
-        if not firsts:
-            return []
-        lookup = self.index.get
-        limit = TAG_LIMIT
-        norms = view.norms
-        n = len(norms)
-        raw: list[tuple[int, int, str, list]] = []
-        spans = None
-        # positions holding a first token, found in one C-level pass
-        for i in _compress(range(n), map(firsts.__contains__, norms)):
-            for ln in range(min(first_max[norms[i]], n - i), 0, -1):
-                payloads = lookup(" ".join(norms[i:i + ln]))
-                if payloads:
-                    if spans is None:
-                        spans = view.spans
-                    s, e = spans[i][0], spans[i + ln - 1][1]
-                    raw.append((s, e, text[s:e], payloads))
-                    if len(raw) > limit:
-                        raise TagLimitExceeded(
-                            f"tag limit {limit} exceeded in one document")
-        return _longest_dominant_right(raw)
+def phrase_key(name: str | None) -> str:
+    """A table name's phrase key: its normalized tokens, space-joined —
+    the same tokenization as tag time (CJK names -> char sequences).  The
+    compilers sort and match on it; '' never matches."""
+    return " ".join(t for t in TokenView(name or "").norms if t)
 
 
 # Candidate cap per phrase (the hard analog of the reference's O6
@@ -360,15 +309,6 @@ class PhraseIndex:
 # the most plausible geographies, which is what the chooser would rank
 # first anyway.
 CANDIDATE_CAP = 500
-
-
-def _cap_places(places: list) -> list:
-    if len(places) <= CANDIDATE_CAP:
-        return places
-    # stable sort on bias only: ties keep source order, which is the
-    # artifact's row order on the mmap path too — both index kinds cap to
-    # the same candidate set
-    return sorted(places, key=lambda p: -p.id_bias)[:CANDIDATE_CAP]
 
 
 def _longest_dominant_right(matches):

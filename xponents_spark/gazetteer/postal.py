@@ -12,12 +12,12 @@ The reference tags postal codes against a 4M-row COUNTRY+CODE Solr core
 * a trivial chooser whose confidence derives from match complexity and
   linked geography (rules/PostalLocationChooser.java:1-138).
 
-Here the postal table is an embedded fixture keyed by (cc, code), or at
-the reference's scale a keyed artifact compiled by ``build_postal_mmap``
-that the job's ``tables.Tables`` names (opened lazily, on the first
-lookup, by ``tables.postal_codes``); the tagger proposes digit/alnum
-tokens and the association rule against the already-tagged place/admin
-candidates validates them.
+Here the postal table is a keyed artifact: at the reference's scale one
+compiled by ``build_postal_mmap`` that the job's ``tables.Tables`` names,
+else the embedded fixture rows compiled in memory by ``compile_postal``
+(either opened lazily, on the first lookup, by ``tables.postal_codes``);
+the tagger proposes digit/alnum tokens and the association rule against
+the already-tagged place/admin candidates validates them.
 """
 
 from __future__ import annotations
@@ -45,27 +45,27 @@ POSTAL_ROWS: list[tuple] = [
     ("GB", "ENG", "SW1A 1AA", "London", 51.5010, -0.1416),
 ]
 
-def _build_code_map(rows) -> dict[str, list[tuple]]:
-    by_code: dict[str, list[tuple]] = {}
-    for r in rows:
-        by_code.setdefault(r[2].replace(" ", "").upper(), []).append(tuple(r))
-    return by_code
+
+def compile_postal(rows) -> dict:
+    """(cc, adm1, code, name, lat, lon) rows -> the keyed artifact's named
+    buffers, in memory; keys are the normalized code (spaces stripped,
+    uppercased — the same key tag_postals probes with)."""
+    from .mmapstore import compile_keyed
+    rows = [tuple(r) for r in rows]
+    return compile_keyed([(r[2] or "").replace(" ", "").upper()
+                          for r in rows], rows)
 
 
 def build_postal_mmap(postal_parquet: str, out_dir: str) -> dict:
     """Compile a postal parquet (cc, adm1, code, name, lat, lon) into the
-    keyed mmap artifact; keys are the normalized code (spaces stripped,
-    uppercased — the same key tag_postals probes with)."""
+    keyed mmap artifact (``compile_postal``, then written)."""
     import pyarrow.parquet as pq
 
-    from .mmapstore import build_keyed_mmap
-    tbl = pq.read_table(postal_parquet, columns=["cc", "adm1", "code",
-                                                 "name", "lat", "lon"])
-    cols = [tbl.column(c).to_pylist() for c in ("cc", "adm1", "code",
-                                                "name", "lat", "lon")]
-    rows = list(zip(*cols))
-    keys = [(r[2] or "").replace(" ", "").upper() for r in rows]
-    return build_keyed_mmap(out_dir, keys, rows)
+    from .mmapstore import write_artifact
+    names = ["cc", "adm1", "code", "name", "lat", "lon"]
+    tbl = pq.read_table(postal_parquet, columns=names)
+    return write_artifact(out_dir, compile_postal(
+        zip(*(tbl.column(c).to_pylist() for c in names))))
 
 
 # candidate postal tokens: alnum with optional internal space/dash, len>=4

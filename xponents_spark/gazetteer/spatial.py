@@ -3,20 +3,18 @@
 The reference answers ``placesAt(latlon, radiusKM)`` with a Solr
 ``{!geofilt}`` query (SolrGazetteer.java:131-159) and resolves each found
 coordinate to its nearest populated place (top-5 nearby, 25/50 km fallbacks,
-PlaceGeocoder.java:874-978).  Here the gazetteer's located rows bucket into a
-0.5-degree grid (~55 km cells) built once per executor; a query scans the
-cells that can hold a place within its radius and ranks by haversine — a
-broadcast spatial range join.
+PlaceGeocoder.java:874-978).  Here the gazetteer artifact buckets its
+located rows into a 0.5-degree grid (~55 km cells, compiled with the
+phrase table, ``mmapstore.MmapSpatialIndex``); a query scans the cells
+that can hold a place within its radius (``cells_near``) and ranks by
+haversine — a broadcast spatial range join.
 """
 
 from __future__ import annotations
 
-import heapq
 import math
 
-from ..functions.geo import haversine_m
 from . import data
-from .matcher import Place
 from .tables import spatial_index
 
 _CELL_DEG = 0.5
@@ -27,11 +25,6 @@ def _wrap(cj):
     """Longitude cell index (or array of them) wrapped into [-_RING/2,
     _RING/2): the cells either side of ±180° are neighbours."""
     return (cj + _RING // 2) % _RING - _RING // 2
-
-
-def _cell(lat: float, lon: float) -> tuple[int, int]:
-    return (int(math.floor(lat / _CELL_DEG)),
-            _wrap(int(math.floor(lon / _CELL_DEG))))
 
 
 def cell_reach(lat: float, radius_km: float) -> tuple[int, int]:
@@ -58,38 +51,10 @@ def cells_near(lat: float, lon: float,
                radius_km: float) -> list[tuple[int, int]]:
     """The grid cells that can hold a place within ``radius_km`` of
     (lat, lon), each once, wrapping at ±180°."""
-    ci, cj = _cell(lat, lon)
+    ci, cj = math.floor(lat / _CELL_DEG), math.floor(lon / _CELL_DEG)
     ri, rj = cell_reach(lat, radius_km)
     cols = {_wrap(cj + dj) for dj in range(-rj, rj + 1)}
     return [(ci + di, c) for di in range(-ri, ri + 1) for c in cols]
-
-
-class SpatialIndex:
-    def __init__(self, places: list[Place]):
-        self.grid: dict[tuple[int, int], list[Place]] = {}
-        seen: set[str] = set()
-        for p in places:
-            # one entry per place_id; P/A features only (the reference's
-            # fallback classes, PlaceGeocoder.java:962-965); country
-            # centroids (PCL*) are not meaningful nearest-place anchors
-            if (p.place_id in seen or p.feat_class not in ("P", "A")
-                    or not p.cc or p.feat_code.startswith("PCL")):
-                continue
-            seen.add(p.place_id)
-            self.grid.setdefault(_cell(p.lat, p.lon), []).append(p)
-
-    def places_at(self, lat: float, lon: float, radius_km: float = 50,
-                  limit: int = 5) -> list[tuple[float, Place]]:
-        """Nearest places within radius, ascending distance, capped at
-        ``limit`` (the reference's max=5 nearby places)."""
-        cand: list[tuple[float, str, Place]] = []
-        for cell in cells_near(lat, lon, radius_km):
-            for p in self.grid.get(cell, ()):
-                d = haversine_m(lat, lon, p.lat, p.lon)
-                if d <= radius_km * 1000:
-                    cand.append((d, p.place_id, p))
-        top = heapq.nsmallest(limit, cand)
-        return [(d, p) for d, _pid, p in top]
 
 
 def reverse_geocode(lat: float, lon: float) -> dict:

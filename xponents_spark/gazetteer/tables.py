@@ -7,8 +7,12 @@ the streaming state update) enters it before tagging, and ``gaz_index``,
 ``tax_index``, ``spatial_index`` and ``postal_codes`` read the slot.
 Python workers are reused across jobs, so entering another triple, or the
 same one after an artifact was recompiled in place, closes and drops what
-the slot held.  The embedded indexes are built once per process from
-module constants, which cannot go stale.
+the slot held.
+
+Every table is served by one index class, whether it is file-backed or
+embedded: a table with no path is its embedded rows compiled in memory
+into the same named buffers a compiled artifact's files hold
+(``embedded``).
 """
 
 from __future__ import annotations
@@ -19,7 +23,7 @@ from typing import NamedTuple
 
 
 class Tables(NamedTuple):
-    """Compiled artifact directories (``None``: the embedded table)."""
+    """Compiled artifact directories (``None``: the embedded rows)."""
     gazetteer: str | None = None
     taxcat: str | None = None
     postal: str | None = None
@@ -62,38 +66,35 @@ class _Slot:
         for f in self.opened:
             f.close()
 
+    def _source(self, table: str):
+        """The table's artifact directory, else its embedded rows compiled."""
+        path = getattr(self.tables, table)
+        return embedded(table) if path is None else path
+
     @functools.cached_property
     def _gaz_files(self):
         from .mmapstore import _MmapFiles
-        return self._own(_MmapFiles(self.tables.gazetteer))
+        return self._own(_MmapFiles(self._source("gazetteer")))
 
     @functools.cached_property
     def gaz_index(self):
-        if self.tables.gazetteer is None:
-            return _embedded_gaz_index()
         from .mmapstore import MmapGazetteerIndex
         return MmapGazetteerIndex(self._gaz_files)
 
     @functools.cached_property
     def spatial_index(self):
-        if self.tables.gazetteer is None:
-            return _embedded_spatial_index()
         from .mmapstore import MmapSpatialIndex
         return MmapSpatialIndex(self._gaz_files)
 
     @functools.cached_property
     def tax_index(self):
-        if self.tables.taxcat is None:
-            return _embedded_tax_index()
         from .mmapstore import MmapTaxcatIndex, _PhraseFiles
-        return MmapTaxcatIndex(self._own(_PhraseFiles(self.tables.taxcat)))
+        return MmapTaxcatIndex(self._own(_PhraseFiles(self._source("taxcat"))))
 
     @functools.cached_property
     def postal_codes(self):
-        if self.tables.postal is None:
-            return _embedded_postal_codes()
         from .mmapstore import MmapKeyedTable
-        return self._own(MmapKeyedTable(self.tables.postal))
+        return self._own(MmapKeyedTable(self._source("postal")))
 
 
 _slot = _Slot(Tables())
@@ -108,58 +109,46 @@ def enter(tables: Tables) -> None:
 
 
 def gaz_index():
-    """``PhraseIndex`` over the embedded rows, or ``MmapGazetteerIndex``."""
+    """The ``MmapGazetteerIndex`` of the gazetteer."""
     return _slot.gaz_index
 
 
 def spatial_index():
-    """``SpatialIndex`` over the embedded rows, or ``MmapSpatialIndex``."""
+    """The ``MmapSpatialIndex`` (reverse-geocode grid) of the gazetteer."""
     return _slot.spatial_index
 
 
 def tax_index():
-    """``PhraseIndex`` over the embedded lexicons, or ``MmapTaxcatIndex``."""
+    """The ``MmapTaxcatIndex`` of the taxcat lexicons."""
     return _slot.tax_index
 
 
 def postal_codes():
-    """Normalized code -> (cc, adm1, code, name, lat, lon) rows, as the
-    embedded dict or an ``MmapKeyedTable``: both answer ``.get``."""
+    """The ``MmapKeyedTable`` of normalized code -> (cc, adm1, code, name,
+    lat, lon) rows."""
     return _slot.postal_codes
 
 
 @functools.cache
-def _embedded_gaz_index():
-    from . import data
-    from .matcher import CANDIDATE_CAP, PhraseIndex, Place, _cap_places
-    idx = PhraseIndex([(r[1], Place(*r)) for r in data.GAZETTEER_ROWS])
-    # O6 candidate cap on the in-memory path (see CANDIDATE_CAP)
-    for key, places in idx.index.items():
-        if len(places) > CANDIDATE_CAP:
-            idx.index[key] = _cap_places(places)
-    return idx
-
-
-@functools.cache
-def _embedded_spatial_index():
-    from . import data
-    from .matcher import Place
-    from .spatial import SpatialIndex
-    return SpatialIndex([Place(*r) for r in data.GAZETTEER_ROWS])
-
-
-@functools.cache
-def _embedded_tax_index():
-    from . import data
-    from .matcher import PhraseIndex
-    return PhraseIndex(
-        [(n, ("person", n, None)) for n in data.PERSON_NAMES]
-        + [(k, ("org", c, None)) for k, c in data.ORG_NAMES.items()]
-        + [(n, ("nationality", n, cc))
-           for n, cc in data.NATIONALITIES.items()])
-
-
-@functools.cache
-def _embedded_postal_codes():
-    from .postal import POSTAL_ROWS, _build_code_map
-    return _build_code_map(POSTAL_ROWS)
+def embedded(table: str) -> dict:
+    """``table``'s embedded rows compiled in memory into the artifact's
+    named buffers, once per process (module constants cannot go stale).
+    Nothing is written to disk, so a zipped package serves them too."""
+    from . import data, mmapstore
+    from .matcher import NORMALIZATION_VERSION, Place, phrase_key
+    if table == "gazetteer":
+        rows = data.GAZETTEER_ROWS
+        cols = {f: [r[i] for r in rows]
+                for i, f in enumerate(Place.__dataclass_fields__)}
+        cols["phrase"] = [phrase_key(r[1]) for r in rows]
+        return mmapstore.compile_gazetteer(cols, NORMALIZATION_VERSION)
+    if table == "taxcat":
+        return mmapstore.compile_taxcat(
+            [(phrase_key(n), "person", n, None) for n in data.PERSON_NAMES]
+            + [(phrase_key(k), "org", c, None)
+               for k, c in data.ORG_NAMES.items()]
+            + [(phrase_key(n), "nationality", n, cc)
+               for n, cc in data.NATIONALITIES.items()],
+            NORMALIZATION_VERSION)
+    from .postal import POSTAL_ROWS, compile_postal
+    return compile_postal(POSTAL_ROWS)

@@ -224,9 +224,10 @@ def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
     files in place, so a node's workers share one page-cache copy and the
     driver never collects or broadcasts the rows.  Any other directory,
     a plain parquet one included, fails the task with a ``ValueError``
-    naming the compile step.  Unset, the embedded tables are used.  The
-    paths and env vars are read here, on the driver, once per job
-    (``gazetteer.tables``).
+    naming the compile step.  Unset, a table's embedded rows are compiled
+    in memory, once per worker process, into the same layout and served by
+    the same index classes.  The paths and env vars are read here, once
+    per job, not on the workers (``gazetteer.tables``).
 
     The plan stays scan -> project -> mapInPandas: no shuffle, predicate
     pushdown and column pruning reach the parquet scan untouched.

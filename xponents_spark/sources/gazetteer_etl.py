@@ -144,7 +144,7 @@ def build_tagger_parquet(taggable: DataFrame, path: str) -> None:
     """Taggable gazetteer rows -> the tagger parquet (the compile input).
 
     Appends ``phrase`` — the name normalized by the MATCHER'S OWN
-    tokenization (``tokens_with_offsets``: NFKC fold, per-char CJK, Arabic
+    tokenization (``matcher.phrase_key``: NFKC fold, per-char CJK, Arabic
     variant fold), so ``mmapstore.build_mmap_artifact`` compiles it with
     zero re-normalization.  With that compile step, the equivalent of the
     reference's Solr index build (solr/build.sh) emitting the FST
@@ -167,12 +167,10 @@ def build_tagger_parquet(taggable: DataFrame, path: str) -> None:
                           + [T.StructField("phrase", T.StringType(), False)])
 
     def add_phrase(batches):
-        from ..gazetteer.matcher import tokens_with_offsets
+        from ..gazetteer.matcher import phrase_key
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["phrase"] = [
-                " ".join(t for t, _s, _e in tokens_with_offsets(n or "") if t)
-                for n in pdf["name"]]
+            pdf["phrase"] = [phrase_key(n) for n in pdf["name"]]
             yield pdf
 
     out = taggable.mapInPandas(add_phrase, schema=schema)

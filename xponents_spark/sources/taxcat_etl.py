@@ -125,12 +125,10 @@ def build_taxcat_parquet(rows: DataFrame, path: str) -> None:
                           + [T.StructField("phrase", T.StringType(), False)])
 
     def add_phrase(batches):
-        from ..gazetteer.matcher import tokens_with_offsets
+        from ..gazetteer.matcher import phrase_key
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["phrase"] = [
-                " ".join(t for t, _s, _e in tokens_with_offsets(n or "") if t)
-                for n in pdf["name"]]
+            pdf["phrase"] = [phrase_key(n) for n in pdf["name"]]
             yield pdf
 
     out = rows.mapInPandas(add_phrase, schema=schema)

@@ -43,24 +43,13 @@ _MATCH_BASE_COLS = ["conv_id", "turn_idx", "span_start", "span_end",
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: read transcripts -> input prep -> one-stage Arrow
-    extraction -> stable (conv_id, turn_idx) ordering.
-
-    Input prep adapts to the table's physical layout (plans.bucketing):
-    when ``SPARK_GRAFT_PREBUCKETED`` points at a conv_id-bucketed parquet
-    dir (sidecar metadata), the salting exchange is skipped and the plan
-    is scan -> MapInPandas -> sort, zero mid-plan Exchange — the 100 TB
-    shape over the north rule's bucketed Iceberg table.  Default: the
-    synthesized sf0.001 transcripts with the salted repartition."""
-    import os
-
-    from xponents_spark.plans import prepare_input, read_bucketed
-    pre = os.environ.get("SPARK_GRAFT_PREBUCKETED")
-    if pre:
-        t, meta = read_bucketed(spark, pre)
-        t = prepare_input(t, meta, 8)
-    else:
-        t = salted_repartition(synthesize_transcripts(spark, SF0001), 8)
+    """Flagship: read transcripts -> salted repartition -> one-stage Arrow
+    extraction -> stable (conv_id, turn_idx) ordering, over the
+    synthesized sf0.001 transcripts.  Dates are judged against the
+    engine's one pinned TODAY (``xponents_spark.extractors.TODAY_YEAR`` /
+    ``TODAY_EPOCH``).  The zero-shuffle variant over a conv_id-bucketed
+    table is ``plans.prepare_input``; ``bench.py`` times it."""
+    t = salted_repartition(synthesize_transcripts(spark, SF0001), 8)
     out = extract(t)
     return ordered_output(
         out.select("conv_id", "turn_idx", "role", "tool", "ts",

@@ -187,6 +187,16 @@ def test_stateful_conversation_stream(spark, sf_dir):
                  t.groupBy("conv_id").agg(F.count("*").alias("cnt")).collect()}
         got = {c: r["n_turns"] for c, r in final.items()}
         assert got == truth
+        # match counts and last turn equal a batch extract() over the same
+        # 80 turns with the stream's default features
+        batch = (extract(t, features=("content", "coordinates", "dates"))
+                 .groupBy("conv_id")
+                 .agg(F.sum(F.size("matches")).alias("n"),
+                      F.max("turn_idx").alias("mx")).collect())
+        assert {c: (r["n_matches"], r["max_turn_idx"])
+                for c, r in final.items()} == \
+            {r["conv_id"]: (r["n"], r["mx"]) for r in batch}
+        assert sum(r["n"] for r in batch) > 0
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -31,6 +31,7 @@ import re
 
 from ..flexpat import PatternMatch, PatternManager, pattern_file, register_normalizer
 from ..functions.geo import band_is_north, geohash_encode, mgrs_to_ll, utm_to_ll
+from . import TODAY_YEAR
 
 
 class Specificity:
@@ -43,15 +44,18 @@ class Specificity:
 
 
 _MIN_SPECIFICITY = Specificity.DEG
-_TODAY_YEAR = 2026  # pinned determinism anchor for MGRS date-collision filter
 
 
-def configure(min_specificity: int | None = None, today_year: int | None = None) -> None:
-    global _MIN_SPECIFICITY, _TODAY_YEAR
+def configure(min_specificity: int | None = None) -> None:
+    """Set the minimum specificity a coordinate needs to be kept.
+
+    This changes a module global of the CALLING Python process only: it
+    never reaches the Python workers of a Spark job, which import this
+    module afresh and keep the default (``Specificity.DEG``).  Use it for
+    in-process extraction (``extract_coordinates``, ``extract_turn``)."""
+    global _MIN_SPECIFICITY
     if min_specificity:
         _MIN_SPECIFICITY = min_specificity
-    if today_year:
-        _TODAY_YEAR = today_year
 
 
 _HEMI_SIGN = {"W": -1, "S": -1, "-": -1, "N": 1, "E": 1, "+": 1}
@@ -307,8 +311,8 @@ def _mgrs_filtered(textnorm: str) -> str | None:
             try:
                 year = int(m.group(2))
                 if year < 100:
-                    year += 2000 if year <= (_TODAY_YEAR - 2000 + 2) else 1900
-                if abs(year - _TODAY_YEAR) <= 30:
+                    year += 2000 if year <= (TODAY_YEAR - 2000 + 2) else 1900
+                if abs(year - TODAY_YEAR) <= 30:
                     return "date"
             except ValueError:
                 pass

@@ -20,9 +20,8 @@ embedded source L34-385):
   ``resolution``, ``locale``, plus ``timestamp``/``tzinfo`` when time parsed.
 
 Determinism: the reference anchors 2-digit-year resolution to *runtime now*
-(``NOW = arrow.now()``).  Here the anchor is a pinned job parameter
-(default 2026) so outputs are stable across runs — set via
-:func:`configure`.
+(``NOW = arrow.now()``).  Here the anchor is the engine's one pinned TODAY
+(``extractors.TODAY_YEAR``) so outputs are stable across runs.
 """
 
 from __future__ import annotations
@@ -31,13 +30,13 @@ from calendar import timegm
 from datetime import datetime, timedelta
 
 from ..flexpat import PatternMatch, PatternManager, pattern_file, register_normalizer
+from . import TODAY_YEAR
 
 MILLENNIUM = 2000
 MAXIMUM_YEAR = 2040
 
-# Pinned determinism anchor (reference uses wall-clock now; we pin).
-_TODAY_YEAR = 2026
-_FUTURE_YY_THRESHOLD = (_TODAY_YEAR - MILLENNIUM) + 2
+# 2-digit-year pivot: up to TODAY's 2-digit year + 2 reads 2000-era
+_FUTURE_YY_THRESHOLD = (TODAY_YEAR - MILLENNIUM) + 2
 _DEFAULT_LOCALE: str | None = None
 
 _MONTHS = {m: i + 1 for i, m in enumerate(
@@ -45,13 +44,16 @@ _MONTHS = {m: i + 1 for i, m in enumerate(
      "JUL", "AUG", "SEP", "OCT", "NOV", "DEC"])}
 
 
-def configure(today_year: int | None = None, locale: str | None = None) -> None:
-    """Set the year anchor and default locale ('euro' forces DMY reading of
-    ambiguous numeric dates, as XTemporal(locale=...) does)."""
-    global _TODAY_YEAR, _FUTURE_YY_THRESHOLD, _DEFAULT_LOCALE
-    if today_year:
-        _TODAY_YEAR = today_year
-        _FUTURE_YY_THRESHOLD = (today_year - MILLENNIUM) + 2
+def configure(locale: str | None = None) -> None:
+    """Set the default locale ('euro' forces DMY reading of ambiguous
+    numeric dates, as XTemporal(locale=...) does; '' restores the
+    North-American default).
+
+    This changes a module global of the CALLING Python process only: it
+    never reaches the Python workers of a Spark job, which import this
+    module afresh and keep the default.  Use it for in-process extraction
+    (``extract_dates``, ``extract_turn``)."""
+    global _DEFAULT_LOCALE
     if locale is not None:
         _DEFAULT_LOCALE = locale.lower() or None
 

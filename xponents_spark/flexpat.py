@@ -459,15 +459,15 @@ class PatternManager:
 
     # -- embedded test harness ---------------------------------------------
 
-    def run_default_tests(self, scope: str = "rule") -> list[dict]:
+    def run_default_tests(self) -> list[dict]:
         """Run every #TEST case; replicates default_tests() semantics
-        (``FlexPat.html`` source L515-570): a FAIL test passes when no
-        unfiltered match from the rule under test survives."""
+        (``FlexPat.html`` source L515-570) at rule scope: only matches of
+        the rule under test count, and a FAIL test passes when none of
+        them survives unfiltered."""
         results = []
         for case in self.test_cases:
-            matches = self.scan(case.text, families=[case.family])
-            if scope == "rule":
-                matches = [m for m in matches if case.rule_id == m.pattern_id]
+            matches = [m for m in self.scan(case.text, families=[case.family])
+                       if case.rule_id == m.pattern_id]
             hits = [m for m in matches
                     if not m.filtered_out or (m.is_duplicate and m.filtered_out)]
             ok = bool(hits) if case.expect_match else not hits

@@ -332,14 +332,12 @@ def _longest_dominant_right(matches):
     return by_start
 
 
-def tag_places(text: str, lowercase_doc: bool | None = None,
-               toks: Tokens = None) -> list[PlaceCandidate]:
+def tag_places(text: str, toks: Tokens = None) -> list[PlaceCandidate]:
     """Scan + build candidates with tag-time filters F1-F10."""
     hits = gaz_index().scan(text, toks)
     if not hits:
         return []
-    if lowercase_doc is None:
-        lowercase_doc = is_lower(text)
+    lowercase_doc = is_lower(text)
     out: list[PlaceCandidate] = []
     for s, e, mtext, places in hits:
         cand = PlaceCandidate(s, e, mtext, list(places))

@@ -90,6 +90,12 @@ _FORMAT = "xponents-mmap-1"
 _TAX_FORMAT = "xponents-taxmmap-1"
 _KV_FORMAT = "xponents-kvmmap-1"
 _CELL_MUL = 1_000_003
+# Bound of every per-worker memo below (phrase payloads, first-token
+# probes, dead tokens, grid cells): past it a memo is cleared whole, which
+# caps worker memory growth (~200k token entries ≈ 20-30 MB private).  It
+# counts entries (grid: rows), not bytes, so a dense grid region can
+# outgrow it (SCALE.md).
+_MEMO_MAX = 200_000
 
 
 def _norm_version(parquet_dir: str, build: str) -> int:
@@ -367,9 +373,9 @@ class MmapGazetteerIndex:
         # first-token probe memo: text vocabularies are Zipf-distributed,
         # so most tokens repeat constantly and most MISS the dictionary —
         # caching (exact-hit phrase idx, extension range) per token turns
-        # the dominant top-level binary search into one dict hit.  Bounded:
-        # ~200k entries ≈ 20-30 MB private/worker, still ~100x under a
-        # per-worker phrase dict's footprint at 10M names.
+        # the dominant top-level binary search into one dict hit.  Bounded
+        # by _MEMO_MAX, still ~100x under a per-worker phrase dict's
+        # footprint at 10M names.
         self._tok_memo: dict[str, tuple[int, int, int]] = {}
         # tokens known to start no phrase: the scan's first-token gate
         self._dead: set[str] = set()
@@ -381,7 +387,7 @@ class MmapGazetteerIndex:
         """Phrase ``k``'s payloads, memoized."""
         hit = self._memo.get(k)
         if hit is None:
-            if len(self._memo) > 200_000:    # bound worker memory growth
+            if len(self._memo) > _MEMO_MAX:
                 self._memo.clear()
             hit = self._memo[k] = self._hydrate(
                 int(self.f.row_bounds[k]), int(self.f.row_bounds[k + 1]))
@@ -425,7 +431,7 @@ class MmapGazetteerIndex:
                 lo2 = _bisect(f.pbuf, f.poff, pref, k, hi)
                 ent = (exact, lo2,
                        _bisect(f.pbuf, f.poff, pref + b"\xff", lo2, hi))
-            if len(memo) > 200_000:
+            if len(memo) > _MEMO_MAX:
                 memo.clear()
             memo[norm] = ent
         return ent
@@ -437,7 +443,7 @@ class MmapGazetteerIndex:
         # out in one C-level set difference, the rest are probed once, and
         # the turn returns at once when none of its tokens starts a phrase
         dead = self._dead
-        if len(dead) > 200_000:
+        if len(dead) > _MEMO_MAX:
             dead.clear()
         firsts = set()
         for norm in view.vocab - dead:
@@ -505,7 +511,7 @@ class MmapSpatialIndex:
         self._memo_rows = 0
 
     def _read_cell(self, cell: tuple[int, int]) -> tuple:
-        if self._memo_rows > 200_000:    # bound worker memory growth
+        if self._memo_rows > _MEMO_MAX:
             self._cells.clear()
             self._places.clear()
             self._memo_rows = 0

@@ -23,6 +23,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from .extractors import TODAY_EPOCH
 from .extractors import poli as _poli
 from .extractors import xcoord as _xcoord
 from .extractors import xtemporal as _xtemporal
@@ -54,8 +55,8 @@ def _match_row(**kw) -> dict:
 # TODAY for DateMatch isDistantPast/isFuture classification.  The reference
 # defaults TODAY to wall-clock (XTemporal.html: "the notion of TODAY is
 # relative to the caller's notion of TODAY"); a distributed deterministic
-# engine pins it — callers override via extract(today_epoch=...).
-DEFAULT_TODAY_EPOCH = 1_767_225_600          # 2026-01-01T00:00:00Z
+# engine pins it to the one anchor (extractors.TODAY_EPOCH) — callers
+# override via extract(today_epoch=...).
 DISTANT_PAST_EPOCH = -2_208_988_800          # 1900-01-01 (DISTANT_PAST_THRESHOLD)
 
 
@@ -71,7 +72,7 @@ def extract_turn(text: str, features: tuple,
                  coord_families: tuple | None = None,
                  date_families: tuple | None = None,
                  strict_coords: bool = False,
-                 today_epoch: int = DEFAULT_TODAY_EPOCH,
+                 today_epoch: int = TODAY_EPOCH,
                  emit_filtered: bool = False,
                  match_filter: frozenset[str] | None = None) -> tuple[str, list[dict]]:
     """Pure per-turn extraction: main-content recovery then pattern families.
@@ -204,7 +205,7 @@ def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
             coord_families: Iterable[str] | None = None,
             date_families: Iterable[str] | None = None,
             strict_coords: bool = False,
-            today_epoch: int = DEFAULT_TODAY_EPOCH,
+            today_epoch: int = TODAY_EPOCH,
             emit_filtered: bool = False,
             match_filter: Iterable[str] = ()) -> DataFrame:
     """Append ``main_text`` + ``matches`` columns via one mapInPandas stage.
@@ -228,6 +229,11 @@ def extract(df: DataFrame, features: Iterable[str] = DEFAULT_FEATURES,
     in memory, once per worker process, into the same layout and served by
     the same index classes.  The paths and env vars are read here, once
     per job, not on the workers (``gazetteer.tables``).
+
+    ``today_epoch``: the caller's TODAY for the date ``future`` flag.  It
+    defaults to the engine's one pinned anchor, ``extractors.TODAY_EPOCH``
+    (2026-01-01 UTC), whose year alone fixes the 2-digit-year pivot and
+    the MGRS date filter.
 
     The plan stays scan -> project -> mapInPandas: no shuffle, predicate
     pushdown and column pruning reach the parquet scan untouched.

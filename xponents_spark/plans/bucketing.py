@@ -36,16 +36,16 @@ from .salting import salted_repartition
 _META_NAME = "_bucket_meta.json"
 
 
-def write_bucketed(df: DataFrame, path: str, buckets: int,
-                   col: str = "conv_id") -> dict:
-    """Materialize ``df`` physically bucketed by ``pmod(hash(col), buckets)``
+def write_bucketed(df: DataFrame, path: str, buckets: int) -> dict:
+    """Materialize ``df`` physically bucketed by
+    ``pmod(hash(conv_id), buckets)``
     (the same function the resumable checkpoints and Iceberg's conceptual
     ``bucket()`` transform use) and record the layout in a sidecar.
 
     One row-group-aligned file per bucket: rows of one conversation land in
     exactly one bucket, so a later conv-scope pass can prune or co-join
     without a shuffle."""
-    bcol = F.pmod(F.hash(F.col(col)), F.lit(buckets))
+    bcol = F.pmod(F.hash(F.col("conv_id")), F.lit(buckets))
     # directory-per-bucket (the Iceberg bucket-transform layout), NOT
     # repartition(buckets, bcol): hashing the bucket VALUE into `buckets`
     # partitions collides (~1/e of partitions empty, others holding 2-3
@@ -55,7 +55,7 @@ def write_bucketed(df: DataFrame, path: str, buckets: int,
     (df.withColumn("_bucket", bcol)
        .repartition(buckets, F.col("_bucket"))
        .write.mode("overwrite").partitionBy("_bucket").parquet(path))
-    meta = {"bucketed_by": col, "buckets": int(buckets),
+    meta = {"bucketed_by": "conv_id", "buckets": int(buckets),
             "transform": "pmod(hash(col), buckets)"}
     with open(os.path.join(path, _META_NAME), "w") as fh:
         json.dump(meta, fh)
@@ -79,18 +79,17 @@ def read_bucketed(spark: SparkSession, path: str) -> tuple[DataFrame, dict | Non
 
 
 def prepare_input(df: DataFrame, meta: dict | None = None,
-                  num_partitions: int | None = None,
-                  key: str = "conv_id") -> DataFrame:
+                  num_partitions: int | None = None) -> DataFrame:
     """The flagship pipeline's input stage: salt unless the table's layout
-    already spreads the key.
+    already spreads conversations.
 
     ``meta`` from :func:`bucket_metadata`: when it declares bucketing by
-    ``key`` with at least ``num_partitions`` buckets, the scan's own splits
+    ``conv_id`` with at least ``num_partitions`` buckets, the scan's own splits
     are balanced by construction (hash-spread conversations, row-group
     splitting for oversized buckets) and the salting exchange is skipped —
     the plan becomes scan -> MapInPandas -> write with zero Exchange.
     Anything else falls back to :func:`salted_repartition`."""
-    if meta and meta.get("bucketed_by") == key and (
+    if meta and meta.get("bucketed_by") == "conv_id" and (
             num_partitions is None or meta.get("buckets", 0) >= num_partitions):
         return df
     return salted_repartition(df, num_partitions)

@@ -31,7 +31,6 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -54,18 +53,18 @@ def _read_committed(path: str) -> dict | None:
 
 
 def run_resumable(df: DataFrame, out_dir: str, buckets: int = 16,
-                  features: Iterable[str] = DEFAULT_FEATURES,
                   input_desc: str = "", bucket_col: str | None = None,
                   verify_input: bool = True,
                   extract_kwargs: dict | None = None) -> list[dict]:
-    """Extract ``df`` in ``buckets`` resumable units; returns manifests.
+    """Extract ``df`` in ``buckets`` resumable units with every feature
+    (``DEFAULT_FEATURES``, recorded in each manifest); returns manifests.
 
     ``bucket_col``: name of an existing physical bucket partition column
     (values 0..buckets-1).  When given, stage-0 bucketize is skipped and the
     per-bucket filter prunes directly at the source scan.
 
     ``extract_kwargs``: extra keyword args forwarded to ``extract`` per
-    bucket (gazetteer/postal/taxcat paths, feature params) — the job-param
+    bucket (gazetteer/postal/taxcat paths) — the job-param
     plumbing the conversation-scope pass rides on.
 
     ``verify_input``: on resume over a committed stage-0 bucketize, compare
@@ -131,7 +130,7 @@ def run_resumable(df: DataFrame, out_dir: str, buckets: int = 16,
         t0 = time.time()
         part = src.filter(F.col(bucket_col) == b).drop(bucket_col)
         obs = Observation(f"bucket_{b}")
-        result = extract(part, features=features,
+        result = extract(part, features=DEFAULT_FEATURES,
                          **(extract_kwargs or {})).observe(
             obs,
             F.count(F.lit(1)).alias("rows"),
@@ -144,7 +143,7 @@ def run_resumable(df: DataFrame, out_dir: str, buckets: int = 16,
             "buckets": buckets,
             "input": input_desc,
             "engine_version": __version__,
-            "features": list(features),
+            "features": list(DEFAULT_FEATURES),
             "rows": int(metrics["rows"] or 0),
             "matches": int(metrics["matches"] or 0),
             "wall_sec": round(time.time() - t0, 3),

@@ -26,9 +26,8 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> Data
     return df.repartition(*cols)
 
 
-def spread_small_input(df: DataFrame, key_cols: tuple[str, ...] = (),
-                       min_partitions: int | None = None,
-                       factor: int = 1) -> DataFrame:
+def spread_small_input(df: DataFrame,
+                       key_cols: tuple[str, ...] = ()) -> DataFrame:
     """Scan-parallelism floor for CPU-dense stages over SMALL inputs.
 
     A dimension-sized parquet file (one split under
@@ -37,13 +36,12 @@ def spread_small_input(df: DataFrame, key_cols: tuple[str, ...] = (),
     explodes, regex chains — runs on ONE core no matter how many the
     session has (guide §2.5 "input skew … repartition immediately after
     the read", §6 split sizing).  This helper hash-repartitions such
-    inputs to ``factor``× the session's parallelism (default 1×: for
-    the light Arrow stages these inputs feed, per-task worker/Arrow
-    overhead outweighs straggler smoothing — measured at sf0.1, the
-    image-codec stage ran 0.95 s at 32 partitions vs 1.16 s at 64, and
-    a light Arrow stage over 4,000 rows at ``local[4]`` on a 4-vCPU host
-    takes ~0.6 s longer at 36 tasks than at 4; raise ``factor`` for
-    stages with heavy per-row skew) and is a NO-OP
+    inputs to the session's parallelism, at least 8 partitions (not a
+    multiple of it: for the light Arrow stages these inputs feed, per-task
+    worker/Arrow overhead outweighs straggler smoothing — measured at
+    sf0.1, the image-codec stage ran 0.95 s at 32 partitions vs 1.16 s at
+    64, and a light Arrow stage over 4,000 rows at ``local[4]`` on a
+    4-vCPU host takes ~0.6 s longer at 36 tasks than at 4) and is a NO-OP
     whenever the plan already carries at least ``defaultParallelism``
     partitions — i.e. at cluster scale,
     where the scan's own splits provide the parallelism and an extra
@@ -55,12 +53,10 @@ def spread_small_input(df: DataFrame, key_cols: tuple[str, ...] = (),
     """
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
-    if min_partitions is None:
-        min_partitions = max(par * factor, 8)
     if df.rdd.getNumPartitions() >= par:
         return df
     cols = [F.col(c) for c in (key_cols or df.columns)]
-    return df.repartition(min_partitions, *cols)
+    return df.repartition(max(par, 8), *cols)
 
 
 def ordered_output(df: DataFrame) -> DataFrame:

@@ -156,31 +156,39 @@ def build_tagger_parquet(taggable: DataFrame, path: str) -> None:
     Rows whose name normalizes to nothing (pure punctuation) are dropped —
     they could never match a token sequence.
     """
-    from pyspark.sql import types as T
-
     # the runtime store requires the full Place schema; contract inputs
     # without coordinates get explicit nulls
     for c in ("lat", "lon"):
         if c not in taggable.columns:
             taggable = taggable.withColumn(c, F.lit(None).cast("double"))
-    schema = T.StructType(taggable.schema.fields
-                          + [T.StructField("phrase", T.StringType(), False)])
+    write_phrase_parquet(taggable, path)
 
-    def add_phrase(batches):
-        from ..gazetteer.matcher import phrase_key
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["phrase"] = [phrase_key(n) for n in pdf["name"]]
-            yield pdf
 
-    out = taggable.mapInPandas(add_phrase, schema=schema)
-    out.filter("phrase != ''").write.mode("overwrite").parquet(path)
+def _add_phrase(batches):
+    from ..gazetteer.matcher import phrase_key
+    for pdf in batches:
+        pdf = pdf.copy()
+        pdf["phrase"] = [phrase_key(n) for n in pdf["name"]]
+        yield pdf
 
-    # sidecar fingerprint: the runtime index refuses artifacts whose phrase
-    # column was normalized under different semantics
+
+def write_phrase_parquet(rows: DataFrame, path: str) -> None:
+    """The one phrase writer of the gazetteer and taxcat ETLs: append
+    ``phrase`` (``matcher.phrase_key`` of ``name``, one Arrow-batched
+    mapInPandas), drop rows whose phrase is empty, write ``path`` and its
+    ``_normalization.json`` sidecar."""
     import json
     import os
 
+    from pyspark.sql import types as T
+
     from ..gazetteer.matcher import NORMALIZATION_VERSION
+
+    schema = T.StructType(rows.schema.fields
+                          + [T.StructField("phrase", T.StringType(), False)])
+    out = rows.mapInPandas(_add_phrase, schema=schema)
+    out.filter("phrase != ''").write.mode("overwrite").parquet(path)
+    # sidecar fingerprint: the runtime index refuses artifacts whose phrase
+    # column was normalized under different semantics
     with open(os.path.join(path, "_normalization.json"), "w") as fh:
         json.dump({"normalization_version": NORMALIZATION_VERSION}, fh)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .gazetteer_etl import write_phrase_parquet
+
 _FIRST = ("james", "maria", "wei", "ahmed", "olga", "jean", "carlos",
           "yuki", "anna", "david", "fatima", "ivan", "chen", "sara",
           "paul", "nadia", "omar", "lucia", "hans", "priya", "tariq",
@@ -118,28 +120,7 @@ def build_taxcat_parquet(rows: DataFrame, path: str) -> None:
     """Append the matcher-normalized ``phrase`` column and write the
     runtime artifact + normalization sidecar (same contract as
     build_tagger_parquet)."""
-    import pandas as pd  # noqa: F401  (mapInPandas batches)
-    from pyspark.sql import types as T
-
-    schema = T.StructType(rows.schema.fields
-                          + [T.StructField("phrase", T.StringType(), False)])
-
-    def add_phrase(batches):
-        from ..gazetteer.matcher import phrase_key
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["phrase"] = [phrase_key(n) for n in pdf["name"]]
-            yield pdf
-
-    out = rows.mapInPandas(add_phrase, schema=schema)
-    out.filter("phrase != ''").write.mode("overwrite").parquet(path)
-
-    import json
-    import os
-
-    from ..gazetteer.matcher import NORMALIZATION_VERSION
-    with open(os.path.join(path, "_normalization.json"), "w") as fh:
-        json.dump({"normalization_version": NORMALIZATION_VERSION}, fh)
+    write_phrase_parquet(rows, path)
 
 
 def embedded_taxcat_df(spark: SparkSession) -> DataFrame:

@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..gazetteer import tables
 from ..pipeline import DEFAULT_FEATURES, extract
 from ..schemas import TRANSCRIPT_SCHEMA
 
@@ -54,12 +53,14 @@ def conversation_state_stream(stream_df: DataFrame,
                               features=("content", "coordinates", "dates")) -> DataFrame:
     """Custom stateful operator: per-conversation running extraction stats.
 
-    ``applyInPandasWithState`` keeps (n_turns, n_matches, max_turn_idx) per
-    conv_id across micro-batches and emits the updated row each time a
-    conversation receives turns — the streaming analog of the per-document
-    scope state the reference rebuilds per request.  It tags against the
-    reference tables the ``XPONENTS_*_PARQUET`` env vars name on the
-    driver, like ``extract`` (``gazetteer.tables``).
+    The stream is ``extract`` (the batch stage, run in the scan's map
+    tasks and tagging against the job's reference tables like any
+    ``extract`` job), projected to each turn's match count.
+    ``applyInPandasWithState`` then only counts: it keeps (n_turns,
+    n_matches, max_turn_idx) per conv_id across micro-batches and emits
+    the updated row each time a conversation receives turns — the
+    streaming analog of the per-document scope state the reference
+    rebuilds per request.
     """
     import pandas as pd  # noqa: F811
 
@@ -72,29 +73,21 @@ def conversation_state_stream(stream_df: DataFrame,
         T.StructField("n_matches", T.LongType(), False),
         T.StructField("max_turn_idx", T.IntegerType(), False),
     ])
-    state_schema = T.StructType([
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("n_matches", T.LongType(), False),
-        T.StructField("max_turn_idx", T.IntegerType(), False),
-    ])
-
-    tabs = tables.resolve()
+    state_schema = T.StructType(out_schema.fields[1:])
 
     def update(key, pdf_iter, state):
-        tables.enter(tabs)
         n_turns, n_matches, max_idx = (state.get if state.exists else (0, 0, -1))
-        from ..pipeline import extract_turn
         for pdf in pdf_iter:
-            for text, idx in zip(pdf["text"], pdf["turn_idx"]):
-                _main, rows = extract_turn(text, tuple(features))
-                n_turns += 1
-                n_matches += len(rows)
-                max_idx = max(max_idx, int(idx))
+            n_turns += len(pdf)
+            n_matches += int(pdf["n_matches"].sum())
+            max_idx = max(max_idx, int(pdf["turn_idx"].max()))
         state.update((n_turns, n_matches, max_idx))
         yield pd.DataFrame({"conv_id": [key[0]], "n_turns": [n_turns],
                             "n_matches": [n_matches], "max_turn_idx": [max_idx]})
 
-    return (stream_df
+    return (extract(stream_df, features=features)
+            .select("conv_id", "turn_idx",
+                    F.size("matches").alias("n_matches"))
             .groupBy("conv_id")
             .applyInPandasWithState(update, out_schema, state_schema,
                                     "update", GroupStateTimeout.NoTimeout))

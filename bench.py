@@ -13,9 +13,11 @@ turns/sec over transcripts synthesized from $SPARK_GRAFT_SF_DIR (default
 Env:
   SPARK_GRAFT_SF_DIR   input scale dir            (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS     local[] parallelism        (default 32)
-  BENCH_SCALING=1      also run the local[8]-vs-local[32] scaling protocol
-                       (BASELINE.json north_rule evidence; writes the numbers
-                       into the JSON as "scaling")
+  BENCH_SCALING=1      also run a quick local[2]-vs-local[8] scaling check
+                       (writes the numbers into the JSON as "scaling"; on a
+                       host with fewer than 8 cores the local[8] side is
+                       oversubscribed.  tools/scaling.py is the 1 -> 4-slot
+                       scaling evidence)
 """
 
 from __future__ import annotations
@@ -324,10 +326,10 @@ def main():
     result["queries"] = bench_queries(spark)
 
     if os.environ.get("BENCH_SCALING"):
-        # quick in-bench N vs 4N check (the AUTHORITATIVE artifact is
-        # tools/scaling_protocol.py -> BENCH/scaling_r04.json: contracted
-        # uncontended executor pair local-cluster[1,4]->[4,4]).  N=2 ->
-        # 4N=8 cores: both configs leave most of the 32-core host idle.
+        # quick in-bench N vs 4N check; tools/scaling.py is the scaling
+        # evidence (perfbench's production job at 1 and 4 slots, beside
+        # the no-Spark kernel control).  N=2 -> 4N=8 cores needs at least
+        # 8 cores to leave the 4N side uncontended.
         # Round-4 protocol rule: FIXED partition count across sizes —
         # both sides run the identical strong-scaling job (partition
         # counts on a real cluster derive from input splits, not executor

@@ -404,6 +404,17 @@ def test_taxcat_parquet_path(spark, tmp_path):
     assert matcher.tag_taxons("the Australian delegation")
 
 
+def test_embedded_taxcat_rows_do_not_follow_hash_order(spark):
+    """The person lexicon is a frozenset; its rows come out sorted, so the
+    taxcat parquet written from them is the same under any
+    PYTHONHASHSEED."""
+    from xponents_spark.gazetteer import data
+    from xponents_spark.sources.taxcat_etl import embedded_taxcat_df
+    names = [r["name"] for r in embedded_taxcat_df(spark).collect()
+             if r["kind"] == "person"]
+    assert names == sorted(data.PERSON_NAMES)
+
+
 def _embedded_taxcat_mmap(spark, tmp_path) -> str:
     from xponents_spark.sources.taxcat_etl import embedded_taxcat_df
     return _taxcat_mmap(embedded_taxcat_df(spark).repartition(1)

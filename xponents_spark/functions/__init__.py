@@ -17,7 +17,6 @@ from .textnorm import (  # noqa: F401
     is_abbreviation,
     has_irregular_punctuation,
     count_formatting_space,
-    normalize_phrase,
     levenshtein,
 )
 from .geo import (  # noqa: F401

@@ -20,7 +20,6 @@ _ABBREV = re.compile(r"^[A-Za-z](?:[.][A-Za-z])+[.]?$|^[A-Za-z]{1,4}[.]$")
 _CJK = re.compile(r"[⺀-鿿぀-ヿ가-힯豈-﫿]")
 # Arabic, Farsi, Urdu, Hebrew blocks.
 _MIDEAST = re.compile(r"[֐-׿؀-ۿݐ-ݿﭐ-﷿ﹰ-﻿]")
-_TOKEN = re.compile(r"\S+")
 
 
 def squeeze_whitespace(text: str) -> str:
@@ -101,27 +100,6 @@ def count_formatting_space(text: str) -> int:
     return len(_FORMATTING_WS.findall(text))
 
 
-def normalize_phrase(text: str) -> str:
-    """The tagging-time normalization applied to BOTH gazetteer phrases (at
-    ETL time) and document text (at tag time).
-
-    Defined as: ASCII-fold diacritics -> lowercase -> squeeze whitespace ->
-    strip edge punctuation per token.  This is OUR pinned normalization
-    standing in for the reference's Solr analyzer chain
-    (ASCIIFolding + ClassicTokenizer + lowercase,
-    solr/solr7/gazetteer/conf/schema.xml:364-381); fixtures derive from it
-    (SURVEY.md §4.3.1).
-    """
-    folded = strip_diacritics(text).lower()
-    tokens = [t.strip(".,;:'\"!?()[]") for t in _TOKEN.findall(folded)]
-    return " ".join(t for t in tokens if t)
-
-
-def tokenize_with_offsets(text: str) -> list[tuple[str, int, int]]:
-    """Whitespace tokens with [start, end) offsets into the original text."""
-    return [(m.group(), m.start(), m.end()) for m in _TOKEN.finditer(text)]
-
-
 def levenshtein(a: str, b: str) -> int:
     """Edit distance for the name-score kernel (PlaceCandidate.java:427-534).
     Two-row DP; strings involved are short place names."""
@@ -138,8 +116,3 @@ def levenshtein(a: str, b: str) -> int:
             cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
         prev = cur
     return prev[-1]
-
-
-def get_text_window(text: str, start: int, end: int, width: int = 40) -> tuple[str, str]:
-    """±width chars of context around a span (PlaceCandidate.java:194-223)."""
-    return text[max(0, start - width):start], text[end:end + width]

@@ -73,15 +73,6 @@ HTML_SUFFIX = "</p><footer>(c) 2024 example.org</footer></body></html>"
 EXPECTED: dict[int, list[dict]] = {}  # populated below by _FROZEN
 
 
-def payload_text(name_or_idx) -> str | None:
-    if isinstance(name_or_idx, str):
-        for n, t in PAYLOADS:
-            if n == name_or_idx:
-                return t
-        raise KeyError(name_or_idx)
-    return PAYLOADS[name_or_idx][1]
-
-
 def compute_expected() -> dict[int, list[dict]]:
     """Run the FULL per-turn pipeline over each payload and produce the
     fixture rows (payload-relative offsets).  Used by the generator script

@@ -129,7 +129,7 @@ def embedded_taxcat_df(spark: SparkSession) -> DataFrame:
     embedded path."""
     from ..gazetteer import data
     rows = []
-    for n in data.PERSON_NAMES:
+    for n in sorted(data.PERSON_NAMES):
         rows.append(("person_names", "person_names.person", n, "person",
                      n, None, "N", True))
     for key, canonical in data.ORG_NAMES.items():

@@ -3,10 +3,10 @@
 The reference has no streaming (REST request/response only,
 XponentsGeotagger.java:150-198); this is the Spark-native growth path: the
 same single-stage Arrow extraction applied to a stream —
-``readStream -> mapInPandas(extract) -> writeStream`` — plus a watermarked
-windowed aggregation of match counts (the streaming analog of the A1/A2
-histograms).  ``extract()`` composes unchanged because it is one stateless
-mapInPandas stage.
+``readStream -> mapInPandas(extract) -> writeStream`` — plus a
+per-conversation state counter and inactivity-gap session spans.
+``extract()`` composes unchanged because it is one stateless mapInPandas
+stage.
 """
 
 from __future__ import annotations
@@ -91,20 +91,6 @@ def conversation_state_stream(stream_df: DataFrame,
             .groupBy("conv_id")
             .applyInPandasWithState(update, out_schema, state_schema,
                                     "update", GroupStateTimeout.NoTimeout))
-
-
-def match_rate_stream(stream_df: DataFrame, window: str = "1 hour",
-                      watermark: str = "2 hours",
-                      features=DEFAULT_FEATURES) -> DataFrame:
-    """Watermarked windowed match-count aggregation per label — late turns
-    beyond the watermark drop; emits (window, label, n_matches)."""
-    ex = extraction_stream(stream_df, features)
-    return (ex
-            .withWatermark("ts", watermark)
-            .select("ts", F.explode("matches").alias("m"))
-            .groupBy(F.window("ts", window).alias("window"),
-                     F.col("m.label").alias("label"))
-            .agg(F.count("*").alias("n_matches")))
 
 
 def session_spans(df: DataFrame, key_col: str = "conv_id",

@@ -208,11 +208,6 @@ def _iv_for(salt: bytes, block_key: bytes | None, block_size: int) -> bytes:
     return iv[:block_size]
 
 
-def is_agile_encrypted(names: set[str] | list[str]) -> bool:
-    names = set(names)
-    return "EncryptionInfo" in names and "EncryptedPackage" in names
-
-
 def _b64(b: bytes) -> str:
     return base64.b64encode(b).decode("ascii")
 

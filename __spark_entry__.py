@@ -218,24 +218,9 @@ def q_pdf_roundtrip(spark, sf_dir):
     """S1 PDF path: each document rendered to a deterministic PDF (binary
     column), then the text layer recovered by the pure-python extractor —
     output must equal the source text (identity oracle)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from xponents_spark.textract import convert_binary_docs
     from xponents_spark.textract.pdf import make_simple_pdf
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    schema = T.StructType([T.StructField("doc_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-
-    def mk(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [make_simple_pdf(t) for t in pdf["text"].tolist()]})
-
-    return convert_binary_docs(docs.mapInPandas(mk, schema=schema),
-                               "payload", "text").select("doc_id", "text")
+    return _payload_roundtrip(spark, sf_dir, [("pdf", make_simple_pdf)]
+                              ).select("doc_id", "text")
 
 
 def _payload_roundtrip(spark, sf_dir, makers, doc_password=None):

@@ -644,23 +644,53 @@ def test_xlsx_pptx_roundtrips():
 
 
 def test_resumable_with_physical_bucket_column(spark, sf_dir, tmp_path):
-    """Pre-bucketed input (the Iceberg bucket(conv_id) layout): stage-0
-    bucketize is skipped and the per-bucket filter prunes at the source —
-    results identical to the self-bucketizing path."""
+    """Pre-bucketed input (a write_bucketed table read back, carrying its
+    _bucket column): stage-0 bucketize is skipped and the per-bucket
+    filter prunes at the source — results identical to the
+    self-bucketizing path."""
     import os
 
-    from pyspark.sql import functions as F
+    from xponents_spark.plans import write_bucketed
 
     t = synthesize_transcripts(spark, sf_dir)
     src = str(tmp_path / "bucketed_src")
-    (t.withColumn("bkt", F.pmod(F.hash("conv_id"), F.lit(3)))
-      .write.partitionBy("bkt").parquet(src))
+    write_bucketed(t, src, buckets=3)
     out = str(tmp_path / "run_bc")
     m = run_resumable(spark.read.parquet(src), out, buckets=3,
-                      input_desc="pre-bucketed", bucket_col="bkt")
+                      input_desc="pre-bucketed")
     assert sum(r["rows"] for r in m) == 500
     assert not os.path.exists(os.path.join(out, "_input"))  # no stage 0
     assert read_resumable_output(spark, out).count() == 500
+
+
+def test_resumable_refuses_buckets_it_would_not_read(spark, sf_dir,
+                                                     tmp_path):
+    """A table bucketed 8 ways, run with buckets=4: the bucket loop reads
+    _bucket 0..3 only, so the run must raise before any manifest commits
+    instead of committing every bucket with the rows of 4..7 missing.  A
+    NULL _bucket is refused the same way."""
+    import os
+
+    import pytest
+
+    from xponents_spark.plans import write_bucketed
+
+    t = synthesize_transcripts(spark, sf_dir)
+    src = str(tmp_path / "bucketed8")
+    write_bucketed(t, src, buckets=8)
+    out = str(tmp_path / "run4")
+    with pytest.raises(ValueError, match=r"buckets=4.*\[4, 5, 6, 7\]"):
+        run_resumable(spark.read.parquet(src), out, buckets=4)
+    assert not [n for n in os.listdir(out) if n.startswith("manifest_")]
+
+    nulls = str(tmp_path / "null_bucket")
+    (spark.read.parquet(src).filter("_bucket < 4")
+     .withColumn("_bucket", F.when(F.col("_bucket") == 0, None)
+                 .otherwise(F.col("_bucket")))
+     .write.partitionBy("_bucket").parquet(nulls))
+    with pytest.raises(ValueError, match=r"\[None\]"):
+        run_resumable(spark.read.parquet(nulls), str(tmp_path / "runn"),
+                      buckets=4)
 
 
 def test_winnowing_guarantee_property():
@@ -1026,6 +1056,33 @@ def test_conv_scoped_two_pass_resumes_from_checkpoint(spark, sf_dir,
     assert rows1 == rows2
 
 
+def test_conv_scoped_over_bucketed_input_skips_stage0(spark, sf_dir,
+                                                      tmp_path):
+    """The conversation-scoped pass over a write_bucketed table reads its
+    layout: no stage 0 (no _input/ copy), and the same rows as over the
+    same turns unbucketed."""
+    import os
+
+    from xponents_spark.pipeline import extract_conversation_scoped
+    from xponents_spark.plans import write_bucketed
+
+    t = synthesize_transcripts(spark, sf_dir)
+    src = str(tmp_path / "bucketed")
+    write_bucketed(t, src, buckets=4)
+    cols = ("conv_id", "turn_idx", "main_text", "matches")
+
+    def rows(df, wd):
+        out = extract_conversation_scoped(df, work_dir=wd, buckets=4)
+        return sorted(map(tuple, out.select(*cols).collect()))
+
+    plain = rows(t, str(tmp_path / "plain"))
+    wd = str(tmp_path / "bucketed_wd")
+    assert rows(spark.read.parquet(src), wd) == plain
+    assert len(plain) == 500
+    assert not os.path.exists(os.path.join(wd, "_input"))
+    assert os.path.exists(os.path.join(str(tmp_path / "plain"), "_input"))
+
+
 def test_prebucketed_plan_has_no_exchange(spark, sf_dir, tmp_path):
     """Flagship 100 TB path: over a conv_id-bucketed input table the whole
     extraction job must plan as scan -> MapInPandas (zero Exchange) — the
@@ -1050,7 +1107,7 @@ def test_prebucketed_plan_has_no_exchange(spark, sf_dir, tmp_path):
     assert "Exchange" not in plan, plan
     assert "MapInPandas" in plan
 
-    salted = extract(prepare_input(src, None, 8)).select("conv_id", "turn_idx")
+    salted = extract(prepare_input(src, None)).select("conv_id", "turn_idx")
     plan2 = salted._jdf.queryExecution().executedPlan().toString()
     assert plan2.count("Exchange") == 1
 
@@ -1058,7 +1115,7 @@ def test_prebucketed_plan_has_no_exchange(spark, sf_dir, tmp_path):
     a = sorted(map(tuple, out.select("conv_id", "turn_idx",
                                      F.size("matches")).collect()))
     b = sorted(map(tuple,
-                   extract(prepare_input(src, None, 8))
+                   extract(prepare_input(src, None))
                    .select("conv_id", "turn_idx", F.size("matches"))
                    .collect()))
     assert a == b

@@ -364,13 +364,10 @@ def _apply_tag_filters(cand: PlaceCandidate, lowercase_doc: bool) -> None:
         cand.filtered_out = True
         cand.filter_reason = "len1"
         return
-    # F2 language length filter (LanguageFilter.java:20-101): CJK < 2 chars
-    # out; Middle-Eastern scripts < 6 chars out unless a major feature
-    from ..functions.textnorm import has_cjk, has_middle_eastern
-    if has_cjk(mtext) and len(mtext) < 2:
-        cand.filtered_out = True
-        cand.filter_reason = "lang-len"
-        return
+    # F2 language length filter (LanguageFilter.java:20-101): Middle-Eastern
+    # scripts < 6 chars out unless a major feature (its CJK < 2 chars rule
+    # is F1's, above)
+    from ..functions.textnorm import has_middle_eastern
     if has_middle_eastern(mtext) and len(mtext) < 6:
         major = {"PCL", "PCLI", "PCLD", "ADM1", "PPLC"}
         if not any(p.feat_code in major for p in cand.places):

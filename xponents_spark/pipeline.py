@@ -183,13 +183,13 @@ def extract_turn(text: str, features: tuple,
 
 
 def _with_extraction(pdf: pd.DataFrame, extracted: Iterable) -> pd.DataFrame:
-    """A copy of the batch ``pdf`` with ``main_text`` and ``matches`` filled
-    from ``extracted``, one ``(main, rows)`` pair per row in batch order."""
+    """The batch ``pdf`` with ``main_text`` and ``matches`` filled in place
+    from ``extracted``, one ``(main, rows)`` pair per row in batch order.
+    Spark builds each batch for this one call, so no copy is kept."""
     mains, matches = [], []
     for main, rows in extracted:
         mains.append(main)
         matches.append(rows)
-    pdf = pdf.copy()
     pdf["main_text"] = mains
     pdf["matches"] = matches
     return pdf

@@ -3,17 +3,15 @@
 The north rule requires runs "resumable from per-partition checkpoints with
 lineage and match-count metrics written alongside each commit".  Design:
 
-* the input splits into B deterministic buckets by ``pmod(hash(conv_id), B)``
-  (same function Iceberg's ``bucket(conv_id)`` partition transform uses
-  conceptually — co-located with the recommended table layout);
+* the input splits into B deterministic buckets by the ``_bucket`` column
+  of ``plans.bucketing`` (``pmod(hash(conv_id), B)``);
 * **stage 0** materializes the input ONCE, partitioned by bucket, under
   ``out/_input/`` (manifest-guarded, so a resume skips it).  Each bucket job
   then reads only its own partition directory via partition pruning — total
   input bytes per run is ~2x the table (one bucketize pass + the sum of the
-  pruned per-bucket reads) instead of B full scans.  When the source table is
-  *already* physically partitioned by a bucket column (the Iceberg
-  ``bucket(conv_id)`` layout the north rule assumes), pass ``bucket_col`` and
-  stage 0 is skipped entirely — the filter prunes at the source scan;
+  pruned per-bucket reads) instead of B full scans.  An input that already
+  carries ``_bucket`` (a ``write_bucketed`` table, read back) skips stage 0
+  entirely — the filter prunes at the source scan;
 * each bucket runs extract -> write ``out/bucket=<b>/`` in ONE pass: row and
   match counts come from ``Observation`` metrics attached to the write job,
   never from a second action over the extraction (round-1 version computed
@@ -37,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .. import __version__
 from ..pipeline import DEFAULT_FEATURES, extract
+from .bucketing import BUCKET_COL, with_bucket
 
 
 def _manifest_path(out_dir: str, bucket: int) -> str:
@@ -52,16 +51,32 @@ def _read_committed(path: str) -> dict | None:
     return None
 
 
+def _refuse_out_of_range(src: DataFrame, buckets: int) -> None:
+    """The bucket loop reads ``_bucket`` values 0..buckets-1 only: refuse a
+    pre-bucketed input with any other value (a NULL included) before a
+    manifest commits without its rows.  The filter is on the partition
+    column, so the probe prunes to the offending directories."""
+    bucket = F.col(BUCKET_COL)
+    bad = src.filter(~bucket.between(0, buckets - 1) | bucket.isNull())
+    if bad.limit(1).count():
+        found = sorted((r[0] for r in bad.select(bucket).distinct().collect()),
+                       key=lambda v: (v is not None, v))
+        raise ValueError(
+            f"input bucketed outside this run's buckets={buckets}: "
+            f"{BUCKET_COL} values {found} would never be read — pass the "
+            f"table's own bucket count")
+
+
 def run_resumable(df: DataFrame, out_dir: str, buckets: int = 16,
-                  input_desc: str = "", bucket_col: str | None = None,
-                  verify_input: bool = True,
+                  input_desc: str = "", verify_input: bool = True,
                   extract_kwargs: dict | None = None) -> list[dict]:
     """Extract ``df`` in ``buckets`` resumable units with every feature
     (``DEFAULT_FEATURES``, recorded in each manifest); returns manifests.
 
-    ``bucket_col``: name of an existing physical bucket partition column
-    (values 0..buckets-1).  When given, stage-0 bucketize is skipped and the
-    per-bucket filter prunes directly at the source scan.
+    An input that carries the ``_bucket`` column (``spark.read.parquet``
+    of a ``write_bucketed`` table) is already bucketed: stage 0 is
+    skipped, the per-bucket filter prunes at the source scan, and a
+    ``_bucket`` value outside 0..buckets-1 raises before any bucket runs.
 
     ``extract_kwargs``: extra keyword args forwarded to ``extract`` per
     bucket (gazetteer/postal/taxcat paths) — the job-param
@@ -76,11 +91,11 @@ def run_resumable(df: DataFrame, out_dir: str, buckets: int = 16,
     owns input identity.
     """
     os.makedirs(out_dir, exist_ok=True)
-    spark = df.sparkSession
-
-    if bucket_col is None:
+    if BUCKET_COL in df.columns:
+        _refuse_out_of_range(df, buckets)
+        src = df
+    else:
         # stage 0: one full scan, written partitioned by bucket
-        bucket_col = "_bucket"
         in_dir = os.path.join(out_dir, "_input")
         stage0_path = os.path.join(out_dir, "input_manifest.json")
         stage0 = _read_committed(stage0_path)
@@ -103,18 +118,16 @@ def run_resumable(df: DataFrame, out_dir: str, buckets: int = 16,
         if stage0 is None:
             t0 = time.time()
             obs0 = Observation("bucketize")
-            (df.withColumn(bucket_col, F.pmod(F.hash("conv_id"), F.lit(buckets)))
+            (with_bucket(df, buckets)
                .observe(obs0, F.count(F.lit(1)).alias("rows"))
-               .write.mode("overwrite").partitionBy(bucket_col).parquet(in_dir))
+               .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(in_dir))
             with open(stage0_path, "w") as fh:
                 json.dump({"status": "committed", "stage": "bucketize",
                            "buckets": buckets, "input": input_desc,
                            "input_rows": int(obs0.get["rows"] or 0),
                            "engine_version": __version__,
                            "wall_sec": round(time.time() - t0, 3)}, fh)
-        src = spark.read.parquet(in_dir)
-    else:
-        src = df
+        src = df.sparkSession.read.parquet(in_dir)
 
     manifests = []
     for b in range(buckets):
@@ -128,7 +141,7 @@ def run_resumable(df: DataFrame, out_dir: str, buckets: int = 16,
             manifests.append(m)
             continue
         t0 = time.time()
-        part = src.filter(F.col(bucket_col) == b).drop(bucket_col)
+        part = src.filter(F.col(BUCKET_COL) == b).drop(BUCKET_COL)
         obs = Observation(f"bucket_{b}")
         result = extract(part, features=DEFAULT_FEATURES,
                          **(extract_kwargs or {})).observe(

@@ -27,18 +27,12 @@ def read_transcript_stream(spark: SparkSession, path: str,
             .parquet(path))
 
 
-def extraction_stream(stream_df: DataFrame,
-                      features=DEFAULT_FEATURES) -> DataFrame:
-    """The batch extraction stage applied to a stream (stateless)."""
-    return extract(stream_df, features=features)
-
-
 def start_extraction_sink(stream_df: DataFrame, out_dir: str,
                           checkpoint_dir: str, features=DEFAULT_FEATURES,
                           available_now: bool = True):
     """readStream -> extract -> append parquet with exactly-once checkpoints
     (the streaming counterpart of plans.run_resumable)."""
-    writer = (extraction_stream(stream_df, features)
+    writer = (extract(stream_df, features=features)
               .writeStream
               .format("parquet")
               .option("path", out_dir)
